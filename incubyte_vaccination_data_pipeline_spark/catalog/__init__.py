@@ -1,16 +1,36 @@
 """Named query catalog: the driver-facing surface of the engine.
 
-Domains:
+Every query registers itself with ``@query(name, oracle)`` (see
+``registry.py``) when its domain module is imported below. Domains:
 
-- ``vax``        — reference-parity patterns (country view dedup, date
-  cascade, dead-letter, validity filter) over the testdata star schema.
-- ``relational`` — joins / aggregations / windows / set ops / pivot /
-  rollup / scalar-function breadth.
-- ``dedup``      — exact + near-duplicate detection families.
-- ``text``       — language id, quality scoring, tokenization,
-  fingerprinting over ``documents``.
-- ``similarity`` — embedding cosine top-k (brute force + LSH-bucketed).
-- ``events``     — event-stream analytics (JSON, windows, sessions).
+- ``vax``            — reference-parity patterns (country view dedup,
+  date cascade, dead-letter, validity filter) over the testdata star
+  schema.
+- ``relational`` / ``relational_ext`` — joins, aggregations, windows,
+  set ops, pivots, sketches, sampling, customer-value analytics.
+- ``tpch_gap``       — the remaining TPC-H shapes.
+- ``events`` / ``events_ext`` — event-stream analytics (JSON, windows,
+  sessions, streaming, attribution, time-series smoothing).
+- ``dedup``          — exact, near-duplicate, incremental and
+  embedding-space dedup.
+- ``entity``         — fuzzy entity matching.
+- ``text`` / ``text_ext`` — language id, quality scoring,
+  tokenization, fingerprinting, substring dedup, BM25, LM scoring.
+- ``similarity``     — embedding top-k / radius / k-NN join search
+  (brute force, LSH, PQ, flat and two-level IVF).
+- ``clustering``     — k-means and PCA over embeddings.
+- ``multimodal``     — binary payloads, typed metadata, and the
+  Arrow-batched decode/feature stage.
+- ``formats``        — file-format round trips and schema evolution.
+- ``graph``          — co-purchase graph analytics.
+- ``quality``        — integrity checks, snapshot diffs, drift.
+- ``features``       — point-in-time feature joins.
+- ``corpus_stats``   — corpus statistics, packing, curation funnel.
+- ``training_ext``   — dataset splits, contamination, training prep.
+
+Registration order is domain import order. The external driver's
+least-recently-verified rotation is applied by ``__spark_entry__``,
+not here (see ``verify_rotation.py``).
 
 Cross-engine determinism conventions (see ``vax.py`` docstring):
 lowercase aliases, decimal-exact money aggregation, pinned dates,
@@ -25,139 +45,24 @@ from incubyte_vaccination_data_pipeline_spark.catalog.registry import (  # noqa:
     query,
 )
 
-# each import registers its domain's queries
-from incubyte_vaccination_data_pipeline_spark.catalog import vax  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import relational  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import relational_ext  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import tpch_gap  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import events  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import events_ext  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import dedup  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import entity  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import text  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import text_ext  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import similarity  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import clustering  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import multimodal  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import formats  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import graph  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import quality  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import features  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import corpus_stats  # noqa: F401,E402
-from incubyte_vaccination_data_pipeline_spark.catalog import training_ext  # noqa: E402
-
-# round 4: the training-data extension family (splits, contamination,
-# corpus report, int8 quantization, sequences, certified percentiles,
-# skew report) joins the live registry
-training_ext.register()
-
-# round 5: the full staged family registers (round 4 staged six of the
-# twelve to keep the four certificate queries inside the 50-slot driver
-# window; the never-verified remainder now sorts to the window's front
-# automatically via the rotation below)
-from incubyte_vaccination_data_pipeline_spark.catalog import round5_ext  # noqa: E402
-
-round5_ext.register()
-
-# round 7: the four queries staged in round 6 (events_top_paths,
-# lineitem_yoy_brand_growth, events_bot_signals, text_zipf_fit) join
-# the live registry — the growth simulation at 196 keeps the
-# re-verification gap at ceil(196/50) = 4
-from incubyte_vaccination_data_pipeline_spark.catalog import round7_staged  # noqa: E402
-
-round7_staged.register()
-
-# round 8: four queries — the two scale-path primitives the LLM-data
-# families lacked (k-NN JOIN through the shared IVF index; incremental
-# batch-vs-corpus dedup), the k-center coreset sampler, and the
-# sweep-line interval-overlap join — growth sim at 200 keeps the gap
-# at ceil(200/50) = 4
-from incubyte_vaccination_data_pipeline_spark.catalog import round8_ext  # noqa: E402
-
-round8_ext.register()
-
-# round 10: the corpus-scale-safe n-gram-Jaccard verify pass (content-
-# prefix-refined default blocks). Registered AFTER round8_ext so the
-# four round-8 queries keep their promised round-10 driver slots; the
-# growth sim at 201 keeps the gap at ceil(201/50) = 5
-from incubyte_vaccination_data_pipeline_spark.catalog import round10_ext  # noqa: E402
-
-round10_ext.register()
-
-# round 11: the eleven queries staged across round 10 — the two-level
-# hierarchical IVF family (dedup_embedding_ivf_hier, ann_ivf_hier_topk),
-# the IVF-indexed dedup/radius/MIPS trio, wide SimHash, substring-level
-# dedup (stats + removal plan), BM25 top-k, Holt-Winters, and label
-# propagation. One call lands all 11; the growth sim at 212 keeps the
-# re-verification gap at ceil(212/50) = 5, and the rotation's EDF policy
-# seats the at-bound round-6 cohort (agg_heavy_hitters_cms) ahead of
-# never-verified newcomers.
-round10_ext.register_r11()
-
-# round 12: the three queries staged across round 11 — radius search
-# through the two-level index (the last flat/hier x topk/radius matrix
-# member), the LLM-curation funnel as one value-checked row, and
-# per-node triangle participation over the shared co-purchase graph.
-# One call lands all 3; the growth sim at 215 keeps the
-# re-verification gap at ceil(215/50) = 5, and the EDF rotation seats
-# the 12 at-bound round-7-cohort queries AHEAD of the newcomers (new
-# queries key the odd half-round slot behind an at-bound cohort).
-from incubyte_vaccination_data_pipeline_spark.catalog import round12_staged  # noqa: E402
-
-round12_staged.register_r12()
-
-# round 13: the three queries staged across round 12 — top-k through
-# the shared flat IVF index under the occupancy-coverage probe cut,
-# the fixed-round k-core peel over the shared co-purchase graph, and
-# exact-budget stratified sampling (the counted complement to the
-# rate-based sampler). One call lands all 3; the growth sim at 218
-# keeps the re-verification gap at ceil(218/50) = 5, and the EDF
-# rotation seats the 17 at-bound round-8-cohort queries AHEAD of the
-# newcomers.
-from incubyte_vaccination_data_pipeline_spark.catalog import round13_staged  # noqa: E402
-
-round13_staged.register_r13()
-
-FLAGSHIP_COUNTRY = vax.FLAGSHIP_COUNTRY
-
-# The driver verifies the first N registered queries per round (observed
-# N=50: CORRECTNESS_r01.json holds exactly registration positions 1-50).
-# Registration order is therefore rotated least-recently-verified-first
-# so every query re-enters the window within ceil(N_queries/50) rounds:
-# never-driver-checked queries (new this round) lead, then the queries
-# whose last driver row is oldest. State lives in verified_rounds.json
-# (rebuilt from the driver's own CORRECTNESS_r*.json files); see
-# catalog/verify_rotation.py and README "Driver verification rotation".
-from incubyte_vaccination_data_pipeline_spark.catalog import verify_rotation  # noqa: E402
-
-
-def _rotate_least_recently_verified() -> None:
-    # order by the LIVE driver history (rebuilt from the committed
-    # CORRECTNESS_r*.json files at import — cheap, deterministic), so a
-    # new round's file takes effect without a manual state rebuild;
-    # verified_rounds.json stays as the committed, test-enforced
-    # artifact of the same computation.  Queries whose committed
-    # fingerprint (query_fingerprints.json) differs from the one the
-    # driver last verified sort as never-verified, so a materially
-    # changed query re-enters the window the NEXT round (round-6
-    # change-aware staleness; see verify_rotation docstring).
-    hist = verify_rotation.rebuild_history()
-    stale = verify_rotation.effective_stale_set(hist=hist)
-    order = verify_rotation.rotation_order(list(QUERIES), hist, stale)
-    ordered = {k: QUERIES[k] for k in order}
-    QUERIES.clear()
-    QUERIES.update(ordered)
-    oracles = {k: ORACLES[k] for k in QUERIES if k in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(oracles)
-
-
-_rotate_least_recently_verified()
-
-
-def queries():
-    return dict(QUERIES)
-
-
-def oracle_sql():
-    return dict(ORACLES)
+from incubyte_vaccination_data_pipeline_spark.catalog import (  # noqa: F401
+    vax,
+    relational,
+    relational_ext,
+    tpch_gap,
+    events,
+    events_ext,
+    dedup,
+    entity,
+    text,
+    text_ext,
+    similarity,
+    clustering,
+    multimodal,
+    formats,
+    graph,
+    quality,
+    features,
+    corpus_stats,
+    training_ext,
+)

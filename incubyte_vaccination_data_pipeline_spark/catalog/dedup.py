@@ -11,7 +11,7 @@ oracle SQL mirrors its md5-hex / positional-decode arithmetic exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
@@ -22,15 +22,28 @@ from incubyte_vaccination_data_pipeline_spark.catalog.registry import (
     DEPRECATED,
     query,
 )
+from incubyte_vaccination_data_pipeline_spark.catalog.similarity import (
+    HIER_ASSIGN_M,
+    NEAR_DUP_THRESHOLD,
+    _cos_sql,
+    _hier_cells,
+    _hier_ctes,
+    _ivf_index,
+    _ivf_oracle,
+)
 from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
+    DEFAULT_PREFIX_LEN,
     MINHASH_COEFFS,
     MINHASH_PRIME,
     exact_dedup,
+    incremental_minhash_matches,
     md5_half_decode_sql,
     minhash_candidate_pairs,
+    minhash_signatures,
     ngram_gram_sets,
     ngram_jaccard_pairs,
     simhash_fingerprints,
+    simhash_near_pairs,
 )
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
@@ -148,7 +161,7 @@ _MINHASH_CTES = f"""aug AS ({AUG_SQL}),
 #: persist is safe at any scale. (The un-persisted operator plan shape
 #: stays guarded in tests/test_plans.py via ``minhash_candidate_pairs``
 #: directly — a persisted frame's plan renders as InMemoryRelation.)
-from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache, register_dict_cache
 
 _SHARED_PAIRS = BoundedCache()
 
@@ -345,7 +358,7 @@ def simhash_oracle_ctes(bits: int, suffix: str) -> str:
     """The full DuckDB fingerprint pipeline (tokenize -> md5 -> decode
     -> per-bit votes -> pack) at any width, CTE names suffixed so two
     widths can coexist in one statement namespace. ONE generator
-    serves every width (32-bit here, 48-bit in round10_ext) so the
+    serves every width (32-bit and 48-bit here) so the
     decode/vote/pack arithmetic can never diverge between them —
     at bits=32, suffix="32" the output is byte-identical to the
     pre-round-10 hand-written _SIMHASH32_CTES (oracle text feeds the
@@ -404,8 +417,6 @@ def dedup_simhash_hamming_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs without all-pairs. 32 bits (vs the fingerprint query's
     oracle-portable 16) keeps band buckets from growing quadratically
     with the corpus; production would use 64-bit with 16-bit bands."""
-    from incubyte_vaccination_data_pipeline_spark.operators.dedup import simhash_near_pairs
-
     return simhash_near_pairs(
         _shared_simhash32(spark, sf_dir), max_hamming=3, bits=32, bands=4
     )
@@ -641,4 +652,482 @@ def dedup_cleaned_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.join(reps, "doc_id", "left_semi")
         .join(dupes, "doc_id", "left_anti")
         .select("doc_id", "lang", "source", "n_chars")
+    )
+
+
+# --- incremental batch-vs-corpus dedup -----------------------------------
+
+#: the arriving batch: exact copies of every 10th doc, near copies
+#: (5-token tail) of every 7th, and genuinely novel docs (reversed
+#: text -> disjoint shingles) from every 13th-plus-1 — id offsets keep
+#: the three slices and the corpus disjoint
+_BATCH_EXACT_OFF = 1_000_000
+_BATCH_NEAR_OFF = 2_000_000
+_BATCH_NOVEL_OFF = 3_000_000
+INCREMENTAL_MIN_EST = 0.5
+
+#: the persisted corpus signature index per (app, corpus) — the thing
+#: a production ingest pipeline writes ONCE and probes with every
+#: day's batch; warm calls pay only the batch-side pipeline + probe
+_SHARED_CORPUS_SIGS = BoundedCache()
+
+
+def _corpus_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def build() -> DataFrame:
+        docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+        return minhash_signatures(docs).persist()
+
+    return _SHARED_CORPUS_SIGS.get_or_build(
+        (spark.sparkContext.applicationId, sf_dir), build
+    )
+
+
+_DEDUP_INCREMENTAL_ORACLE = f"""
+    WITH batch AS (
+        SELECT doc_id + {_BATCH_EXACT_OFF} AS doc_id, text
+        FROM documents WHERE doc_id % 10 = 0
+        UNION ALL
+        SELECT doc_id + {_BATCH_NEAR_OFF}, text || '{NEAR_DUP_TAIL}'
+        FROM documents WHERE doc_id % 7 = 0
+        UNION ALL
+        SELECT doc_id + {_BATCH_NOVEL_OFF}, reverse(text)
+        FROM documents WHERE doc_id % 13 = 1
+    ),
+    exact AS (
+        SELECT b.doc_id AS batch_doc, MIN(c.doc_id) AS exact_doc
+        FROM batch b JOIN documents c ON md5(b.text) = md5(c.text)
+        GROUP BY b.doc_id
+    ),
+    alldocs AS (
+        SELECT doc_id AS doc, text FROM documents
+        UNION ALL
+        SELECT doc_id AS doc, text FROM batch
+    ),
+    tok AS (
+        SELECT doc, string_split(lower(text), ' ') AS words FROM alldocs
+    ),
+    sh AS (
+        SELECT doc,
+               list_transform(range(1, greatest(len(words) - 2, 0) + 1),
+                              i -> array_to_string(words[i:i+2], ' ')) AS shingles
+        FROM tok
+    ),
+    shex AS (
+        SELECT doc, unnest(shingles) AS s FROM sh WHERE len(shingles) > 0
+    ),
+    hm AS (
+        SELECT doc, md5(s) AS m FROM shex
+    ),
+    hv AS (
+        SELECT doc, {_D1} AS v1, {_D2} AS v2 FROM hm
+    ),
+    sigagg AS (
+        SELECT doc, {_SIG_MINS}
+        FROM hv GROUP BY doc
+    ),
+    sig AS (
+        SELECT doc, {_SIG_LIST} AS sig FROM sigagg
+    ),
+    banded AS (
+        SELECT doc, sig,
+               unnest(list_transform(range(0, 4),
+                   b -> CAST(b AS VARCHAR) || '|'
+                        || array_to_string(list_transform(sig[b*3+1:b*3+3],
+                                          x -> CAST(x AS VARCHAR)), '|'))) AS band
+        FROM sig
+    ),
+    cpairs AS (
+        SELECT DISTINCT bb.doc AS batch_doc, cb.doc AS corpus_doc
+        FROM banded bb JOIN banded cb ON bb.band = cb.band
+        WHERE bb.doc >= {_BATCH_EXACT_OFF} AND cb.doc < {_BATCH_EXACT_OFF}
+    ),
+    nest AS (
+        SELECT p.batch_doc, p.corpus_doc,
+               round(CAST(len(list_filter(range(1, 13),
+                                          i -> sa.sig[i] = sb.sig[i])) AS DOUBLE)
+                     / 12, 6) AS est_jaccard
+        FROM cpairs p
+        JOIN sig sa ON sa.doc = p.batch_doc
+        JOIN sig sb ON sb.doc = p.corpus_doc
+    ),
+    near AS (
+        SELECT batch_doc, corpus_doc AS near_doc, est_jaccard AS near_est FROM (
+            SELECT *, ROW_NUMBER() OVER (
+                PARTITION BY batch_doc
+                ORDER BY est_jaccard DESC, corpus_doc) AS rn
+            FROM nest WHERE est_jaccard >= {INCREMENTAL_MIN_EST})
+        WHERE rn = 1
+    )
+    SELECT b.doc_id AS batch_doc,
+           CASE WHEN e.exact_doc IS NOT NULL THEN 'exact'
+                WHEN n.near_doc IS NOT NULL THEN 'near'
+                ELSE 'novel' END AS match_type,
+           COALESCE(e.exact_doc, n.near_doc) AS matched_doc_id,
+           CASE WHEN e.exact_doc IS NOT NULL THEN 1.0
+                ELSE n.near_est END AS est_jaccard
+    FROM batch b
+    LEFT JOIN exact e ON b.doc_id = e.batch_doc
+    LEFT JOIN near n ON b.doc_id = n.batch_doc
+    """
+
+
+@query("dedup_incremental_batch", _DEDUP_INCREMENTAL_ORACLE)
+def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental ingest dedup: match a NEW document batch against the
+    EXISTING corpus and emit one verdict row per arriving doc —
+    (batch_doc, match_type exact|near|novel, matched_doc_id,
+    est_jaccard). The production shape this encodes: the corpus
+    signature/band table is built once (persisted at warehouse scale)
+    and each day's batch only hashes itself and probes — batch->corpus
+    band equi-join ONLY, never batch x batch or corpus x corpus, so
+    per-ingest cost is O(|batch| + collisions) regardless of corpus
+    size. Exact matches short-circuit via a content-hash equi-join
+    (md5 keyed shuffle, map-side combinable min); near matches come
+    from ``incremental_minhash_matches`` with the best match chosen by
+    (est_jaccard DESC, corpus_doc ASC); everything else is novel.
+    Deterministic end to end — the oracle replays the batch
+    construction, both match paths, and the precedence rule."""
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    batch = (
+        docs.filter(F.col("doc_id") % 10 == 0)
+        .select((F.col("doc_id") + _BATCH_EXACT_OFF).alias("doc_id"), "text")
+        .unionByName(
+            docs.filter(F.col("doc_id") % 7 == 0).select(
+                (F.col("doc_id") + _BATCH_NEAR_OFF).alias("doc_id"),
+                F.concat(F.col("text"), F.lit(NEAR_DUP_TAIL)).alias("text"),
+            )
+        )
+        .unionByName(
+            docs.filter(F.col("doc_id") % 13 == 1).select(
+                (F.col("doc_id") + _BATCH_NOVEL_OFF).alias("doc_id"),
+                F.reverse(F.col("text")).alias("text"),
+            )
+        )
+    )
+    exact = (
+        batch.select(F.col("doc_id").alias("batch_doc"), F.md5("text").alias("h"))
+        .join(docs.select(F.md5("text").alias("h"), "doc_id"), "h")
+        .groupBy("batch_doc")
+        .agg(F.min("doc_id").alias("exact_doc"))
+    )
+    near_all = incremental_minhash_matches(
+        docs,
+        batch,
+        min_est_jaccard=INCREMENTAL_MIN_EST,
+        corpus_sigs=_corpus_sig_index(spark, sf_dir),
+    )
+    w = Window.partitionBy("batch_doc").orderBy(
+        F.col("est_jaccard").desc(), F.col("corpus_doc")
+    )
+    near = (
+        near_all.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "batch_doc",
+            F.col("corpus_doc").alias("near_doc"),
+            F.col("est_jaccard").alias("near_est"),
+        )
+    )
+    return (
+        batch.select(F.col("doc_id").alias("batch_doc"))
+        .join(exact, "batch_doc", "left")
+        .join(near, "batch_doc", "left")
+        .select(
+            "batch_doc",
+            F.when(F.col("exact_doc").isNotNull(), F.lit("exact"))
+            .when(F.col("near_doc").isNotNull(), F.lit("near"))
+            .otherwise(F.lit("novel"))
+            .alias("match_type"),
+            F.coalesce("exact_doc", "near_doc").alias("matched_doc_id"),
+            F.when(F.col("exact_doc").isNotNull(), F.lit(1.0))
+            .otherwise(F.col("near_est"))
+            .alias("est_jaccard"),
+        )
+    )
+
+
+# --- content-prefix-refined n-gram Jaccard ---------------------------------
+#
+# Within a fixed (lang, length-bucket) block the population grows
+# linearly with the corpus, so the blocked self-join grows
+# quadratically (28x cold at 10x data). The 12-char
+# ``lower(ltrim(text))`` content-prefix key's cardinality grows WITH
+# the corpus, so block populations are bounded by boilerplate-sharing,
+# not corpus size (SCALE.md). The oracle is the exact DuckDB
+# restatement of the refined blocking: same grams CTE as
+# ``dedup_ngram_jaccard`` plus the prefix key in the block-join
+# predicate.
+
+#: per-(app, corpus) char-3-gram sets carrying the REFINED
+#: (lang, len_bucket, text_prefix) block keys — same rows as
+#: catalog/dedup._SHARED_NGRAMS, one extra key column; cached
+#: separately because the two queries pin different block contracts.
+_SHARED_NGRAMS_PREFIX = BoundedCache()
+
+
+def _shared_prefix_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    key = (spark.sparkContext.applicationId, sf_dir)
+    return _SHARED_NGRAMS_PREFIX.get_or_build(
+        key,
+        # block_cols defaulted -> (lang, len_bucket, text_prefix)
+        lambda: ngram_gram_sets(
+            augmented_documents(spark, sf_dir), n=3, len_bucket_width=20
+        ),
+    )
+
+
+_NGRAM_PREFIX_ORACLE = f"""
+    WITH aug AS ({AUG_SQL}),
+    grams AS (
+        SELECT doc_id AS doc, lang,
+               CAST(n_chars // 20 AS INT) AS len_bucket,
+               substr(ltrim(lower(text)), 1, {DEFAULT_PREFIX_LEN}) AS text_prefix,
+               list_distinct(list_transform(
+                   range(1, greatest(length(lower(text)) - 2, 0) + 1),
+                   i -> substr(lower(text), i, 3))) AS grams
+        FROM aug
+    ),
+    pairs AS (
+        SELECT a.doc AS doc_a, b.doc AS doc_b, a.grams AS ga, b.grams AS gb
+        FROM grams a
+        JOIN grams b ON a.lang = b.lang AND a.len_bucket = b.len_bucket
+                    AND a.text_prefix = b.text_prefix
+                    AND a.doc < b.doc
+        WHERE len(a.grams) > 0 AND len(b.grams) > 0
+    )
+    SELECT doc_a, doc_b,
+           round(CAST(len(list_intersect(ga, gb)) AS DOUBLE)
+                 / (len(ga) + len(gb)
+                    - len(list_intersect(ga, gb))), 6)
+               AS jaccard
+    FROM pairs
+    WHERE round(CAST(len(list_intersect(ga, gb)) AS DOUBLE)
+                / (len(ga) + len(gb)
+                   - len(list_intersect(ga, gb))), 6) >= 0.5
+"""
+
+
+@query("dedup_ngram_jaccard_prefix", _NGRAM_PREFIX_ORACLE)
+def dedup_ngram_jaccard_prefix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact char-3-gram Jaccard over the operator's defaulted
+    (lang, 20-char-length-bucket, 12-char-content-prefix) blocks — the
+    corpus-scale-safe verify pass. Same exact per-pair Jaccard as
+    ``dedup_ngram_jaccard``; the additional prefix key scopes the
+    operator to near-dups whose first ``DEFAULT_PREFIX_LEN`` lowered,
+    left-trimmed chars agree (edits inside the prefix belong to the
+    MinHash+LSH discovery pass), which is what keeps block populations
+    independent of corpus size. Gram sets build once per corpus
+    (:data:`_SHARED_NGRAMS_PREFIX`); the blocked verify join runs per
+    call."""
+    return ngram_jaccard_pairs(
+        augmented_documents(spark, sf_dir),
+        n=3,
+        min_jaccard=0.5,
+        len_bucket_width=20,
+        gram_sets=_shared_prefix_grams(spark, sf_dir),
+    )
+
+
+# --- the WIDE SimHash pairs path ------------------------------------------
+#
+# The 32-bit ``dedup_simhash_hamming`` saturates its 8-bit band buckets
+# at scale (30x stress: 184s, ~24M junk pairs) where the
+# operator-default derived width did the same corpus in 14.1s
+# (SCALE.md). 48-bit fingerprints (the width ``derived_simhash_bits``
+# picks for the 10x corpus) with 12-bit bands, same decode/vote/pack
+# arithmetic as the 32-bit oracle generated at 12 hex digits.
+
+_WIDE_BITS = 48
+# ONE shared generator (catalog/dedup.simhash_oracle_ctes) produces the
+# decode/vote/pack SQL for every width — the 32-bit oracle and this one
+# can never diverge arithmetically (round-10 review finding)
+_SIMHASHW_CTES = simhash_oracle_ctes(_WIDE_BITS, "w")
+
+_WIDE_BAND_W = _WIDE_BITS // 4  # 4 bands of 12 bits
+_WIDE_MASK = (1 << _WIDE_BAND_W) - 1
+
+_SIMHASH_WIDE_ORACLE = f"""
+    WITH {_SIMHASHW_CTES},
+    wbanded AS (
+        SELECT doc_id, simhash,
+               unnest(list_transform(range(0, 4),
+                   b -> CAST(b AS VARCHAR) || '|'
+                        || CAST((simhash >> (b * {_WIDE_BAND_W})) & {_WIDE_MASK}
+                                AS VARCHAR))) AS band
+        FROM fpw
+    ),
+    wpairs AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM wbanded a JOIN wbanded b ON a.band = b.band AND a.doc_id < b.doc_id
+    )
+    SELECT p.doc_a, p.doc_b,
+           CAST(bit_count(xor(fa.simhash, fb.simhash)) AS INT) AS hamming
+    FROM wpairs p
+    JOIN fpw fa ON fa.doc_id = p.doc_a
+    JOIN fpw fb ON fb.doc_id = p.doc_b
+    WHERE bit_count(xor(fa.simhash, fb.simhash)) <= 3
+"""
+
+#: per-(app, corpus) 48-bit fingerprint frame (both sides of the band
+#: self-join reference it — same caching rationale as _SHARED_SIMHASH32)
+_SHARED_SIMHASH48 = BoundedCache()
+
+
+def _shared_simhash48(spark: SparkSession, sf_dir: str) -> DataFrame:
+    key = (spark.sparkContext.applicationId, sf_dir)
+    return _SHARED_SIMHASH48.get_or_build(
+        key,
+        lambda: durable_checkpoint(
+            simhash_fingerprints(
+                augmented_documents(spark, sf_dir), bits=_WIDE_BITS
+            )
+        ),
+    )
+
+
+@query("dedup_simhash_hamming_wide", _SIMHASH_WIDE_ORACLE)
+def dedup_simhash_hamming_wide_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup pairs (Hamming <= 3) over a 48-BIT fingerprint
+    with 12-bit bands — the production-width path the 30x stress
+    showed is the difference between 14.1s and 184s at 30x data
+    (SCALE.md): per-band bucket space 4096 vs the 32-bit query's 256,
+    so band buckets keep ~constant population as the corpus grows.
+    48 bits is exactly what the operator default
+    (``derived_simhash_bits``) picks for the 10x corpus; the width is
+    pinned here as this query's oracle contract, with the SAME
+    decode/vote/pack arithmetic as the 32-bit oracle generated at 12
+    hex digits."""
+    return simhash_near_pairs(
+        _shared_simhash48(spark, sf_dir),
+        max_hamming=3,
+        bits=_WIDE_BITS,
+        bands=4,
+    )
+
+
+# --- semantic dedup through the shared flat IVF index ---------------------
+
+#: semantic-dedup-through-the-index contract: top-2 multi-assignment
+#: over the shared 16-cell IVF quantizer, same near-dup threshold as
+#: the label-blocked query (family consistency).
+EMB_IVF_ASSIGN_M = 2
+
+_FLAT_CELLS_CACHE: dict = register_dict_cache({})
+
+
+def _flat_cells_m2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(app, corpus) top-2 multi-assignment over the shared flat
+    quantizer (``_ivf_index``), persisted — the dedup twin of
+    ``_ivf_assigned_index`` (which is the SEARCH path's m=1 inverted
+    file). Round 12: ``dedup_embedding_ivf`` re-ran the O(n x cells)
+    literal-expression assignment on BOTH sides of its pair self-join
+    on every materialization; precomputing it leaves the same-cell
+    pair join as the query's only per-run work (the identical
+    ``explode(ivf_probes_expr(..., m))`` rows the operator's
+    centroids path would build — semantics and oracle unchanged)."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        ivf_probes_expr,
+    )
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _FLAT_CELLS_CACHE:
+        emb = read_table(spark, sf_dir, "embeddings")
+        _FLAT_CELLS_CACHE[key] = (
+            emb.select(
+                "vec_id",
+                "embedding",
+                F.explode(
+                    ivf_probes_expr(
+                        "embedding", _ivf_index(spark, sf_dir), EMB_IVF_ASSIGN_M
+                    )
+                ).alias("cell"),
+            )
+            # hash-partition the inverted file by cell — the layout a
+            # 100 TB inverted file lives in (same-cell pair self-join
+            # co-located, shuffle-free) AND the local fix for the
+            # 1-partition parquet lineage that ran the pair join
+            # single-threaded (measured 4.7s -> sub-second warm)
+            .repartition("cell")
+            .persist()
+        )
+    return _FLAT_CELLS_CACHE[key]
+
+
+def _emb_ivf_oracle() -> str:
+    return _ivf_oracle(
+        pair_threshold=NEAR_DUP_THRESHOLD, assign_m=EMB_IVF_ASSIGN_M
+    )
+
+
+@query("dedup_embedding_ivf", _emb_ivf_oracle())
+def dedup_embedding_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup pairs THROUGH the shared IVF index
+    (``operators/similarity.cosine_near_dup_pairs_ivf``): every vector
+    lands in its 2 nearest cells (multi-assignment — the boundary
+    mitigation), candidate pairs share a cell, exact cosine >= the
+    family threshold. This is the content-derived-block answer to
+    ``dedup_embedding_cosine``'s metadata block: candidate volume is
+    O(sum of cell sizes squared), ~linear with corpus-tracking cell
+    counts, where the label-blocked query needs a trusted label column
+    and all-pairs needs O(n^2). Pairs whose members' assigned cells
+    are disjoint are missed (the IVF trade; every RETURNED pair is
+    exact and the oracle replays the whole quantizer, so the
+    certificate is exact). Index AND assignment build once per corpus
+    (``_ivf_index`` + the persisted ``_flat_cells_m2`` frame — round
+    12: the unshared assignment re-ran on both sides of the pair
+    self-join every materialization)."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        cosine_near_dup_pairs_ivf,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    return cosine_near_dup_pairs_ivf(
+        emb,
+        threshold=NEAR_DUP_THRESHOLD,
+        cells=_flat_cells_m2(spark, sf_dir),
+    )
+
+
+# --- semantic dedup through the two-level IVF index ------------------------
+
+def _hier_oracle() -> str:
+    """Pair (dedup) tail over the shared hierarchy CTEs."""
+    return f"""
+    WITH {_hier_ctes(HIER_ASSIGN_M)},
+    hpairs AS (
+        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        FROM fassigned a JOIN fassigned b USING (cell)
+        WHERE a.vec_id < b.vec_id
+    )
+    SELECT p.vec_a, p.vec_b,
+           round({_cos_sql('ea.embedding', 'eb.embedding')}, 6) AS cosine
+    FROM hpairs p
+    JOIN embeddings ea ON ea.vec_id = p.vec_a
+    JOIN embeddings eb ON eb.vec_id = p.vec_b
+    WHERE round({_cos_sql('ea.embedding', 'eb.embedding')}, 6)
+          >= {NEAR_DUP_THRESHOLD}
+"""
+
+
+@query("dedup_embedding_ivf_hier", _hier_oracle())
+def dedup_embedding_ivf_hier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semantic near-dup pairs through the TWO-LEVEL (hierarchical)
+    IVF quantizer (``operators/similarity.ivf_two_level_assign`` with
+    one distributed groupwise Lloyd refinement of the fine seeds, fed
+    to ``cosine_near_dup_pairs_ivf(cells=...)``): the assignment shape
+    that survives cell counts past literal codegen — O(n*sqrt(cells))
+    scoring, no cells x dims expression, no driver collect in the
+    refinement. Pinned small for the oracle: 3 coarse x 4 fine cells,
+    top-2 multi-assignment. The 100x stress measured the refinement
+    worth 2.5x on pair generation (SCALE.md: unrefined fine seeds skew
+    and the pair join pays sum(cell^2))."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        cosine_near_dup_pairs_ivf,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    return cosine_near_dup_pairs_ivf(
+        emb,
+        threshold=NEAR_DUP_THRESHOLD,
+        cells=_hier_cells(spark, sf_dir),
     )

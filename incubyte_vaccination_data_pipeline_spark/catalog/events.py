@@ -917,7 +917,7 @@ def stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cms_bucket_sql(key: str, half: int) -> str:
     """DuckDB positional decode of an md5 half -> [0, 64) bucket (the
-    round5_ext CMS recipe, restated here over the events key)."""
+    ``agg_heavy_hitters_cms`` recipe, restated here over the events key)."""
     from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
         md5_half_decode_sql,
     )

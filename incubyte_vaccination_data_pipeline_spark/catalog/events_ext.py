@@ -1132,9 +1132,488 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- as-of attribution with a tolerance ----------------------------------
+#
+# Same single-scan / single-shuffle shape as
+# ``events_attribution_lasttouch``; the tolerance is a post-window
+# null-out, not a join predicate, so the plan is unchanged.
+
+_TOLERANCE_S = 600
+
+_ASOF_TOL_ORACLE = f"""
+    WITH tagged AS (
+        SELECT event_id, user_id, ts, event_type,
+               CASE WHEN event_type = 'click' THEN event_id END AS click_tag,
+               CASE WHEN event_type = 'click' THEN ts END AS click_ts_tag
+        FROM events
+        WHERE event_type IN ('click', 'purchase')
+    ),
+    attributed AS (
+        SELECT event_id, user_id, ts, event_type,
+               LAST_VALUE(click_tag IGNORE NULLS) OVER w AS click_id_raw,
+               LAST_VALUE(click_ts_tag IGNORE NULLS) OVER w AS click_ts
+        FROM tagged
+        WINDOW w AS (
+            PARTITION BY user_id ORDER BY ts, event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+        )
+    )
+    SELECT event_id AS purchase_id,
+           user_id,
+           CASE WHEN date_diff('second', click_ts, ts) <= 600
+                THEN click_id_raw END AS click_id,
+           CASE WHEN date_diff('second', click_ts, ts) <= 600
+                THEN CAST(date_diff('second', click_ts, ts) AS BIGINT)
+           END AS gap_seconds,
+           COALESCE(date_diff('second', click_ts, ts) <= 600,
+                    FALSE) AS within_tolerance
+    FROM attributed
+    WHERE event_type = 'purchase'
+"""
+
+
+@query("events_asof_tolerance", _ASOF_TOL_ORACLE)
+def events_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Last-touch attribution bounded by a 600-second
+    tolerance — stale clicks null out after the window, so the plan
+    is identical to the unbounded version."""
+    events = read_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "purchase")
+    )
+    tagged = events.select(
+        "event_id",
+        "user_id",
+        "ts",
+        "event_type",
+        F.when(F.col("event_type") == "click", F.col("event_id")).alias("click_tag"),
+        F.when(F.col("event_type") == "click", F.col("ts")).alias("click_ts_tag"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    att = tagged.select(
+        "event_id",
+        "user_id",
+        "ts",
+        "event_type",
+        F.last("click_tag", ignorenulls=True).over(w).alias("click_id_raw"),
+        F.last("click_ts_tag", ignorenulls=True).over(w).alias("click_ts"),
+    )
+    gap = F.col("ts").cast("long") - F.col("click_ts").cast("long")
+    ok = gap <= _TOLERANCE_S
+    return att.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.when(ok, F.col("click_id_raw")).alias("click_id"),
+        F.when(ok, gap).alias("gap_seconds"),
+        F.coalesce(ok, F.lit(False)).alias("within_tolerance"),
+    )
+
+
+# --- engagement ---------------------------------------------------------
+
+_MAU_WINDOW = 30
+
+_DAU_MAU_ORACLE = f"""
+    WITH active AS (
+        SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
+        FROM events
+    ),
+    days AS (SELECT DISTINCT day FROM active),
+    covered AS (
+        SELECT a.user_id, d.day
+        FROM active a JOIN days d
+          ON d.day >= a.day AND d.day < a.day + INTERVAL '30 days'
+    ),
+    dau AS (SELECT day, COUNT(*) AS dau FROM active GROUP BY day),
+    mau AS (SELECT day, COUNT(DISTINCT user_id) AS mau FROM covered GROUP BY day)
+    SELECT d.day,
+           d.dau,
+           m.mau,
+           round(CAST(d.dau AS DOUBLE) / m.mau, 6) AS stickiness
+    FROM dau d JOIN mau m ON d.day = m.day
+"""
+
+
+@query("events_dau_mau", _DAU_MAU_ORACLE)
+def events_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DAU / trailing-30-day MAU stickiness per active day.
+    The trailing distinct count cannot ride a window frame (COUNT
+    DISTINCT OVER RANGE is unsupported everywhere), so each (user,
+    day) activity row is exploded into the ≤30 future days
+    it keeps the user "monthly active" for — turning the sliding
+    distinct into a plain keyed distinct-aggregate. Blow-up factor is
+    the window length (bounded, documented), all shuffles keyed by
+    day; the DuckDB oracle restates the same coverage with a range
+    join."""
+    events = read_table(spark, sf_dir, "events")
+    active = events.select(
+        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
+    ).distinct().localCheckpoint(eager=False)
+    days = active.select("day").distinct()
+    covered = active.select(
+        "user_id",
+        F.explode(
+            F.sequence(
+                F.col("day"),
+                F.date_add(F.col("day"), _MAU_WINDOW - 1),
+                F.expr("interval 1 day"),
+            )
+        ).alias("day"),
+    ).join(days, "day", "left_semi")
+    dau = active.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
+    mau = covered.groupBy("day").agg(F.countDistinct("user_id").alias("mau"))
+    return dau.join(mau, "day").select(
+        "day",
+        "dau",
+        "mau",
+        F.round(F.col("dau").cast("double") / F.col("mau"), 6).alias("stickiness"),
+    )
+
+
+# --- seasonality --------------------------------------------------------
+
+_SEASONAL_ORACLE = """
+    SELECT event_type,
+           CAST(EXTRACT(dow FROM ts) AS INT) AS dow,
+           CAST(EXTRACT(hour FROM ts) AS INT) AS hour_bucket,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+    FROM events
+    GROUP BY 1, 2, 3
+"""
+
+
+@query("events_seasonal_profile", _SEASONAL_ORACLE)
+def events_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seasonality profile: event volume/value by (type, day-of-week,
+    hour) — the load-shaping / anomaly-baseline input. Single scan,
+    one keyed aggregate; DOW convention pinned to Sunday=0 on both
+    engines (Spark ``dayofweek`` is 1-based Sunday=1, DuckDB
+    ``EXTRACT(dow)`` is 0-based Sunday=0 — the Spark side subtracts
+    one so the driver compare sees identical codes)."""
+    events = read_table(spark, sf_dir, "events")
+    return events.groupBy(
+        "event_type",
+        (F.dayofweek("ts") - 1).cast("int").alias("dow"),
+        F.hour("ts").cast("int").alias("hour_bucket"),
+    ).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+    )
+
+
+# --- path analysis + bot screening ---------------------------------------
+
 _PATH_TOP = 20
 
 
+_EVENTS_TOP_PATHS_ORACLE = f"""
+    WITH o AS (
+        SELECT user_id, event_type,
+               LEAD(event_type, 1) OVER w AS t1,
+               LEAD(event_type, 2) OVER w AS t2
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    )
+    SELECT event_type || '>' || t1 || '>' || t2 AS path,
+           COUNT(*) AS n_occurrences
+    FROM o WHERE t1 IS NOT NULL AND t2 IS NOT NULL
+    GROUP BY 1
+    ORDER BY n_occurrences DESC, path
+    LIMIT {_PATH_TOP}
+    """
 
 
+@query("events_top_paths", _EVENTS_TOP_PATHS_ORACLE)
+def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top 3-step user paths (sequential pattern mining, the n-gram
+    extension of ``events_markov_transitions``'s 1-step matrix): every
+    consecutive event-type triple per user, counted corpus-wide —
+    the "what do users do next" path-analysis staple. One user_id
+    shuffle (the LEAD window), one map-side-combinable count, top-k
+    via TakeOrderedAndProject; ordering pinned by (ts, event_id) so
+    intra-second ties cannot reorder paths between engines.
 
+    Scale: paths are generated in-row from the window (no explode, no
+    self-join); the count's key domain is |event_types|^3 — tiny."""
+    events = read_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    o = events.select(
+        "event_type",
+        F.lead("event_type", 1).over(w).alias("t1"),
+        F.lead("event_type", 2).over(w).alias("t2"),
+    ).filter(F.col("t1").isNotNull() & F.col("t2").isNotNull())
+    return (
+        o.select(
+            F.concat_ws(">", "event_type", "t1", "t2").alias("path")
+        )
+        .groupBy("path")
+        .agg(F.count(F.lit(1)).alias("n_occurrences"))
+        .orderBy(F.desc("n_occurrences"), "path")
+        .limit(_PATH_TOP)
+    )
+
+
+_EVENTS_BOT_SIGNALS_ORACLE = """
+    WITH o AS (
+        SELECT user_id, event_type,
+               date_diff('second', TIMESTAMP '1970-01-01', ts) AS ts_s,
+               date_diff('second', TIMESTAMP '1970-01-01', ts)
+               - LAG(date_diff('second', TIMESTAMP '1970-01-01', ts))
+                 OVER (PARTITION BY user_id ORDER BY ts, event_id) AS iat
+        FROM events
+    ),
+    g AS (
+        SELECT user_id,
+               COUNT(*) AS n_events,
+               MAX(ts_s) - MIN(ts_s) AS span_s,
+               CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types,
+               CAST(SUM(iat) AS BIGINT) AS iat_sum,
+               CAST(SUM(iat * iat) AS BIGINT) AS iat_sum2,
+               COUNT(iat) AS n_iat
+        FROM o GROUP BY user_id
+    )
+    SELECT user_id, n_events, span_s, n_types,
+           ROUND(CAST(n_events AS DOUBLE) * 3600.0
+                 / CAST(span_s + 1 AS DOUBLE), 6) AS events_per_hour,
+           CAST(n_iat * iat_sum2 - iat_sum * iat_sum AS BIGINT)
+               AS iat_var_n2,
+           CAST((CASE WHEN CAST(n_events AS DOUBLE) * 3600.0
+                           / CAST(span_s + 1 AS DOUBLE) > 10.0
+                      THEN 1 ELSE 0 END)
+                + (CASE WHEN n_types = 1 AND n_events >= 10
+                        THEN 1 ELSE 0 END)
+                + (CASE WHEN n_iat >= 10
+                             AND n_iat * iat_sum2 - iat_sum * iat_sum
+                                 < 3600 * n_iat * n_iat
+                        THEN 1 ELSE 0 END) AS INT) AS rule_hits
+    FROM g WHERE n_iat >= 1
+    """
+
+
+@query("events_bot_signals", _EVENTS_BOT_SIGNALS_ORACLE)
+def events_bot_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user automation/bot signal profile — the trust-and-safety
+    screen a production event pipeline runs before analytics trust the
+    traffic: event rate (events/hour over the active span), behavioral
+    diversity (distinct event types), and inter-arrival-time variance
+    (human traffic is bursty; automation is metronomic). Each signal
+    is emitted for EVERY user alongside a rule-hit count (rate > 10/h,
+    single-type high volume, low-variance cadence), so the consumer
+    sets its own threshold. The IAT variance is emitted in EXACT
+    integer form (n^2 * var = n * sum(d^2) - (sum d)^2 over the
+    lag-window differences): a 6dp-rounded double at ~1e9 magnitude
+    exceeds double significand precision, so engine round()
+    implementations disagree in the last ulp — the integer form is
+    hash-exact and the low-variance rule compares integers
+    (var_n2 < 3600 * n^2). The span denominator is span+1 so
+    single-burst users cannot divide by zero.
+
+    Scale: one scan, one user_id shuffle shared by the lag window and
+    the per-user aggregate (same partitioning), O(users) output."""
+    events = read_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    o = events.select(
+        "user_id",
+        "event_type",
+        F.col("ts").cast("long").alias("ts_s"),
+        (
+            F.col("ts").cast("long")
+            - F.lag(F.col("ts").cast("long")).over(w)
+        ).alias("iat"),
+    )
+    g = o.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        (F.max("ts_s") - F.min("ts_s")).alias("span_s"),
+        F.countDistinct("event_type").alias("n_types"),
+        F.sum("iat").cast("bigint").alias("iat_sum"),
+        F.sum(F.col("iat") * F.col("iat")).cast("bigint").alias("iat_sum2"),
+        F.count("iat").alias("n_iat"),
+    ).filter(F.col("n_iat") >= 1)
+    eph = "cast(n_events as double) * 3600.0D / cast(span_s + 1 as double)"
+    # variance stays INTEGER: n^2 * var = n * sum(d^2) - (sum d)^2 — a
+    # rounded 6dp double at ~1e9 magnitude needs more significant
+    # digits than a double carries, so the engines' round()
+    # implementations disagree in the last ulp (found by the strict
+    # driver-style compare); the integer form is hash-exact and the
+    # low-variance rule restates as var_n2 < 3600 * n^2
+    var_n2 = "n_iat * iat_sum2 - iat_sum * iat_sum"
+    return g.select(
+        "user_id",
+        "n_events",
+        "span_s",
+        "n_types",
+        F.round(F.expr(eph), 6).alias("events_per_hour"),
+        F.expr(f"cast({var_n2} as bigint)").alias("iat_var_n2"),
+        F.expr(
+            f"cast((case when {eph} > 10.0D then 1 else 0 end)"
+            " + (case when n_types = 1 and n_events >= 10 then 1 else 0 end)"
+            f" + (case when n_iat >= 10 and {var_n2} < 3600 * n_iat * n_iat"
+            " then 1 else 0 end) as int)"
+        ).alias("rule_hits"),
+    )
+
+
+# --- Holt-Winters -----------------------------------------------------------
+
+#: Holt-Winters additive seasonal smoothing contract: weekly period,
+#: alpha/beta/gamma pinned; seeds are the classic l0 = mean of the
+#: first PERIOD observations, b0 = 0, s_i = y_i - l0.
+HW_PERIOD = 7
+HW_ALPHA = 0.3
+HW_BETA = 0.2
+HW_GAMMA = 0.4
+
+# the new level, textually duplicated wherever the recurrence needs it
+# (Spark lambdas cannot bind a local; duplicating keeps the IEEE-double
+# op sequence identical on both engines — events_holt_linear precedent)
+_HW_L = (
+    f"({HW_ALPHA}D * (cast(x.cents as double)"
+    f" - element_at(acc.s, acc.t % {HW_PERIOD} + 1))"
+    f" + {1 - HW_ALPHA}D * (acc.l + acc.b))"
+)
+_HW_SEED_L = (
+    f"cast(aggregate(slice(arr, 1, {HW_PERIOD}), cast(0 as bigint),"
+    f" (a, x) -> a + x.cents) as double) / {HW_PERIOD}.0D"
+)
+
+
+_HW_ORACLE = f"""
+    WITH RECURSIVE daily AS (
+        SELECT event_type, date_trunc('day', ts) AS day,
+               CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
+                   AS cents
+        FROM events GROUP BY event_type, date_trunc('day', ts)
+    ),
+    idx AS (
+        SELECT event_type, day, cents,
+               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS rn
+        FROM daily
+    ),
+    seed AS (
+        SELECT event_type,
+               CAST(SUM(cents) AS DOUBLE) / {HW_PERIOD}.0 AS l0,
+               list(CAST(cents AS DOUBLE) ORDER BY rn) AS ys
+        FROM idx WHERE rn <= {HW_PERIOD}
+        GROUP BY event_type HAVING COUNT(*) = {HW_PERIOD}
+    ),
+    rec AS (
+        SELECT event_type, {HW_PERIOD} AS rn,
+               CAST(NULL AS TIMESTAMP) AS day, CAST(NULL AS BIGINT) AS cents,
+               l0 AS l, CAST(0.0 AS DOUBLE) AS b,
+               list_transform(ys, y -> y - l0) AS s
+        FROM seed
+        UNION ALL
+        SELECT i.event_type, i.rn, i.day, i.cents,
+               {HW_ALPHA} * (CAST(i.cents AS DOUBLE)
+                             - r.s[(i.rn - 1) % {HW_PERIOD} + 1])
+               + {1 - HW_ALPHA} * (r.l + r.b),
+               {HW_BETA} * (({HW_ALPHA} * (CAST(i.cents AS DOUBLE)
+                                           - r.s[(i.rn - 1) % {HW_PERIOD} + 1])
+                             + {1 - HW_ALPHA} * (r.l + r.b)) - r.l)
+               + {1 - HW_BETA} * r.b,
+               list_slice(r.s, 1, (i.rn - 1) % {HW_PERIOD})
+               || [{HW_GAMMA} * (CAST(i.cents AS DOUBLE)
+                                 - ({HW_ALPHA} * (CAST(i.cents AS DOUBLE)
+                                     - r.s[(i.rn - 1) % {HW_PERIOD} + 1])
+                                    + {1 - HW_ALPHA} * (r.l + r.b)))
+                  + {1 - HW_GAMMA} * r.s[(i.rn - 1) % {HW_PERIOD} + 1]]
+               || list_slice(r.s, (i.rn - 1) % {HW_PERIOD} + 2, {HW_PERIOD})
+        FROM rec r JOIN idx i
+          ON i.event_type = r.event_type AND i.rn = r.rn + 1
+    )
+    SELECT event_type, day, cents,
+           ROUND(l, 6) AS level,
+           ROUND(b, 6) AS trend,
+           ROUND(s[(rn - 1) % {HW_PERIOD} + 1], 6) AS season,
+           ROUND(l + b + s[rn % {HW_PERIOD} + 1], 6) AS forecast_next
+    FROM rec WHERE rn > {HW_PERIOD}
+"""
+
+
+@query("events_holt_winters", _HW_ORACLE)
+def events_holt_winters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Holt-Winters ADDITIVE SEASONAL (triple exponential) smoothing of
+    the daily revenue series per event type — completes the smoothing
+    family (SES: 1 state; Holt: 2; this: 2 + a 7-slot weekly
+    seasonal array), the operator behind seasonality-aware forecasting
+    and deseasonalized anomaly baselines. The accumulator is a STRUCT
+    (step counter, level, trend, seasonal list) folded JVM-side by
+    ``aggregate()`` over the per-type day-sorted array; the seasonal
+    slot for step t is t % period, and the slot update rebuilds the
+    list by concat (no index-lambda, so the oracle can restate it with
+    ``list_slice`` verbatim). Seeds: l0 = mean of the first period's
+    observations, b0 = 0, s_i = y_i - l0. The oracle replays the
+    recursion as a recursive CTE stepping (event_type, rn) with the
+    seasonal list as a LIST column — same independent-algorithm
+    strategy as ``events_holt_linear`` (DuckDB's list_reduce mutates
+    struct accumulators field-by-field, so a fold there is unsafe).
+    Rows emit from step period+1 on (types with <= period days have no
+    seasonal state yet); ``forecast_next`` adds the NEXT step's
+    seasonal slot, which this step never touches (consecutive steps
+    hit different slots mod 7), so no expression duplication is
+    needed to read it pre-update.
+
+    Scale posture: identical to SES/Holt — series length is bounded by
+    CALENDAR DAYS, not corpus rows; two keyed aggregations are the
+    only shuffles and the per-day prefix fold is O(days^2) on ~30-day
+    series."""
+    # shared per-corpus prefix (events_ext.shared_daily_cents): one
+    # scan + one (event_type, day) aggregate serves all five series
+    # queries instead of being recomputed per run
+    daily = shared_daily_cents(spark, sf_dir)
+    series = daily.groupBy("event_type").agg(
+        F.sort_array(F.collect_list(F.struct("day", "cents"))).alias("arr")
+    )
+    p = HW_PERIOD
+    seed = (
+        f"named_struct('t', {p}, 'l', {_HW_SEED_L}, 'b', 0.0D,"
+        f" 's', transform(slice(arr, 1, {p}),"
+        f" x -> cast(x.cents as double) - ({_HW_SEED_L})))"
+    )
+    s_new = (
+        f"{HW_GAMMA}D * (cast(x.cents as double) - {_HW_L})"
+        f" + {1 - HW_GAMMA}D * element_at(acc.s, acc.t % {p} + 1)"
+    )
+    fold = F.expr(
+        f"aggregate(slice(arr, {p + 1}, pos - {p - 1}), {seed},"
+        f" (acc, x) -> named_struct("
+        f"'t', acc.t + 1,"
+        f" 'l', {_HW_L},"
+        f" 'b', {HW_BETA}D * ({_HW_L} - acc.l) + {1 - HW_BETA}D * acc.b,"
+        f" 's', concat(slice(acc.s, 1, acc.t % {p}), array({s_new}),"
+        f" slice(acc.s, acc.t % {p} + 2, {p - 1} - acc.t % {p}))))"
+    )
+    slot = F.pmod(F.col("pos"), F.lit(p)) + F.lit(1)
+    next_slot = F.pmod(F.col("pos") + 1, F.lit(p)) + F.lit(1)
+    return (
+        series.select(
+            "event_type", "arr", F.posexplode("arr").alias("pos", "e")
+        )
+        .filter(F.col("pos") >= p)
+        .select(
+            "event_type",
+            F.col("e.day").alias("day"),
+            F.col("e.cents").alias("cents"),
+            fold.alias("st"),
+            slot.alias("slot"),
+            next_slot.alias("next_slot"),
+        )
+        .select(
+            "event_type",
+            "day",
+            "cents",
+            F.round(F.col("st.l"), 6).alias("level"),
+            F.round(F.col("st.b"), 6).alias("trend"),
+            F.round(F.element_at("st.s", F.col("slot")), 6).alias("season"),
+            F.round(
+                F.col("st.l")
+                + F.col("st.b")
+                + F.element_at("st.s", F.col("next_slot")),
+                6,
+            ).alias("forecast_next"),
+        )
+    )

@@ -509,3 +509,235 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("jaccard"), "part_a", "part_b")
         .limit(_LINK_TOP)
     )
+
+
+# --- label propagation ----------------------------------------------------
+
+#: label-propagation contract: 2 SYNCHRONOUS majority-vote rounds over
+#: the shared support-thresholded co-purchase graph; ties break to the
+#: smallest label (every step deterministic, so the oracle
+#: value-checks each node's community).
+LPA_ROUNDS = 2
+
+
+_LPA_ORACLE = f"""
+    WITH pairs AS (
+        SELECT a.l_partkey AS pa, b.l_partkey AS pb
+        FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+        WHERE a.l_partkey < b.l_partkey
+        GROUP BY pa, pb HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
+    ),
+    edges AS (
+        SELECT pa AS src, pb AS dst FROM pairs
+        UNION ALL SELECT pb AS src, pa AS dst FROM pairs
+    ),
+    l0 AS (
+        SELECT DISTINCT src AS node, src AS label FROM edges
+    ),
+    i1 AS (
+        SELECT node, label FROM (
+            SELECT e.src AS node, l.label, COUNT(*) AS cnt,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY e.src
+                       ORDER BY COUNT(*) DESC, l.label ASC) AS rn
+            FROM edges e JOIN l0 l ON l.node = e.dst
+            GROUP BY e.src, l.label)
+        WHERE rn = 1
+    ),
+    i2 AS (
+        SELECT node, label FROM (
+            SELECT e.src AS node, l.label, COUNT(*) AS cnt,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY e.src
+                       ORDER BY COUNT(*) DESC, l.label ASC) AS rn
+            FROM edges e JOIN i1 l ON l.node = e.dst
+            GROUP BY e.src, l.label)
+        WHERE rn = 1
+    )
+    SELECT node, label AS community FROM i2
+"""
+
+
+@query("graph_label_propagation", _LPA_ORACLE)
+def graph_label_propagation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Community detection by synchronous majority-label propagation
+    (LPA) over the support-thresholded co-purchase graph — the fifth
+    member of the graph family, and a different signal from
+    ``graph_connected_components``: components split the graph only at
+    disconnections, LPA also splits around DENSITY (a bridge edge
+    cannot out-vote a community's internal majority). Each round,
+    every node adopts the most frequent label among its neighbors
+    (count DESC, label ASC — deterministic); labels start as node ids;
+    exactly ``LPA_ROUNDS`` rounds so the oracle is a fixed SQL
+    pipeline. Returns (node, community).
+
+    Scale posture: one round = one dst-keyed join + one (node, label)
+    aggregate (map-side combinable) + one per-node top-1 window —
+    keyed shuffles only, skew bounded by the support threshold that
+    already caps degrees for the triangle wedge join. A
+    run-to-convergence deployment wraps the same round in the
+    checkpointed loop of ``operators/dedup.duplicate_clusters``."""
+    from pyspark.sql import Window
+
+    pairs = _copurchase_pairs(spark, sf_dir)
+    edges = pairs.select(
+        F.col("pa").alias("src"), F.col("pb").alias("dst")
+    ).unionByName(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
+    w = Window.partitionBy("node").orderBy(
+        F.col("cnt").desc(), F.col("label").asc()
+    )
+    for _ in range(LPA_ROUNDS):
+        labels = (
+            edges.join(labels, edges.dst == labels.node)
+            .select(F.col("src").alias("node"), "label")
+            .groupBy("node", "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("node", "label")
+        )
+    return labels.select("node", F.col("label").alias("community"))
+
+
+# --- per-node triangle participation --------------------------------------
+
+def _triangle_oracle() -> str:
+    return f"""
+    WITH {PAIRS_LOHI_CTE},
+    deg AS (
+        SELECT node, COUNT(*) AS d FROM (
+            SELECT lo AS node FROM pairs
+            UNION ALL SELECT hi FROM pairs)
+        GROUP BY node
+    ),
+    oriented AS (
+        SELECT CASE WHEN (dl.d < dh.d) OR (dl.d = dh.d AND p.lo < p.hi)
+                    THEN p.lo ELSE p.hi END AS src,
+               CASE WHEN (dl.d < dh.d) OR (dl.d = dh.d AND p.lo < p.hi)
+                    THEN p.hi ELSE p.lo END AS dst
+        FROM pairs p
+        JOIN deg dl ON dl.node = p.lo
+        JOIN deg dh ON dh.node = p.hi
+    ),
+    tri AS (
+        SELECT w.src, w.lo, w.hi FROM (
+            SELECT e1.src, e1.dst AS lo, e2.dst AS hi
+            FROM oriented e1 JOIN oriented e2
+              ON e1.src = e2.src AND e1.dst < e2.dst) w
+        JOIN pairs p ON p.lo = w.lo AND p.hi = w.hi
+    )
+    SELECT node AS part, CAST(COUNT(*) AS BIGINT) AS n_triangles
+    FROM (
+        SELECT src AS node FROM tri
+        UNION ALL SELECT lo FROM tri
+        UNION ALL SELECT hi FROM tri)
+    GROUP BY node
+"""
+
+
+@query("graph_triangle_per_node", _triangle_oracle())
+def graph_triangle_per_node_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PER-PART triangle participation over the same support-2
+    co-purchase graph as the registered GLOBAL ``graph_triangle_count``
+    (edge frame shared via ``catalog/graph._copurchase_pairs``): the
+    local-clustering decomposition — each triangle contributes 1 to
+    each of its three corners, so sum(n_triangles) = 3 x the global
+    count (the cross-query law pinned in tests). Same degree-ordered
+    O(m^1.5) wedge enumeration, factored into the reusable
+    ``operators/graph_metrics.triangle_counts`` (orient up the
+    (degree, id) order, wedge from out-neighbors, close against the
+    canonical edge set); the oracle restates all three stages in
+    SQL."""
+    from incubyte_vaccination_data_pipeline_spark.operators.graph_metrics import (
+        triangle_counts,
+    )
+
+    edges = _copurchase_pairs(spark, sf_dir).select(
+        F.col("pa").alias("lo"), F.col("pb").alias("hi")
+    )
+    return triangle_counts(edges).select(
+        F.col("node").alias("part"), "n_triangles"
+    )
+
+
+# --- k-core peel --------------------------------------------------------------
+
+#: k-core pins: small fixed peel count so the oracle is a fixed CTE
+#: pipeline (the LPA_ROUNDS precedent); the operator's fixpoint path
+#: (max_rounds=None, durable_checkpoint per round) is the deployment
+#: shape and is pinned against this query in tests (fixpoint core is
+#: a SUBSET of any fixed-round peel).
+KCORE_K = 2
+KCORE_ROUNDS = 2
+
+
+def _kcore_oracle() -> str:
+    # the CTE chain hand-writes exactly TWO peel rounds (d0/keep0/e1,
+    # d1/keep1/e2); bumping KCORE_ROUNDS without rewriting it would
+    # silently desynchronize query and oracle — a real exception, not
+    # assert, so `python -O` cannot strip the guard
+    if KCORE_ROUNDS != 2:
+        raise RuntimeError(
+            "_kcore_oracle hardcodes two peel rounds; rewrite the CTE "
+            f"chain before setting KCORE_ROUNDS={KCORE_ROUNDS}"
+        )
+
+    k = KCORE_K
+    return f"""
+    WITH {PAIRS_LOHI_CTE},
+    d0 AS (
+        SELECT node, COUNT(*) AS degree FROM (
+            SELECT lo AS node FROM pairs UNION ALL SELECT hi FROM pairs)
+        GROUP BY node
+    ),
+    keep0 AS (SELECT node FROM d0 WHERE degree >= {k}),
+    e1 AS (
+        SELECT p.lo, p.hi FROM pairs p
+        WHERE p.lo IN (SELECT node FROM keep0)
+          AND p.hi IN (SELECT node FROM keep0)
+    ),
+    d1 AS (
+        SELECT node, COUNT(*) AS degree FROM (
+            SELECT lo AS node FROM e1 UNION ALL SELECT hi FROM e1)
+        GROUP BY node
+    ),
+    keep1 AS (SELECT node FROM d1 WHERE degree >= {k}),
+    e2 AS (
+        SELECT p.lo, p.hi FROM e1 p
+        WHERE p.lo IN (SELECT node FROM keep1)
+          AND p.hi IN (SELECT node FROM keep1)
+    )
+    SELECT node AS part, CAST(COUNT(*) AS BIGINT) AS degree FROM (
+        SELECT lo AS node FROM e2 UNION ALL SELECT hi FROM e2)
+    GROUP BY node
+"""
+
+
+@query("graph_kcore_peel", _kcore_oracle())
+def graph_kcore_peel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2-round k=2 core peel over the shared support-2 co-purchase
+    graph (``operators/graph_metrics.kcore`` with ``max_rounds``
+    pinned — each round drops nodes of degree < 2 and the edges they
+    carry): the density decomposition between connected components
+    (k=1) and cliques, the sixth member of the graph family. Returns
+    (part, degree) over the surviving subgraph, degree AFTER the
+    final peel. The fixed-round form is an upper approximation of the
+    true core (supersets it — and vividly so where the support
+    threshold leaves long chains: 160 vs 18 nodes at sf0.1, chains
+    peel one link per round); the operator's fixpoint path is the
+    run-to-convergence deployment shape, checkpointed per round.
+    k=2 keeps the query non-vacuous across the whole SF ladder (the
+    sf0.1 signal graph has NO 3-core)."""
+    from incubyte_vaccination_data_pipeline_spark.operators.graph_metrics import (
+        kcore,
+    )
+
+    edges = _copurchase_pairs(spark, sf_dir).select(
+        F.col("pa").alias("lo"), F.col("pb").alias("hi")
+    )
+    return kcore(edges, KCORE_K, max_rounds=KCORE_ROUNDS).select(
+        F.col("node").alias("part"), "degree"
+    )

@@ -17,7 +17,7 @@ all as map-side-combinable aggregates over equi-joins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
@@ -47,7 +47,7 @@ _NEW_SNAPSHOT_SQL = f"""
 def _new_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministically mutated second snapshot (Spark side of
     ``_NEW_SNAPSHOT_SQL``) — shared by the keyed diff and the PSI
-    drift monitor (``round5_ext``)."""
+    drift monitor (``quality_psi_drift_orders``)."""
     base = read_table(spark, sf_dir, "orders")
     kept = base.filter(F.col("o_orderkey") % _DELETE_MOD != 0).select(
         "o_orderkey",
@@ -476,4 +476,116 @@ def quality_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.expr(f"{dev} * {dev} / (cast(n as double) * {p})"), 6
         ).alias("chi2_contribution"),
+    )
+
+
+# --- distribution drift -------------------------------------------------
+#
+# PSI per column between the orders snapshot and the deterministically
+# mutated second snapshot: the distribution-drift monitor that catches
+# silent upstream changes a keyed diff cannot (same keys, shifted
+# distribution). Bins are fixed integer buckets, counts are exact
+# BIGINTs, and PSI's log-ratio is computed once from those integers
+# (Laplace-smoothed), so the rounded double agrees across engines. One
+# scan per snapshot side, two tiny aggregates.
+
+_PRICE_BIN = 60000
+_N_PRICE_BINS = 10
+
+_PSI_ORACLE = f"""
+    WITH old_bins AS (
+        SELECT 'o_orderstatus' AS col, o_orderstatus AS bin,
+               COUNT(*) AS n
+        FROM orders GROUP BY 2
+        UNION ALL
+        SELECT 'o_totalprice',
+               CAST(LEAST({_N_PRICE_BINS - 1},
+                          CAST(FLOOR(o_totalprice / 60000) AS BIGINT))
+                    AS VARCHAR),
+               COUNT(*)
+        FROM orders GROUP BY 2
+    ),
+    new_snap AS ({_NEW_SNAPSHOT_SQL}),
+    new_bins AS (
+        SELECT 'o_orderstatus' AS col, o_orderstatus AS bin,
+               COUNT(*) AS n
+        FROM new_snap GROUP BY 2
+        UNION ALL
+        SELECT 'o_totalprice',
+               CAST(LEAST({_N_PRICE_BINS - 1},
+                          CAST(FLOOR(o_totalprice / 60000) AS BIGINT))
+                    AS VARCHAR),
+               COUNT(*)
+        FROM new_snap GROUP BY 2
+    ),
+    joined AS (
+        SELECT COALESCE(o.col, w.col) AS col,
+               COALESCE(o.bin, w.bin) AS bin,
+               COALESCE(o.n, 0) AS n_old,
+               COALESCE(w.n, 0) AS n_new
+        FROM old_bins o FULL OUTER JOIN new_bins w
+          ON o.col = w.col AND o.bin = w.bin
+    ),
+    totals AS (
+        SELECT col, bin, n_old, n_new,
+               SUM(n_old) OVER (PARTITION BY col) AS t_old,
+               SUM(n_new) OVER (PARTITION BY col) AS t_new,
+               COUNT(*) OVER (PARTITION BY col) AS k
+        FROM joined
+    )
+    SELECT col,
+           CAST(COUNT(*) AS BIGINT) AS n_bins,
+           round(SUM(
+               ((n_new + 1.0) / (t_new + k) - (n_old + 1.0) / (t_old + k))
+               * ln(((n_new + 1.0) / (t_new + k))
+                    / ((n_old + 1.0) / (t_old + k)))
+           ), 6) AS psi
+    FROM totals
+    GROUP BY col
+"""
+
+
+@query("quality_psi_drift_orders", _PSI_ORACLE)
+def quality_psi_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-column PSI between the two snapshots; exact integer bin
+    counts, Laplace-smoothed log-ratio computed once at the end."""
+    orders = read_table(spark, sf_dir, "orders")
+    new_snap = _new_snapshot(spark, sf_dir)
+
+    def bins(df: DataFrame) -> DataFrame:
+        price_bin = F.least(
+            F.lit(_N_PRICE_BINS - 1),
+            F.floor(F.col("o_totalprice") / _PRICE_BIN).cast("bigint"),
+        ).cast("string")
+        status = df.groupBy(
+            F.lit("o_orderstatus").alias("col"),
+            F.col("o_orderstatus").alias("bin"),
+        ).agg(F.count(F.lit(1)).alias("n"))
+        price = df.groupBy(
+            F.lit("o_totalprice").alias("col"), price_bin.alias("bin")
+        ).agg(F.count(F.lit(1)).alias("n"))
+        return status.unionByName(price)
+
+    old_b = bins(orders).withColumnRenamed("n", "n_old")
+    new_b = bins(new_snap).withColumnRenamed("n", "n_new")
+    joined = old_b.join(new_b, ["col", "bin"], "full").select(
+        "col",
+        "bin",
+        F.coalesce("n_old", F.lit(0)).alias("n_old"),
+        F.coalesce("n_new", F.lit(0)).alias("n_new"),
+    )
+    w = Window.partitionBy("col")
+    t = joined.select(
+        "col",
+        "n_old",
+        "n_new",
+        F.sum("n_old").over(w).alias("t_old"),
+        F.sum("n_new").over(w).alias("t_new"),
+        F.count(F.lit(1)).over(w).alias("k"),
+    )
+    p_new = (F.col("n_new") + 1.0) / (F.col("t_new") + F.col("k"))
+    p_old = (F.col("n_old") + 1.0) / (F.col("t_old") + F.col("k"))
+    return t.groupBy("col").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_bins"),
+        F.round(F.sum((p_new - p_old) * F.log(p_new / p_old)), 6).alias("psi"),
     )

@@ -2157,3 +2157,322 @@ def orders_survival_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- customer-value analytics -------------------------------------------
+
+_RFM_AS_OF = "2002-01-01"
+
+_RFM_ORACLE = f"""
+    WITH base AS (
+        SELECT o_custkey,
+               CAST(date_diff('day', MAX(o_orderdate), DATE '2002-01-01')
+                    AS BIGINT) AS recency_days,
+               COUNT(*) AS frequency,
+               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS monetary
+        FROM orders GROUP BY o_custkey
+    ),
+    scored AS (
+        SELECT *,
+               NTILE(4) OVER (ORDER BY recency_days DESC, o_custkey) AS r_score,
+               NTILE(4) OVER (ORDER BY frequency, o_custkey) AS f_score,
+               NTILE(4) OVER (ORDER BY monetary, o_custkey) AS m_score
+        FROM base
+    )
+    SELECT o_custkey, recency_days, frequency, monetary,
+           r_score, f_score, m_score,
+           CASE WHEN r_score = 4 AND f_score = 4 THEN 'champion'
+                WHEN r_score = 4 THEN 'recent'
+                WHEN f_score = 4 THEN 'loyal'
+                WHEN r_score = 1 AND f_score = 1 THEN 'lost'
+                ELSE 'regular' END AS segment
+    FROM scored
+"""
+
+
+@query("orders_rfm_segmentation", _RFM_ORACLE)
+def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM customer segmentation: recency / frequency / monetary
+    quartiles (NTILE with custkey tie-break so both engines bucket
+    identically) + a rule-based segment label. One scan, one custkey
+    aggregate; the three NTILEs share one unpartitioned sort of the
+    per-customer frame — |customers| rows, not |orders| (acceptable
+    single-partition step on an aggregate that is orders-of-magnitude
+    smaller than the fact table; a scale-out variant would ntile via
+    approx quantile boundaries)."""
+    orders = read_table(spark, sf_dir, "orders")
+    base = orders.groupBy("o_custkey").agg(
+        F.datediff(
+            F.lit(_RFM_AS_OF).cast("date"), F.max("o_orderdate")
+        ).cast("bigint").alias("recency_days"),
+        F.count(F.lit(1)).alias("frequency"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+        .cast("double")
+        .alias("monetary"),
+    )
+    r = F.ntile(4).over(Window.orderBy(F.desc("recency_days"), "o_custkey"))
+    f = F.ntile(4).over(Window.orderBy("frequency", "o_custkey"))
+    m = F.ntile(4).over(Window.orderBy("monetary", "o_custkey"))
+    scored = base.select(
+        "o_custkey", "recency_days", "frequency", "monetary",
+        r.alias("r_score"), f.alias("f_score"), m.alias("m_score"),
+    )
+    seg = (
+        F.when((F.col("r_score") == 4) & (F.col("f_score") == 4), "champion")
+        .when(F.col("r_score") == 4, "recent")
+        .when(F.col("f_score") == 4, "loyal")
+        .when((F.col("r_score") == 1) & (F.col("f_score") == 1), "lost")
+        .otherwise("regular")
+    )
+    return scored.select("*", seg.alias("segment"))
+
+
+# --- cohort analytics ---------------------------------------------------
+
+_COHORT_ORACLE = """
+    WITH firsts AS (
+        SELECT o_custkey,
+               MIN(o_orderdate) AS first_date
+        FROM orders GROUP BY o_custkey
+    ),
+    cohorts AS (
+        SELECT o_custkey,
+               CAST(date_trunc('quarter', first_date) AS DATE) AS cohort_q
+        FROM firsts
+    )
+    SELECT c.cohort_q,
+           COUNT(DISTINCT o.o_custkey) AS n_customers,
+           COUNT(*) AS n_orders,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+               AS total_value,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)))
+                / COUNT(DISTINCT o.o_custkey) AS DOUBLE) AS ltv_per_customer
+    FROM orders o JOIN cohorts c ON o.o_custkey = c.o_custkey
+    GROUP BY c.cohort_q
+"""
+
+
+@query("orders_cohort_ltv", _COHORT_ORACLE)
+def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Acquisition-cohort lifetime value: customers grouped by the
+    quarter of their FIRST order, with each cohort's total and
+    per-customer value over all subsequent activity. One scan builds
+    the first-order frame (keyed aggregate), a second pass joins the
+    cohort label back — the join is on the customer key both sides
+    already aggregate/shuffle on. Money stays DECIMAL until the final
+    cast (repo convention), so LTV is exact-over-exact."""
+    orders = read_table(spark, sf_dir, "orders")
+    cohorts = (
+        orders.groupBy("o_custkey")
+        .agg(F.min("o_orderdate").alias("first_date"))
+        .select(
+            "o_custkey",
+            F.to_date(F.date_trunc("quarter", "first_date")).alias("cohort_q"),
+        )
+    )
+    dec = F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+    return (
+        orders.join(cohorts, "o_custkey")
+        .groupBy("cohort_q")
+        .agg(
+            F.countDistinct("o_custkey").alias("n_customers"),
+            F.count(F.lit(1)).alias("n_orders"),
+            dec.cast("double").alias("total_value"),
+            (dec / F.countDistinct("o_custkey")).cast("double").alias(
+                "ltv_per_customer"
+            ),
+        )
+    )
+
+
+# --- period-over-period growth ------------------------------------------
+
+_LINEITEM_YOY_BRAND_GROWTH_ORACLE = f"""
+    WITH rev AS (
+        SELECT p.p_brand AS brand,
+               CAST(EXTRACT(year FROM l.l_shipdate) AS INT) AS year,
+               CAST(SUM({_REVENUE_SQL}) AS DOUBLE) AS revenue
+        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+        GROUP BY 1, 2
+    )
+    SELECT brand, year, revenue,
+           LAG(revenue) OVER (PARTITION BY brand ORDER BY year)
+               AS prev_revenue,
+           ROUND((revenue - LAG(revenue) OVER (PARTITION BY brand
+                                               ORDER BY year))
+                 / LAG(revenue) OVER (PARTITION BY brand ORDER BY year)
+                 * 100.0, 6) AS yoy_pct
+    FROM rev
+    QUALIFY LAG(revenue) OVER (PARTITION BY brand ORDER BY year)
+            IS NOT NULL
+    """
+
+
+@query("lineitem_yoy_brand_growth", _LINEITEM_YOY_BRAND_GROWTH_ORACLE)
+def lineitem_yoy_brand_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Year-over-year revenue growth per part brand — the BI staple
+    (period-over-period comparison via LAG over the period dimension).
+    Revenue aggregates DECIMAL-exact per (brand, year) before the one
+    double cast; the growth ratio is a fixed float op sequence over
+    those exact sums, rounded at 6dp. The part dimension broadcasts
+    into the fact scan (star-join shape); the LAG window partitions on
+    brand — years per brand are calendar-bounded, so window state is
+    tiny. First year per brand drops (no prior period)."""
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
+    rev = (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .groupBy(
+            F.col("p_brand").alias("brand"),
+            F.year("l_shipdate").cast("int").alias("year"),
+        )
+        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
+    )
+    w = Window.partitionBy("brand").orderBy("year")
+    return (
+        rev.withColumn("prev_revenue", F.lag("revenue").over(w))
+        .filter(F.col("prev_revenue").isNotNull())
+        .select(
+            "brand",
+            "year",
+            "revenue",
+            "prev_revenue",
+            F.round(
+                (F.col("revenue") - F.col("prev_revenue"))
+                / F.col("prev_revenue")
+                * 100.0,
+                6,
+            ).alias("yoy_pct"),
+        )
+    )
+
+
+# --- k-center coreset sampling -------------------------------------------
+
+KCENTER_K = 8
+
+
+def _d2_cols_sql(a: str, b: str) -> str:
+    """In-order squared-L2 between two DuckDB list columns — the same
+    left fold (index order, identical double op sequence) as the Spark
+    side's ``_dist2_lit`` zip_with aggregate."""
+    diff = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS DOUBLE),"
+        f" list_transform(range(1, len({a}) + 1),"
+        f" i -> {diff} * {diff})),"
+        f" (x, y) -> x + y)"
+    )
+
+
+def _kcenter_oracle(k: int = KCENTER_K) -> str:
+    d2 = _d2_cols_sql
+    ctes = [
+        """c0 AS (
+        SELECT vec_id, embedding FROM embeddings
+        WHERE vec_id = (SELECT MIN(vec_id) FROM embeddings)
+    )"""
+    ]
+    for r in range(1, k):
+        prev = [f"c{j}" for j in range(r)]
+        dists = [d2("e.embedding", f"{p}.embedding") for p in prev]
+        mind = f"LEAST({', '.join(dists)})" if len(dists) > 1 else dists[0]
+        not_chosen = " AND ".join(f"e.vec_id <> {p}.vec_id" for p in prev)
+        ctes.append(
+            f"""c{r} AS (
+        SELECT e.vec_id, e.embedding, {mind} AS d
+        FROM embeddings e, {', '.join(prev)}
+        WHERE {not_chosen}
+        ORDER BY d DESC, e.vec_id LIMIT 1
+    )"""
+        )
+    selects = ["SELECT CAST(0 AS INT) AS center_rank, vec_id, CAST(0.0 AS DOUBLE) AS min_dist2 FROM c0"]
+    selects += [
+        f"SELECT CAST({r} AS INT), vec_id, ROUND(d, 6) FROM c{r}" for r in range(1, k)
+    ]
+    return "WITH " + ",\n    ".join(ctes) + "\n    " + "\n    UNION ALL ".join(selects)
+
+
+_SAMPLE_KCENTER_ORACLE = _kcenter_oracle()
+
+
+@query("sample_kcenter_coreset", _SAMPLE_KCENTER_ORACLE)
+def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy k-center coreset over the embedding corpus
+    (farthest-first traversal, k=8): the diversity-sampling primitive
+    of training-data selection — coreset construction, active-learning
+    seeding, prototype picking. Each round's argmax-of-min-distance is
+    a DISTRIBUTED TakeOrdered; only the k chosen centers are collected
+    (the iterative-driver-program pattern of the IVF quantizer). Fully
+    deterministic (min-id seed, index-order distance folds against
+    literal centers, exact min, lowest-id tie-break), so the oracle
+    unrolls all k selection rounds in SQL — the PageRank recipe.
+    Emits (center_rank, vec_id, min_dist2): the coverage radius at
+    selection, i.e. the k-center objective's trajectory."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        kcenter_coreset,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    centers = kcenter_coreset(emb, k=KCENTER_K)
+    out = spark.createDataFrame(
+        centers, "center_rank int, vec_id bigint, min_dist2 double"
+    )
+    return out.select(
+        "center_rank", "vec_id", F.round("min_dist2", 6).alias("min_dist2")
+    )
+
+
+# --- exact-size stratified sampling --------------------------------------
+
+#: exact-size stratified sampling: per-stratum budget = ceil(frac x
+#: stratum size) — experiment design needs exact counts per stratum,
+#: which the registered rate-based samplers (hash-threshold
+#: predicates) only deliver in expectation.
+STRAT_FRAC = 0.1
+
+
+_STRAT_ORACLE = f"""
+    SELECT doc_id, lang, rn FROM (
+        SELECT doc_id, lang,
+               ROW_NUMBER() OVER (
+                   PARTITION BY lang
+                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
+               COUNT(*) OVER (PARTITION BY lang) AS n
+        FROM documents)
+    WHERE rn <= CAST(ceil({STRAT_FRAC} * n) AS BIGINT)
+"""
+
+
+@query("sample_stratified_exact", _STRAT_ORACLE)
+def sample_stratified_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT-size stratified sample of ``documents`` by language:
+    every stratum contributes exactly ceil(0.1 x its size) documents,
+    chosen by content-hash order (md5(doc_id), doc_id — deterministic
+    on every engine and run, no TABLESAMPLE nondeterminism). The
+    counted-budget complement to ``sample_stratified_orders``'s
+    rate-based hash predicate: a scan-side filter samples at a RATE
+    (exact only in expectation); an eval-set builder or per-language
+    training quota needs the exact count. One keyed shuffle (the
+    per-stratum window); no driver-side work. Returns
+    (doc_id, lang, rn) — rank within stratum kept so downstream can
+    tighten the budget without resampling."""
+    from pyspark.sql import Window
+
+    docs = read_table(spark, sf_dir, "documents")
+    w = Window.partitionBy("lang").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
+    )
+    wn = Window.partitionBy("lang")
+    return (
+        docs.select(
+            "doc_id",
+            "lang",
+            F.row_number().over(w).alias("rn"),
+            F.count(F.lit(1)).over(wn).alias("__n"),
+        )
+        .filter(
+            F.col("rn")
+            <= F.ceil(F.lit(STRAT_FRAC) * F.col("__n")).cast("long")
+        )
+        .select("doc_id", "lang", "rn")
+    )

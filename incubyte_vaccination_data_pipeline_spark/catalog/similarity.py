@@ -46,6 +46,7 @@ from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
     PQ_M,
     PQ_SHORTLIST,
     cosine_near_dup_pairs,
+    knn_join_ivf,
     topk_bruteforce,
     topk_ivf,
     topk_lsh,
@@ -117,7 +118,7 @@ EMBEDDING_DIMS = 64  # testdata embedding width (mirrors lsh_bucket_expr's defau
 #: frames are corpus-sized x n_tables; at warehouse scale the same
 #: frames would be WRITTEN as tables bucketed by (t, bucket) / cid
 #: rather than memory-persisted.
-from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache, register_dict_cache
 
 _SHARED_EXACT = BoundedCache()
 _SHARED_CENTROIDS = BoundedCache()
@@ -276,8 +277,8 @@ def _ivf_oracle(
     query_pred = f"vec_id < {N_QUERY_VECTORS}" if query_pred is None else query_pred
     k = TOP_K if k is None else k
     # ``radius`` swaps the tail from the rank window to a threshold
-    # filter over the same exact-cosine candidates (staged
-    # ``ann_radius_ivf``); radius=None renders byte-identical text to
+    # filter over the same exact-cosine candidates
+    # (``ann_radius_ivf``); radius=None renders byte-identical text to
     # the pre-parameter oracle (the IVFADC splice markers depend on it)
     tail = (
         f"SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}"
@@ -286,7 +287,7 @@ def _ivf_oracle(
         f" WHERE cosine >= {radius}"
     )
     # ``pair_threshold`` swaps the query-centric tail for the SEMANTIC
-    # DEDUP tail (staged ``dedup_embedding_ivf``): every vector lands
+    # DEDUP tail (``dedup_embedding_ivf``): every vector lands
     # in its ``assign_m`` nearest cells (same a1 scores, same
     # score-DESC/cid tie-break as ``assigned``), candidate pairs share
     # a cell, and the exact-cosine threshold filters — the SQL
@@ -877,4 +878,575 @@ def embedding_label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFra
         "vec_id",
         "label",
         F.round(cosine_expr("embedding", "centroid"), 6).alias("cos_centroid"),
+    )
+
+
+# --- k-NN join through the shared IVF index ------------------------------
+
+#: every 20th vector is a query — a query SET (5% of the corpus), not
+#: the few-probe N_QUERY_VECTORS handful the topk queries use
+KNN_JOIN_QUERY_PRED = "vec_id % 20 = 0"
+KNN_JOIN_K = 5
+
+
+_ANN_KNN_JOIN_ORACLE = _ivf_oracle(query_pred=KNN_JOIN_QUERY_PRED, k=KNN_JOIN_K)
+
+
+@query("ann_knn_join", _ANN_KNN_JOIN_ORACLE)
+def ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-NN JOIN through the shared IVF index: every 20th corpus vector
+    (a 5% query SET) gets its top-5 neighbors — the dataset-to-dataset
+    retrieval primitive (kNN-graph build, eval-set scoring, corpus
+    linking). Unlike ``ann_ivf_topk``'s broadcast of a handful of
+    query rows, BOTH sides here are data-scale: the candidate join is
+    a plain shuffle equi-join on the cell id (each side exchanges
+    once; candidates form only within probed cells), and the per-query
+    top-k window repartitions by query id. Reuses the cached quantizer
+    + inverted file, so the warm join pays probe + join + window only.
+    Fully deterministic (content-addressed seeds, quantized-integer
+    Lloyd mean, explicit tie-breaks), so the oracle replays the whole
+    index build and the joined probe in SQL."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.expr(KNN_JOIN_QUERY_PRED))
+    return knn_join_ivf(
+        _ivf_assigned_index(spark, sf_dir),
+        _ivf_index(spark, sf_dir),
+        queries,
+        k=KNN_JOIN_K,
+        n_probe=IVF_N_PROBE,
+    )
+
+
+# --- radius search through the IVF index ---------------------------------
+
+def _radius_oracle() -> str:
+    return _ivf_oracle(radius=RANGE_THRESHOLD)
+
+
+@query("ann_radius_ivf", _radius_oracle())
+def ann_radius_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Range (radius) search THROUGH the shared IVF index: every
+    neighbor with cosine >= 0.25 for the query vectors, scoring only
+    each query's probed cells — the indexed twin of
+    ``ann_cosine_range`` (whose broadcast-queries x full-corpus scan
+    is exactly what a 100 TB corpus cannot afford per query batch).
+    Candidates outside the probed cells are missed (the IVF trade);
+    every returned pair carries its exact cosine, so results are a
+    subset of the brute-force range query with identical scores —
+    pinned in tests. The oracle replays the whole index pipeline in
+    SQL (seeds -> integer-Lloyd -> assign -> probe) with a threshold
+    tail instead of the rank window."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        radius_search_ivf,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < N_QUERY_VECTORS)
+    return radius_search_ivf(
+        None,
+        queries,
+        threshold=RANGE_THRESHOLD,
+        n_probe=IVF_N_PROBE,
+        centroids=_ivf_index(spark, sf_dir),
+        assigned_corpus=_ivf_assigned_index(spark, sf_dir),
+    )
+
+
+# --- maximum inner product search -----------------------------------------
+
+def _mips_oracle() -> str:
+    return f"""
+    WITH q AS (
+        SELECT vec_id AS query_id, embedding AS qv FROM embeddings
+        WHERE vec_id < {N_QUERY_VECTORS}
+    ),
+    scored AS (
+        SELECT q.query_id, e.vec_id AS neighbor_id,
+               round({_dot_sql('q.qv', 'e.embedding')}, 6) AS dot
+        FROM embeddings e, q
+        WHERE e.vec_id <> q.query_id
+    ),
+    ranked AS (
+        SELECT *, ROW_NUMBER() OVER (
+            PARTITION BY query_id ORDER BY dot DESC, neighbor_id) AS rank
+        FROM scored
+    )
+    SELECT query_id, neighbor_id, dot, rank FROM ranked WHERE rank <= {TOP_K}
+    """
+
+
+@query("ann_mips_topk", _mips_oracle())
+def ann_mips_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact maximum-inner-product top-10 for the first 5 query
+    vectors (``operators/similarity.topk_mips``) — the MIPS objective
+    the ANN family lacked: cosine ranks by angle, MIPS by angle TIMES
+    magnitude, so the two orders diverge wherever norms vary (pinned
+    in tests against the cosine twin). Broadcast queries x one corpus
+    scan, per-query window top-k; the indexed scale path is the
+    augmented-dimension MIPS->cosine reduction through the shared IVF
+    pipeline (operator docstring)."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        topk_mips,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < N_QUERY_VECTORS)
+    return topk_mips(emb, queries, k=TOP_K)
+
+
+# --- the two-level (hierarchical) IVF index -----------------------------
+#
+# Shared by ``dedup_embedding_ivf_hier`` (catalog/dedup) and the
+# hierarchical search queries below. The driver-checkable certificate
+# for ivf_two_level_assign: the whole
+# two-level pipeline (coarse seeds -> coarse Lloyd -> coarse assign ->
+# per-coarse-cell fine seeds -> distributed fine Lloyd -> top-m fine
+# assign -> same-cell pairs -> exact cosine threshold) restated as ONE
+# independent SQL pipeline. Small oracle-portable pins: 3 coarse x 4
+# fine = 12 cells, top-2 multi-assign, one fine refinement.
+HIER_COARSE = 3
+HIER_FINE = 4
+HIER_ASSIGN_M = 2
+HIER_REFINE = 1
+
+_HIER_COARSE_CACHE: dict = register_dict_cache({})
+
+
+def _hier_coarse(spark: SparkSession, sf_dir: str) -> list:
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        ivf_centroids,
+    )
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _HIER_COARSE_CACHE:
+        _HIER_COARSE_CACHE[key] = ivf_centroids(
+            read_table(spark, sf_dir, "embeddings"), n_centroids=HIER_COARSE
+        )
+    return _HIER_COARSE_CACHE[key]
+
+
+def _hier_ctes(m: int) -> str:
+    """Full SQL restatement of the two-level pipeline — an independent
+    algorithm over the same exact arithmetic contracts (md5-addressed
+    seeds, quantized-integer Lloyd means, in-order double folds,
+    score-DESC/id-ASC ties), so every pair's cosine value-checks."""
+    # the CTE chain below hand-writes exactly ONE fine Lloyd refinement
+    # (fa0 -> fcid0 -> fmean -> fcent); the Spark side derives its count
+    # from HIER_REFINE, so bumping that constant without rewriting these
+    # CTEs would silently desynchronize query and oracle
+    assert HIER_REFINE == 1, "_hier_ctes hardcodes one fine refinement"
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        MEAN_SCALE,
+    )
+
+    def unit(v: str) -> str:
+        n = f"sqrt({_dot_sql(v, v)})"
+        return (
+            f"list_transform({v}, x -> CAST(x AS DOUBLE) /"
+            f" (CASE WHEN {n} = 0.0 THEN 1.0 ELSE {n} END))"
+        )
+
+    nc, nf, scale = HIER_COARSE, HIER_FINE, MEAN_SCALE
+    return f"""cseed_raw AS (
+        SELECT sid, embedding FROM (
+            SELECT embedding,
+                   ROW_NUMBER() OVER (
+                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS sid
+            FROM embeddings)
+        WHERE sid < {nc}
+    ),
+    cseed AS (
+        SELECT sid, {unit('embedding')} AS sv FROM cseed_raw
+    ),
+    ca0 AS (
+        SELECT e.vec_id, s.sid, {_dot_sql('e.embedding', 's.sv')} AS score
+        FROM embeddings e CROSS JOIN cseed s
+    ),
+    ccid0 AS (
+        SELECT vec_id, sid AS cid FROM (
+            SELECT vec_id, sid, ROW_NUMBER() OVER (
+                PARTITION BY vec_id ORDER BY score DESC, sid) AS rn
+            FROM ca0)
+        WHERE rn = 1
+    ),
+    cexpl AS (
+        SELECT c.cid, unnest(e.embedding) AS val,
+               unnest(range(len(e.embedding))) AS pos
+        FROM ccid0 c JOIN embeddings e USING (vec_id)
+    ),
+    cmean AS (
+        SELECT cid, pos,
+               CAST(SUM(CAST(floor(CAST(val AS DOUBLE) * {scale}) AS BIGINT))
+                    AS DOUBLE) / (COUNT(*) * {scale}.0) AS mv
+        FROM cexpl GROUP BY cid, pos
+    ),
+    cmeanvec AS (
+        SELECT cid, list(mv ORDER BY pos) AS mvec FROM cmean GROUP BY cid
+    ),
+    ccent AS (
+        SELECT s.sid AS cid,
+               COALESCE({unit('m.mvec')}, s.sv) AS cv
+        FROM cseed s LEFT JOIN cmeanvec m ON m.cid = s.sid
+    ),
+    ca1 AS (
+        SELECT e.vec_id, c.cid, {_dot_sql('e.embedding', 'c.cv')} AS score
+        FROM embeddings e CROSS JOIN ccent c
+    ),
+    cassigned AS (
+        SELECT vec_id, cid AS ccid FROM (
+            SELECT vec_id, cid, ROW_NUMBER() OVER (
+                PARTITION BY vec_id ORDER BY score DESC, cid) AS rn
+            FROM ca1)
+        WHERE rn = 1
+    ),
+    fseed AS (
+        SELECT ccid, fid, {unit('e.embedding')} AS sv FROM (
+            SELECT ca.ccid, ca.vec_id,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY ca.ccid
+                       ORDER BY md5(CAST(ca.vec_id AS VARCHAR)), ca.vec_id
+                   ) - 1 AS fid
+            FROM cassigned ca) f
+        JOIN embeddings e ON e.vec_id = f.vec_id
+        WHERE fid < {nf}
+    ),
+    fa0 AS (
+        SELECT c.vec_id, c.ccid, s.fid,
+               {_dot_sql('e.embedding', 's.sv')} AS score
+        FROM cassigned c
+        JOIN embeddings e ON e.vec_id = c.vec_id
+        JOIN fseed s ON s.ccid = c.ccid
+    ),
+    fcid0 AS (
+        SELECT vec_id, ccid, fid FROM (
+            SELECT vec_id, ccid, fid, ROW_NUMBER() OVER (
+                PARTITION BY vec_id ORDER BY score DESC, fid) AS rn
+            FROM fa0)
+        WHERE rn = 1
+    ),
+    fexpl AS (
+        SELECT f.ccid, f.fid, unnest(e.embedding) AS val,
+               unnest(range(len(e.embedding))) AS pos
+        FROM fcid0 f JOIN embeddings e USING (vec_id)
+    ),
+    fmean AS (
+        SELECT ccid, fid, pos,
+               CAST(SUM(CAST(floor(CAST(val AS DOUBLE) * {scale}) AS BIGINT))
+                    AS DOUBLE) / (COUNT(*) * {scale}.0) AS mv
+        FROM fexpl GROUP BY ccid, fid, pos
+    ),
+    fmeanvec AS (
+        SELECT ccid, fid, list(mv ORDER BY pos) AS mvec
+        FROM fmean GROUP BY ccid, fid
+    ),
+    fcent AS (
+        SELECT s.ccid, s.fid,
+               COALESCE({unit('m.mvec')}, s.sv) AS cv
+        FROM fseed s LEFT JOIN fmeanvec m
+          ON m.ccid = s.ccid AND m.fid = s.fid
+    ),
+    fa1 AS (
+        SELECT c.vec_id, c.ccid, s.fid,
+               {_dot_sql('e.embedding', 's.cv')} AS score
+        FROM cassigned c
+        JOIN embeddings e ON e.vec_id = c.vec_id
+        JOIN fcent s ON s.ccid = c.ccid
+    ),
+    fassigned AS (
+        SELECT vec_id, ccid * {nf} + fid AS cell FROM (
+            SELECT vec_id, ccid, fid, ROW_NUMBER() OVER (
+                PARTITION BY vec_id ORDER BY score DESC, fid) AS rn
+            FROM fa1)
+        WHERE rn <= {m}
+    )
+"""
+
+
+#: search-through-the-hierarchy contract: probe the 2 nearest coarse
+#: cells, keep the 4 best fine cells overall, exact-cosine top-10.
+HIER_PROBE_COARSE = 2
+HIER_PROBE_FINE = 4
+
+_HIER_FINE_CACHE: dict = register_dict_cache({})
+
+
+def _hier_fine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(app, corpus) fine-centroid frame — shared by the
+    hierarchical dedup and search queries (build once, probe many).
+    PERSISTED (round 12): the frame is coarse x fine = 12 rows, but
+    its lineage is the full distributed Lloyd chain (corpus scan +
+    posexplode groupBy); every unpersisted reference re-paid that
+    chain per materialization — the dedup query 4x per bench sample,
+    the search queries once per probe-scoring run. Persisting does
+    not change the ANALYZED plan (cache substitution is
+    post-analysis), so the query fingerprints are untouched — the r9
+    shared-cache precedent, re-verified for all three hier queries."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        ivf_two_level_centroids,
+    )
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _HIER_FINE_CACHE:
+        _HIER_FINE_CACHE[key] = ivf_two_level_centroids(
+            read_table(spark, sf_dir, "embeddings"),
+            _hier_coarse(spark, sf_dir),
+            HIER_FINE,
+            refine_fine=HIER_REFINE,
+        ).persist()
+    return _HIER_FINE_CACHE[key]
+
+
+_HIER_CELLS_CACHE: dict = register_dict_cache({})
+
+
+def _hier_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(app, corpus) assign_m=2 two-level multi-assignment,
+    persisted — the DEDUP path's inverted file (the search path's
+    assign_m=1 twin lives in :func:`_hier_inv`; they rank with the
+    same tie-breaks, so rank-1 rows agree, but search must not see a
+    vector twice and dedup must). Round 12: the dedup query rebuilt
+    this frame on every materialization — fc's Lloyd chain plus the
+    broadcast-score window, 4x per bench sample — while only the
+    same-cell pair join is the query's actual work."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        ivf_two_level_assign,
+    )
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _HIER_CELLS_CACHE:
+        _HIER_CELLS_CACHE[key] = ivf_two_level_assign(
+            read_table(spark, sf_dir, "embeddings"),
+            _hier_coarse(spark, sf_dir),
+            n_fine_per_coarse=HIER_FINE,
+            assign_m=HIER_ASSIGN_M,
+            fine_centroids=_hier_fine(spark, sf_dir),
+        ).persist()
+    return _HIER_CELLS_CACHE[key]
+
+
+_HIER_INV_CACHE: dict = register_dict_cache({})
+
+
+def _hier_inv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(app, corpus) assign_m=1 two-level inverted file, persisted
+    — shared by the hierarchical SEARCH queries (``ann_ivf_hier_topk``
+    and its radius twin ``ann_radius_ivf_hier``), exactly as ``_ivf_assigned_index``
+    amortizes the flat inverted file. Persisting does not change the
+    ANALYZED plan (cache substitution is post-analysis), so the query
+    fingerprints are untouched — the r9 shared-cache precedent,
+    re-verified explicitly for both hier queries."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        ivf_two_level_assign,
+    )
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _HIER_INV_CACHE:
+        _HIER_INV_CACHE[key] = ivf_two_level_assign(
+            read_table(spark, sf_dir, "embeddings"),
+            _hier_coarse(spark, sf_dir),
+            HIER_FINE,
+            assign_m=1,
+            fine_centroids=_hier_fine(spark, sf_dir),
+        ).persist()
+    return _HIER_INV_CACHE[key]
+
+
+def _hier_scored_ctes() -> str:
+    """The probe + exact-score WITH-chain through ``hscored`` —
+    shared by the rank tail (``ann_ivf_hier_topk``) and the radius
+    tail (``ann_radius_ivf_hier``), mirroring the operator-side
+    factoring of ``_two_level_scored``. MUST render byte-identically
+    under the rank oracle (hash-pinned in tests)."""
+    npc, npf, nf = HIER_PROBE_COARSE, HIER_PROBE_FINE, HIER_FINE
+    return f"""
+    WITH {_hier_ctes(1)},
+    qprobes AS (
+        SELECT vec_id AS query_id, cid AS ccid FROM (
+            SELECT vec_id, cid, ROW_NUMBER() OVER (
+                PARTITION BY vec_id ORDER BY score DESC, cid) AS rn
+            FROM ca1 WHERE vec_id < {N_QUERY_VECTORS})
+        WHERE rn <= {npc}
+    ),
+    fprobe AS (
+        SELECT p.query_id, s.ccid * {nf} + s.fid AS cell,
+               {_dot_sql('e.embedding', 's.cv')} AS score
+        FROM qprobes p
+        JOIN embeddings e ON e.vec_id = p.query_id
+        JOIN fcent s ON s.ccid = p.ccid
+    ),
+    pcells AS (
+        SELECT query_id, cell FROM (
+            SELECT query_id, cell, ROW_NUMBER() OVER (
+                PARTITION BY query_id ORDER BY score DESC, cell) AS rn
+            FROM fprobe)
+        WHERE rn <= {npf}
+    ),
+    hcand AS (
+        SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
+        FROM pcells p JOIN fassigned a USING (cell)
+        WHERE a.vec_id <> p.query_id
+    ),
+    hscored AS (
+        SELECT c.query_id, c.neighbor_id,
+               round({_cos_sql('q.embedding', 'n.embedding')}, 6) AS cosine
+        FROM hcand c
+        JOIN embeddings q ON q.vec_id = c.query_id
+        JOIN embeddings n ON n.vec_id = c.neighbor_id
+    )"""
+
+
+def _hier_search_oracle() -> str:
+    """Probe/search tail over the shared hierarchy CTEs (index built
+    at assign_m=1)."""
+    return f"""{_hier_scored_ctes()}
+    SELECT query_id, neighbor_id, cosine, rank FROM (
+        SELECT query_id, neighbor_id, cosine, ROW_NUMBER() OVER (
+            PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
+        FROM hscored)
+    WHERE rank <= {TOP_K}
+"""
+
+
+@query("ann_ivf_hier_topk", _hier_search_oracle())
+def ann_ivf_hier_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate cosine top-10 THROUGH the two-level index
+    (``operators/similarity.topk_two_level``): the search twin of
+    ``dedup_embedding_ivf_hier`` — queries probe their 2 nearest
+    coarse cells, score only those cells' fine centroids (a broadcast
+    join, O(probe_coarse x fine) dots per query instead of O(cells)),
+    keep the 4 best fine cells, and exact-cosine-rerank the probed
+    cells' inverted file. Index = assign_m=1 over the SAME shared
+    fine-centroid frame as the dedup query. Probing every fine cell
+    of one coarse cell degenerates to exact brute force (recall-1 law,
+    pinned in tests); the oracle replays both levels and the probe
+    tail in SQL."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        topk_two_level,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    fc = _hier_fine(spark, sf_dir)
+    inv = _hier_inv(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < N_QUERY_VECTORS)
+    return topk_two_level(
+        emb,
+        queries,
+        _hier_coarse(spark, sf_dir),
+        fc,
+        inv,
+        HIER_FINE,
+        k=TOP_K,
+        n_probe_coarse=HIER_PROBE_COARSE,
+        n_probe_fine=HIER_PROBE_FINE,
+        # operator default (broadcast probe frame, 15x on the probe
+        # join at 10x data — SCALE.md r11)
+    )
+
+
+def _hier_radius_oracle() -> str:
+    return f"""{_hier_scored_ctes()}
+    SELECT query_id, neighbor_id, cosine FROM hscored
+    WHERE cosine >= {RANGE_THRESHOLD}
+"""
+
+
+@query("ann_radius_ivf_hier", _hier_radius_oracle())
+def ann_radius_ivf_hier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Range (radius) search THROUGH the two-level IVF index
+    (``operators/similarity.radius_two_level``): the same
+    2-coarse/4-fine probe + in-join exact scoring as
+    ``ann_ivf_hier_topk``, with ``ann_cosine_range``'s threshold tail
+    (cosine >= 0.25) instead of the per-query rank window — the shape
+    a 100 TB corpus needs for radius queries, since the flat
+    ``ann_radius_ivf`` still pays O(n x cells) assignment past a few
+    thousand cells and ``ann_cosine_range`` scans the whole corpus
+    per query batch. Results are a subset of the brute-force range
+    search with identical cosines (pinned in tests); the oracle
+    replays both quantizer levels, the probe tail, and the threshold
+    filter in SQL."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        radius_two_level,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    fc = _hier_fine(spark, sf_dir)
+    inv = _hier_inv(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < N_QUERY_VECTORS)
+    return radius_two_level(
+        queries,
+        _hier_coarse(spark, sf_dir),
+        fc,
+        inv,
+        HIER_FINE,
+        threshold=RANGE_THRESHOLD,
+        n_probe_coarse=HIER_PROBE_COARSE,
+        n_probe_fine=HIER_PROBE_FINE,
+    )
+
+
+# --- occupancy-aware IVF probing -------------------------------------------
+#
+# On a skewed quantizer, probing cells until their cumulative
+# inverted-file occupancy reaches a corpus fraction GUARANTEES per-query
+# candidate work, where fixed-count probing only averages it (SCALE.md:
+# +0.8pp recall at matched budget on the Zipf-clustered corpus; the
+# real use is fixed-grid / stale quantizers).
+
+#: the probed occupancy fraction — matches the family's 25% probed
+#: fraction contract (4-of-16 cells on the small-SF pin), expressed
+#: against corpus OCCUPANCY instead of cell count
+OCC_COVERAGE = 0.25
+
+_CELL_COUNTS_CACHE: dict = {}
+
+
+def _ivf_cell_counts(spark: SparkSession, sf_dir: str) -> list[int]:
+    """Per-(app, corpus) inverted-file cell sizes (C ints) — amortized
+    alongside the shared quantizer/inverted file, so the occupancy
+    query does NOT re-collect them on every materialization (it would
+    otherwise pay an eager groupBy+collect per bench run). Plain dict
+    (not a registered frame cache): the value is a Python list, no
+    persisted RDD to sweep."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _CELL_COUNTS_CACHE:
+        n = len(_ivf_index(spark, sf_dir))
+        counts = [0] * n
+        for r in (
+            _ivf_assigned_index(spark, sf_dir).groupBy("cid").count().collect()
+        ):
+            counts[r["cid"]] = int(r["count"])
+        _CELL_COUNTS_CACHE[key] = counts
+    return _CELL_COUNTS_CACHE[key]
+
+
+def _occupancy_oracle() -> str:
+    return _ivf_oracle(occupancy_coverage=OCC_COVERAGE)
+
+
+@query("ann_ivf_occupancy_topk", _occupancy_oracle())
+def ann_ivf_occupancy_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cosine top-10 through the shared flat IVF index with the
+    occupancy cut: probes per query are VARIABLE — the shortest
+    distance-ranked cell prefix whose cumulative occupancy reaches
+    25% of the corpus (``occupancy_probes_expr``'s single-fold
+    expression; no shuffle, no UDF). Shares ``_ivf_index`` /
+    ``_ivf_assigned_index`` with the fixed-probe search family —
+    build once, probe many. Differs from ``ann_ivf_topk`` exactly
+    where cell populations skew: dense-cell queries stop early,
+    sparse-cell queries escalate, per-query candidate work is pinned
+    at coverage x N by construction."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        topk_ivf,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < N_QUERY_VECTORS)
+    return topk_ivf(
+        emb,
+        queries,
+        k=TOP_K,
+        centroids=_ivf_index(spark, sf_dir),
+        assigned_corpus=_ivf_assigned_index(spark, sf_dir),
+        coverage=OCC_COVERAGE,
+        cell_counts=_ivf_cell_counts(spark, sf_dir),
     )

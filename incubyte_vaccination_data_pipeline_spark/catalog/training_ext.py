@@ -1,14 +1,8 @@
-"""Round-4-staged queries: dataset split + cross-split contamination.
-
-The driver verifies the first 50 registered queries per round, so a
-new registration displaces one re-verification slot in the current
-window (see README §"Driver verification rotation"). These queries
-are complete — Spark side, DuckDB oracle, tests (tests/test_staged_queries.py
-runs the same side-by-side compare the driver does) — but registration
-is gated behind :func:`register` so the round-3 window keeps all 49
-round-1 re-verifications. Round 4: call ``register()`` from
-``catalog/__init__.py`` (one line) and they lead that window.
-"""
+"""Training-data preparation queries: deterministic dataset splits,
+cross-split contamination (exact and n-gram partial leaks), the
+per-slice corpus report, int8 embedding quantization, per-user event
+sequences, the certified approximate percentile, and the key-skew
+report."""
 
 from __future__ import annotations
 
@@ -50,6 +44,7 @@ SPLIT_COUNTS_ORACLE = f"""
 """
 
 
+@query("split_train_val_test", SPLIT_COUNTS_ORACLE)
 def split_train_val_test_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic content-addressed 90/5/5 split of ``documents``,
     summarized per split (count + id range — the full assignment is
@@ -83,6 +78,7 @@ CONTAMINATION_ORACLE = f"""
 """
 
 
+@query("split_contamination", CONTAMINATION_ORACLE)
 def split_contamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cross-split contamination over the deterministic split,
     with planted leaks (every 50th train doc re-inserted into the eval
@@ -145,6 +141,7 @@ NGRAM_CONTAMINATION_ORACLE = """
 """
 
 
+@query("ngram_contamination_partial_leak", NGRAM_CONTAMINATION_ORACLE)
 def ngram_contamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-8-gram partial-leak detection: every 97th document is
     'quoted' inside a synthetic eval doc that then continues with
@@ -173,6 +170,7 @@ CORPUS_REPORT_ORACLE = """
 """
 
 
+@query("corpus_report", CORPUS_REPORT_ORACLE)
 def corpus_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset-card rollup per (source, lang): doc/token counts, mean
     length, and content-hash uniqueness ratio — the summary a training
@@ -216,6 +214,7 @@ EMBEDDING_QUANTIZE_ORACLE = """
 """
 
 
+@query("embedding_quantize_int8", EMBEDDING_QUANTIZE_ORACLE)
 def embedding_quantize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization of the embedding column (per-vector
     absmax scale = max|v|/127) — the standard vector-compression step
@@ -270,6 +269,7 @@ EVENT_SEQUENCES_ORACLE = """
 """
 
 
+@query("events_user_sequences", EVENT_SEQUENCES_ORACLE)
 def event_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user ordered behavior sequence (first 20 events by
     (ts, event_id)) — the sequence-building step that turns an event
@@ -301,6 +301,7 @@ APPROX_PCTL_ORACLE = """
 """
 
 
+@query("agg_approx_percentile_certified", APPROX_PCTL_ORACLE)
 def approx_percentile_certified_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_percentile (GK sketch) is the single-pass scale path for
     quantiles; like agg_approx_count_distinct, the sketch value is
@@ -357,6 +358,7 @@ SKEW_REPORT_ORACLE = """
 """
 
 
+@query("skew_report_orders", SKEW_REPORT_ORACLE)
 def skew_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join/aggregate-key skew diagnostic: the 10 heaviest o_custkey
     values with their row share and multiple-of-average — the
@@ -388,26 +390,3 @@ def skew_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("n") / F.col("avg_n"), 6).alias("x_avg"),
     )
 
-
-STAGED: dict[str, tuple] = {
-    "skew_report_orders": (skew_report_q, SKEW_REPORT_ORACLE),
-    "corpus_report": (corpus_report_q, CORPUS_REPORT_ORACLE),
-    "embedding_quantize_int8": (embedding_quantize_q, EMBEDDING_QUANTIZE_ORACLE),
-    "events_user_sequences": (event_sequences_q, EVENT_SEQUENCES_ORACLE),
-    "agg_approx_percentile_certified": (
-        approx_percentile_certified_q,
-        APPROX_PCTL_ORACLE,
-    ),
-    "split_train_val_test": (split_train_val_test_q, SPLIT_COUNTS_ORACLE),
-    "split_contamination": (split_contamination_q, CONTAMINATION_ORACLE),
-    "ngram_contamination_partial_leak": (
-        ngram_contamination_q,
-        NGRAM_CONTAMINATION_ORACLE,
-    ),
-}
-
-
-def register() -> None:
-    """Round-4 hook: move the staged queries into the live registry."""
-    for name, (fn, oracle) in STAGED.items():
-        query(name, oracle=oracle)(fn)

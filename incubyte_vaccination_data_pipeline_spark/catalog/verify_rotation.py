@@ -15,7 +15,8 @@ This module implements the generalizing policy:
   (``no_oracle``).  It is rebuilt from the ``CORRECTNESS_r*.json``
   files the driver writes, so it cannot drift from the actual driver
   history.
-* Registration order is re-sorted ascending by
+* ``__spark_entry__.queries()`` hands the registry to the driver
+  re-sorted ascending by
   ``(last_round, value_checked)``, earliest-deadline-first: queries
   with no driver row ever (new this round) sort at the "due now"
   deadline ``max_round + 1 - ceil(N/WINDOW)`` — leading every cohort
@@ -30,8 +31,8 @@ This module implements the generalizing policy:
   Within a round, rows-only ``no_oracle`` rows sort ahead of
   value-checked green rows — a query the driver looked at but could
   not value-verify needs the window sooner than one it fully verified
-  the same round.  Ties keep original registration order (stable
-  sort).
+  the same round.  Ties keep the registry's domain order (stable
+  sort).  The library registry itself is never reordered.
 
 * **Change-aware staleness** (round 6): ``query_fingerprints.json``
   maps query name -> a fingerprint of WHAT the driver would verify —

@@ -249,7 +249,10 @@ def dead_letter_frame(df, src_col: str, err_name: str = "validation_error"):
     for the union is unchanged.
 
     The cache handle is attached to the returned frame as
-    ``_ivdp_persisted_base``; long-lived callers release it with
+    ``_ivdp_persisted_bases`` (a list). Every DataFrame transformation
+    returns a new frame without it, so callers that derive from this
+    frame must carry the list onto the derived frame themselves
+    (``operators/validate.validate_types`` does), then release it with
     :func:`release_dead_letter_cache` after their terminal action.
     """
     orig = df.columns
@@ -315,15 +318,14 @@ def dead_letter_frame(df, src_col: str, err_name: str = "validation_error"):
         )
     )
     out = b_empty.unionByName(b_compact).unionByName(b_casc)
-    out._ivdp_persisted_base = base
+    out._ivdp_persisted_bases = [base]
     return out
 
 
 def release_dead_letter_cache(df) -> None:
-    """Unpersist the shared parse-prefix cache attached by
-    :func:`dead_letter_frame` (no-op for frames without one)."""
-    base = getattr(df, "_ivdp_persisted_base", None)
-    if base is not None:
+    """Unpersist the shared parse-prefix caches attached by
+    :func:`dead_letter_frame` (no-op for frames without any)."""
+    for base in getattr(df, "_ivdp_persisted_bases", ()):
         base.unpersist()
 
 

@@ -78,91 +78,3 @@ def asof_join_backward(
         out = out.withColumn(f"{payload_prefix}{c}", F.col("__asof")[c])
     return out.drop("__asof")
 
-
-def asof_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    ts_col: str = "ts",
-    payload_cols: list[str] | None = None,
-    payload_prefix: str = "r_",
-) -> DataFrame:
-    """NEAREST as-of join (pandas ``merge_asof(direction='nearest')``):
-    every ``left`` row + the right row minimizing ``|right.ts -
-    left.ts|`` for the same ``on`` key; equal distance resolves to the
-    EARLIER right row (the backward candidate). NULL payload only when
-    the key has no right rows at all.
-
-    Spark-first formulation — the backward union-carry run TWICE over
-    the same keyed sort, never a range join or a per-key Python merge:
-    both sides are tagged and unioned once, then
-
-    * the backward candidate is ``max(struct(ts, payload)) OVER
-      (... ORDER BY ts ASC, side ASC ROWS UNBOUNDED PRECEDING)`` —
-      struct max picks the LATEST right row at or before the left row
-      deterministically even when the window order ties;
-    * the forward candidate is the mirror ``min(struct(ts, payload))``
-      over the descending window (right before left at equal ts keeps
-      both directions inclusive).
-
-    One exchange on the key serves both carries (same partitioning;
-    the second window re-sorts in place). The final pick is a row-local
-    CASE on the two timestamp gaps. Rows of the right side that tie on
-    (key, ts) should be pre-deduplicated by the caller if payload
-    determinism matters (struct max/min break such ties on the payload
-    bytes, which is deterministic but rarely the contract you want).
-
-    At 100 TB: identical scale posture to :func:`asof_join_backward` —
-    one shuffle, linear scans, bounded window state.
-    """
-    if payload_cols is None:
-        payload_cols = [c for c in right.columns if c not in (*on, ts_col)]
-    payload = F.struct(
-        F.col(ts_col).alias(ts_col), *[F.col(c).alias(c) for c in payload_cols]
-    )
-    payload_type = right.select(payload.alias("p")).schema["p"].dataType
-    l_tag = left.withColumn("__side", F.lit(1)).withColumn(
-        "__payload", F.lit(None).cast(payload_type)
-    )
-    r_tag = right.select(
-        *on,
-        F.col(ts_col),
-        F.lit(0).alias("__side"),
-        payload.alias("__payload"),
-    )
-    for c in left.columns:
-        if c not in r_tag.columns:
-            r_tag = r_tag.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    unioned = l_tag.unionByName(r_tag.select(*l_tag.columns))
-
-    w_back = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(ts_col).asc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(ts_col).desc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn(
-        "__prev", F.max("__payload").over(w_back)
-    ).withColumn("__next", F.min("__payload").over(w_fwd))
-
-    lt = F.col(ts_col)
-    prev_ts, next_ts = F.col("__prev")[ts_col], F.col("__next")[ts_col]
-    prev_gap = lt.cast("double") - prev_ts.cast("double")
-    next_gap = next_ts.cast("double") - lt.cast("double")
-    pick_prev = F.col("__next").isNull() | (
-        F.col("__prev").isNotNull() & (prev_gap <= next_gap)
-    )
-    chosen = F.when(pick_prev, F.col("__prev")).otherwise(F.col("__next"))
-    out = (
-        carried.filter(F.col("__side") == 1)
-        .withColumn("__asof", chosen)
-        .drop("__side", "__payload", "__prev", "__next")
-    )
-    out = out.withColumn(f"{payload_prefix}{ts_col}", F.col("__asof")[ts_col])
-    for c in payload_cols:
-        out = out.withColumn(f"{payload_prefix}{c}", F.col("__asof")[c])
-    return out.drop("__asof")

@@ -961,7 +961,7 @@ def substring_gram_frames(
 
     The caller should persist ``pos`` BEFORE materializing the other
     two so the explode is computed once (the catalog's shared cache
-    does; see ``catalog/round11_staged._substr_frames``).
+    does; see ``catalog/text_ext._substr_frames``).
     """
     pos_raw = fanout_repartition(
         _hashed_word_kgrams(df, text_col, id_col, k, with_positions=True),

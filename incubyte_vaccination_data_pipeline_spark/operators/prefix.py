@@ -27,11 +27,6 @@ from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
     durable_checkpoint,
 )
 
-#: checkpoint the (order, value) input before the range partitioner's
-#: sampling pass (see the in-function comment); module-level so the
-#: r15 interleaved A/B can flip it per pass without code edits
-CHECKPOINT_INPUT = True
-
 #: target bytes per range when deriving ``n_ranges`` from the input's
 #: Catalyst size estimate (r15, guide §2 "make partitioning
 #: scale-adaptive — derive from input size rather than a constant"):
@@ -94,11 +89,9 @@ def global_cumsum(
     # tokenization, pareto's revenue aggregate) ran twice per call.
     # The input frame is the same compact (order, value) class as the
     # ranged checkpoint. Measured 0.83 -> 0.77 s on
-    # corpus_pack_sequences with identical output. (CHECKPOINT_INPUT
-    # is the r15 re-proof switch — VERDICT r14 item 3 ordered an
-    # interleaved A/B of both variants; see OPTIMIZATION_r15.md.)
-    if CHECKPOINT_INPUT:
-        df = durable_checkpoint(df, eager=False)
+    # corpus_pack_sequences with identical output; the r15 interleaved
+    # A/B of both variants kept it (OPTIMIZATION_r15.md).
+    df = durable_checkpoint(df, eager=False)
     ranged = durable_checkpoint(
         df.repartitionByRange(n_ranges, *[F.col(c) for c in order_cols])
         .withColumn("__pid", F.spark_partition_id()),

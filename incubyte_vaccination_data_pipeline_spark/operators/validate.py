@@ -51,7 +51,11 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     ``clean`` has mandatory/optional date columns as ``DateType`` (NULL
     where unparseable). ``dead_letter`` holds the original rows that
     failed a *mandatory* date parse, with ``Validation_Error`` (reason
-    text) and ``Invalid_Field`` (column name) appended.
+    text) and ``Invalid_Field`` (column name) appended. It carries the
+    parse-prefix caches of its branches (see
+    ``functions/dates.dead_letter_frame``); release them with
+    ``release_dead_letter_cache(dead_letter)`` once both outputs are
+    written.
     """
     typed = df
     for c in STRING_COLUMNS:
@@ -71,17 +75,16 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     # (pre-parse) column values preserved, like the reference's copy of the
     # still-string frame. stack() keeps this a single pass.
     dead_letters = []
+    persisted_bases = []
     for c in mandatory_present:
         # three-way failure-class union — each branch's plan holds only
         # its own slice of the parser, so every stage codegen-compiles
         # (see functions/dates.dead_letter_frame)
-        dl = (
-            dead_letter_frame(
-                parse_input.select(*df.columns), c, err_name="Validation_Error"
-            )
-            .withColumn("Invalid_Field", F.lit(c))
+        dl = dead_letter_frame(
+            parse_input.select(*df.columns), c, err_name="Validation_Error"
         )
-        dead_letters.append(dl)
+        persisted_bases += dl._ivdp_persisted_bases
+        dead_letters.append(dl.withColumn("Invalid_Field", F.lit(c)))
     if dead_letters:
         dead_letter = dead_letters[0]
         for dl in dead_letters[1:]:
@@ -94,6 +97,8 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
                 F.lit(None).cast("string").alias("Invalid_Field"),
             )
         )
+
+    dead_letter._ivdp_persisted_bases = persisted_bases
 
     clean = typed
     for c in date_cols:

@@ -12,6 +12,9 @@ import datetime as _dt
 
 from pyspark.sql import DataFrame, SparkSession
 
+from incubyte_vaccination_data_pipeline_spark.functions.dates import (
+    release_dead_letter_cache,
+)
 from incubyte_vaccination_data_pipeline_spark.operators.validate import (
     get_valid_records,
     to_warehouse,
@@ -47,6 +50,9 @@ def run_pipeline(
     valid = get_valid_records(clean)
     warehouse = to_warehouse(valid, load_date=load_date)
     write_warehouse(warehouse, warehouse_path, mode="overwrite")
+    # the views read the stored parquet, so the dead-letter parse
+    # prefix cache is no longer needed by anything
+    release_dead_letter_cache(dead)
     stored = spark.read.parquet(warehouse_path)
     views = register_country_views(spark, stored, as_of=as_of)
     return stored, views

@@ -51,30 +51,6 @@ def main() -> None:
             )
         lines.append("")
 
-    # staged-for-next-round queries: italic bullets, deliberately NOT
-    # the bold format the registry-sync test captures (they are not in
-    # the live registry yet; each already has a DuckDB oracle and
-    # passes the staged side-by-side suite)
-    from incubyte_vaccination_data_pipeline_spark.catalog.round10_ext import (
-        STAGED_R11,
-    )
-
-    from incubyte_vaccination_data_pipeline_spark.catalog.round12_staged import (
-        STAGED as STAGED_R12,
-    )
-
-    staged = {
-        n: v
-        for n, v in {**STAGED_R11, **STAGED_R12}.items()
-        if n not in QUERIES
-    }
-    if staged:
-        lines.append(f"## staged for next round ({len(staged)})")
-        lines.append("")
-        for name in sorted(staged):
-            fn = staged[name][0]
-            lines.append(f"- *{name}* (staged) — {first_sentence(fn.__doc__)}")
-        lines.append("")
     Path(__file__).resolve().parents[1].joinpath("QUERIES.md").write_text(
         "\n".join(lines)
     )

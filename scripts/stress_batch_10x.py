@@ -76,8 +76,7 @@ DEDUP_QUERIES = [
 ]
 
 
-#: second round-11 staging batch (catalog/round11_staged.py, merged
-#: into round10_ext.STAGED_R11; registration lands in round 11):
+#: substring dedup and BM25 (catalog/text_ext.py):
 #: both are single-pass token pipelines — substring dedup's only
 #: corpus-wide shuffle is the (v1, v2) gram aggregate (O(tokens) rows,
 #: no self-join anywhere), and BM25 scores only the 5 query terms'
@@ -86,7 +85,7 @@ DEDUP_QUERIES = [
 #: top-5 query terms stay copy-0's unsalted tokens, so BM25's postings
 #: stay 1x-sized while its token aggregate grows Nx — the aggregate IS
 #: the dominant cost, which is what this measures.)
-STAGED_TEXT_QUERIES = [
+TEXT_QUERIES = [
     "text_substring_dedup",
     "text_substring_removal_plan",
     "text_bm25_topk",
@@ -94,18 +93,16 @@ STAGED_TEXT_QUERIES = [
 
 
 def run_staged_text(spark, sf_dir: str) -> dict[str, tuple[float, float]]:
-    """(cold, warm) per staged text query — same protocol as
+    """(cold, warm) per text query — same protocol as
     run_dedup_family (3 runs: cold + best-of-2 warm)."""
-    from incubyte_vaccination_data_pipeline_spark.catalog.round10_ext import (
-        STAGED_R11,
-    )
+    from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES
     from incubyte_vaccination_data_pipeline_spark.shared_cache import (
         release_shared_state,
     )
 
     out: dict[str, tuple[float, float]] = {}
-    for name in STAGED_TEXT_QUERIES:
-        fn = STAGED_R11[name][0]
+    for name in TEXT_QUERIES:
+        fn = QUERIES[name]
         runs = []
         for _ in range(3):
             t0 = time.perf_counter()
@@ -623,7 +620,7 @@ def run_staged12(spark, sf_dir: str, label: str, target_cell: int = 256) -> None
     own 3x4-cell pin is an oracle contract, not a deployment shape)."""
     from pyspark.sql import functions as F
 
-    from incubyte_vaccination_data_pipeline_spark.catalog.round12_staged import (
+    from incubyte_vaccination_data_pipeline_spark.catalog.corpus_stats import (
         corpus_curation_funnel_q,
     )
     from incubyte_vaccination_data_pipeline_spark.catalog.similarity import (
@@ -686,73 +683,6 @@ def run_staged12(spark, sf_dir: str, label: str, target_cell: int = 256) -> None
     fc.unpersist()
     inv.unpersist()
     release_shared_state(sf_dir)
-
-
-def run_staged14(spark, sf_dir: str, label: str, factor: int = 1) -> None:
-    """Round-14 staged queries at Nx: KMV source overlap (one distinct
-    over (source, gram-hash) + constant-size signatures — honest
-    expectation ~linear in tokens, flat in pair count), the embedding
-    QC report (single map-side-combinable pass), and the bootstrap CI
-    (constant x32 fan-out with map-side combine; orders replicated
-    inline since the scratch corpus only ships documents/embeddings)."""
-    from pyspark.sql import functions as F
-
-    from incubyte_vaccination_data_pipeline_spark.catalog.round14_staged import (
-        agg_bootstrap_ci_q,
-        corpus_source_overlap_q,
-        embedding_vector_qc_q,
-        events_asof_nearest_q,
-        events_ohlc_bars_q,
-    )
-
-    for table, key in (("orders", "o_orderkey"), ("events", "event_id")):
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        # build_scratch symlinks a 1x events.parquet for read_table
-        # compatibility — replace it with a real Nx replication here
-        if factor > 1 and os.path.islink(path):
-            os.unlink(path)
-        if factor > 1 and not os.path.exists(path):
-            base = spark.read.parquet(f"{BASE_SF}/{table}.parquet")
-
-            def replica(i: int):
-                if i == 0:
-                    return base
-                r = base.withColumn(key, F.col(key) + i * 100_000_000)
-                # shift user_id alongside the primary key: a replica
-                # that repeats user_id/ts verbatim collapses back to
-                # ~1x in any per-(user_id, ts) dedup/grouping, so the
-                # Nx run would scale the probe side but not the join
-                # keyspace and understate shuffle growth (r13 advice)
-                if "user_id" in base.columns:
-                    r = r.withColumn(
-                        "user_id", F.col("user_id") + i * 100_000_000
-                    )
-                return r
-
-            parts = [replica(i) for i in range(factor)]
-            big = parts[0]
-            for p in parts[1:]:
-                big = big.unionByName(p)
-            big.repartition(max(8, factor)).write.mode("overwrite").parquet(
-                path
-            )
-
-    for name, fn in (
-        ("corpus_source_overlap", corpus_source_overlap_q),
-        ("embedding_vector_qc", embedding_vector_qc_q),
-        ("agg_bootstrap_ci", agg_bootstrap_ci_q),
-        ("events_ohlc_bars", events_ohlc_bars_q),
-        ("events_asof_nearest", events_asof_nearest_q),
-    ):
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        print(
-            f"  [{label}] {name:24s} cold={runs[0]:6.2f}s "
-            f"warm={min(runs[1:]):6.2f}s"
-        )
 
 
 def build_clustered_corpus(
@@ -822,7 +752,7 @@ def main() -> None:
         "--sections",
         default="dedup,simhash,ann,staged,staged12",
         help="comma-separated subset of {dedup,simhash,ann,staged,staged12,"
-        "staged14,clustered,drift} to run (e.g. --sections ann re-measures the "
+        "clustered,drift} to run (e.g. --sections ann re-measures the "
         "recall certificate without re-paying the ~10-min dedup table; "
         "clustered runs the worst-case Zipf-clustered recall row; drift "
         "runs the stale-quantizer fixed-vs-occupancy comparison)",
@@ -894,7 +824,7 @@ def main() -> None:
                         label=f"{args.factor}x, OPERATOR-DEFAULT width")
 
         if "staged" in sections:
-            print("== staged text queries (round-11 registrations) ==")
+            print("== substring dedup + BM25 text queries ==")
             run_staged_text(spark, BASE_SF)  # untimed session warmup
             base = run_staged_text(spark, BASE_SF)
             big = run_staged_text(spark, scratch)
@@ -904,7 +834,7 @@ def main() -> None:
                 f"{str(args.factor) + 'x warm':>9s} "
                 f"{'cold r':>7s} {'warm r':>7s}"
             )
-            for name in STAGED_TEXT_QUERIES:
+            for name in TEXT_QUERIES:
                 bc, bw = base[name]
                 gc, gw = big[name]
                 print(
@@ -929,12 +859,6 @@ def main() -> None:
             run_staged12(spark, BASE_SF, "1x warmup (discard)")
             run_staged12(spark, BASE_SF, "1x")
             run_staged12(spark, scratch, f"{args.factor}x")
-
-        if "staged14" in sections:
-            print("== round-14 staged (KMV overlap / vector QC / bootstrap) ==")
-            run_staged14(spark, BASE_SF, "1x warmup (discard)")
-            run_staged14(spark, BASE_SF, "1x")
-            run_staged14(spark, scratch, f"{args.factor}x", factor=args.factor)
 
         if "clustered" in sections:
             from incubyte_vaccination_data_pipeline_spark.operators.similarity import (

@@ -1,0 +1,203 @@
+"""Semantic pins for dedup queries (``catalog/dedup``) that the DuckDB
+oracle sweep (tests/test_oracle.py) cannot state: incremental-batch
+verdicts and plan guards, and planted-pair recall."""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from incubyte_vaccination_data_pipeline_spark import catalog
+from incubyte_vaccination_data_pipeline_spark.catalog import dedup
+from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
+
+
+def test_incremental_batch_verdicts(spark, sf_dir):
+    """Semantic anchor for the verdict rule: every exact-copy arrival
+    is matched 'exact' back to its source doc, every near-copy arrival
+    is 'exact-or-near' (a tailed copy can still hash-equal nothing, so
+    it must be near) to its source, and every reversed-novel arrival
+    is 'novel' with null match columns."""
+    rows = {
+        r["batch_doc"]: r
+        for r in catalog.QUERIES["dedup_incremental_batch"](spark, sf_dir).collect()
+    }
+    docs = read_table(spark, sf_dir, "documents").select("doc_id").collect()
+    ids = sorted(r["doc_id"] for r in docs)
+    exact_ids = [i for i in ids if i % 10 == 0]
+    near_ids = [i for i in ids if i % 7 == 0]
+    novel_ids = [i for i in ids if i % 13 == 1]
+    assert len(rows) == len(exact_ids) + len(near_ids) + len(novel_ids)
+    for i in exact_ids:
+        r = rows[i + 1_000_000]
+        assert r["match_type"] == "exact" and r["matched_doc_id"] == i
+        assert r["est_jaccard"] == 1.0
+    n_near, n_source, n_matched = 0, 0, 0
+    corpus_ids = set(ids)
+    for i in near_ids:
+        r = rows[i + 2_000_000]
+        # a SHORT doc's 5-token tail can legitimately push est_jaccard
+        # below the threshold ('novel'), and the argmax may pick a
+        # corpus doc MORE similar than the source (corpus docs can be
+        # mutually similar) — so pin distributional facts: matches are
+        # valid corpus targets above the threshold, the large majority
+        # of tailed copies ARE detected, and detected ones mostly
+        # match their source
+        if r["match_type"] == "novel":
+            assert r["matched_doc_id"] is None and r["est_jaccard"] is None
+            continue
+        n_matched += 1
+        assert r["matched_doc_id"] in corpus_ids
+        n_source += r["matched_doc_id"] == i
+        if r["match_type"] == "near":
+            n_near += 1
+            assert r["est_jaccard"] >= dedup.INCREMENTAL_MIN_EST
+    assert n_near > 0, "no near verdict — the near path is untested"
+    assert n_matched >= 0.7 * len(near_ids), (n_matched, len(near_ids))
+    assert n_source >= 0.8 * n_matched, (n_source, n_matched)
+    for i in novel_ids:
+        r = rows[i + 3_000_000]
+        assert r["match_type"] == "novel"
+        assert r["matched_doc_id"] is None and r["est_jaccard"] is None
+
+
+def test_incremental_batch_never_joins_batch_to_batch(spark, sf_dir):
+    """The incremental claim, pinned as an operator property: the
+    candidate pairs produced by incremental_minhash_matches never pair
+    two batch docs or two corpus docs — only batch -> corpus."""
+    from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
+        incremental_minhash_matches,
+    )
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    batch = docs.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
+    )
+    pairs = incremental_minhash_matches(docs, batch).collect()
+    assert pairs, "no candidate pairs at all"
+    for r in pairs:
+        assert r["batch_doc"] >= 1_000_000 > r["corpus_doc"]
+
+
+def test_incremental_batch_empty_batch_is_empty_frame(spark, sf_dir):
+    """A day with no arrivals must produce an empty match frame, not an
+    error — the scheduled-ingest edge every production pipeline hits."""
+    from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
+        incremental_minhash_matches,
+    )
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    empty = docs.filter(F.lit(False))
+    out = incremental_minhash_matches(docs, empty)
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == [
+        "batch_doc",
+        "corpus_doc",
+        "est_jaccard",
+    ]
+
+
+def test_incremental_minhash_fuzz_vs_python_reference(spark):
+    """Randomized cross-check of incremental_minhash_matches against a
+    pure-Python MinHash/LSH reference (same md5-half decode, same
+    universal-hash coefficients, same banding): candidate pair sets
+    and 6-dp estimates must match exactly, including documents too
+    short to shingle (dropped on both sides)."""
+    import hashlib
+    import random
+
+    from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
+        MINHASH_COEFFS,
+        MINHASH_PRIME,
+        incremental_minhash_matches,
+    )
+
+    def sig(text, k=3, n=12):
+        words = text.lower().split(" ")
+        if len(words) < k:
+            return None
+        shingles = [" ".join(words[i : i + k]) for i in range(len(words) - k + 1)]
+        mins = [MINHASH_PRIME] * n
+        for s in shingles:
+            hx = hashlib.md5(s.encode()).hexdigest()
+            v1, v2 = int(hx[:8], 16), int(hx[8:16], 16)
+            for i, (a, b, c) in enumerate(MINHASH_COEFFS[:n]):
+                mins[i] = min(mins[i], (a * v1 + b * v2 + c) % MINHASH_PRIME)
+        return mins
+
+    def bands(s, nb=4, rpb=3):
+        return {
+            f"{b}|" + "|".join(str(x) for x in s[b * rpb : (b + 1) * rpb])
+            for b in range(nb)
+        }
+
+    n_pairs_total = 0
+    for seed in (7, 23):
+        rng = random.Random(seed)
+        vocab = [f"w{i}" for i in range(12)]
+        corpus = [
+            (i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 12))))
+            for i in range(20)
+        ]
+        batch = []
+        for j in range(10):
+            if j % 2 == 0 and corpus[j][1]:
+                # mutated copy of a corpus doc — likely near-dup
+                t = corpus[j][1] + " " + rng.choice(vocab)
+            else:
+                t = " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 12)))
+            batch.append((100 + j, t))
+
+        expected = {}
+        for bid, btext in batch:
+            sb = sig(btext)
+            if sb is None:
+                continue
+            for cid, ctext in corpus:
+                sc = sig(ctext)
+                if sc is None or not (bands(sb) & bands(sc)):
+                    continue
+                est = round(sum(x == y for x, y in zip(sb, sc)) / 12, 6)
+                if est >= 0.5:
+                    expected[(bid, cid)] = est
+
+        cdf = spark.createDataFrame(corpus, "doc_id bigint, text string")
+        bdf = spark.createDataFrame(batch, "doc_id bigint, text string")
+        got = {
+            (r["batch_doc"], r["corpus_doc"]): r["est_jaccard"]
+            for r in incremental_minhash_matches(cdf, bdf).collect()
+        }
+        assert got == expected, (seed, got, expected)
+        n_pairs_total += len(expected)
+    assert n_pairs_total > 0, "fuzz produced zero expected pairs — vacuous"
+
+
+def test_wide_simhash_finds_exact_planted_pairs(spark, sf_dir):
+    """Exact copies collide at any width: every planted exact-dup pair
+    (d, d+1000000) must appear with hamming 0; and the 48-bit band
+    space must not spray junk — pair count bounded well under the
+    32-bit query's candidate volume at the same corpus."""
+    from pyspark.sql import functions as F
+
+    from incubyte_vaccination_data_pipeline_spark.catalog.dedup import (
+        augmented_documents,
+    )
+
+    rows = dedup.dedup_simhash_hamming_wide_q(spark, sf_dir).collect()
+    # the junk bound the wide path exists for: the 48-bit band space
+    # must not spray candidates — the 32-bit catalog query at the same
+    # corpus and threshold is the saturation baseline, and the wide
+    # result must not exceed it (at 10x/30x the measured gap is
+    # 2.65M/24M vs 134k-274k pairs; at test SF both are small but the
+    # ordering must already hold)
+    n32 = catalog.QUERIES["dedup_simhash_hamming"](spark, sf_dir).count()
+    assert len(rows) <= n32, (len(rows), n32)
+    found = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
+    planted = [
+        (r["doc_id"] - 1000000, r["doc_id"])
+        for r in augmented_documents(spark, sf_dir)
+        .filter((F.col("doc_id") >= 1000000) & (F.col("doc_id") < 2000000))
+        .collect()
+    ]
+    assert planted
+    for p in planted:
+        assert found.get(p) == 0, f"planted exact pair {p} missing or nonzero"

@@ -142,6 +142,23 @@ def test_full_pipeline_and_views(spark, data_dir, tmp_path):
     assert dead.count() == 1
 
 
+def test_run_pipeline_releases_dead_letter_cache(spark, data_dir, tmp_path):
+    """The dead-letter parse prefix is persisted while both sinks are
+    written and released before run_pipeline returns: no persisted RDD
+    outlives the run (the views read the stored parquet)."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    run_pipeline(
+        spark,
+        data_dir,
+        warehouse_path=str(tmp_path / "warehouse"),
+        dead_letter_path=str(tmp_path / "dead"),
+        as_of="2024-06-01",
+        load_date="2024-06-01 00:00:00",
+    )
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_dedup_latest_keeps_most_recent(spark):
     df = spark.createDataFrame(
         [

@@ -749,14 +749,31 @@ def test_range_layout_enables_file_skipping(spark, sf_dir, tmp_path):
     )
 
 
-def test_staged_queries_plan_shapes(spark, sf_dir):
-    """Plan guards for the round-5 staged operators (they join the
-    registered catalog next round; their 100 TB posture is pinned
-    now): no cartesian anywhere, single-scan shapes where designed."""
-    from incubyte_vaccination_data_pipeline_spark.catalog import round5_ext
+#: the drift / sketch / containment / LM / engagement / value /
+#: schema-evolution / tokenizer family whose 100 TB posture these
+#: plan guards pin
+_FAMILY_PLAN_QUERIES = (
+    "quality_psi_drift_orders",
+    "events_asof_tolerance",
+    "agg_heavy_hitters_cms",
+    "text_containment_dedup",
+    "text_perplexity_bigram",
+    "events_dau_mau",
+    "orders_rfm_segmentation",
+    "corpus_training_ready",
+    "format_schema_evolution",
+    "text_bpe_merge_candidates",
+    "orders_cohort_ltv",
+    "events_seasonal_profile",
+)
 
-    for name, (fn, _) in round5_ext.STAGED.items():
-        plan = _plan(fn(spark, sf_dir))
+
+def test_staged_queries_plan_shapes(spark, sf_dir):
+    """Plan guards for the drift/sketch/containment/LM/engagement
+    family: no cartesian anywhere, single-scan shapes where
+    designed."""
+    for name in _FAMILY_PLAN_QUERIES:
+        plan = _plan(QUERIES[name](spark, sf_dir))
         assert "CartesianProduct" not in plan, name
         if name in ("corpus_training_ready", "events_asof_tolerance",
                     "orders_rfm_segmentation"):
@@ -1190,21 +1207,15 @@ def test_link_prediction_shared_edges_broadcast_no_cartesian(spark, sf_dir):
     assert plan.count("TakeOrderedAndProject") == 1
 
 
-def _staged():
-    from incubyte_vaccination_data_pipeline_spark.catalog import round7_staged
-
-    return round7_staged.STAGED
-
-
 def test_top_paths_single_shuffle_takeordered(spark, sf_dir):
-    plan = _plan(_staged()["events_top_paths"][0](spark, sf_dir))
+    plan = _plan(QUERIES["events_top_paths"](spark, sf_dir))
     assert plan.count("Scan parquet") == 1
     assert "Join" not in plan
     assert plan.count("TakeOrderedAndProject") == 1
 
 
 def test_yoy_growth_broadcast_star(spark, sf_dir):
-    plan = _plan(_staged()["lineitem_yoy_brand_growth"][0](spark, sf_dir))
+    plan = _plan(QUERIES["lineitem_yoy_brand_growth"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -1213,7 +1224,7 @@ def test_yoy_growth_broadcast_star(spark, sf_dir):
 def test_bot_signals_single_shuffle(spark, sf_dir):
     """Lag window and per-user aggregate must share one user_id
     partitioning — one scan, one exchange, no join."""
-    plan = _plan(_staged()["events_bot_signals"][0](spark, sf_dir))
+    plan = _plan(QUERIES["events_bot_signals"](spark, sf_dir))
     assert plan.count("Scan parquet") == 1
     assert "Join" not in plan
     assert plan.count("Exchange") <= 2  # window + (possible) agg reuse

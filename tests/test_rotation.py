@@ -1,16 +1,19 @@
-"""The least-recently-verified registration rotation (catalog/verify_rotation).
+"""The least-recently-verified rotation (catalog/verify_rotation).
 
-The external driver only value-checks the first 50 registered queries
-per round; these tests pin the invariants the rotation promises:
-never-verified queries lead, staleness ordering is ascending, the sort
-is stable, and the repo's committed state file agrees with the driver's
-CORRECTNESS history.
+The external driver only value-checks the first 50 queries
+``__spark_entry__.queries()`` hands it per round; these tests pin the
+invariants the rotation promises: never-verified queries lead,
+staleness ordering is ascending, the sort is stable, and the repo's
+committed state file agrees with the driver's CORRECTNESS history.
 """
 
 from __future__ import annotations
 
 import json
+import subprocess
+import sys
 
+import __spark_entry__
 from incubyte_vaccination_data_pipeline_spark import catalog
 from incubyte_vaccination_data_pipeline_spark.catalog import verify_rotation as vr
 
@@ -101,13 +104,30 @@ def test_state_file_matches_driver_history():
 
 
 def test_catalog_registration_is_lrv_sorted():
-    hist = vr.rebuild_history()  # the ordering sources at import
+    queries = __spark_entry__.queries()
+    assert set(queries) == set(catalog.QUERIES)
+    hist = vr.rebuild_history()  # the ordering sources of the adapter
     stale = vr.effective_stale_set(hist=hist)
-    keys = vr.sort_keys(list(catalog.QUERIES), hist, stale)
+    keys = vr.sort_keys(list(queries), hist, stale)
     assert keys == sorted(keys)
     # oracle dict ordering mirrors the query dict
-    oracle_names = list(catalog.ORACLES)
-    assert oracle_names == [n for n in catalog.QUERIES if n in catalog.ORACLES]
+    oracle_names = list(__spark_entry__.oracle_sql())
+    assert oracle_names == [n for n in queries if n in catalog.ORACLES]
+
+
+def test_catalog_import_applies_no_driver_policy():
+    """The rotation is a driver adapter: importing the library reads no
+    driver history (CORRECTNESS_r*.json) or fingerprint file, so the
+    rotation module is not even loaded."""
+    probe = (
+        "import sys, incubyte_vaccination_data_pipeline_spark.catalog; "
+        "print('incubyte_vaccination_data_pipeline_spark.catalog"
+        ".verify_rotation' in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "False"
 
 
 def test_window_covers_least_recently_verified():
@@ -117,7 +137,7 @@ def test_window_covers_least_recently_verified():
     re-verification."""
     hist = vr.rebuild_history()
     stale = vr.effective_stale_set(hist=hist)
-    names = list(catalog.QUERIES)
+    names = list(__spark_entry__.queries())
     keys = dict(zip(names, vr.sort_keys(names, hist, stale)))
     max_in_window = max(keys[n] for n in names[: vr.WINDOW])
     for n in names[vr.WINDOW :]:
@@ -138,7 +158,7 @@ def test_stale_queries_front_load_into_window():
     hist = vr.rebuild_history()
     stale = vr.effective_stale_set(hist=hist)
     assert len(stale) <= vr.WINDOW, "more stale queries than window slots"
-    names = list(catalog.QUERIES)
+    names = list(__spark_entry__.queries())
     keys = dict(zip(names, vr.sort_keys(names, hist, stale)))
     window = set(names[: vr.WINDOW])
     due_now = vr._new_query_key(len(names), hist)[0]
@@ -150,14 +170,13 @@ def test_stale_queries_front_load_into_window():
 
 
 def test_simulated_growth_keeps_gap_bounded():
-    """Window-preview guard: under the CURRENT registration (including
-    any queries staged into the registry this round), no query may go
-    more than ceil(N/50) rounds without a driver row.  Catches a
+    """Window-preview guard: under the CURRENT registration, no query
+    may go more than ceil(N/50) rounds without a driver row.  Catches a
     registration change that silently pushes a stale query out of its
     guaranteed window (the round-3 pos-52/53/57 miss)."""
     import math
 
-    names = list(catalog.QUERIES)
+    names = list(__spark_entry__.queries())
     hist = vr.rebuild_history()
     bound = math.ceil(len(names) / vr.WINDOW)
     gap = vr.simulate_max_gap(
@@ -246,15 +265,21 @@ def test_round4_window_contract_frozen():
     all sat inside the 50-slot window.  Rebuilt with max_round=3, so
     landing newer CORRECTNESS files can never redden this test (the
     r4-boundary stale-ritual failure class)."""
-    from incubyte_vaccination_data_pipeline_spark.catalog import training_ext
-
     # the round-4 registration set IS the union of driver rows through
     # round 4 (the r4 window verified every then-new query) — frozen,
     # so round-5+ registrations can't leak in
     r4_names = sorted(vr.rebuild_history(max_round=4))
     hist = vr.rebuild_history(max_round=3)
     window = set(vr.rotation_order(r4_names, hist)[: vr.WINDOW])
-    must_have = set(training_ext.STAGED) | {
+    must_have = {
+        "skew_report_orders",
+        "corpus_report",
+        "embedding_quantize_int8",
+        "events_user_sequences",
+        "agg_approx_percentile_certified",
+        "split_train_val_test",
+        "split_contamination",
+        "ngram_contamination_partial_leak",
         "ann_lsh_topk",
         "ann_ivf_topk",
         "multimodal_features",
@@ -351,22 +376,6 @@ def test_rebuild_counts_any_row_kind(tmp_path):
         "q_green": {"round": 1, "value": True},
         "q_weak": {"round": 1, "value": False},
     }
-
-
-def test_round5_registration_keeps_gap_bound():
-    """Forward simulation of the round-5 plan: registering the 9
-    staged queries (149 total) must keep every query within the
-    ceil(N/50)-round re-verification guarantee."""
-    import math
-
-    from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES, round5_ext
-    from incubyte_vaccination_data_pipeline_spark.catalog import verify_rotation as vr
-
-    names = list(QUERIES) + sorted(set(round5_ext.STAGED) - set(QUERIES))
-    hist = vr.rebuild_history()
-    bound = math.ceil(len(names) / vr.WINDOW)
-    gap = vr.simulate_max_gap(names, hist, rounds=2 * bound + 2)
-    assert gap <= bound, f"round-5 registration would break the gap bound: {gap}"
 
 
 def test_query_inventory_in_sync():

@@ -1,26 +1,30 @@
-"""Semantic pins for the second round-11 staging batch
-(catalog/round11_staged.py): the DuckDB value side-by-side runs in
-tests/test_round10_staged.py (parametrized over the merged
-STAGED_R11); these tests pin the properties the oracle alone cannot
-state — hash-collision-freedom at test scale, discrimination of the
-dup_heavy flag, and the BM25 ranking laws."""
+"""Semantic pins that the DuckDB oracle sweep (tests/test_oracle.py)
+cannot state for substring dedup and its removal plan, BM25 ranking,
+embedding-IVF and two-level/hierarchical ANN search, MIPS ranking,
+Holt-Winters and label propagation: hash-collision-freedom at test
+scale, discrimination of the dup_heavy flag, ranking and coverage laws,
+subset-of-brute-force laws, and plan shapes.  Each query is imported
+from its domain module under ``catalog/``."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from incubyte_vaccination_data_pipeline_spark.catalog import round11_staged as r11
-from incubyte_vaccination_data_pipeline_spark.catalog import round10_ext
+from incubyte_vaccination_data_pipeline_spark.catalog import (
+    dedup,
+    events_ext,
+    graph,
+    similarity,
+    text_ext,
+)
 from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
     substring_dup_stats,
 )
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
 
-def test_second_batch_merged_into_staged_r11():
-    """register_r11() must pick up the second batch: the merged dict is
-    the single round-11 registration source."""
-    assert set(r11.STAGED) <= set(round10_ext.STAGED_R11)
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_substring_dedup_hash_equals_raw_shingles(spark, sf_dir):
@@ -31,16 +35,16 @@ def test_substring_dedup_hash_equals_raw_shingles(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents")
     hashed = {
         row["doc_id"]: (row["n_shingles"], row["dup_shingles"])
-        for row in r11.text_substring_dedup_q(spark, sf_dir).collect()
+        for row in text_ext.text_substring_dedup_q(spark, sf_dir).collect()
     }
     words = docs.select(
         "doc_id", F.split(F.lower("text"), " ").alias("words")
-    ).filter(F.size("words") >= r11.SUBSTR_K)
+    ).filter(F.size("words") >= text_ext.SUBSTR_K)
     sh = words.select(
         "doc_id",
         F.expr(
-            f"explode(transform(sequence(1, size(words) - {r11.SUBSTR_K - 1}),"
-            f" i -> array_join(slice(words, i, {r11.SUBSTR_K}), ' ')))"
+            f"explode(transform(sequence(1, size(words) - {text_ext.SUBSTR_K - 1}),"
+            f" i -> array_join(slice(words, i, {text_ext.SUBSTR_K}), ' ')))"
         ).alias("shingle"),
     )
     per = sh.groupBy("shingle", "doc_id").agg(F.count(F.lit(1)).alias("occ"))
@@ -52,7 +56,7 @@ def test_substring_dedup_hash_equals_raw_shingles(spark, sf_dir):
         .agg(
             F.sum("occ").alias("n"),
             F.sum(
-                F.when(F.col("nd") >= r11.SUBSTR_MIN_DOCS, F.col("occ")).otherwise(
+                F.when(F.col("nd") >= text_ext.SUBSTR_MIN_DOCS, F.col("occ")).otherwise(
                     F.lit(0)
                 )
             ).alias("d"),
@@ -65,46 +69,46 @@ def test_substring_dedup_hash_equals_raw_shingles(spark, sf_dir):
 def test_substring_dedup_flag_discriminates(spark, sf_dir):
     """The planted duplicate structure must make dup_heavy a real
     signal: some flagged, most not, bounds respected."""
-    rows = r11.text_substring_dedup_q(spark, sf_dir).collect()
+    rows = text_ext.text_substring_dedup_q(spark, sf_dir).collect()
     assert rows
     heavy = [row for row in rows if row["dup_heavy"] == 1]
     assert 0 < len(heavy) < len(rows) / 2
     for row in rows:
         assert 0 <= row["dup_shingles"] <= row["n_shingles"]
         assert 0.0 <= row["dup_frac"] <= 1.0
-        assert row["dup_heavy"] == int(row["dup_frac"] >= r11.SUBSTR_FLAG_FRAC)
+        assert row["dup_heavy"] == int(row["dup_frac"] >= text_ext.SUBSTR_FLAG_FRAC)
 
 
 def test_bm25_ranking_laws(spark, sf_dir):
     """Ranks contiguous from 1, scores non-increasing along the rank,
     matched-term count within [1, BM25_N_TERMS], and every returned
     document really contains at least one derived query term."""
-    out = r11.text_bm25_topk_q(spark, sf_dir).collect()
+    out = text_ext.text_bm25_topk_q(spark, sf_dir).collect()
     # every test corpus has well over BM25_TOP_K docs matching the
     # derived query terms, so the cut must return exactly top-K
-    assert len(out) == r11.BM25_TOP_K
+    assert len(out) == text_ext.BM25_TOP_K
     ranks = sorted(row["rank"] for row in out)
     assert ranks == list(range(1, len(out) + 1))
     by_rank = sorted(out, key=lambda row: row["rank"])
     for a, b in zip(by_rank, by_rank[1:]):
         assert (a["bm25"], -a["doc_id"]) >= (b["bm25"], -b["doc_id"])
-    assert all(1 <= row["n_query_terms"] <= r11.BM25_N_TERMS for row in out)
+    assert all(1 <= row["n_query_terms"] <= text_ext.BM25_N_TERMS for row in out)
 
     docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    ).filter(F.length("tok") >= r11.BM25_MIN_TOK_LEN)
+    ).filter(F.length("tok") >= text_ext.BM25_MIN_TOK_LEN)
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     qterms = {
         row["tok"]
         for row in tf.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("df"))
         .orderBy(F.col("df").desc(), "tok")
-        .limit(r11.BM25_N_TERMS)
+        .limit(text_ext.BM25_N_TERMS)
         .collect()
     }
-    assert len(qterms) == r11.BM25_N_TERMS
-    assert all(len(t) >= r11.BM25_MIN_TOK_LEN for t in qterms)
+    assert len(qterms) == text_ext.BM25_N_TERMS
+    assert all(len(t) >= text_ext.BM25_MIN_TOK_LEN for t in qterms)
     doc_terms = {
         row["doc_id"]: row["ts"]
         for row in tf.filter(F.col("tok").isin(list(qterms)))
@@ -137,10 +141,6 @@ def test_substring_dedup_operator_edge_short_docs(spark):
     assert out[4]["dup_shingles"] == 0 and out[4]["dup_heavy"] == 0
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_substring_dedup_plan_shape(spark, sf_dir):
     """100 TB posture: the corpus-wide shuffles ride the two decoded
     bigint halves — the raw k-word shingle string never appears in a
@@ -149,10 +149,7 @@ def test_substring_dedup_plan_shape(spark, sf_dir):
     import re
 
     plan = _plan(
-        __import__(
-            "incubyte_vaccination_data_pipeline_spark.catalog.round11_staged",
-            fromlist=["text_substring_dedup_q"],
-        ).text_substring_dedup_q(spark, sf_dir)
+        text_ext.text_substring_dedup_q(spark, sf_dir)
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -170,7 +167,7 @@ def test_bm25_plan_shape(spark, sf_dir):
     (>=2 BroadcastHashJoins; the single nested-loop is the 1-row stats
     cross join), and the global top-20 is TakeOrderedAndProject — a
     per-partition heap, never a single-partition global sort."""
-    from incubyte_vaccination_data_pipeline_spark.catalog.round11_staged import (
+    from incubyte_vaccination_data_pipeline_spark.catalog.text_ext import (
         text_bm25_topk_q,
     )
 
@@ -205,7 +202,7 @@ def test_embedding_ivf_subset_of_bruteforce_with_equal_scores(spark, sf_dir):
     }
     ivf = {
         (row["vec_a"], row["vec_b"]): row["cosine"]
-        for row in r11.dedup_embedding_ivf_q(spark, sf_dir).collect()
+        for row in dedup.dedup_embedding_ivf_q(spark, sf_dir).collect()
     }
     assert ivf, "IVF pair generation returned nothing"
     assert set(ivf) <= set(brute)
@@ -302,7 +299,7 @@ def test_holt_winters_pure_periodic_series_is_exact(spark):
         cents = base + pattern[t % 7]
         rows.append(("periodic", day, cents / 100.0))
     df = spark.createDataFrame(rows, "event_type string, ts timestamp, value double")
-    # reuse the staged query's pipeline by substituting the events read
+    # reuse the query's pipeline by substituting the events read
     # (r15: the daily aggregate comes from events_ext.shared_daily_cents,
     # so the patch target moved there; the per-(app, dir) cache entry for
     # the synthetic "ignored" dir is keyed apart from real corpora)
@@ -313,12 +310,12 @@ def test_holt_winters_pure_periodic_series_is_exact(spark):
         return_value=df,
     ):
         out = sorted(
-            r11.events_holt_winters_q(spark, "ignored").collect(),
+            events_ext.events_holt_winters_q(spark, "ignored").collect(),
             key=lambda row: row["day"],
         )
-    assert len(out) == 21 - r11.HW_PERIOD
+    assert len(out) == 21 - events_ext.HW_PERIOD
     for i, row in enumerate(out):
-        t = i + r11.HW_PERIOD
+        t = i + events_ext.HW_PERIOD
         assert row["level"] == float(base)
         assert row["trend"] == 0.0
         assert row["season"] == float(pattern[t % 7])
@@ -338,7 +335,7 @@ def test_label_propagation_refines_components(spark, sf_dir):
 
     lpa = {
         row["node"]: row["community"]
-        for row in r11.graph_label_propagation_q(spark, sf_dir).collect()
+        for row in graph.graph_label_propagation_q(spark, sf_dir).collect()
     }
     pairs = _copurchase_pairs(spark, sf_dir)
     nodes = {
@@ -368,11 +365,11 @@ def test_removal_plan_coverage_laws(spark, sf_dir):
     covered/n_words ratio."""
     stats = {
         row["doc_id"]: row["dup_shingles"]
-        for row in r11.text_substring_dedup_q(spark, sf_dir).collect()
+        for row in text_ext.text_substring_dedup_q(spark, sf_dir).collect()
     }
-    plan = r11.text_substring_removal_plan_q(spark, sf_dir).collect()
+    plan = text_ext.text_substring_removal_plan_q(spark, sf_dir).collect()
     assert {row["doc_id"] for row in plan} == set(stats)
-    k = r11.SUBSTR_K
+    k = text_ext.SUBSTR_K
     for row in plan:
         d = stats[row["doc_id"]]
         c = row["covered_words"]
@@ -411,7 +408,7 @@ def test_holt_winters_plan_two_shuffles_no_join(spark, sf_dir):
     aggregations (daily rollup, per-type collect) and NO join."""
     import re
 
-    plan = _plan(r11.events_holt_winters_q(spark, sf_dir))
+    plan = _plan(events_ext.events_holt_winters_q(spark, sf_dir))
     # upper bound, not ==: AQE/upgrade Exchange coalescing must not
     # redden this; the load-bearing claim is "no third shuffle, no join"
     assert plan.count("Exchange") <= 2
@@ -421,7 +418,7 @@ def test_holt_winters_plan_two_shuffles_no_join(spark, sf_dir):
 def test_lpa_plan_equi_joins_only(spark, sf_dir):
     """Both propagation rounds are equi joins on the dst key — no
     cartesian or nested-loop fallback at any scale."""
-    plan = _plan(r11.graph_label_propagation_q(spark, sf_dir))
+    plan = _plan(graph.graph_label_propagation_q(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -432,7 +429,7 @@ def test_removal_plan_plan_shape(spark, sf_dir):
     scan pruned to (doc_id, text)."""
     import re
 
-    plan = _plan(r11.text_substring_removal_plan_q(spark, sf_dir))
+    plan = _plan(text_ext.text_substring_removal_plan_q(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     for m in re.finditer(r"hashpartitioning\(([^)]*)\)", plan):
@@ -447,7 +444,7 @@ def test_mips_ranking_laws_on_corpus(spark, sf_dir):
     rank. (On THIS near-constant-norm synthetic corpus MIPS and cosine
     orders happen to coincide — the objective split is pinned on a
     constructed corpus below.)"""
-    out = r11.ann_mips_topk_q(spark, sf_dir).collect()
+    out = similarity.ann_mips_topk_q(spark, sf_dir).collect()
     assert out
     by_q = {}
     for row in out:
@@ -632,7 +629,7 @@ def test_hier_search_recall_and_score_exactness(spark, sf_dir):
     }
     hier = {
         (row["query_id"], row["neighbor_id"]): row["cosine"]
-        for row in r11.ann_ivf_hier_topk_q(spark, sf_dir).collect()
+        for row in similarity.ann_ivf_hier_topk_q(spark, sf_dir).collect()
     }
     assert hier
     hits = sum(1 for p in hier if p in brute)

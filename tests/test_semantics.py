@@ -1571,9 +1571,7 @@ def test_top_paths_matches_python_replay(spark, sf_dir):
 
     from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES
 
-    from incubyte_vaccination_data_pipeline_spark.catalog import round7_staged
-
-    got = round7_staged.STAGED["events_top_paths"][0](spark, sf_dir).toPandas()
+    got = QUERIES["events_top_paths"](spark, sf_dir).toPandas()
     ev = pd.read_parquet(f"{sf_dir}/events.parquet",
                          columns=["event_id", "user_id", "ts", "event_type"])
     paths = Counter()
@@ -1592,9 +1590,7 @@ def test_bot_signals_match_python_replay(spark, sf_dir):
 
     from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES
 
-    from incubyte_vaccination_data_pipeline_spark.catalog import round7_staged
-
-    got = round7_staged.STAGED["events_bot_signals"][0](spark, sf_dir).toPandas()
+    got = QUERIES["events_bot_signals"](spark, sf_dir).toPandas()
     ev = pd.read_parquet(f"{sf_dir}/events.parquet",
                          columns=["event_id", "user_id", "ts", "event_type"])
     ev["ts_s"] = (
@@ -1624,7 +1620,7 @@ def test_bot_signals_match_python_replay(spark, sf_dir):
 
 
 def test_zipf_fit_matches_python_replay(spark, sf_dir):
-    """Third implementation (staged query): pure-Python quantized
+    """Third implementation: pure-Python quantized
     log-log regression; slope/intercept/r2 to 1e-4 (floor-quantized
     logs can flip one ulp at bin edges)."""
     import math
@@ -1632,9 +1628,9 @@ def test_zipf_fit_matches_python_replay(spark, sf_dir):
 
     import pandas as pd
 
-    from incubyte_vaccination_data_pipeline_spark.catalog import round7_staged
+    from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES
 
-    got = round7_staged.STAGED["text_zipf_fit"][0](spark, sf_dir).collect()[0]
+    got = QUERIES["text_zipf_fit"](spark, sf_dir).collect()[0]
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["text"])
     vocab = Counter()
     for t in docs["text"]:

@@ -104,7 +104,7 @@ def test_cluster_and_gram_caches_return_same_frame(spark, sf_dir):
         _shared_simhash32,
         shared_duplicate_clusters,
     )
-    from incubyte_vaccination_data_pipeline_spark.catalog.round5_ext import (
+    from incubyte_vaccination_data_pipeline_spark.catalog.text_ext import (
         _shared_doc_grams,
     )
 
@@ -127,13 +127,13 @@ def test_cluster_and_gram_caches_return_same_frame(spark, sf_dir):
     assert _shared_basket_frame(spark, sf_dir) is b1
     k1 = _shared_kmv_frames(spark, sf_dir)
     assert _shared_kmv_frames(spark, sf_dir) is k1
-    from incubyte_vaccination_data_pipeline_spark.catalog.round10_ext import (
+    from incubyte_vaccination_data_pipeline_spark.catalog.dedup import (
         _shared_prefix_grams,
     )
 
     p1 = _shared_prefix_grams(spark, sf_dir)
     assert _shared_prefix_grams(spark, sf_dir) is p1
-    from incubyte_vaccination_data_pipeline_spark.catalog.round10_ext import (
+    from incubyte_vaccination_data_pipeline_spark.catalog.dedup import (
         _shared_simhash48,
     )
 
@@ -180,20 +180,20 @@ def test_shared_cluster_labels_match_fresh_computation(spark, sf_dir):
 
 
 def test_hier_caches_swept_with_shared_state(spark, sf_dir):
-    """The two-level quantizer's coarse/fine caches (round11_staged)
+    """The two-level quantizer's coarse/fine caches (catalog/similarity)
     are registered dict caches: the explicit between-corpora sweep the
     bench scripts rely on must drop their entries too, not just the
     BoundedCache-backed index frames."""
-    from incubyte_vaccination_data_pipeline_spark.catalog import round11_staged as r11
+    from incubyte_vaccination_data_pipeline_spark.catalog import similarity
 
-    r11._hier_cells(spark, sf_dir)  # populates coarse, fine AND cells
-    assert any(sc._key_matches(k, sf_dir) for k in r11._HIER_COARSE_CACHE)
-    assert any(sc._key_matches(k, sf_dir) for k in r11._HIER_FINE_CACHE)
-    assert any(sc._key_matches(k, sf_dir) for k in r11._HIER_CELLS_CACHE)
+    similarity._hier_cells(spark, sf_dir)  # populates coarse, fine AND cells
+    assert any(sc._key_matches(k, sf_dir) for k in similarity._HIER_COARSE_CACHE)
+    assert any(sc._key_matches(k, sf_dir) for k in similarity._HIER_FINE_CACHE)
+    assert any(sc._key_matches(k, sf_dir) for k in similarity._HIER_CELLS_CACHE)
     sc.release_shared_state(sf_dir)
-    assert not any(sc._key_matches(k, sf_dir) for k in r11._HIER_COARSE_CACHE)
-    assert not any(sc._key_matches(k, sf_dir) for k in r11._HIER_FINE_CACHE)
-    assert not any(sc._key_matches(k, sf_dir) for k in r11._HIER_CELLS_CACHE)
+    assert not any(sc._key_matches(k, sf_dir) for k in similarity._HIER_COARSE_CACHE)
+    assert not any(sc._key_matches(k, sf_dir) for k in similarity._HIER_FINE_CACHE)
+    assert not any(sc._key_matches(k, sf_dir) for k in similarity._HIER_CELLS_CACHE)
 
 
 def test_hier_cells_rank1_agrees_with_inv(spark, sf_dir):
@@ -206,20 +206,20 @@ def test_hier_cells_rank1_agrees_with_inv(spark, sf_dir):
     broadcast-score window, not a second Lloyd chain)."""
     from pyspark.sql import functions as F
 
-    from incubyte_vaccination_data_pipeline_spark.catalog import round11_staged as r11
+    from incubyte_vaccination_data_pipeline_spark.catalog import similarity
 
     inv = {
         r["vec_id"]: r["cell"]
-        for r in r11._hier_inv(spark, sf_dir).collect()
+        for r in similarity._hier_inv(spark, sf_dir).collect()
     }
     # m=2 frame: the best cell is the one _two_level_score ranked
     # first; recover it as the min over (rank order) — the frame drops
     # __arn, but scores order (dot DESC, fid ASC) == cell order only
     # per vector via a fresh ranked build, so assert set-level laws:
     # every vector appears exactly twice and its m=1 cell is among them
-    cells = r11._hier_cells(spark, sf_dir)
+    cells = similarity._hier_cells(spark, sf_dir)
     counts = cells.groupBy("vec_id").agg(F.count(F.lit(1)).alias("n"))
-    assert counts.filter(F.col("n") != r11.HIER_ASSIGN_M).count() == 0
+    assert counts.filter(F.col("n") != similarity.HIER_ASSIGN_M).count() == 0
     pairs = {
         (r["vec_id"], r["cell"]) for r in cells.collect()
     }
@@ -249,14 +249,12 @@ def test_near_dup_ivf_rejects_centroids_plus_cells(spark, sf_dir):
 
 def test_substring_shared_frames_match_unshared_operators(spark, sf_dir):
     """The persisted gram-frame triple (round 13,
-    catalog/round11_staged._substr_frames) must be value-invisible:
+    catalog/text_ext._substr_frames) must be value-invisible:
     both registered substring queries — which consume the shared
     frames — return EXACTLY the unshared operator paths' rows. Also
     pins the frames' nd law: per_doc_gram-row count per gram ==
     countDistinct(doc) over position rows."""
-    from incubyte_vaccination_data_pipeline_spark.catalog import (
-        round11_staged as r11,
-    )
+    from incubyte_vaccination_data_pipeline_spark.catalog import text_ext
     from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
         substring_dup_coverage,
         substring_dup_stats,
@@ -268,35 +266,35 @@ def test_substring_shared_frames_match_unshared_operators(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents")
     shared = {
         tuple(r)
-        for r in r11.text_substring_dedup_q(spark, sf_dir).collect()
+        for r in text_ext.text_substring_dedup_q(spark, sf_dir).collect()
     }
     plain = {
         tuple(r)
         for r in substring_dup_stats(
             docs,
-            k=r11.SUBSTR_K,
-            min_docs=r11.SUBSTR_MIN_DOCS,
-            flag_frac=r11.SUBSTR_FLAG_FRAC,
+            k=text_ext.SUBSTR_K,
+            min_docs=text_ext.SUBSTR_MIN_DOCS,
+            flag_frac=text_ext.SUBSTR_FLAG_FRAC,
         ).collect()
     }
     assert shared == plain and shared
 
     shared_cov = {
         tuple(r)
-        for r in r11.text_substring_removal_plan_q(spark, sf_dir).collect()
+        for r in text_ext.text_substring_removal_plan_q(spark, sf_dir).collect()
     }
     plain_cov = {
         tuple(r)
         for r in substring_dup_coverage(
-            docs, k=r11.SUBSTR_K, min_docs=r11.SUBSTR_MIN_DOCS
+            docs, k=text_ext.SUBSTR_K, min_docs=text_ext.SUBSTR_MIN_DOCS
         ).collect()
     }
     assert shared_cov == plain_cov and shared_cov
 
     # the cache is registered: sweeping the corpus drops the entry
     key_hits = [
-        k for k in r11._SUBSTR_FRAMES_CACHE if sf_dir in k
+        k for k in text_ext._SUBSTR_FRAMES_CACHE if sf_dir in k
     ]
     assert key_hits
     sc.release_shared_state(sf_dir)
-    assert not [k for k in r11._SUBSTR_FRAMES_CACHE if sf_dir in k]
+    assert not [k for k in text_ext._SUBSTR_FRAMES_CACHE if sf_dir in k]
