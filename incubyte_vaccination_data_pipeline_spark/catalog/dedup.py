@@ -152,24 +152,24 @@ _MINHASH_CTES = f"""aug AS ({AUG_SQL}),
     )"""
 
 
-#: Candidate pairs persisted once per (Spark app, sf_dir):
-#: ``dedup_minhash_lsh`` and ``dedup_clusters`` both consume the same
-#: shingle -> signature -> band pipeline, and a catalog/bench/driver
-#: run executes them back-to-back — without sharing, the clusters
-#: query re-runs the whole heavy pipeline just to materialize its edge
-#: list. Pairs are tiny relative to the corpus, so MEMORY_AND_DISK
-#: persist is safe at any scale. (The un-persisted operator plan shape
-#: stays guarded in tests/test_plans.py via ``minhash_candidate_pairs``
-#: directly — a persisted frame's plan renders as InMemoryRelation.)
-from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache, register_dict_cache
-
-_SHARED_PAIRS = BoundedCache()
+from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 
 
 def shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _SHARED_PAIRS.get_or_build(
-        key,
+    """Candidate pairs persisted once per (Spark app, sf_dir):
+    ``dedup_minhash_lsh`` and ``dedup_clusters`` both consume the same
+    shingle -> signature -> band pipeline, and a catalog/bench/driver
+    run executes them back-to-back — without sharing, the clusters
+    query re-runs the whole heavy pipeline just to materialize its
+    edge list. Pairs are tiny relative to the corpus, so
+    MEMORY_AND_DISK persist is safe at any scale. (The un-persisted
+    operator plan shape stays guarded in tests/test_plans.py via
+    ``minhash_candidate_pairs`` directly — a persisted frame's plan
+    renders as InMemoryRelation.)"""
+    return shared(
+        spark,
+        sf_dir,
+        "minhash_pairs",
         lambda: minhash_candidate_pairs(
             augmented_documents(spark, sf_dir),
             n_hashes=12,
@@ -180,64 +180,47 @@ def shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Connected-component labels built once per (Spark app, sf_dir):
-#: three catalog queries (``dedup_clusters``, ``dedup_keep_best``,
-#: ``dedup_cleaned_corpus``) consume the same min-label propagation
-#: over the shared candidate pairs, and the propagation loop is EAGER
-#: (one materialization job per round) — without sharing, each query
-#: re-runs the whole loop (~0.85-1.4s each at sf0.1, ROUND_NOTES
-#: §8.9). ``duplicate_clusters`` localCheckpoints its label frame
-#: every round, so the returned frame is already a materialized
-#: in-memory RDD with a Project-over-LogicalRDD plan — caching the
-#: SAME frame object leaves every downstream analyzed plan (and so
-#: every driver fingerprint) byte-identical to the uncached build.
-_SHARED_CLUSTERS = BoundedCache()
-
-
 def shared_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Connected-component labels built once per (Spark app, sf_dir):
+    three catalog queries (``dedup_clusters``, ``dedup_keep_best``,
+    ``dedup_cleaned_corpus``) consume the same min-label propagation
+    over the shared candidate pairs, and the propagation loop is EAGER
+    (one materialization job per round) — without sharing, each query
+    re-runs the whole loop (~0.85-1.4s each at sf0.1, ROUND_NOTES
+    §8.9). ``duplicate_clusters`` localCheckpoints its label frame
+    every round, so the returned frame is already a materialized
+    in-memory RDD with a Project-over-LogicalRDD plan — caching the
+    SAME frame object leaves every downstream analyzed plan (and so
+    every driver fingerprint) byte-identical to the uncached build."""
     from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
         duplicate_clusters,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _SHARED_CLUSTERS.get_or_build(
-        key,
+    return shared(
+        spark,
+        sf_dir,
+        "duplicate_clusters",
         lambda: duplicate_clusters(shared_minhash_pairs(spark, sf_dir)),
     )
 
 
-#: 32-bit SimHash fingerprints built once per (Spark app, sf_dir).
-#: The frame must materialize before the band self-join either way
-#: (the pair generator references it on both sides and Spark
-#: self-joins duplicate the subtree: without it the corpus's 3-scan
-#: augmentation union is scanned 6x and the explode+vote aggregate
-#: runs twice); fingerprints are ~12 bytes/doc, negligible at any
-#: corpus size. Keying the localCheckpoint per corpus (instead of
-#: re-checkpointing per call) is the round-8-measured 1.24s -> 0.6s
-#: warm win at sf0.1 (ROUND_NOTES §8.9) with the identical
-#: LogicalRDD plan shape — the banding/join plan downstream stays
-#: visible to the plan guard and the driver fingerprint is unchanged.
-_SHARED_SIMHASH32 = BoundedCache()
-
-#: Per-document char-3-gram sets with (lang, 20-char length-bucket)
-#: block keys, built once per (app, corpus): the explode ->
-#: collect_set aggregate is ``dedup_ngram_jaccard``'s dominant
-#: per-call cost and depends only on the corpus (the Jaccard
-#: threshold and the blocked join run per call). Same checkpointed
-#: LogicalRDD shape as the per-call build.
-_SHARED_NGRAMS = BoundedCache()
-
-
 def _shared_ngram_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document char-3-gram sets with (lang, 20-char length-bucket)
+    block keys, built once per (app, corpus): the explode ->
+    collect_set aggregate is ``dedup_ngram_jaccard``'s dominant
+    per-call cost and depends only on the corpus (the Jaccard
+    threshold and the blocked join run per call). Same checkpointed
+    LogicalRDD shape as the per-call build."""
     # block_cols pinned EXPLICITLY (with len_bucket precomputed exactly
     # as the operator default used to): the operator's defaulted
     # blocking is now prefix-refined for scale (operators/dedup.py
     # _resolve_block_cols), while this catalog query keeps the original
     # 2-column blocking as its driver-verified oracle contract — the
     # analyzed plan (and so the query fingerprint) is unchanged.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _SHARED_NGRAMS.get_or_build(
-        key,
+    return shared(
+        spark,
+        sf_dir,
+        "ngram_grams",
         lambda: ngram_gram_sets(
             augmented_documents(spark, sf_dir).withColumn(
                 "len_bucket", (F.col("n_chars") / 20).cast("int")
@@ -250,9 +233,22 @@ def _shared_ngram_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shared_simhash32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _SHARED_SIMHASH32.get_or_build(
-        key,
+    """32-bit SimHash fingerprints built once per (Spark app, sf_dir).
+    The frame must materialize before the band self-join either way
+    (the pair generator references it on both sides and Spark
+    self-joins duplicate the subtree: without it the corpus's 3-scan
+    augmentation union is scanned 6x and the explode+vote aggregate
+    runs twice); fingerprints are ~12 bytes/doc, negligible at any
+    corpus size. Keying the localCheckpoint per corpus (instead of
+    re-checkpointing per call) is the round-8-measured 1.24s -> 0.6s
+    warm win at sf0.1 (ROUND_NOTES §8.9) with the identical
+    LogicalRDD plan shape — the banding/join plan downstream stays
+    visible to the plan guard and the driver fingerprint is
+    unchanged."""
+    return shared(
+        spark,
+        sf_dir,
+        "simhash32",
         lambda: durable_checkpoint(
             simhash_fingerprints(augmented_documents(spark, sf_dir), bits=32)
         ),
@@ -470,7 +466,7 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (MinHash+LSH is the recall-style discovery pass; a near-dup whose
     length crosses a bucket boundary is deliberately out of scope).
     The per-doc gram-set frame builds once per corpus
-    (:data:`_SHARED_NGRAMS`); the blocked verify join runs per call."""
+    (:func:`_shared_ngram_grams`); the blocked verify join runs per call."""
     return ngram_jaccard_pairs(
         augmented_documents(spark, sf_dir),
         block_cols=["lang", "len_bucket"],
@@ -666,20 +662,18 @@ _BATCH_NEAR_OFF = 2_000_000
 _BATCH_NOVEL_OFF = 3_000_000
 INCREMENTAL_MIN_EST = 0.5
 
-#: the persisted corpus signature index per (app, corpus) — the thing
-#: a production ingest pipeline writes ONCE and probes with every
-#: day's batch; warm calls pay only the batch-side pipeline + probe
-_SHARED_CORPUS_SIGS = BoundedCache()
-
 
 def _corpus_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted corpus signature index per (app, corpus) — the
+    thing a production ingest pipeline writes ONCE and probes with
+    every day's batch; warm calls pay only the batch-side pipeline +
+    probe."""
+
     def build() -> DataFrame:
         docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
         return minhash_signatures(docs).persist()
 
-    return _SHARED_CORPUS_SIGS.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return shared(spark, sf_dir, "corpus_sig_index", build)
 
 
 _DEDUP_INCREMENTAL_ORACLE = f"""
@@ -858,17 +852,17 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``dedup_ngram_jaccard`` plus the prefix key in the block-join
 # predicate.
 
-#: per-(app, corpus) char-3-gram sets carrying the REFINED
-#: (lang, len_bucket, text_prefix) block keys — same rows as
-#: catalog/dedup._SHARED_NGRAMS, one extra key column; cached
-#: separately because the two queries pin different block contracts.
-_SHARED_NGRAMS_PREFIX = BoundedCache()
-
 
 def _shared_prefix_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _SHARED_NGRAMS_PREFIX.get_or_build(
-        key,
+    """Per-(app, corpus) char-3-gram sets carrying the REFINED
+    (lang, len_bucket, text_prefix) block keys — same rows as
+    :func:`_shared_ngram_grams`, one extra key column; shared
+    separately because the two queries pin different block
+    contracts."""
+    return shared(
+        spark,
+        sf_dir,
+        "prefix_grams",
         # block_cols defaulted -> (lang, len_bucket, text_prefix)
         lambda: ngram_gram_sets(
             augmented_documents(spark, sf_dir), n=3, len_bucket_width=20
@@ -917,7 +911,7 @@ def dedup_ngram_jaccard_prefix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-trimmed chars agree (edits inside the prefix belong to the
     MinHash+LSH discovery pass), which is what keeps block populations
     independent of corpus size. Gram sets build once per corpus
-    (:data:`_SHARED_NGRAMS_PREFIX`); the blocked verify join runs per
+    (:func:`_shared_prefix_grams`); the blocked verify join runs per
     call."""
     return ngram_jaccard_pairs(
         augmented_documents(spark, sf_dir),
@@ -968,15 +962,15 @@ _SIMHASH_WIDE_ORACLE = f"""
     WHERE bit_count(xor(fa.simhash, fb.simhash)) <= 3
 """
 
-#: per-(app, corpus) 48-bit fingerprint frame (both sides of the band
-#: self-join reference it — same caching rationale as _SHARED_SIMHASH32)
-_SHARED_SIMHASH48 = BoundedCache()
-
 
 def _shared_simhash48(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _SHARED_SIMHASH48.get_or_build(
-        key,
+    """Per-(app, corpus) 48-bit fingerprint frame (both sides of the
+    band self-join reference it — same rationale as
+    :func:`_shared_simhash32`)."""
+    return shared(
+        spark,
+        sf_dir,
+        "simhash48",
         lambda: durable_checkpoint(
             simhash_fingerprints(
                 augmented_documents(spark, sf_dir), bits=_WIDE_BITS
@@ -1012,8 +1006,6 @@ def dedup_simhash_hamming_wide_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the label-blocked query (family consistency).
 EMB_IVF_ASSIGN_M = 2
 
-_FLAT_CELLS_CACHE: dict = register_dict_cache({})
-
 
 def _flat_cells_m2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(app, corpus) top-2 multi-assignment over the shared flat
@@ -1029,10 +1021,9 @@ def _flat_cells_m2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_probes_expr,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FLAT_CELLS_CACHE:
+    def build() -> DataFrame:
         emb = read_table(spark, sf_dir, "embeddings")
-        _FLAT_CELLS_CACHE[key] = (
+        return (
             emb.select(
                 "vec_id",
                 "embedding",
@@ -1050,7 +1041,8 @@ def _flat_cells_m2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition("cell")
             .persist()
         )
-    return _FLAT_CELLS_CACHE[key]
+
+    return shared(spark, sf_dir, "flat_cells_m2", build)
 
 
 def _emb_ivf_oracle() -> str:

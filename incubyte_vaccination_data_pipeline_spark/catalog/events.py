@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
-from incubyte_vaccination_data_pipeline_spark.shared_cache import register_dict_cache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
 _DEC = "decimal(18,2)"
@@ -364,22 +364,18 @@ def stream_stream_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: full-schema flush sentinels per (app, corpus) for the OUTER
-#: stream-stream join: one far-future purchase + click for user -1,
-#: so BOTH sides' watermarks advance past every real purchase's join
-#: window and the unmatched-left nulls flush before the stream ends
-_SS_FLUSH_DIRS: dict[tuple[str, str], str] = register_dict_cache({})
-
-
 def _ss_flush_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SS_FLUSH_DIRS.get(key)
-    if path is None:
-        import os
-        import tempfile
+    """Full-schema flush sentinels per (app, corpus) for the OUTER
+    stream-stream join: one far-future purchase + click for user -1,
+    so BOTH sides' watermarks advance past every real purchase's join
+    window and the unmatched-left nulls flush before the stream ends.
+    The temp dir is shared state: releasing the corpus removes it."""
+    import os
+    import tempfile
 
+    def build() -> tempfile.TemporaryDirectory:
+        tmp = tempfile.TemporaryDirectory(prefix="ivdp-ss-flush-")
         max_ts = read_table(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
-        path = os.path.join(tempfile.mkdtemp(prefix="ivdp-ss-flush-"), "flush")
         far = (F.lit(max_ts).cast("timestamp") + F.expr("INTERVAL 24 HOURS"))
         (
             spark.createDataFrame(
@@ -396,10 +392,12 @@ def _ss_flush_dir(spark: SparkSession, sf_dir: str) -> str:
             )
             .coalesce(1)
             .write.mode("overwrite")
-            .parquet(path)
+            .parquet(os.path.join(tmp.name, "flush"))
         )
-        _SS_FLUSH_DIRS[key] = path
-    return path
+        return tmp
+
+    tmp = shared(spark, sf_dir, "ss_flush_dir", build)
+    return os.path.join(tmp.name, "flush")
 
 
 @query(
@@ -505,14 +503,6 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: flush-sentinel scratch dirs per (app, corpus): the sentinel file
-#: holds one far-future row PER USER (|distinct users| rows) and
-#: depends only on max(ts) + the user set of the immutable corpus, so
-#: warm runs re-stream the same parquet instead of re-aggregating and
-#: re-writing it
-_FLUSH_DIRS: dict[tuple[str, str], str] = register_dict_cache({})
-
-
 def _session_flush_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per app+corpus) a far-future flush event PER USER:
     24 h past max(ts), so every user's open session is closed by a
@@ -525,17 +515,17 @@ def _session_flush_dir(spark: SparkSession, sf_dir: str) -> str:
     at sf0.1).  The sentinel-opened sessions never close, so they are
     never emitted (append mode emits CLOSED sessions only); the
     emitted set is bit-identical either way.  Size: |distinct users|
-    rows — the same metadata scale as the state itself."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _FLUSH_DIRS.get(key)
-    if path is None:
-        import os
-        import tempfile
+    rows — the same metadata scale as the state itself.  The dir is
+    shared per (app, corpus): the sentinels depend only on max(ts) and
+    the user set of the immutable corpus, so warm runs re-stream the
+    same parquet instead of re-aggregating and re-writing it;
+    releasing the corpus removes the dir."""
+    import os
+    import tempfile
 
+    def build() -> tempfile.TemporaryDirectory:
+        tmp = tempfile.TemporaryDirectory(prefix="ivdp-session-flush-")
         max_ts = read_table(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="ivdp-session-flush-"), "flush"
-        )
         (
             read_table(spark, sf_dir, "events")
             .select("user_id")
@@ -549,10 +539,12 @@ def _session_flush_dir(spark: SparkSession, sf_dir: str) -> str:
             )
             .coalesce(1)
             .write.mode("overwrite")
-            .parquet(path)
+            .parquet(os.path.join(tmp.name, "flush"))
         )
-        _FLUSH_DIRS[key] = path
-    return path
+        return tmp
+
+    tmp = shared(spark, sf_dir, "session_flush_dir", build)
+    return os.path.join(tmp.name, "flush")
 
 
 @query(

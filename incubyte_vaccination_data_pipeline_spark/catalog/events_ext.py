@@ -35,20 +35,10 @@ from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
 from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
     durable_checkpoint,
 )
-from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
 _DEC = "decimal(18,2)"
-
-#: per-(app, corpus) daily integer-cent revenue frame — the identical
-#: scan + (event_type, day) aggregate prefix five time-series queries
-#: repeated per run (ses, holt_linear, holt_winters, autocorrelation,
-#: changepoint_cusum). Checkpointed once per corpus under the
-#: shared-cache policy (r15, VERDICT r14 item 5): the frame is
-#: |types| x |calendar days| rows (~150 at any data scale — the series
-#: length is bounded by days, not corpus rows), so the amortization is
-#: pure win and the pinned frame is negligible.
-_SHARED_DAILY = BoundedCache()
 
 
 def _daily_cents_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,9 +51,18 @@ def _daily_cents_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "daily_cents")
-    return _SHARED_DAILY.get_or_build(
-        key,
+    """Per-(app, corpus) daily integer-cent revenue frame — the
+    identical scan + (event_type, day) aggregate prefix five
+    time-series queries repeated per run (ses, holt_linear,
+    holt_winters, autocorrelation, changepoint_cusum). Checkpointed
+    once per corpus (r15, VERDICT r14 item 5): the frame is |types| x
+    |calendar days| rows (~150 at any data scale — the series length
+    is bounded by days, not corpus rows), so the amortization is pure
+    win and the pinned frame is negligible."""
+    return shared(
+        spark,
+        sf_dir,
+        "daily_cents",
         lambda: durable_checkpoint(_daily_cents_frame(spark, sf_dir), eager=False),
     )
 

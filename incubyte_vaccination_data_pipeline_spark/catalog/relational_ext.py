@@ -23,7 +23,7 @@ from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
 )
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
-from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
 _DEC = "decimal(18,2)"
@@ -1465,12 +1465,11 @@ def orders_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HIST_BUCKETS = 8
 
-#: the per-corpus (ranked frame, total N) pair behind the histogram —
-#: the eager distributed-prefix pass amortizes like any table statistic
-_SHARED_HIST_RANKED = BoundedCache()
-
 
 def _hist_ranked_index(spark: SparkSession, sf_dir: str):
+    """The per-corpus (ranked frame, total N) pair behind the
+    histogram — the eager distributed-prefix pass amortizes like any
+    table statistic."""
     from incubyte_vaccination_data_pipeline_spark.operators.prefix import (
         global_cumsum,
     )
@@ -1487,9 +1486,7 @@ def _hist_ranked_index(spark: SparkSession, sf_dir: str):
         )
         return (ranked.persist(), n)
 
-    return _SHARED_HIST_RANKED.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return shared(spark, sf_dir, "hist_ranked", build)
 
 
 @query(
@@ -1598,21 +1595,21 @@ def _kmv_ranked(sel: DataFrame) -> DataFrame:
     )
 
 
-#: The (sel, ranked) sketch-input frames built once per (app, corpus):
-#: the segment membership and its ranked 60-bit hashes are per TABLE
-#: VERSION structures (the stats_equiheight_histogram convention —
-#: ANALYZE-style, not per query). Both were already localCheckpointed
-#: per call because two branches consume each (Spark self-joins
-#: duplicate the subtree: without the checkpoint the
-#: hashed->distinct->window pipeline ran twice per execution, measured
-#: 2x at sf0.1); keying the SAME checkpointed frames per corpus keeps
-#: every downstream analyzed plan (and the driver fingerprint)
-#: byte-identical while dropping the per-call rebuild. Size: distinct
-#: (seg, customer) pairs — compact at any corpus scale.
-_SHARED_KMV = BoundedCache()
-
 
 def _shared_kmv_frames(spark: SparkSession, sf_dir: str):
+    """The (sel, ranked) sketch-input frames built once per (app,
+    corpus): the segment membership and its ranked 60-bit hashes are
+    per TABLE VERSION structures (the stats_equiheight_histogram
+    convention — ANALYZE-style, not per query). Both were already
+    localCheckpointed per call because two branches consume each
+    (Spark self-joins duplicate the subtree: without the checkpoint
+    the hashed->distinct->window pipeline ran twice per execution,
+    measured 2x at sf0.1); keying the SAME checkpointed frames per
+    corpus keeps every downstream analyzed plan (and the driver
+    fingerprint) byte-identical while dropping the per-call rebuild.
+    Size: distinct (seg, customer) pairs — compact at any corpus
+    scale."""
+
     def build():
         orders = read_table(spark, sf_dir, "orders")
         sel = (
@@ -1627,9 +1624,7 @@ def _shared_kmv_frames(spark: SparkSession, sf_dir: str):
         ranked = durable_checkpoint(_kmv_ranked(sel), eager=False)
         return sel, ranked
 
-    return _SHARED_KMV.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return shared(spark, sf_dir, "kmv_frames", build)
 
 
 @query(
@@ -1921,17 +1916,15 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RULES_TOP = 100
 
 
-#: The distinct (order, part) basket-membership frame built once per
-#: (app, corpus): it is the basket MODEL of the table version (the
-#: same ANALYZE-style convention as the KMV and histogram frames), it
-#: was already localCheckpointed per call because three branches
-#: consume it, and the distinct is the query's dominant per-call
-#: shuffle. Same checkpointed lineage -> analyzed plan and driver
-#: fingerprint byte-identical (verified).
-_SHARED_BASKETS = BoundedCache()
-
-
 def _shared_basket_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct (order, part) basket-membership frame built once
+    per (app, corpus): it is the basket MODEL of the table version
+    (the same ANALYZE-style convention as the KMV and histogram
+    frames), it was already localCheckpointed per call because three
+    branches consume it, and the distinct is the query's dominant
+    per-call shuffle. Same checkpointed lineage -> analyzed plan and
+    driver fingerprint byte-identical (verified)."""
+
     def build():
         return durable_checkpoint(
             read_table(spark, sf_dir, "lineitem")
@@ -1942,9 +1935,7 @@ def _shared_basket_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=False,
         )
 
-    return _SHARED_BASKETS.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return shared(spark, sf_dir, "basket_frame", build)
 
 
 @query(

@@ -53,7 +53,7 @@ from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
     substring_gram_frames,
 )
 from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import durable_checkpoint
-from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache, register_dict_cache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
 # regex subset valid in both Java regex (Spark) and RE2 (DuckDB)
@@ -468,19 +468,18 @@ def _containment_grams(df: DataFrame, id_col: str, arr: str) -> DataFrame:
     ).distinct()
 
 
-#: The corpus-side inverted index — the distinct (doc, 3-gram) frame
-#: and its document-frequency counts — built ONCE per (Spark app,
-#: corpus) like the MinHash signature index (ANALYZE-style structures
-#: are per table version, not per query): the gram explode+distinct is
-#: the query's dominant cost and is probe-set-independent, so
-#: rebuilding it per call (the round-8 shape: per-call lazy
-#: localCheckpoint) paid the corpus scan on every execution.  The
-#: cached frame is the same LogicalRDD checkpoint shape, so the
-#: downstream analyzed plan (and driver fingerprint) is unchanged.
-_SHARED_DOC_GRAMS = BoundedCache()
-
-
 def _shared_doc_grams(spark: SparkSession, sf_dir: str):
+    """The corpus-side inverted index — the distinct (doc, 3-gram)
+    frame and its document-frequency counts — built ONCE per (Spark
+    app, corpus) like the MinHash signature index (ANALYZE-style
+    structures are per table version, not per query): the gram
+    explode+distinct is the query's dominant cost and is
+    probe-set-independent, so rebuilding it per call (the round-8
+    shape: per-call lazy localCheckpoint) paid the corpus scan on
+    every execution.  The shared frame is the same LogicalRDD
+    checkpoint shape, so the downstream analyzed plan (and driver
+    fingerprint) is unchanged."""
+
     def build():
         toks = _containment_tokens(spark, sf_dir)
         dgrams = durable_checkpoint(
@@ -493,8 +492,7 @@ def _shared_doc_grams(spark: SparkSession, sf_dir: str):
         )
         return dgrams, df_counts
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _SHARED_DOC_GRAMS.get_or_build(key, build)
+    return shared(spark, sf_dir, "doc_grams", build)
 
 
 @query("text_containment_dedup", _CONTAIN_ORACLE)
@@ -830,8 +828,6 @@ SUBSTR_K = 8
 SUBSTR_MIN_DOCS = 2
 SUBSTR_FLAG_FRAC = 0.2
 
-_SUBSTR_FRAMES_CACHE: dict = register_dict_cache({})
-
 
 def _substr_frames(spark: SparkSession, sf_dir: str):
     """Per-(app, corpus) persisted :func:`substring_gram_frames`
@@ -843,8 +839,8 @@ def _substr_frames(spark: SparkSession, sf_dir: str):
     gram exchange once per corpus; both queries keep only their final
     per-doc aggregation as per-run work. Values are pinned identical
     to the unshared operator paths (tests/test_shared_cache.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SUBSTR_FRAMES_CACHE:
+
+    def build():
         pos, per_doc_gram, gram_docs = substring_gram_frames(
             read_table(spark, sf_dir, "documents"), k=SUBSTR_K
         )
@@ -853,12 +849,9 @@ def _substr_frames(spark: SparkSession, sf_dir: str):
         # stays lazy — pinning a corpus-sized per-gram frame in
         # executor storage with no consumer wastes storage memory and
         # evicts frames that ARE reused (r13 advice)
-        _SUBSTR_FRAMES_CACHE[key] = (
-            pos.persist(),
-            per_doc_gram.persist(),
-            gram_docs,
-        )
-    return _SUBSTR_FRAMES_CACHE[key]
+        return pos.persist(), per_doc_gram.persist(), gram_docs
+
+    return shared(spark, sf_dir, "substr_frames", build)
 
 
 _SUBSTR_V1 = md5_half_decode_sql("m", 1, "strpos")

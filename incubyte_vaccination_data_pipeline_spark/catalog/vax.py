@@ -34,7 +34,7 @@ from incubyte_vaccination_data_pipeline_spark.functions.dates import (
 from incubyte_vaccination_data_pipeline_spark.functions.derive import age_years, staleness_flag
 from incubyte_vaccination_data_pipeline_spark.operators.views import dedup_latest
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
-from incubyte_vaccination_data_pipeline_spark.shared_cache import register_dict_cache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 
 FLAGSHIP_COUNTRY = "NATION_7"
 
@@ -418,23 +418,21 @@ def vax_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter split: rows whose mandatory date failed, annotated
     with the reference's reason text + field name (§1.4).
 
-    The frame (and its lazily persisted parse prefix) is memoized per
+    The frame (and its lazily persisted parse prefix) is shared per
     (session, sf_dir): each ``dead_letter_frame`` call persists a new
     shared-prefix cache, so repeated driver/bench invocations would
     otherwise stack MEMORY_AND_DISK copies until block eviction —
-    reuse is both the leak fix and the warm-path win."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    frame = _DEADLETTER_CACHE.get(key)
-    if frame is None:
-        dirty = _dirty_dates(spark, sf_dir)
-        frame = dead_letter_frame(dirty, "raw").withColumn(
-            "invalid_field", F.lit("open_date")
-        )
-        _DEADLETTER_CACHE[key] = frame
-    return frame
+    reuse is both the leak fix and the warm-path win. ``withColumn``
+    drops the prefix handle, so it is carried onto the shared frame
+    for the release to find."""
 
+    def build() -> DataFrame:
+        dead = dead_letter_frame(_dirty_dates(spark, sf_dir), "raw")
+        frame = dead.withColumn("invalid_field", F.lit("open_date"))
+        frame._ivdp_persisted_bases = dead._ivdp_persisted_bases
+        return frame
 
-_DEADLETTER_CACHE: dict[tuple[str, str], DataFrame] = register_dict_cache({})
+    return shared(spark, sf_dir, "deadletter", build)
 
 
 @query(

@@ -252,8 +252,8 @@ def dead_letter_frame(df, src_col: str, err_name: str = "validation_error"):
     ``_ivdp_persisted_bases`` (a list). Every DataFrame transformation
     returns a new frame without it, so callers that derive from this
     frame must carry the list onto the derived frame themselves
-    (``operators/validate.validate_types`` does), then release it with
-    :func:`release_dead_letter_cache` after their terminal action.
+    (``operators/validate.validate_types`` does), then free it with
+    ``shared_cache.release`` after their terminal action.
     """
     orig = df.columns
     base = _parse_prefix(df, src_col).persist(StorageLevel.MEMORY_AND_DISK)
@@ -320,13 +320,6 @@ def dead_letter_frame(df, src_col: str, err_name: str = "validation_error"):
     out = b_empty.unionByName(b_compact).unionByName(b_casc)
     out._ivdp_persisted_bases = [base]
     return out
-
-
-def release_dead_letter_cache(df) -> None:
-    """Unpersist the shared parse-prefix caches attached by
-    :func:`dead_letter_frame` (no-op for frames without any)."""
-    for base in getattr(df, "_ivdp_persisted_bases", ()):
-        base.unpersist()
 
 
 def with_parsed_date(

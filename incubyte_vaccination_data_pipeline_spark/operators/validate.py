@@ -54,7 +54,7 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     text) and ``Invalid_Field`` (column name) appended. It carries the
     parse-prefix caches of its branches (see
     ``functions/dates.dead_letter_frame``); release them with
-    ``release_dead_letter_cache(dead_letter)`` once both outputs are
+    ``shared_cache.release(dead_letter)`` once both outputs are
     written.
     """
     typed = df

@@ -12,15 +12,13 @@ import datetime as _dt
 
 from pyspark.sql import DataFrame, SparkSession
 
-from incubyte_vaccination_data_pipeline_spark.functions.dates import (
-    release_dead_letter_cache,
-)
 from incubyte_vaccination_data_pipeline_spark.operators.validate import (
     get_valid_records,
     to_warehouse,
     validate_types,
 )
 from incubyte_vaccination_data_pipeline_spark.operators.views import register_country_views
+from incubyte_vaccination_data_pipeline_spark.shared_cache import release
 from incubyte_vaccination_data_pipeline_spark.sources.csv_ingest import load_source_data
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import (
     write_dead_letter,
@@ -52,7 +50,7 @@ def run_pipeline(
     write_warehouse(warehouse, warehouse_path, mode="overwrite")
     # the views read the stored parquet, so the dead-letter parse
     # prefix cache is no longer needed by anything
-    release_dead_letter_cache(dead)
+    release(dead)
     stored = spark.read.parquet(warehouse_path)
     views = register_country_views(spark, stored, as_of=as_of)
     return stored, views

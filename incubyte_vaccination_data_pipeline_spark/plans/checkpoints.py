@@ -31,49 +31,47 @@ def durable_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     session has a checkpoint dir configured, ``localCheckpoint``
     otherwise.  Identical analyzed-plan shape either way.
 
-    On the reliable path an eager checkpoint runs as a SEPARATE job
-    from the computation that defined ``df`` — without a persist the
-    checkpoint-write job recomputes the full lineage (~2x compute plus
-    the distributed-FS write).  We therefore persist the frame for the
-    duration of the eager materialization and release it immediately
-    after (the checkpointed RDD is its own storage from then on).  A
-    lazy reliable checkpoint (``eager=False``) materializes at the
-    caller's first action, outside this function's scope; the input is
-    persisted here too (r14 advice — without it the checkpoint-write
-    job re-evaluates the full lineage once more whenever the first
-    action lands), and released by the ContextCleaner once the frame
-    is no longer referenced (``spark.cleaner.referenceTracking``, on
-    by default) rather than by an explicit unpersist this function has
-    no scope to place.
+    On the reliable path the checkpoint write runs as a SEPARATE job
+    from the computation that defined ``df``; without a persist it
+    recomputes the full lineage (~2x compute plus the distributed-FS
+    write).  An eager checkpoint therefore persists the input for the
+    duration of the materialization and unpersists it right after.  A
+    lazy checkpoint (``eager=False``) materializes at the caller's
+    first action, outside this function's scope, so it persists the
+    checkpoint's OWN RDD instead: the first action fills it and the
+    write job reads those blocks (one lineage evaluation, measured
+    with an accumulator UDF; two without the persist).  An RDD-level
+    persist adds no CacheManager entry, so no other plan can have it
+    substituted in.  It lives as long as the frame:
+    ``shared_cache.release`` frees it (with the checkpoint files), and
+    so does the ContextCleaner once the frame is garbage-collected.
 
     Retention: reliable checkpoint files are NOT removed by
-    ``unpersist()``; the session factory (``session.get_spark``) sets
+    ``unpersist()``.  ``shared_cache.release`` deletes them at once;
+    the session factory (``session.get_spark``) also sets
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so the
-    ContextCleaner deletes a checkpoint's files once its RDD is
-    garbage-collected (e.g. after shared-cache eviction drops the last
-    frame reference).  Long-lived deployments that disable the cleaner
-    must sweep the checkpoint dir themselves.
+    ContextCleaner deletes the files of any other checkpoint once its
+    RDD is garbage-collected (per-iteration loop checkpoints).
+    Long-lived deployments that disable the cleaner must sweep the
+    checkpoint dir themselves.
     """
     sc = df.sparkSession.sparkContext
     try:
         has_dir = sc.getCheckpointDir() is not None
     except Exception:
         has_dir = False
-    if has_dir:
-        if eager:
-            already_persisted = df.storageLevel != StorageLevel.NONE
-            if not already_persisted:
-                df.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                return df.checkpoint(eager=True)
-            finally:
-                if not already_persisted:
-                    df.unpersist()
-        # lazy reliable path: persist so the checkpoint-write job (at
-        # the caller's first action) reads cached blocks instead of
-        # re-running the lineage; the ContextCleaner releases it when
-        # the frame is garbage-collected (see docstring)
-        if df.storageLevel == StorageLevel.NONE:
-            df.persist(StorageLevel.MEMORY_AND_DISK)
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=eager)
+    if not has_dir:
+        return df.localCheckpoint(eager=eager)
+    if not eager:
+        out = df.checkpoint(eager=False)
+        level = sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK)
+        out._jdf.queryExecution().analyzed().rdd().persist(level)
+        return out
+    already_persisted = df.storageLevel != StorageLevel.NONE
+    if not already_persisted:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return df.checkpoint(eager=True)
+    finally:
+        if not already_persisted:
+            df.unpersist()

@@ -48,10 +48,12 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         # Reliable checkpoints (plans/checkpoints.durable_checkpoint on
         # clusters with a checkpoint dir) leave files behind that
-        # unpersist() does not remove; let the ContextCleaner delete a
-        # checkpoint's files once its RDD is garbage-collected so
-        # long-lived sessions (shared_cache evictions, per-round loop
-        # checkpoints) don't accumulate them unboundedly.
+        # unpersist() does not remove. shared_cache.release deletes the
+        # files of shared entries at once; for every other checkpoint
+        # (per-round loop checkpoints, query-local ones) let the
+        # ContextCleaner delete the files once its RDD is
+        # garbage-collected, so long-lived sessions don't accumulate
+        # them unboundedly.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # PySpark 4's DataFrame-debugging hook wraps EVERY functions/
         # Column/DataFrame call with call-site capture: getActiveSession

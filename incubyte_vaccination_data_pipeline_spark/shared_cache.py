@@ -1,13 +1,28 @@
-"""Bounded keyed cache for per-(app, sf_dir) shared query state.
+"""One keyed store for per-corpus shared query state, with one release.
 
-Several catalog queries share expensive intermediates — the MinHash
-candidate-pair frame (dedup_minhash_lsh / dedup_clusters), the exact
-ANN top-k twin (ann_bruteforce_topk / both recall certificates), the
-IVF coarse quantizer. Keys include the corpus directory, so a
-long-lived session that touches many corpora (the portability-fuzz
-suite runs the dedup family over per-seed temp dirs; a notebook user
-may loop over datasets) would otherwise accumulate persisted frames
-without bound. LRU-bounded; evicted DataFrames are unpersisted.
+Many catalog queries reuse per-corpus intermediates: table read
+handles, the MinHash candidate pairs, the exact ANN top-k twin, the
+IVF quantizer and inverted files, checkpointed graph and daily
+aggregate frames, streaming flush-sentinel dirs. Every such site calls
+:func:`shared` with a name; the store keys the value by
+``(applicationId, sf_dir, name)`` and builds it once.
+
+Bound: at most :data:`MAX_CORPORA` corpora ``(app, sf_dir)`` at once.
+Adding one more releases the least recently used corpus WHOLE, so a
+long-lived session that loops over many corpora (the portability fuzz
+runs the dedup family over per-seed temp dirs; a notebook may loop
+over datasets) holds bounded state. Whole-corpus eviction is also what
+makes :func:`release` safe: entries of one corpus may derive from each
+other's checkpoints, and they always go together.
+
+:func:`release` is the only function that frees shared state. It is
+used on eviction, by :func:`release_shared_state`, and by
+``pipeline.run_pipeline`` for its dead-letter parse prefix.
+
+Release contract: after a corpus is released, a frame handed out
+earlier for it is invalid, like a closed file — its persisted blocks,
+checkpoint blocks and checkpoint files are gone. Ask :func:`shared`
+again for a fresh one.
 """
 
 from __future__ import annotations
@@ -16,74 +31,112 @@ from collections import OrderedDict
 from collections.abc import Callable
 from typing import Any
 
+from pyspark.sql import DataFrame, SparkSession
 
-#: every BoundedCache and registered dict cache, for the cross-corpus
-#: release sweep (bench between scale factors, notebook dataset loops)
-_ALL_CACHES: list[Any] = []
-
-
-def register_dict_cache(d: dict) -> dict:
-    """Track a plain-dict frame cache so :func:`release_shared_state`
-    can sweep it alongside the BoundedCaches."""
-    _ALL_CACHES.append(d)
-    return d
+#: corpora the store holds at once; one more evicts the least recently
+#: used corpus with every entry it has
+MAX_CORPORA = 8
 
 
-def _unpersist(value: Any) -> None:
+def release(value: Any) -> None:
+    """Free everything ``value`` pins: walk tuples and lists; for a
+    DataFrame unpersist it, release the bases listed in its
+    ``_ivdp_persisted_bases`` and free the RDD of every ``LogicalRDD``
+    leaf of its analyzed plan (persisted or local-checkpoint blocks,
+    and a reliable checkpoint's files, deleted now rather than at GC);
+    call ``cleanup()`` on values that have one (temp dirs). Any other
+    value is dropped as it is."""
     if isinstance(value, (tuple, list)):
-        # composite cache entries (frame, metadata) — release each part
         for v in value:
-            _unpersist(v)
-        return
-    if hasattr(value, "unpersist"):
+            release(v)
+    elif isinstance(value, DataFrame):
         try:
-            value.unpersist()
+            _release_frame(value)
         except Exception:
             pass  # session already stopped; nothing to release
+        for base in getattr(value, "_ivdp_persisted_bases", ()):
+            release(base)
+    elif hasattr(value, "cleanup"):
+        value.cleanup()
 
 
-def _key_matches(key: Any, sf_dir: str) -> bool:
-    # exact element equality: every cache keys the corpus dir as a
-    # standalone tuple element, and substring matching would sweep a
-    # sibling corpus whose path merely contains sf_dir (e.g. a
-    # "<sf_dir>_10x" stress scratch)
-    parts = key if isinstance(key, tuple) else (key,)
-    return any(p == sf_dir for p in parts)
-
-
-def release_shared_state(sf_dir: str | None = None) -> int:
-    """Unpersist and drop every cached shared frame — all of them, or
-    only entries keyed to ``sf_dir``. The explicit sweep between bench
-    scale factors / dataset switches: BoundedCache bounds entry COUNT,
-    but persisted RDDs pin executor storage memory until eviction;
-    a corpus the session is done with should release immediately.
-    Returns the number of entries dropped."""
-    n = 0
-    for cache in _ALL_CACHES:
-        entries = cache._entries if isinstance(cache, BoundedCache) else cache
-        for key in list(entries):
-            if sf_dir is None or _key_matches(key, sf_dir):
-                _unpersist(entries.pop(key))
-                n += 1
-    return n
+def _release_frame(df: DataFrame) -> None:
+    df.unpersist()
+    # Dataset.unpersist is a no-op on a checkpointed frame: its data is
+    # the RDD under the LogicalRDD leaf, so free that RDD directly
+    jsc = df.sparkSession.sparkContext._jsc.sc()
+    jvm = df.sparkSession.sparkContext._jvm
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRDD":
+            continue
+        rdd = leaf.rdd()
+        rdd.unpersist(False)
+        if rdd.getCheckpointFile().isDefined():
+            jvm.org.apache.spark.rdd.ReliableRDDCheckpointData.cleanCheckpoint(
+                jsc, rdd.id()
+            )
 
 
 class BoundedCache:
-    def __init__(self, max_entries: int = 8):
-        self._entries: OrderedDict[Any, Any] = OrderedDict()
-        self._max = max_entries
-        _ALL_CACHES.append(self)
+    """The store: entries per corpus ``(app, sf_dir)``, corpora in LRU
+    order. Its class name, :meth:`get_or_build` and ``__len__`` are
+    seams the benchmark (``perfbench/``) reads: it wraps
+    ``get_or_build`` to time shared builds and sums ``len()`` over
+    :data:`_ALL_CACHES`, so every miss must go through ``get_or_build``."""
 
-    def get_or_build(self, key: Any, build: Callable[[], Any]) -> Any:
-        if key in self._entries:
-            self._entries.move_to_end(key)
-            return self._entries[key]
+    def __init__(self) -> None:
+        self._corpora: OrderedDict[tuple, dict[str, Any]] = OrderedDict()
+
+    def get_or_build(self, key: tuple, build: Callable[[], Any]) -> Any:
+        app, sf_dir, name = key
+        corpus = self._corpora.get((app, sf_dir))
+        if corpus is not None and name in corpus:
+            self._corpora.move_to_end((app, sf_dir))
+            return corpus[name]
         value = build()
-        self._entries[key] = value
-        while len(self._entries) > self._max:
-            _, evicted = self._entries.popitem(last=False)
-            _unpersist(evicted)
+        # the build may itself have added entries for this corpus
+        self._corpora.setdefault((app, sf_dir), {})[name] = value
+        self._corpora.move_to_end((app, sf_dir))
+        while len(self._corpora) > MAX_CORPORA:
+            _, evicted = self._corpora.popitem(last=False)
+            release(list(evicted.values()))
         return value
 
+    def release_corpora(self, sf_dir: str | None = None) -> int:
+        n = 0
+        for corpus in [c for c in self._corpora if sf_dir in (None, c[1])]:
+            entries = self._corpora.pop(corpus)
+            release(list(entries.values()))
+            n += len(entries)
+        return n
+
     def __len__(self) -> int:
-        return len(self._entries)
+        return sum(len(c) for c in self._corpora.values())
+
+
+_STORE = BoundedCache()
+
+#: the benchmark's view of the store (see :class:`BoundedCache`)
+_ALL_CACHES: list[BoundedCache] = [_STORE]
+
+
+def shared(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], Any]
+) -> Any:
+    """The value named ``name`` for corpus ``sf_dir`` in this Spark
+    application, built by ``build()`` on first use. ``name`` is unique
+    per site; table read handles use the bare table name."""
+    return _STORE.get_or_build(
+        (spark.sparkContext.applicationId, sf_dir, name), build
+    )
+
+
+def release_shared_state(sf_dir: str | None = None) -> int:
+    """Release every corpus, or only ``sf_dir`` (matched exactly, so a
+    sibling ``<sf_dir>_10x`` scratch stays), with :func:`release`.
+    Eviction bounds the corpus count, but a corpus the session is done
+    with should free its storage now. Returns the number of entries
+    dropped."""
+    return _STORE.release_corpora(sf_dir)

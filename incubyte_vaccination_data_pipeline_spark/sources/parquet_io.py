@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from incubyte_vaccination_data_pipeline_spark.shared_cache import register_dict_cache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 
 TESTDATA_TABLES = [
     "region",
@@ -31,23 +31,19 @@ TESTDATA_TABLES = [
 ]
 
 
-#: unexecuted DataFrame handles per (session, dir, table) — building a
-#: scan costs several driver<->JVM round-trips (footer read, schema),
-#: ~0.1 s per table per query build; the handle is an immutable lazy
-#: plan, so reuse is free and nothing is persisted or pinned
-_READ_CACHE: dict[tuple[str, str, str], DataFrame] = register_dict_cache({})
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _READ_CACHE.get(key)
-    if df is None:
+    """The table's read handle, shared per (session, dir) under the
+    table's name: building a scan costs several driver<->JVM
+    round-trips (footer read, schema), ~0.1 s per table per query
+    build; the handle is an immutable lazy plan, so reuse is free and
+    nothing is persisted or pinned."""
+
+    def build() -> DataFrame:
         if name == "events":
-            df = _read_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _READ_CACHE[key] = df
-    return df
+            return _read_events(spark, sf_dir)
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+    return shared(spark, sf_dir, name, build)
 
 
 def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:

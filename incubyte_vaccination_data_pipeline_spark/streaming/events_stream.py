@@ -34,12 +34,10 @@ from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
 )
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from incubyte_vaccination_data_pipeline_spark.shared_cache import register_dict_cache
+from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 
 SESSION_GAP = "30 minutes"
 _DEC = "decimal(18,2)"
-
-_SCHEMA_CACHE: dict[tuple[str, str], T.StructType] = register_dict_cache({})
 
 
 def _events_file_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
@@ -50,36 +48,27 @@ def _events_file_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     stream needs the declared schema to match the files. Probed once
     per (session, dir) — every stream query in the family re-reads the
     same immutable footer otherwise."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
+
+    def build() -> T.StructType:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _SCHEMA_CACHE[key] = schema
-    return schema
+        return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+
+    return shared(spark, sf_dir, "events_file_schema", build)
 
 
-_SOURCE_BYTES_CACHE: dict[str, int] = register_dict_cache({})
-
-
-def events_source_bytes(sf_dir: str) -> int:
+def events_source_bytes(spark: SparkSession, sf_dir: str) -> int:
     """On-disk bytes of the events source (file or directory of part
-    files) — a driver-side ``os.stat`` metadata read, cached per dir
-    (the testdata is immutable)."""
+    files) — a driver-side ``os.stat`` metadata read, shared per
+    (session, dir) (the testdata is immutable)."""
     import os
 
-    cached = _SOURCE_BYTES_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        total = sum(
-            e.stat().st_size for e in os.scandir(path) if e.is_file()
-        )
-    else:
-        total = os.stat(path).st_size
-    _SOURCE_BYTES_CACHE[sf_dir] = total
-    return total
+    def build() -> int:
+        path = os.path.join(sf_dir, "events.parquet")
+        if os.path.isdir(path):
+            return sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
+        return os.stat(path).st_size
+
+    return shared(spark, sf_dir, "events_source_bytes", build)
 
 
 def derive_state_partitions(
@@ -141,7 +130,7 @@ def stream_state_partitions(
         parallelism,
         # the file stat is a local-mode signal only — skip the I/O
         # (and any scheme mismatch) when a cluster master decides
-        events_source_bytes(sf_dir) if master.startswith("local") else 0,
+        events_source_bytes(spark, sf_dir) if master.startswith("local") else 0,
         bytes_per_partition=bytes_per_partition,
         lo=lo,
         hi=hi,

@@ -38,3 +38,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def seed_table(spark):
+    """``seed_table(sf_dir, name, df)`` makes ``read_table(spark,
+    sf_dir, name)`` return ``df``: the frame goes into the shared-state
+    store under the name ``read_table`` uses, and every seeded corpus
+    is released at teardown."""
+    from incubyte_vaccination_data_pipeline_spark.shared_cache import (
+        release_shared_state,
+        shared,
+    )
+
+    seeded = set()
+
+    def seed(sf_dir, name, df):
+        assert shared(spark, sf_dir, name, lambda: df) is df, "table already read"
+        seeded.add(sf_dir)
+
+    yield seed
+    for sf_dir in seeded:
+        release_shared_state(sf_dir)

@@ -1,6 +1,7 @@
 """Semantic pins for graph queries (``catalog/graph``) that the DuckDB
 oracle sweep (tests/test_oracle.py) cannot state: triangle-count laws on
-planted graphs, k-core fixpoint subsets, and plan shapes."""
+planted graphs, k-core fixpoint subsets, label-propagation laws, and
+plan shapes."""
 
 from __future__ import annotations
 
@@ -8,6 +9,10 @@ from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark import catalog
 from incubyte_vaccination_data_pipeline_spark.catalog import graph
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_triangle_counts_planted_graph(spark):
@@ -113,3 +118,46 @@ def test_kcore_planted_graph_and_fixpoint_subset(spark, sf_dir):
     fix = {r["node"] for r in kcore(real, graph.KCORE_K).collect()}
     assert fix <= fixed
     assert fix, "fixpoint core empty at test SF"
+
+
+def test_label_propagation_refines_components(spark, sf_dir):
+    """LPA laws: every node of the edge frame gets exactly one
+    community; the community label is itself a node id in the same
+    connected component (labels only flow along edges, so a community
+    can never span two components); and the labeling is non-trivial
+    (more than one community, fewer communities than nodes)."""
+    from incubyte_vaccination_data_pipeline_spark.catalog.graph import (
+        _copurchase_components,
+        _copurchase_pairs,
+    )
+
+    lpa = {
+        row["node"]: row["community"]
+        for row in graph.graph_label_propagation_q(spark, sf_dir).collect()
+    }
+    pairs = _copurchase_pairs(spark, sf_dir)
+    nodes = {
+        row["n"]
+        for row in pairs.select(F.col("pa").alias("n"))
+        .unionByName(pairs.select(F.col("pb").alias("n")))
+        .distinct()
+        .collect()
+    }
+    assert set(lpa) == nodes
+    comp = {
+        row["node"]: row["component_id"]
+        for row in _copurchase_components(spark, sf_dir).collect()
+    }
+    for node, community in lpa.items():
+        assert community in nodes
+        assert comp[community] == comp[node], (node, community)
+    n_comm = len(set(lpa.values()))
+    assert 1 < n_comm < len(nodes)
+
+
+def test_lpa_plan_equi_joins_only(spark, sf_dir):
+    """Both propagation rounds are equi joins on the dst key — no
+    cartesian or nested-loop fallback at any scale."""
+    plan = _plan(graph.graph_label_propagation_q(spark, sf_dir))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan

@@ -55,12 +55,10 @@ def test_rfm_quartiles_sum_and_champions(spark, sf_dir):
         assert r["segment"] == want
 
 
-def test_cohort_ltv_hand_computed(spark, monkeypatch, tmp_path):
+def test_cohort_ltv_hand_computed(spark, seed_table, tmp_path):
     """Two customers: one acquired in Q1 with two orders, one in Q3
     with one order — cohort totals and per-customer LTV by hand."""
     import datetime as dt
-
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
 
     rows = [
         (1, 10, dt.date(2020, 2, 1), 100.0),
@@ -72,11 +70,7 @@ def test_cohort_ltv_hand_computed(spark, monkeypatch, tmp_path):
         rows, "o_orderkey bigint, o_custkey bigint, o_orderdate date,"
         " o_totalprice double",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "orders"),
-        orders,
-    )
+    seed_table(str(tmp_path), "orders", orders)
     fn = catalog.QUERIES["orders_cohort_ltv"]
     out = {r["cohort_q"]: r for r in fn(spark, str(tmp_path)).collect()}
     q1, q3 = dt.date(2020, 1, 1), dt.date(2020, 7, 1)

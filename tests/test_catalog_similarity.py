@@ -1,6 +1,8 @@
 """Semantic pins for ANN queries (``catalog/similarity``) that the DuckDB
 oracle sweep (tests/test_oracle.py) cannot state: k-NN join plan and
-recall, radius-search subset-of-brute-force laws, occupancy probing, and oracle-generator byte identity."""
+recall, radius-search subset-of-brute-force laws, occupancy probing,
+oracle-generator byte identity, MIPS ranking, and the two-level /
+hierarchical quantizer laws."""
 
 from __future__ import annotations
 
@@ -272,3 +274,203 @@ def test_occupancy_plan_shape(spark, sf_dir):
     # operator lines render as "Window [..."; bare "Window" also
     # matches windowspecdefinition mentions inside expressions
     assert plan.count("Window [") == 1
+
+
+def test_mips_ranking_laws_on_corpus(spark, sf_dir):
+    """Per-query ranks contiguous from 1, dot non-increasing along the
+    rank. (On THIS near-constant-norm synthetic corpus MIPS and cosine
+    orders happen to coincide — the objective split is pinned on a
+    constructed corpus below.)"""
+    out = similarity.ann_mips_topk_q(spark, sf_dir).collect()
+    assert out
+    by_q = {}
+    for row in out:
+        by_q.setdefault(row["query_id"], []).append(row)
+    for rows in by_q.values():
+        rows.sort(key=lambda row: row["rank"])
+        assert [row["rank"] for row in rows] == list(range(1, len(rows) + 1))
+        for a, b in zip(rows, rows[1:]):
+            assert a["dot"] >= b["dot"]
+
+
+def test_mips_diverges_from_cosine_when_norms_vary(spark):
+    """The objective split that justifies MIPS as its own query: a
+    high-norm, less-aligned vector must win MIPS while the unit-norm
+    aligned vector wins cosine."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        topk_bruteforce,
+        topk_mips,
+    )
+
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),   # the query
+        (1, [0.9, 0.0, 0.0, 0.0]),   # perfectly aligned, small norm
+        (2, [2.0, 2.0, 0.0, 0.0]),   # misaligned (cos ~0.707), big norm
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.filter("vec_id = 0")
+    mips_top = topk_mips(df, q, k=1).collect()[0]
+    cos_top = topk_bruteforce(df, q, k=1).collect()[0]
+    assert mips_top["neighbor_id"] == 2 and mips_top["dot"] == 2.0
+    assert cos_top["neighbor_id"] == 1 and cos_top["cosine"] == 1.0
+
+
+def test_two_level_assign_one_coarse_equals_flat_seeds(spark, sf_dir):
+    """The hierarchy law: with ONE coarse cell, two-level assignment is
+    bit-identical to flat assignment against the unrefined global seed
+    set (same content-addressed seeds, same dot fold, same tie-break) —
+    pins that level 2 implements exactly the flat semantics, only
+    scoped per coarse cell."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        ivf_assign_expr,
+        ivf_centroids,
+        ivf_two_level_assign,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    n_fine = 9
+    flat_seeds = ivf_centroids(emb, n_centroids=n_fine, refine_iters=0)
+    flat = {
+        row["vec_id"]: row["cid"]
+        for row in emb.select(
+            "vec_id", ivf_assign_expr("embedding", flat_seeds).alias("cid")
+        ).collect()
+    }
+    # one coarse cell: any single unit centroid sends every vector to
+    # coarse cell 0, so the fine seeds are the global smallest-md5 set
+    one_coarse = [[1.0] + [0.0] * 63]
+    two = {
+        row["vec_id"]: row["cell"]
+        for row in ivf_two_level_assign(
+            emb, one_coarse, n_fine_per_coarse=n_fine
+        ).collect()
+    }
+    assert two == flat
+
+
+def test_two_level_cells_find_planted_exact_dups(spark, sf_dir):
+    """End-to-end through the generalized pair operator: a two-level
+    assignment frame (real coarse split) fed to
+    cosine_near_dup_pairs_ivf(cells=...) still finds every planted
+    exact-dup pair at cosine exactly 1.0 (a copy gets identical coarse
+    AND fine cells), and returned cosines match brute force."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        cosine_near_dup_pairs,
+        cosine_near_dup_pairs_ivf,
+        ivf_centroids,
+        ivf_two_level_assign,
+    )
+
+    base = read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
+    copies = base.select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
+    )
+    corpus = base.unionByName(copies)
+    coarse = ivf_centroids(corpus, n_centroids=3)
+    assigned = ivf_two_level_assign(
+        corpus, coarse, n_fine_per_coarse=4, assign_m=2
+    )
+    pairs = {
+        (row["vec_a"], row["vec_b"]): row["cosine"]
+        for row in cosine_near_dup_pairs_ivf(
+            corpus, threshold=0.99, cells=assigned
+        ).collect()
+    }
+    planted = {(v, v + 1_000_000) for v in range(60)}
+    assert planted <= set(pairs)
+    assert all(pairs[p] == 1.0 for p in planted)
+    brute = {
+        (row["vec_a"], row["vec_b"]): row["cosine"]
+        for row in cosine_near_dup_pairs(
+            corpus, threshold=0.99, block_col=None
+        ).collect()
+    }
+    assert set(pairs) <= set(brute)
+    assert all(brute[p] == c for p, c in pairs.items())
+
+
+def test_two_level_refined_equals_flat_lloyd(spark, sf_dir):
+    """The hierarchy law EXTENDS through refinement: one coarse cell +
+    one distributed groupwise Lloyd step is bit-identical to flat
+    assignment against ivf_centroids(refine_iters=1) — same quantized
+    integer means, same empty-cell seed fallback, same normalization
+    and tie-breaks, computed distributed instead of driver-side."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        ivf_assign_expr,
+        ivf_centroids,
+        ivf_two_level_assign,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    n_fine = 9
+    flat_cents = ivf_centroids(emb, n_centroids=n_fine, refine_iters=1)
+    flat = {
+        row["vec_id"]: row["cid"]
+        for row in emb.select(
+            "vec_id", ivf_assign_expr("embedding", flat_cents).alias("cid")
+        ).collect()
+    }
+    two = {
+        row["vec_id"]: row["cell"]
+        for row in ivf_two_level_assign(
+            emb,
+            [[1.0] + [0.0] * 63],
+            n_fine_per_coarse=n_fine,
+            refine_fine=1,
+        ).collect()
+    }
+    assert two == flat
+
+
+def test_hier_search_probe_all_equals_bruteforce(spark, sf_dir):
+    """Recall-1 law: one coarse cell + probing every fine cell makes
+    the hierarchical search scan the whole corpus — the result must
+    EQUAL exact brute-force top-k (same pairs, cosines, ranks)."""
+    from incubyte_vaccination_data_pipeline_spark.operators.similarity import (
+        ivf_two_level_assign,
+        ivf_two_level_centroids,
+        topk_bruteforce,
+        topk_two_level,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    one_coarse = [[1.0] + [0.0] * 63]
+    nf = 6
+    fc = ivf_two_level_centroids(emb, one_coarse, nf, refine_fine=1)
+    inv = ivf_two_level_assign(emb, one_coarse, nf, assign_m=1, fine_centroids=fc)
+    queries = emb.filter(F.col("vec_id") < 5)
+    hier = {
+        (row["query_id"], row["rank"]): (row["neighbor_id"], row["cosine"])
+        for row in topk_two_level(
+            emb, queries, one_coarse, fc, inv, nf,
+            k=10, n_probe_coarse=1, n_probe_fine=nf,
+        ).collect()
+    }
+    brute = {
+        (row["query_id"], row["rank"]): (row["neighbor_id"], row["cosine"])
+        for row in topk_bruteforce(emb, queries, k=10).collect()
+    }
+    assert hier == brute
+
+
+def test_hier_search_recall_and_score_exactness(spark, sf_dir):
+    """At the pinned probe budget every returned cosine equals the
+    brute-force score for the same pair (the index prunes, never
+    rescores), and recall@10 stays above a honest floor on the
+    near-uniform corpus."""
+    from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES
+
+    brute = {
+        (row["query_id"], row["neighbor_id"]): row["cosine"]
+        for row in QUERIES["ann_bruteforce_topk"](spark, sf_dir).collect()
+    }
+    hier = {
+        (row["query_id"], row["neighbor_id"]): row["cosine"]
+        for row in similarity.ann_ivf_hier_topk_q(spark, sf_dir).collect()
+    }
+    assert hier
+    hits = sum(1 for p in hier if p in brute)
+    for pair, cos in hier.items():
+        if pair in brute:
+            assert cos == brute[pair]
+    assert hits / len(brute) >= 0.25, f"recall collapsed: {hits}/{len(brute)}"

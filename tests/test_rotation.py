@@ -330,27 +330,6 @@ def test_bench_compact_line_fits_driver_tail():
     assert _json.loads(line)["n_queries"] == len(catalog.QUERIES)
 
 
-def test_bounded_cache_evicts_and_unpersists():
-    from incubyte_vaccination_data_pipeline_spark.shared_cache import BoundedCache
-
-    class Frame:
-        def __init__(self):
-            self.released = False
-
-        def unpersist(self):
-            self.released = True
-
-    cache = BoundedCache(max_entries=2)
-    frames = [Frame() for _ in range(3)]
-    for i, f in enumerate(frames):
-        assert cache.get_or_build(i, lambda f=f: f) is f
-    # LRU: key 0 evicted and unpersisted; 1 and 2 retained
-    assert frames[0].released and not frames[1].released and not frames[2].released
-    assert len(cache) == 2
-    # hit moves to end and builds nothing new
-    assert cache.get_or_build(1, lambda: Frame()) is frames[1]
-
-
 def test_load_state_tolerates_missing_file(tmp_path):
     assert vr.load_state(tmp_path / "nope.json") == {}
     bad = tmp_path / "bad.json"

@@ -74,10 +74,9 @@ def test_pagerank_hand_computed_star_graph(spark):
     }, got
 
 
-def test_scd2_hand_computed_versions(spark, sf_dir, monkeypatch, tmp_path):
+def test_scd2_hand_computed_versions(spark, sf_dir, seed_table, tmp_path):
     """A four-order change log with a run, a flip, and a flip-back
     must collapse to exactly three versions with tiling intervals."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.relational_ext import (
         scd2_priority_history,
     )
@@ -94,11 +93,7 @@ def test_scd2_hand_computed_versions(spark, sf_dir, monkeypatch, tmp_path):
         "o_custkey bigint, o_orderdate date, o_orderkey bigint,"
         " o_orderpriority string",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "orders"),
-        orders,
-    )
+    seed_table(str(tmp_path), "orders", orders)
     out = {
         (r["cust_i"], r["version"]): r
         for r in scd2_priority_history(spark, str(tmp_path)).collect()
@@ -116,11 +111,10 @@ def test_scd2_hand_computed_versions(spark, sf_dir, monkeypatch, tmp_path):
     assert out[(2, 1)]["is_current"]
 
 
-def test_snapshot_diff_hand_computed(spark, sf_dir, monkeypatch, tmp_path):
+def test_snapshot_diff_hand_computed(spark, sf_dir, seed_table, tmp_path):
     """Keys chosen to hit every branch: 97*101*? -- use the real
     moduli: 0 is change+delete+add (delete wins on the kept side),
     97 changes, 101 deletes, 103 adds at +3_000_000, 1 unchanged."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.quality import (
         snapshot_diff_orders,
     )
@@ -129,11 +123,7 @@ def test_snapshot_diff_hand_computed(spark, sf_dir, monkeypatch, tmp_path):
     orders = spark.createDataFrame(
         rows, "o_orderkey bigint, o_orderstatus string, o_totalprice double"
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "orders"),
-        orders,
-    )
+    seed_table(str(tmp_path), "orders", orders)
     out = {
         (r["o_orderkey"], r["change_kind"]): r
         for r in snapshot_diff_orders(spark, str(tmp_path)).collect()
@@ -173,12 +163,11 @@ def _scd2_reference(rows):
     return out
 
 
-def test_scd2_random_change_logs_match_reference(spark, monkeypatch, tmp_path):
+def test_scd2_random_change_logs_match_reference(spark, seed_table, tmp_path):
     """Random change logs vs the pure-Python reference: versions,
     intervals, counts, and currency flags all agree."""
     import random
 
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.relational_ext import (
         scd2_priority_history,
     )
@@ -203,11 +192,7 @@ def test_scd2_random_change_logs_match_reference(spark, monkeypatch, tmp_path):
         "o_custkey bigint, o_orderdate date, o_orderkey bigint,"
         " o_orderpriority string",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "orders"),
-        orders,
-    )
+    seed_table(str(tmp_path), "orders", orders)
     # reference must see the same (date, key) sort order
     ref = _scd2_reference([(c, (d, k), k, a) for c, d, k, a in rows])
     got = {
@@ -231,12 +216,11 @@ def test_scd2_random_change_logs_match_reference(spark, monkeypatch, tmp_path):
             assert g_to == to[0]
 
 
-def test_repetition_ratios_match_counter_reference(spark, monkeypatch, tmp_path):
+def test_repetition_ratios_match_counter_reference(spark, seed_table, tmp_path):
     """Random small docs vs collections.Counter ground truth."""
     import random
     from collections import Counter
 
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.text import (
         text_repetition_ratios_q,
     )
@@ -250,11 +234,7 @@ def test_repetition_ratios_match_counter_reference(spark, monkeypatch, tmp_path)
     docs = spark.createDataFrame(
         rows, "doc_id bigint, text string, lang string, source string, n_chars bigint"
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "documents"),
-        docs,
-    )
+    seed_table(str(tmp_path), "documents", docs)
     got = {
         r["doc_id"]: r
         for r in text_repetition_ratios_q(spark, str(tmp_path)).collect()
@@ -277,11 +257,10 @@ def test_repetition_ratios_match_counter_reference(spark, monkeypatch, tmp_path)
             assert r["top_bigram_frac"] == 0.0
 
 
-def test_triangle_count_k4_has_four_triangles(spark, monkeypatch, tmp_path):
+def test_triangle_count_k4_has_four_triangles(spark, seed_table, tmp_path):
     """K4 as a co-purchase graph: parts 1-4 all pairwise co-bought
     (each pair shares >= 2 orders to clear the support threshold) ->
     C(4,3) = 4 triangles, 6 edges."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.graph import (
         graph_triangle_count,
     )
@@ -294,11 +273,7 @@ def test_triangle_count_k4_has_four_triangles(spark, monkeypatch, tmp_path):
                 order += 1
                 rows += [(order, a), (order, b)]
     li = spark.createDataFrame(rows, "l_orderkey bigint, l_partkey bigint")
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "lineitem"),
-        li,
-    )
+    seed_table(str(tmp_path), "lineitem", li)
     r = graph_triangle_count(spark, str(tmp_path)).collect()[0]
     assert (r["n_triangles"], r["n_edges"]) == (4, 6)
 
@@ -333,10 +308,9 @@ def _make_jpeg_rgb_for_scan_test():
     return bytes(buf), expected
 
 
-def test_gapfill_hand_computed(spark, monkeypatch, tmp_path):
+def test_gapfill_hand_computed(spark, seed_table, tmp_path):
     """User with events on day 1 and day 4 gets a 4-day spine with
     days 2-3 forward-filled from day 1 and flagged as gaps."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.events_ext import events_gapfill
 
     rows = [
@@ -350,11 +324,7 @@ def test_gapfill_hand_computed(spark, monkeypatch, tmp_path):
         "event_id bigint, ts timestamp, user_id bigint,"
         " event_type string, value double, props string",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "events"),
-        events,
-    )
+    seed_table(str(tmp_path), "events", events)
     out = {
         (r["user_id"], r["day"]): r
         for r in events_gapfill(spark, str(tmp_path)).collect()
@@ -371,10 +341,9 @@ def test_gapfill_hand_computed(spark, monkeypatch, tmp_path):
     assert out[(2, d(2024, 2, 1))]["filled_value"] == 1.0
 
 
-def test_attribution_hand_computed(spark, monkeypatch, tmp_path):
+def test_attribution_hand_computed(spark, seed_table, tmp_path):
     """Purchases credit the latest strictly-preceding click; a
     purchase before any click gets NULL."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.events_ext import (
         events_attribution_lasttouch,
     )
@@ -394,11 +363,7 @@ def test_attribution_hand_computed(spark, monkeypatch, tmp_path):
         "event_id bigint, ts timestamp, user_id bigint,"
         " event_type string, value double, props string",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "events"),
-        events,
-    )
+    seed_table(str(tmp_path), "events", events)
     out = {
         r["purchase_id"]: r
         for r in events_attribution_lasttouch(spark, str(tmp_path)).collect()
@@ -410,10 +375,9 @@ def test_attribution_hand_computed(spark, monkeypatch, tmp_path):
     assert out[7]["click_id"] is None
 
 
-def test_chunk_overlap_covers_and_strides(spark, monkeypatch, tmp_path):
+def test_chunk_overlap_covers_and_strides(spark, seed_table, tmp_path):
     """80 tokens -> 4 chunks at stride 24 (sizes 32/32/32/8); chunks
     reconstruct the document exactly."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.text_ext import (
         text_chunk_overlap,
         _CHUNK,
@@ -425,11 +389,7 @@ def test_chunk_overlap_covers_and_strides(spark, monkeypatch, tmp_path):
         [(1, " ".join(words), "en", "src0", 0)],
         "doc_id bigint, text string, lang string, source string, n_chars bigint",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "documents"),
-        docs,
-    )
+    seed_table(str(tmp_path), "documents", docs)
     rows = sorted(
         text_chunk_overlap(spark, str(tmp_path)).collect(),
         key=lambda r: r["chunk_id"],
@@ -443,35 +403,29 @@ def test_chunk_overlap_covers_and_strides(spark, monkeypatch, tmp_path):
         assert r["chunk_md5"] == hashlib.md5(expect.encode()).hexdigest()
 
 
-def test_pii_redaction_masks_all_types(spark, monkeypatch, tmp_path):
+def test_pii_redaction_masks_all_types(spark, seed_table, tmp_path):
     """The derived dirty text carries exactly one email/phone/IP and
     the redacted hash equals the hand-built expectation."""
     import hashlib
 
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.text_ext import text_pii_redaction
 
     docs = spark.createDataFrame(
         [(42, "hello world", "en", "src0", 0)],
         "doc_id bigint, text string, lang string, source string, n_chars bigint",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "documents"),
-        docs,
-    )
+    seed_table(str(tmp_path), "documents", docs)
     r = text_pii_redaction(spark, str(tmp_path)).collect()[0]
     assert (r["n_emails"], r["n_phones"], r["n_ips"]) == (1, 1, 1)
     expect = "hello world contact <EMAIL> or <PHONE> from <IP>"
     assert r["redacted_md5"] == hashlib.md5(expect.encode()).hexdigest()
 
 
-def test_fuzzy_match_prefers_exact_then_lowest_key(spark, monkeypatch, tmp_path):
+def test_fuzzy_match_prefers_exact_then_lowest_key(spark, seed_table, tmp_path):
     """custkey 0's dirty name (X at position 13) is lev-1 from both
     customer 0 and customer 100000 ('000100000' differs only there);
     the (lev, custkey) tie-break must pick 0 and report 2 candidates
     surviving the masked-band blocking."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.entity import (
         fuzzy_match_customers,
         _DIRTY_OFFSET,
@@ -485,11 +439,7 @@ def test_fuzzy_match_prefers_exact_then_lowest_key(spark, monkeypatch, tmp_path)
         "c_custkey bigint, c_name string, c_nationkey int,"
         " c_acctbal double, c_mktsegment string",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "customer"),
-        customer,
-    )
+    seed_table(str(tmp_path), "customer", customer)
     out = {
         r["dirty_id"]: r for r in fuzzy_match_customers(spark, str(tmp_path)).collect()
     }
@@ -535,10 +485,9 @@ def test_kmeans_assign_update_exact():
     assert cent2[(1, 1)] == 12 and cent2[(1, 2)] == 12
 
 
-def test_pit_features_exclude_same_day_and_stale(spark, monkeypatch, tmp_path):
+def test_pit_features_exclude_same_day_and_stale(spark, seed_table, tmp_path):
     """Trailing-90d features see a 30-day-old order, exclude a
     100-day-old one, and exclude same-day siblings (leakage rule)."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.features import pit_trailing_features
 
     d = dt.date
@@ -553,11 +502,7 @@ def test_pit_features_exclude_same_day_and_stale(spark, monkeypatch, tmp_path):
         rows, "o_orderkey bigint, o_custkey bigint, o_orderdate date,"
         " o_totalprice double",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "orders"),
-        orders,
-    )
+    seed_table(str(tmp_path), "orders", orders)
     out = {
         r["o_orderkey"]: r
         for r in pit_trailing_features(spark, str(tmp_path)).collect()
@@ -569,10 +514,9 @@ def test_pit_features_exclude_same_day_and_stale(spark, monkeypatch, tmp_path):
     assert out[4]["feat_orders_90d"] == 0 and out[5]["feat_orders_90d"] == 0
 
 
-def test_anomaly_zscore_flags_spike_only(spark, monkeypatch, tmp_path):
+def test_anomaly_zscore_flags_spike_only(spark, seed_table, tmp_path):
     """Six flat days + one spike: only the spike day is anomalous; a
     constant-valued user gets NULL z (zero variance)."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.events_ext import (
         events_anomaly_zscore,
     )
@@ -591,11 +535,7 @@ def test_anomaly_zscore_flags_spike_only(spark, monkeypatch, tmp_path):
         rows, "event_id bigint, ts timestamp, user_id bigint,"
         " event_type string, value double, props string",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "events"),
-        events,
-    )
+    seed_table(str(tmp_path), "events", events)
     out = {
         (r["user_id"], r["day"]): r
         for r in events_anomaly_zscore(spark, str(tmp_path)).collect()
@@ -616,9 +556,8 @@ def test_anomaly_zscore_flags_spike_only(spark, monkeypatch, tmp_path):
         assert r["z"] is None and not r["is_anomaly"]
 
 
-def test_incremental_ingest_counts_only_post_watermark(spark, monkeypatch, tmp_path):
+def test_incremental_ingest_counts_only_post_watermark(spark, seed_table, tmp_path):
     """Watermark = trunc(max ts) - 7d: only newer rows aggregate."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.events_ext import (
         incremental_watermark_ingest,
     )
@@ -633,11 +572,7 @@ def test_incremental_ingest_counts_only_post_watermark(spark, monkeypatch, tmp_p
         rows, "event_id bigint, ts timestamp, user_id bigint,"
         " event_type string, value double, props string",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "events"),
-        events,
-    )
+    seed_table(str(tmp_path), "events", events)
     out = {
         r["event_type"]: r
         for r in incremental_watermark_ingest(spark, str(tmp_path)).collect()
@@ -649,10 +584,9 @@ def test_incremental_ingest_counts_only_post_watermark(spark, monkeypatch, tmp_p
     assert out["click"]["new_watermark"] == dt.datetime(2024, 1, 30, 9)
 
 
-def test_markov_hand_computed(spark, monkeypatch, tmp_path):
+def test_markov_hand_computed(spark, seed_table, tmp_path):
     """Sequence a,b,a,b for one user: _START->a 1.0, a->b 1.0,
     b->a p=0.5 (one of two b-transitions leads to a)."""
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.events_ext import (
         events_markov_transitions,
     )
@@ -669,11 +603,7 @@ def test_markov_hand_computed(spark, monkeypatch, tmp_path):
         rows, "event_id bigint, ts timestamp, user_id bigint,"
         " event_type string, value double, props string",
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "events"),
-        events,
-    )
+    seed_table(str(tmp_path), "events", events)
     out = {
         (r["prev_type"], r["next_type"]): r
         for r in events_markov_transitions(spark, str(tmp_path)).collect()
@@ -1157,7 +1087,7 @@ def test_bpe_apply_merge_matches_python_replay(spark, sf_dir):
     assert [(r.pair, r.n_occurrences) for r in got.itertuples()] == top
 
 
-def test_kmv_theta_sketch_exact_mode_and_accuracy(spark, sf_dir, monkeypatch, tmp_path):
+def test_kmv_theta_sketch_exact_mode_and_accuracy(spark, sf_dir, seed_table, tmp_path):
     """(a) Exact mode: with both segments smaller than k, every
     estimate must equal the true count (theta = full domain).
     (b) At the test SF the estimates must sit within sketch error of
@@ -1166,7 +1096,6 @@ def test_kmv_theta_sketch_exact_mode_and_accuracy(spark, sf_dir, monkeypatch, tm
 
     import pandas as pd
 
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.relational_ext import (
         _KMV_H,
         agg_kmv_theta_sketch,
@@ -1178,11 +1107,7 @@ def test_kmv_theta_sketch_exact_mode_and_accuracy(spark, sf_dir, monkeypatch, tm
         (k, dt2.date(1997, 6, 1)) for k in (2, 3, 4, 5)
     ]
     orders = spark.createDataFrame(rows, "o_custkey bigint, o_orderdate date")
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "orders"),
-        orders,
-    )
+    seed_table(str(tmp_path), "orders", orders)
     got = agg_kmv_theta_sketch(spark, str(tmp_path)).collect()[0]
     assert got["theta_a"] == _KMV_H and got["theta_b"] == _KMV_H
     assert got["est_1996"] == 3.0 and got["est_1997"] == 4.0
@@ -1471,7 +1396,7 @@ def test_benford_matches_python_replay(spark, sf_dir):
         assert abs(r.chi2_contribution - (obs - n * p) ** 2 / (n * p)) < 1e-4
 
 
-def test_cusum_changepoint_detects_injected_step(spark, sf_dir, monkeypatch, tmp_path):
+def test_cusum_changepoint_detects_injected_step(spark, sf_dir, seed_table, tmp_path):
     """Hand-crafted series: 10 days at 100 cents then 10 days at
     10000 cents -- CUSUM must locate the boundary (day 10), and the
     real corpus run must match a numpy argmax replay."""
@@ -1480,7 +1405,6 @@ def test_cusum_changepoint_detects_injected_step(spark, sf_dir, monkeypatch, tmp
     import numpy as np
     import pandas as pd
 
-    import incubyte_vaccination_data_pipeline_spark.sources.parquet_io as pio
     from incubyte_vaccination_data_pipeline_spark.catalog.events_ext import (
         events_changepoint_cusum,
     )
@@ -1496,11 +1420,7 @@ def test_cusum_changepoint_detects_injected_step(spark, sf_dir, monkeypatch, tmp
         rows, "event_id bigint, user_id bigint, ts timestamp,"
         " event_type string, value double"
     )
-    monkeypatch.setitem(
-        pio._READ_CACHE,
-        (spark.sparkContext.applicationId, str(tmp_path), "events"),
-        ev,
-    )
+    seed_table(str(tmp_path), "events", ev)
     out = events_changepoint_cusum(spark, str(tmp_path)).collect()
     assert len(out) == 1 and out[0]["t_index"] == 10
     assert pd.Timestamp(out[0]["changepoint_day"]) == pd.Timestamp("2024-01-10")

@@ -1,37 +1,38 @@
-"""Cross-corpus shared-state release (the bench multi-sf memory story):
-``release_shared_state`` must unpersist and drop every cached frame
-keyed to a swept corpus, so a session iterating scale factors shows no
-storage-memory growth across transitions."""
+"""The shared-state store (``shared_cache``): one entry per (app,
+corpus, name), a whole corpus evicted LRU, and one release that frees
+everything an entry pins — persisted and checkpointed frames, the
+bases a frame carries, checkpoint files and temp dirs — so a session
+iterating scale factors shows no storage growth across transitions."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pytest
 
 from incubyte_vaccination_data_pipeline_spark import shared_cache as sc
 
 
-def _entries(cache):
-    return cache._entries if isinstance(cache, sc.BoundedCache) else cache
-
-
 def test_release_shared_state_unpersists_swept_corpus(spark, sf_dir):
     from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES
+    from incubyte_vaccination_data_pipeline_spark.catalog.similarity import (
+        _exact_topk,
+    )
 
     # builds the persisted exact-ANN twin keyed (app, sf_dir)
     QUERIES["ann_bruteforce_topk"](spark, sf_dir).count()
-    held = [
-        v
-        for c in sc._ALL_CACHES
-        for k, v in _entries(c).items()
-        if sc._key_matches(k, sf_dir) and hasattr(v, "storageLevel")
-    ]
-    assert held, "expected at least one persisted frame for the corpus"
-    assert any(v.storageLevel.useMemory for v in held)
+    held = _exact_topk(spark, sf_dir)
+    assert held.storageLevel.useMemory
 
     n = sc.release_shared_state(sf_dir)
-    assert n >= len(held)
-    for v in held:
-        assert not v.storageLevel.useMemory, "frame still persisted"
-    for c in sc._ALL_CACHES:
-        assert not any(sc._key_matches(k, sf_dir) for k in _entries(c))
+    assert n >= 2  # the twin and the embeddings read handle
+    assert not held.storageLevel.useMemory, "frame still persisted"
+    # the corpus is gone from the store: the next call builds afresh
+    fresh = _exact_topk(spark, sf_dir)
+    assert fresh is not held
+    sc.release_shared_state(sf_dir)
 
 
 def test_release_shared_state_all_clears_everything(spark, sf_dir):
@@ -39,10 +40,10 @@ def test_release_shared_state_all_clears_everything(spark, sf_dir):
         read_table,
     )
 
-    read_table(spark, sf_dir, "orders")  # populates the read cache
-    assert any(len(_entries(c)) for c in sc._ALL_CACHES)
+    read_table(spark, sf_dir, "orders")  # populates the store
+    assert len(sc._STORE) > 0
     sc.release_shared_state()
-    assert all(len(_entries(c)) == 0 for c in sc._ALL_CACHES)
+    assert len(sc._STORE) == 0
 
 
 def test_release_ignores_other_corpora(spark, sf_dir, tmp_path):
@@ -50,10 +51,117 @@ def test_release_ignores_other_corpora(spark, sf_dir, tmp_path):
         read_table,
     )
 
-    read_table(spark, sf_dir, "orders")
-    before = sum(len(_entries(c)) for c in sc._ALL_CACHES)
+    orders = read_table(spark, sf_dir, "orders")
+    before = len(sc._STORE)
     assert sc.release_shared_state(str(tmp_path)) == 0
-    assert sum(len(_entries(c)) for c in sc._ALL_CACHES) == before
+    assert len(sc._STORE) == before
+    assert read_table(spark, sf_dir, "orders") is orders
+
+
+def test_bounded_cache_evicts_and_unpersists(spark):
+    """The store holds MAX_CORPORA corpora; one more releases the least
+    recently used corpus WHOLE (every entry of it), and a hit on a
+    corpus makes it most recently used."""
+
+    class Handle:
+        released = False
+
+        def cleanup(self):
+            self.released = True
+
+    sc.release_shared_state()
+    handles = {}
+    for i in range(sc.MAX_CORPORA):
+        for name in ("a", "b"):
+            h = handles[i, name] = Handle()
+            assert sc.shared(spark, f"corpus-{i}", name, lambda h=h: h) is h
+    # a hit builds nothing and makes corpus 1 the least recently used
+    assert sc.shared(spark, "corpus-0", "a", Handle) is handles[0, "a"]
+    sc.shared(spark, "corpus-new", "a", Handle)
+    assert handles[1, "a"].released and handles[1, "b"].released
+    assert not any(h.released for (i, _), h in handles.items() if i != 1)
+    assert len(sc._STORE) == 2 * sc.MAX_CORPORA - 1
+    sc.release_shared_state()
+    assert all(h.released for h in handles.values())
+
+
+_LEAK_SCRIPT = """
+import os, sys
+from pyspark.sql import SparkSession
+
+sys.path.insert(0, {repo!r})
+from incubyte_vaccination_data_pipeline_spark import catalog
+from incubyte_vaccination_data_pipeline_spark.catalog import (
+    events, events_ext, graph, similarity, text_ext)
+from incubyte_vaccination_data_pipeline_spark.shared_cache import release_shared_state
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.sql.session.timeZone", "UTC")
+         .config("spark.ui.enabled", "false").getOrCreate())
+sf_dir, ckdir = {sf_dir!r}, {ckdir!r}
+if ckdir:
+    spark.sparkContext.setCheckpointDir(ckdir)
+
+def persistent():
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+def ck_files():
+    return [f for _, _, fs in os.walk(ckdir) for f in fs] if ckdir else []
+
+before = persistent()
+# one entry of each kind: a persisted frame (the exact ANN twin), a lazy
+# checkpoint (daily cents), a localCheckpoint (copurchase pairs), a
+# tuple (substring frames), a frame with bases (the dead-letter split),
+# a list (IVF cell counts) and a temp dir (the stream flush sentinels)
+catalog.QUERIES["ann_bruteforce_topk"](spark, sf_dir).count()
+events_ext.shared_daily_cents(spark, sf_dir).count()
+graph._copurchase_pairs(spark, sf_dir).count()
+for frame in text_ext._substr_frames(spark, sf_dir)[:2]:
+    frame.count()
+catalog.QUERIES["vax_deadletter"](spark, sf_dir).count()
+assert similarity._ivf_cell_counts(spark, sf_dir)
+flush = events._ss_flush_dir(spark, sf_dir)
+held = persistent() - before
+assert held and os.path.exists(flush)
+assert bool(ck_files()) == bool(ckdir)
+
+release_shared_state()
+assert not held & persistent(), sorted(held & persistent())
+assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+assert not ck_files(), ck_files()
+assert not os.path.exists(flush)
+print("RELEASE-OK", len(held))
+"""
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_release_frees_every_entry_kind(sf_dir, tmp_path, mode):
+    """After ``release_shared_state()`` no RDD an entry pinned is still
+    persistent, no cached plan is left, no checkpoint file of an entry
+    and no flush dir remains — on the local-checkpoint path and on the
+    reliable path (a fresh session with a checkpoint dir, so the shared
+    fixture session stays on the local path)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ckdir = str(tmp_path / "ck") if mode == "reliable" else None
+    script = _LEAK_SCRIPT.format(repo=repo, sf_dir=sf_dir, ckdir=ckdir)
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=600
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "RELEASE-OK" in proc.stdout
+
+
+def test_release_removes_stream_flush_dir(spark, sf_dir):
+    """The stream-stream join's flush-sentinel dir is shared state: the
+    corpus release removes it from disk."""
+    from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES, events
+
+    QUERIES["stream_stream_left_outer_counts"](spark, sf_dir).count()
+    flush = events._ss_flush_dir(spark, sf_dir)
+    assert os.path.exists(flush)
+    sc.release_shared_state(sf_dir)
+    assert not os.path.exists(os.path.dirname(flush))
 
 
 def test_ann_warm_path_probes_cached_index(spark, sf_dir):
@@ -180,20 +288,21 @@ def test_shared_cluster_labels_match_fresh_computation(spark, sf_dir):
 
 
 def test_hier_caches_swept_with_shared_state(spark, sf_dir):
-    """The two-level quantizer's coarse/fine caches (catalog/similarity)
-    are registered dict caches: the explicit between-corpora sweep the
-    bench scripts rely on must drop their entries too, not just the
-    BoundedCache-backed index frames."""
+    """The two-level quantizer's coarse, fine and cell entries
+    (catalog/similarity) are shared per corpus: the explicit
+    between-corpora sweep the bench scripts rely on must drop them
+    too, so the next call rebuilds each."""
     from incubyte_vaccination_data_pipeline_spark.catalog import similarity
 
-    similarity._hier_cells(spark, sf_dir)  # populates coarse, fine AND cells
-    assert any(sc._key_matches(k, sf_dir) for k in similarity._HIER_COARSE_CACHE)
-    assert any(sc._key_matches(k, sf_dir) for k in similarity._HIER_FINE_CACHE)
-    assert any(sc._key_matches(k, sf_dir) for k in similarity._HIER_CELLS_CACHE)
+    cells = similarity._hier_cells(spark, sf_dir)  # builds coarse, fine AND cells
+    coarse = similarity._hier_coarse(spark, sf_dir)
+    fine = similarity._hier_fine(spark, sf_dir)
+    assert similarity._hier_cells(spark, sf_dir) is cells
     sc.release_shared_state(sf_dir)
-    assert not any(sc._key_matches(k, sf_dir) for k in similarity._HIER_COARSE_CACHE)
-    assert not any(sc._key_matches(k, sf_dir) for k in similarity._HIER_FINE_CACHE)
-    assert not any(sc._key_matches(k, sf_dir) for k in similarity._HIER_CELLS_CACHE)
+    assert similarity._hier_coarse(spark, sf_dir) is not coarse
+    assert similarity._hier_fine(spark, sf_dir) is not fine
+    assert similarity._hier_cells(spark, sf_dir) is not cells
+    sc.release_shared_state(sf_dir)
 
 
 def test_hier_cells_rank1_agrees_with_inv(spark, sf_dir):
@@ -291,10 +400,9 @@ def test_substring_shared_frames_match_unshared_operators(spark, sf_dir):
     }
     assert shared_cov == plain_cov and shared_cov
 
-    # the cache is registered: sweeping the corpus drops the entry
-    key_hits = [
-        k for k in text_ext._SUBSTR_FRAMES_CACHE if sf_dir in k
-    ]
-    assert key_hits
+    # the frames are shared state: sweeping the corpus drops the entry
+    frames = text_ext._substr_frames(spark, sf_dir)
+    assert text_ext._substr_frames(spark, sf_dir) is frames
     sc.release_shared_state(sf_dir)
-    assert not [k for k in text_ext._SUBSTR_FRAMES_CACHE if sf_dir in k]
+    assert text_ext._substr_frames(spark, sf_dir) is not frames
+    sc.release_shared_state(sf_dir)

@@ -1045,6 +1045,6 @@ def test_derive_state_partitions_local_and_cluster_branches(spark, sf_dir):
     expected = derive_state_partitions(
         spark.sparkContext.master,
         spark.sparkContext.defaultParallelism,
-        events_source_bytes(sf_dir),
+        events_source_bytes(spark, sf_dir),
     )
     assert n == expected

@@ -57,8 +57,8 @@ def test_stress_scratch_builds_and_widths_scale(spark, sf_dir):
         # encoding compresses the rewritten copies better than the
         # generator's original — ~1.6x bytes for 2x rows — so bound at
         # factor * 0.7)
-        assert events_source_bytes(scratch) >= factor * 0.7 * events_source_bytes(
-            mod.BASE_SF
+        assert events_source_bytes(spark, scratch) >= factor * 0.7 * events_source_bytes(
+            spark, mod.BASE_SF
         )
         w_base = stream_state_partitions(spark, mod.BASE_SF)
         w_big = stream_state_partitions(spark, scratch)
