@@ -23,14 +23,12 @@ consultation date := order date, country := nation name).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import AS_OF, query
-from incubyte_vaccination_data_pipeline_spark.functions.dates import (
-    dead_letter_frame,
-    with_parsed_date,
-)
+from incubyte_vaccination_data_pipeline_spark.functions.dates import with_parsed_date
 from incubyte_vaccination_data_pipeline_spark.functions.derive import age_years, staleness_flag
 from incubyte_vaccination_data_pipeline_spark.operators.views import dedup_latest
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
@@ -381,7 +379,6 @@ def _dirty_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the parse cascade downstream is ~100x the per-byte cost of the
     # scan; spread the compact (id, raw) rows over every core first
-    # (the dead-letter UNION branches then reuse this one exchange)
     return fanout_repartition(
         orders.select(F.col("o_orderkey").alias("id"), raw.alias("raw")), "id"
     )
@@ -418,21 +415,21 @@ def vax_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter split: rows whose mandatory date failed, annotated
     with the reference's reason text + field name (§1.4).
 
-    The frame (and its lazily persisted parse prefix) is shared per
-    (session, sf_dir): each ``dead_letter_frame`` call persists a new
-    shared-prefix cache, so repeated driver/bench invocations would
-    otherwise stack MEMORY_AND_DISK copies until block eviction —
-    reuse is both the leak fix and the warm-path win. ``withColumn``
-    drops the prefix handle, so it is carried onto the shared frame
-    for the release to find."""
-
-    def build() -> DataFrame:
-        dead = dead_letter_frame(_dirty_dates(spark, sf_dir), "raw")
-        frame = dead.withColumn("invalid_field", F.lit("open_date"))
-        frame._ivdp_persisted_bases = dead._ivdp_persisted_bases
-        return frame
-
-    return shared(spark, sf_dir, "deadletter", build)
+    Each call filters one parse of the dirty dates, persisted lazily
+    (``MEMORY_AND_DISK``) and shared per (session, sf_dir): repeated
+    invocations reuse one copy, and reading the persisted parse keeps
+    the error renderer out of the scan predicate."""
+    parsed = shared(
+        spark,
+        sf_dir,
+        "dirty_dates_parsed",
+        lambda: with_parsed_date(
+            _dirty_dates(spark, sf_dir), "raw", "parsed", "validation_error"
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+    )
+    return parsed.filter(F.col("validation_error").isNotNull()).select(
+        "id", "raw", "validation_error", F.lit("open_date").alias("invalid_field")
+    )
 
 
 @query(

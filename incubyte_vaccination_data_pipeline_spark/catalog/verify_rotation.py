@@ -271,12 +271,15 @@ FP_MARK_STALE = "stale-marked"
 def normalize_plan(plan: str) -> str:
     """Strip the session-unique noise out of an analyzed-plan string so
     the same logical computation fingerprints identically across
-    processes: expression ids (``#123``), lambda-variable counters
-    (``lambda x_6``), absolute paths (testdata dirs, streaming temp
-    sinks), and long hex/UUID tokens.  The path regex requires the
-    ``/`` to start a token so mime literals like ``text/plain``
-    survive as plan content."""
+    processes and boxes: expression ids (``#123``), lambda-variable
+    counters (``lambda x_6``), absolute paths (testdata dirs, streaming
+    temp sinks), long hex/UUID tokens, and the partition count of a
+    ``RepartitionByExpression`` (``operators/partitioning.fanout_repartition``
+    derives it from the core count; the keys stay).  The path regex
+    requires the ``/`` to start a token so mime literals like
+    ``text/plain`` survive as plan content."""
     s = re.sub(r"#\d+", "#", plan)
+    s = re.sub(r"(?m)(RepartitionByExpression \[.*\]), \d+$", r"\1, <n>", s)
     s = re.sub(r"(?i)\blambda ([a-z]+)_\d+", r"lambda \1", s)
     s = re.sub(r"(?<![\w.])(file:)?/[^\s,)\]]+", "<path>", s)
     s = re.sub(

@@ -1,8 +1,3 @@
-from incubyte_vaccination_data_pipeline_spark.functions.dates import (  # noqa: F401
-    parse_date,
-    parse_date_error,
-    parse_date_struct,
-)
 from incubyte_vaccination_data_pipeline_spark.functions.derive import (  # noqa: F401
     age_years,
     staleness_flag,

@@ -14,9 +14,9 @@ Parity targets (reference ``src/validators/data_validator.py``):
 
 Spark-first re-expression: instead of the reference's mask-and-concat,
 validation is one lazy expression tree producing parsed DATE columns
-plus an error column per mandatory date field; the quarantine and the
-clean path are two filters over the same plan (Catalyst computes the
-predicate once per row; no Python in the loop).
+plus an error column per date field; the quarantine and the clean path
+are two projections of that one persisted parse (each row is read and
+parsed once; no Python in the loop).
 
 Documented divergence: the reference's ``astype(str)`` turns missing
 names into the literal string ``"nan"``, which then *passes* the
@@ -26,14 +26,13 @@ non-empty filter; this engine keeps SQL NULLs and filters them out.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from incubyte_vaccination_data_pipeline_spark.functions.dates import (
-    dead_letter_frame,
-    with_parsed_date,
-)
+from incubyte_vaccination_data_pipeline_spark.functions.dates import with_parsed_date
 from incubyte_vaccination_data_pipeline_spark.schema import (
     MANDATORY_COLUMNS,
     MANDATORY_DATE_COLUMNS,
@@ -51,9 +50,11 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     ``clean`` has mandatory/optional date columns as ``DateType`` (NULL
     where unparseable). ``dead_letter`` holds the original rows that
     failed a *mandatory* date parse, with ``Validation_Error`` (reason
-    text) and ``Invalid_Field`` (column name) appended. It carries the
-    parse-prefix caches of its branches (see
-    ``functions/dates.dead_letter_frame``); release them with
+    text) and ``Invalid_Field`` (column name) appended, one record per
+    (row, failing field). Both are projections of one parse of every
+    date column, persisted (lazily, ``MEMORY_AND_DISK``) so the source
+    is read and parsed once for the two outputs. The dead letter
+    carries that frame in ``_ivdp_persisted_bases``; free it with
     ``shared_cache.release(dead_letter)`` once both outputs are
     written.
     """
@@ -63,47 +64,35 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
             typed = typed.withColumn(c, F.col(c).cast("string"))
 
     # one parse per date column, as chained projections (codegen-sized
-    # steps — see functions/dates.py with_parsed_date)
+    # steps — see functions/dates.py with_parsed_date). Both outputs
+    # read the persisted frame; reading it is also what keeps the error
+    # renderer out of the scan predicate under the dead-letter filter
     date_cols = [c for c in MANDATORY_DATE_COLUMNS + OPTIONAL_DATE_COLUMNS if c in typed.columns]
-    parse_input = typed  # pre-parse frame: dead letters re-derive from it
     for c in date_cols:
         typed = with_parsed_date(typed, c, f"__date_{c}", f"__err_{c}")
+    parsed = typed.persist(StorageLevel.MEMORY_AND_DISK)
 
-    mandatory_present = [c for c in MANDATORY_DATE_COLUMNS if c in df.columns]
-
-    # dead-letter: one record per (row, failing mandatory field), original
-    # (pre-parse) column values preserved, like the reference's copy of the
-    # still-string frame. stack() keeps this a single pass.
-    dead_letters = []
-    persisted_bases = []
-    for c in mandatory_present:
-        # three-way failure-class union — each branch's plan holds only
-        # its own slice of the parser, so every stage codegen-compiles
-        # (see functions/dates.dead_letter_frame)
-        dl = dead_letter_frame(
-            parse_input.select(*df.columns), c, err_name="Validation_Error"
+    # dead letter: original (pre-parse) column values preserved, like
+    # the reference's copy of the still-string frame
+    dead_letters = [
+        parsed.filter(F.col(f"__err_{c}").isNotNull()).select(
+            *df.columns,
+            F.col(f"__err_{c}").alias("Validation_Error"),
+            F.lit(c).alias("Invalid_Field"),
         )
-        persisted_bases += dl._ivdp_persisted_bases
-        dead_letters.append(dl.withColumn("Invalid_Field", F.lit(c)))
-    if dead_letters:
-        dead_letter = dead_letters[0]
-        for dl in dead_letters[1:]:
-            dead_letter = dead_letter.unionByName(dl)
-    else:
-        dead_letter = (
-            typed.filter(F.lit(False)).select(
-                *df.columns,
-                F.lit(None).cast("string").alias("Validation_Error"),
-                F.lit(None).cast("string").alias("Invalid_Field"),
-            )
+        for c in MANDATORY_DATE_COLUMNS
+        if c in df.columns
+    ] or [
+        parsed.filter(F.lit(False)).select(
+            *df.columns,
+            F.lit(None).cast("string").alias("Validation_Error"),
+            F.lit(None).cast("string").alias("Invalid_Field"),
         )
+    ]
+    dead_letter = functools.reduce(DataFrame.unionByName, dead_letters)
+    dead_letter._ivdp_persisted_bases = [parsed]
 
-    dead_letter._ivdp_persisted_bases = persisted_bases
-
-    clean = typed
-    for c in date_cols:
-        clean = clean.withColumn(c, F.col(f"__date_{c}"))
-    clean = clean.drop(
+    clean = parsed.withColumns({c: F.col(f"__date_{c}") for c in date_cols}).drop(
         *[f"__date_{c}" for c in date_cols], *[f"__err_{c}" for c in date_cols]
     )
     return clean, dead_letter

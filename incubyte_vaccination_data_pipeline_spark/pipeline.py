@@ -48,8 +48,8 @@ def run_pipeline(
     valid = get_valid_records(clean)
     warehouse = to_warehouse(valid, load_date=load_date)
     write_warehouse(warehouse, warehouse_path, mode="overwrite")
-    # the views read the stored parquet, so the dead-letter parse
-    # prefix cache is no longer needed by anything
+    # the views read the stored parquet, so the persisted date parse
+    # behind both sinks is no longer needed by anything
     release(dead)
     stored = spark.read.parquet(warehouse_path)
     views = register_country_views(spark, stored, as_of=as_of)

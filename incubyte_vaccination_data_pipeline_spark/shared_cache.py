@@ -17,7 +17,8 @@ other's checkpoints, and they always go together.
 
 :func:`release` is the only function that frees shared state. It is
 used on eviction, by :func:`release_shared_state`, and by
-``pipeline.run_pipeline`` for its dead-letter parse prefix.
+``pipeline.run_pipeline`` for the persisted date parse that
+``validate_types`` hands out with the dead letter.
 
 Release contract: after a corpus is released, a frame handed out
 earlier for it is invalid, like a closed file — its persisted blocks,

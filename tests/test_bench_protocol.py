@@ -102,6 +102,25 @@ def test_sanity_flags_jump_detection():
     assert bench.sanity_flags({"new_q": 9.0}, {}) == []
 
 
+def test_sanity_verdict_decides_from_rerun_and_keeps_both_medians():
+    """The rerun decides ``persistent`` but never replaces the sweep's
+    sample: a query whose rerun falls back under the jump is exonerated,
+    one whose rerun still jumps persists, and both medians of each are
+    recorded."""
+    prev = {"slow_window": 1.0, "regressed": 1.0, "steady": 1.0}
+    sweep = {"slow_window": 3.0, "regressed": 3.2, "steady": 1.1}
+    rerun = {"slow_window": 1.2, "regressed": 3.1}
+    out = bench.sanity_verdict(sweep, rerun, prev)
+    assert out["retimed"] == ["regressed", "slow_window"]
+    assert out["persistent"] == ["regressed"]
+    assert out["medians"] == {
+        "regressed": {"sweep": 3.2, "rerun": 3.1},
+        "slow_window": {"sweep": 3.0, "rerun": 1.2},
+    }
+    # nothing re-timed: nothing persists
+    assert bench.sanity_verdict(sweep, {}, prev)["persistent"] == []
+
+
 def test_sanity_bounds_are_sane():
     assert bench.SANITY_JUMP_FACTOR >= 2.0
     assert 0 < bench.SANITY_ABS_FLOOR_SEC <= 1.0

@@ -5,9 +5,9 @@ are generated from ``o_orderdate``, so the hostile half of the input
 space — malformed compacts, boundary years, float-forms, separator
 soup — only meets the DuckDB restatement through the fixture matrix.
 This suite renders seeded-random corpora of hostile date strings and
-compares the Spark parser (`with_parsed_date` / `dead_letter_frame`)
-against the SAME `_COMPACT_PARSE_SQL` restatement the driver oracle
-uses, value-for-value.
+compares the Spark parser (`with_parsed_date`, and the dead letter
+`validate_types` derives from it) against the SAME `_COMPACT_PARSE_SQL`
+restatement the catalog oracle uses, value-for-value.
 """
 
 from __future__ import annotations
@@ -20,10 +20,9 @@ import pandas as pd
 import pytest
 
 from incubyte_vaccination_data_pipeline_spark.catalog.vax import _COMPACT_PARSE_SQL
-from incubyte_vaccination_data_pipeline_spark.functions.dates import (
-    dead_letter_frame,
-    with_parsed_date,
-)
+from incubyte_vaccination_data_pipeline_spark.functions.dates import with_parsed_date
+from incubyte_vaccination_data_pipeline_spark.operators.validate import validate_types
+from incubyte_vaccination_data_pipeline_spark.shared_cache import release
 
 SEPS = ["/", "-"]
 RENDERS = [
@@ -127,11 +126,14 @@ def test_dead_letter_frame_matches_error_rows(spark, tmp_path):
     con.register("pdf", pdf)
     con.execute(f"COPY (SELECT * FROM pdf) TO '{path}' (FORMAT PARQUET)")
 
-    sdf = spark.read.parquet(path)
+    # the corpus strings as the mandatory date column of a source frame
+    sdf = spark.read.parquet(path).withColumnRenamed("raw", "Open_Date")
+    _, dead = validate_types(sdf)
     spark_dl = {
-        r["id"]: r["validation_error"]
-        for r in dead_letter_frame(sdf, "raw").select("id", "validation_error").collect()
+        r["id"]: r["Validation_Error"]
+        for r in dead.select("id", "Validation_Error").collect()
     }
+    release(dead)
     duck = con.execute(
         f"WITH dirty AS (SELECT id, raw FROM '{path}'), {_COMPACT_PARSE_SQL}"
         f" SELECT id, error FROM parsed WHERE error IS NOT NULL"

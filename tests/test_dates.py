@@ -6,9 +6,8 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
-from incubyte_vaccination_data_pipeline_spark.functions.dates import parse_date_struct
+from incubyte_vaccination_data_pipeline_spark.functions.dates import with_parsed_date
 
 # (input, expected_date | None, expected_error_prefix | None)
 CASES = [
@@ -61,9 +60,7 @@ CASES = [
 def parsed(spark):
     rows = [(i, c[0]) for i, c in enumerate(CASES)]
     df = spark.createDataFrame(rows, "id int, raw string")
-    out = df.withColumn("p", parse_date_struct(F.col("raw"))).select(
-        "id", F.col("p.date").alias("date"), F.col("p.error").alias("error")
-    )
+    out = with_parsed_date(df, "raw", "date", "error").select("id", "date", "error")
     return {r["id"]: (r["date"], r["error"]) for r in out.collect()}
 
 

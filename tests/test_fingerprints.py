@@ -40,6 +40,17 @@ def test_normalize_strips_paths_but_keeps_mime_literals():
     assert "text/plain" in s
 
 
+def test_normalize_masks_repartition_count_but_keeps_keys():
+    """fanout_repartition's partition count follows the core count: two
+    plans that differ only in it fingerprint alike, different keys do
+    not."""
+    a = "Project [id#1L]\n+- RepartitionByExpression [id#1L, raw#2], 8\n   +- Scan"
+    b = "Project [id#5L]\n+- RepartitionByExpression [id#5L, raw#6], 16\n   +- Scan"
+    c = "Project [id#1L]\n+- RepartitionByExpression [raw#2], 8\n   +- Scan"
+    assert vr.normalize_plan(a) == vr.normalize_plan(b)
+    assert vr.normalize_plan(a) != vr.normalize_plan(c)
+
+
 def test_normalize_keeps_real_plan_differences():
     a = vr.normalize_plan("Aggregate [sum(x#1) AS total#2]")
     b = vr.normalize_plan("Aggregate [avg(x#1) AS total#2]")

@@ -342,17 +342,57 @@ def test_embedding_cosine_fence_dot_fold_evaluated_once(spark, sf_dir):
 
 
 def test_deadletter_fence_error_render_not_in_scan(spark, sf_dir):
-    """dates.py gates the dead-letter error renderer behind the same
-    rand() fence so the format_string cascade never becomes a
-    scan-level predicate (it blew the janino 64KB codegen method limit
-    when inlined). The scan's pushed/data filters must not contain the
-    rendered error text machinery."""
+    """The dead letter filters a persisted parse (``vax_deadletter``
+    shares one, as ``validate_types`` does in the pipeline): the error
+    filter reads the cached relation, so predicate pushdown cannot
+    substitute the format_string renderer into a scan-level predicate
+    (it blew the janino 64KB codegen method limit when inlined). The
+    scan's pushed/data filters must not contain the rendered error
+    text machinery."""
     plan = _plan(QUERIES["vax_deadletter"](spark, sf_dir))
     for line in plan.splitlines():
         if "Scan " in line and "format_string" in line:
             raise AssertionError(
                 "error renderer reached the scan node (fence broken): " + line[:200]
             )
+
+
+def _walk(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _walk(kids.apply(i))
+
+
+def test_validate_types_parses_once(spark, tmp_path):
+    """The clean rows and the dead letter are two projections of ONE
+    persisted parse: both physical plans read only the same cached
+    relation, with no Union of per-failure-class parse branches above
+    it and no rand() fence."""
+    from incubyte_vaccination_data_pipeline_spark.operators.validate import validate_types
+    from incubyte_vaccination_data_pipeline_spark.shared_cache import release
+    from incubyte_vaccination_data_pipeline_spark.sources.csv_ingest import load_source_data
+    from tests.test_pipeline import AUS_CSV, IND_CSV, USA_CSV
+
+    (tmp_path / "IND (1) 1(in).csv").write_text(IND_CSV)
+    (tmp_path / "USA (1) 1(in).csv").write_text(USA_CSV)
+    (tmp_path / "AUS (1) 1(Sheet1).csv").write_text(AUS_CSV)
+    clean, dead = validate_types(load_source_data(spark, str(tmp_path)))
+    identity = spark.sparkContext._jvm.System.identityHashCode
+    caches = set()
+    try:
+        for df in (clean, dead):
+            nodes = list(_walk(df._jdf.queryExecution().sparkPlan()))
+            assert "Union" not in [n.nodeName() for n in nodes]
+            leaves = [n for n in nodes if n.children().isEmpty()]
+            assert leaves and all(n.nodeName() == "InMemoryTableScan" for n in leaves), (
+                [n.nodeName() for n in leaves]
+            )
+            caches |= {identity(n.relation().cacheBuilder()) for n in leaves}
+            assert "rand(" not in _plan(df)
+        assert len(caches) == 1, "clean and dead letter read different caches"
+    finally:
+        release(dead)
 
 
 def test_simhash_hamming_band_join_is_equi_join(spark, sf_dir):
