@@ -10,7 +10,8 @@ Runs (in order, stopping on first failure unless --keep-going):
    (pytest test_rotation.py + test_fingerprints.py);
 3. plain-session DuckDB oracle sweep at the driver's compare SF
    (sf0.01) — the exact driver environment;
-4. bench at sf0.1 — rewrites BENCH_local.json and prints the total.
+4. bench at sf0.1 — prints the total; BENCH_local.json is replaced
+   only when the run is comparable (see bench.py).
 
 Usage: python scripts/preflight.py [--keep-going] [--skip-bench]
 """

@@ -12,10 +12,10 @@ one aggregate, the r13 form) vs NEW (registered catalog query,
 per-order partial aggregate under the join) and reports:
 
 - wall medians/bests per variant,
-- per-variant SHUFFLE WRITE BYTES, measured from the Spark UI REST API
-  (stage-level shuffleWriteBytes, summed over the stages each run
-  creates) — the direct evidence that the pre-aggregation moves fewer
-  bytes through the orderkey exchange,
+- per-variant SHUFFLE WRITE BYTES, read from the status store for the
+  job group each run gets (stage-level shuffle write, summed over the
+  run's stages) — the direct evidence that the pre-aggregation moves
+  fewer bytes through the orderkey exchange,
 - the NEW form's formatted plan at Nx, written to
   plans/r15/agg_revenue_by_nation_10x_after.txt (shows the partial
   HashAggregate feeding the SortMergeJoin),
@@ -34,7 +34,6 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -94,14 +93,15 @@ def old_form(spark, sf_dir: str):
     )
 
 
-def _stages(ui: str) -> dict[int, int]:
-    """stageId -> shuffleWriteBytes for all completed stages."""
-    with urllib.request.urlopen(f"{ui}/api/v1/applications", timeout=10) as r:
-        app = json.load(r)[0]["id"]
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app}/stages?status=complete", timeout=10
-    ) as r:
-        return {s["stageId"]: s.get("shuffleWriteBytes", 0) for s in json.load(r)}
+def write_plan(spark, df, path: str) -> None:
+    """Write ``df``'s formatted physical plan to ``path``."""
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    with open(path, "w") as f:
+        f.write(plan)
 
 
 def main() -> None:
@@ -113,11 +113,10 @@ def main() -> None:
 
     from incubyte_vaccination_data_pipeline_spark.catalog import QUERIES
     from incubyte_vaccination_data_pipeline_spark.session import get_spark
+    from perfbench.trace import SparkProbe
 
-    spark = get_spark(
-        app_name="q5-stress", extra_conf={"spark.ui.enabled": "true"}
-    )
-    ui = "http://127.0.0.1:4040"
+    spark = get_spark(app_name="q5-stress")
+    probe = SparkProbe(spark)
     scratch = build_scratch(spark, args.factor)
     print(f"scratch {scratch} factor {args.factor}", flush=True)
 
@@ -139,17 +138,11 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans/r15"
     )
     os.makedirs(plans_dir, exist_ok=True)
-    df = new_fn(spark, scratch)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    with open(
+    write_plan(
+        spark,
+        new_fn(spark, scratch),
         os.path.join(plans_dir, f"agg_revenue_by_nation_{args.factor}x_after.txt"),
-        "w",
-    ) as f:
-        f.write(plan)
+    )
 
     # two regimes: the local default (dims broadcast — the sf0.1/Nx
     # reality) and the 100 TB SMJ regime (customer is ~1.5 B rows at
@@ -165,16 +158,14 @@ def main() -> None:
             results = {k: {"wall": [], "bytes": []} for k in variants}
             for r in range(args.rounds):
                 for label, build in variants.items():
-                    before = _stages(ui)
+                    group = probe.new_group(f"{regime}-{label}-{r}")
                     t0 = time.perf_counter()
                     build().write.format("noop").mode("overwrite").save()
                     wall = time.perf_counter() - t0
-                    after = _stages(ui)
-                    new_bytes = sum(
-                        v for sid, v in after.items() if sid not in before
-                    )
                     results[label]["wall"].append(wall)
-                    results[label]["bytes"].append(new_bytes)
+                    results[label]["bytes"].append(
+                        probe.exec_stats(group)["shuffle_write_bytes"]
+                    )
             for label, res in results.items():
                 w = sorted(res["wall"])
                 print(
@@ -195,20 +186,14 @@ def main() -> None:
             if thresh is not None:
                 # plan capture in the SMJ regime: the partial aggregate
                 # under the sort-merge join is the claim's evidence
-                df2 = new_fn(spark, scratch)
-                plan2 = df2._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
-                    )
-                )
-                with open(
+                write_plan(
+                    spark,
+                    new_fn(spark, scratch),
                     os.path.join(
                         plans_dir,
                         f"agg_revenue_by_nation_{args.factor}x_smj_after.txt",
                     ),
-                    "w",
-                ) as f:
-                    f.write(plan2)
+                )
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     if not args.keep:

@@ -1,130 +1,163 @@
-"""Round-11 bench noise protocol: the harness must ACT on a noisy
-sample (re-time, keep the lowest-spread triple) instead of merely
-reporting spread — two of the last three rounds' official artifacts
-were loaded-machine samples a judge had to adjudicate by hand."""
+"""Bench protocol: round-robin passes, and a comparability verdict from
+the foreign CPU share of every window of the run (work outside the
+bench's own process tree), not from the load at the start."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import time
+
 import bench
 
-
-def test_stats_median_best_spread():
-    med, best, spr = bench._stats([3.0, 1.0, 2.0])
-    assert (med, best, spr) == (2.0, 1.0, 2.0)
-
-
-def test_needs_retry_requires_both_floors():
-    # large relative spread but under the absolute floor: scheduling
-    # jitter on a micro-query, not load — no retry
-    assert not bench._needs_retry([0.05, 0.06, 0.15])
-    # large absolute spread but small relative to a slow query: the
-    # query is just big; retrying buys nothing
-    assert not bench._needs_retry([10.0, 10.1, 10.3])
-    # both floors exceeded: the loaded-machine signature
-    assert bench._needs_retry([1.0, 1.1, 2.0])
+#: CPU-seconds each busy process below burns
+_SPIN_SEC = 1.0
+_SPIN = (
+    "import sys, time\n"
+    f"end = time.process_time() + {_SPIN_SEC}\n"
+    "while time.process_time() < end: pass\n"
+    "open(sys.argv[1], 'w').close()\n"
+    "time.sleep(float(sys.argv[2]))\n"
+)
 
 
-def test_retry_bounds_are_sane():
-    assert 0 < bench.ACTIONABLE_SPREAD_FRAC_BOUND < 0.15
-    assert bench.MAX_RETRY_PASSES >= 1
+def _windows(*shares: float) -> list[dict]:
+    return [
+        {"t": [10.0 * i, 10.0 * (i + 1)], "foreign": s} for i, s in enumerate(shares)
+    ]
+
+
+def test_stats_median_spread():
+    assert bench._stats([3.0, 1.0, 2.0]) == (2.0, 2.0)
+
+
+def test_protocol_constants_are_sane():
     # _stats takes r[len//2]: a true median only for ODD samples — an
     # even RUNS would silently record the upper-middle run
     assert bench.RUNS >= 3 and bench.RUNS % 2 == 1
-    # the comparability bar is the ADJUDICATION bar, deliberately wider
-    # than the retry trigger (the harness works noise down to 5% before
-    # the stamp judges what remains against 15%)
-    assert bench.COMPARABLE_SPREAD_BAR > bench.ACTIONABLE_SPREAD_FRAC_BOUND
+    assert bench.LOAD_BOUND_CPU_FRAC == 1 / 8
+    assert bench.KEEP_RUN_FILES >= 5
 
 
-def test_actionable_only_counts_retry_class():
-    """The actionable sum excludes spread under the retry floors — the
-    irreducible JIT/GC jitter a re-run cannot remove."""
-    samples = {
-        "noisy": [1.0, 1.1, 2.0],     # both floors exceeded
-        "micro": [0.05, 0.06, 0.15],  # relative only: jitter
-        "big": [10.0, 10.1, 10.3],    # absolute only: just big
-    }
-    act, total = bench._actionable(samples)
-    assert act == 1.0  # only the noisy query's spread
-    assert round(total, 2) == 1.1 + 0.06 + 10.1
-    assert not bench._under_bound(samples)  # 1.0 > 5% of 11.26
-    # retiming the one noisy query to a tight sample clears the bound
-    samples["noisy"] = [1.0, 1.01, 1.02]
-    assert bench._under_bound(samples)
+def test_round_robin_order():
+    """One cold pass over every query, then RUNS full passes in the same
+    order: the runs of one query sit a pass apart, so one slow window of
+    the machine hits at most one of them."""
+    calls, samples = [], []
+
+    def timer(name):
+        calls.append(name)
+        return 0.25, 0.5
+
+    cold, runs = bench.run_passes(
+        ["q1", "q2", "q3"], timer, lambda: samples.append(len(calls))
+    )
+    assert calls == ["q1", "q2", "q3"] * (1 + bench.RUNS)
+    # a sample at every query boundary, never inside a timed region
+    assert samples == list(range(1, len(calls) + 1))
+    assert cold == {"q1": 0.75, "q2": 0.75, "q3": 0.75}
+    assert runs == {q: [(0.25, 0.5)] * bench.RUNS for q in ("q1", "q2", "q3")}
 
 
 def test_comparability_stamp():
-    """The artifact self-adjudicates: loaded start or residual
-    actionable spread -> comparable: false with named reasons and a
-    pointer at the matched-conditions fallback; an idle clean run ->
-    comparable: true, no reasons."""
-    clean = bench.comparability([0.4, 0.5, 0.5], 0.04, cpus=32)
-    assert clean["comparable"] is True and clean["reasons"] == []
-    assert clean["load_bound"] == 4.0  # 32 / 8
-    assert "companion" not in clean
-
-    loaded = bench.comparability([5.0, 4.6, 4.3], 0.04, cpus=32)
-    assert loaded["comparable"] is False
-    assert any("load_avg_start" in r for r in loaded["reasons"])
-    assert "companion" in loaded
-
-    # the r13 driver signature: 1-min average momentarily dipped under
-    # the bound while the 5-min average shows the box was busy — the
-    # gate must consider max(1-min, 5-min) (r13 verdict item 3)
-    recently_loaded = bench.comparability([2.09, 4.59, 5.21], 0.04, cpus=32)
-    assert recently_loaded["comparable"] is False
-    assert any("load_avg_start" in r for r in recently_loaded["reasons"])
-
-    noisy = bench.comparability([0.4, 0.5, 0.5], 0.24, cpus=32)
-    assert noisy["comparable"] is False
-    assert any("spread_actionable_frac" in r for r in noisy["reasons"])
-
-    # None loadavg (platform without getloadavg) only adjudicates spread
-    assert bench.comparability(None, 0.04, cpus=32)["comparable"] is True
+    """Every window at or under the bound: comparable, and the artifact
+    carries the CPU count and the window list."""
+    windows = _windows(0.004, 0.02, bench.LOAD_BOUND_CPU_FRAC)
+    out = bench.comparability(windows, cpus=4)
+    assert out["comparable"] is True and out["reason"] is None
+    assert out["cpus"] == 4 and out["windows"] == windows
+    assert out["bound"] == 0.125
 
 
-def test_sanity_flags_jump_detection():
-    """Promotion sanity gate (r15, VERDICT r14 item 2): a query reading
-    >2x its previous committed median (and >0.5 s above it) is flagged
-    for re-time before the run may replace the committed record. The
-    motivating case is pinned: stream_session_gap_stateful read 5.32 s
-    in the r14 committed record vs 2.01 s in r13's with untouched code
-    — a slow-but-stable micro-batch window the spread-based retry gate
-    cannot see (3-run spread was small, so no retry fired)."""
-    prev = {"stream_session_gap_stateful": 2.01, "q6_forecast": 0.2}
-    now = {"stream_session_gap_stateful": 5.32, "q6_forecast": 0.45}
-    # the stream query is flagged; the micro-query doubling is not
-    # (0.25 s absolute excess is scheduling jitter, under the floor)
-    assert bench.sanity_flags(now, prev) == ["stream_session_gap_stateful"]
-    # a clean run: nothing flagged
-    assert bench.sanity_flags({"a": 1.9}, {"a": 1.0}) == []
-    # queries absent from the previous record never flag (new queries)
-    assert bench.sanity_flags({"new_q": 9.0}, {}) == []
+def test_r15_signature_is_not_comparable():
+    """The polluted r15 record: a clean start, then other work on the
+    box for the rest of the run (loadavg 1.49 at the start, 6.33 at the
+    end, on 32 cpus). A start-only rule stamped it comparable; a
+    per-window rule must not, and must name the window."""
+    out = bench.comparability(_windows(0.02, 0.2, 0.2, 0.2), cpus=32)
+    assert out["comparable"] is False
+    assert "window 1" in out["reason"] and "3 of 4" in out["reason"]
 
 
-def test_sanity_verdict_decides_from_rerun_and_keeps_both_medians():
-    """The rerun decides ``persistent`` but never replaces the sweep's
-    sample: a query whose rerun falls back under the jump is exonerated,
-    one whose rerun still jumps persists, and both medians of each are
-    recorded."""
-    prev = {"slow_window": 1.0, "regressed": 1.0, "steady": 1.0}
-    sweep = {"slow_window": 3.0, "regressed": 3.2, "steady": 1.1}
-    rerun = {"slow_window": 1.2, "regressed": 3.1}
-    out = bench.sanity_verdict(sweep, rerun, prev)
-    assert out["retimed"] == ["regressed", "slow_window"]
-    assert out["persistent"] == ["regressed"]
-    assert out["medians"] == {
-        "regressed": {"sweep": 3.2, "rerun": 3.1},
-        "slow_window": {"sweep": 3.0, "rerun": 1.2},
-    }
-    # nothing re-timed: nothing persists
-    assert bench.sanity_verdict(sweep, {}, prev)["persistent"] == []
+def test_no_samples_is_not_comparable():
+    out = bench.comparability([], cpus=4)
+    assert out["comparable"] is False and "no CPU samples" in out["reason"]
 
 
-def test_sanity_bounds_are_sane():
-    assert bench.SANITY_JUMP_FACTOR >= 2.0
-    assert 0 < bench.SANITY_ABS_FLOOR_SEC <= 1.0
-    assert bench.KEEP_RUN_FILES >= 5
+def _wait_for(path: str, timeout: float = 30.0) -> None:
+    end = time.monotonic() + timeout
+    while not os.path.exists(path):
+        assert time.monotonic() < end, f"busy process never finished: {path}"
+        time.sleep(0.05)
+
+
+def test_own_tree_counts_children_and_not_orphans(tmp_path):
+    """A busy child is the bench's own CPU; a busy process orphaned by a
+    short-lived child (so no longer a descendant) is foreign. Lower
+    bounds only: other work on the box can only add to either side."""
+    floor = 0.5 * _SPIN_SEC * os.sysconf("SC_CLK_TCK")
+    cpu = bench.CpuWindows()
+
+    # read while the child is still alive: counted by the walk over
+    # descendants, not through this process's cutime
+    done = str(tmp_path / "child_done")
+    a = cpu.read()
+    child = subprocess.Popen([sys.executable, "-c", _SPIN, done, "60"])
+    try:
+        _wait_for(done)
+        assert cpu.read().own - a.own >= floor
+    finally:
+        child.kill()
+        child.wait(timeout=30)
+
+    done = str(tmp_path / "orphan_done")
+    a = cpu.read()
+    subprocess.run(
+        [sys.executable, "-c",
+         "import subprocess, sys; "
+         f"subprocess.Popen([sys.executable, '-c', {_SPIN!r}, {done!r}, '0'])"],
+        check=True, timeout=30,
+    )
+    _wait_for(done)
+    b = cpu.read()
+    assert bench._foreign_share(a, b) * (b.total - a.total) >= floor
+
+
+def test_own_tree_keeps_workers_reaped_without_wait(tmp_path):
+    """The PySpark worker daemon ignores SIGCHLD, so an exited worker's
+    time reaches no cutime. A busy worker of such a parent, seen once
+    and then gone, must stay own CPU instead of reading as foreign."""
+    floor = 0.5 * _SPIN_SEC * os.sysconf("SC_CLK_TCK")
+    done = str(tmp_path / "worker_done")
+    daemon = (
+        "import os, signal, sys, time\n"
+        "signal.signal(signal.SIGCHLD, signal.SIG_IGN)\n"
+        "if os.fork() == 0:\n"
+        f"    exec({_SPIN!r}, {{'__name__': 'worker'}})\n"
+        "    os._exit(0)\n"
+        "time.sleep(60)\n"
+    )
+    cpu = bench.CpuWindows()
+    a = cpu.read()
+    parent = subprocess.Popen([sys.executable, "-c", daemon, done, "1"])
+    def workers():
+        return [k for k, v in cpu._tree.items() if v[1] and v[1][0] == parent.pid]
+
+    try:
+        _wait_for(done)
+        assert cpu.read().own - a.own >= floor and workers()  # seen alive
+        end = time.monotonic() + 30
+        while True:  # the worker exits and the kernel reaps it
+            own = cpu.read().own
+            if not workers():
+                break
+            assert time.monotonic() < end, "worker never exited"
+            time.sleep(0.1)
+        assert own - a.own >= floor
+    finally:
+        parent.kill()
+        parent.wait(timeout=30)
 
 
 def test_compact_pointer_tracks_promotion():
@@ -134,7 +167,11 @@ def test_compact_pointer_tracks_promotion():
     timestamped file so the recorded pointer stays resolvable instead
     of being overwritten by the next run (r12 verdict #3, r13 advice)."""
     timings = {"q": 1.0}
-    payload = {"queries": timings, "sf": 0.1}
+    payload = {
+        "queries": timings,
+        "comparability": bench.comparability(_windows(0.0), cpus=4),
+        "sf": 0.1,
+    }
     assert (
         bench.compact_payload(payload, timings, promoted=True)["queries_full"]
         == "BENCH_local.json"

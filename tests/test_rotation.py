@@ -307,23 +307,33 @@ def test_bench_compact_line_fits_driver_tail():
     import bench
 
     timings = {name: 123.4567 for name in catalog.QUERIES}
+    # worst case: non-comparable, with the longest reason the verdict
+    # writes (every window over, the worst one last, five-digit counts
+    # and offsets)
+    windows = [
+        {"t": [99999.9, 99999.9], "foreign": 0.9998} for _ in range(9999)
+    ] + [{"t": [99999.9, 99999.9], "foreign": 0.9999}]
     payload = {
         "metric": "total_headline_query_sec",
         "value": 12345.6789,
         "unit": "sec",
+        "build_sec": 12345.6789,
+        "exec_sec": 12345.6789,
+        "passes_sec": [12345.6789] * bench.RUNS,
         "queries": timings,
-        "noise_spread_sec": 12.3456,
-        "spread_frac": 0.1234,
-        "spread_actionable_sec": 12.3456,
-        "spread_actionable_frac": 0.1234,
-        "retried_queries": 12,
-        "load_avg_start": [12.34, 12.34, 12.34],
-        "load_avg_end": [12.34, 12.34, 12.34],
-        # worst case: non-comparable with BOTH reasons + companion text
-        "comparability": bench.comparability([99.99, 99.99, 99.99], 0.9999),
+        "queries_spread": timings,
+        "queries_build": timings,
+        "queries_exec": timings,
+        "queries_cold": timings,
+        "comparability": bench.comparability(windows, cpus=9999),
         "sf": 0.1,
     }
-    line = _json.dumps(bench.compact_payload(payload, timings))
+    line = _json.dumps(
+        bench.compact_payload(
+            payload, timings, promoted=False,
+            run_file="BENCH_last_run_9999999999999.json",
+        )
+    )
     assert len(line) < bench.DRIVER_TAIL_CHARS - 100, (
         f"compact bench line too long for the driver tail: {len(line)}"
     )

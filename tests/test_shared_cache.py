@@ -112,8 +112,9 @@ def ck_files():
 before = persistent()
 # one entry of each kind: a persisted frame (the exact ANN twin), a lazy
 # checkpoint (daily cents), a localCheckpoint (copurchase pairs), a
-# tuple (substring frames), a frame with bases (the dead-letter split),
-# a list (IVF cell counts) and a temp dir (the stream flush sentinels)
+# tuple (substring frames), a plain persisted frame (the vax
+# `with_parsed_date` parse), a list (IVF cell counts) and a temp dir
+# (the stream flush sentinels)
 catalog.QUERIES["ann_bruteforce_topk"](spark, sf_dir).count()
 events_ext.shared_daily_cents(spark, sf_dir).count()
 graph._copurchase_pairs(spark, sf_dir).count()
