@@ -42,10 +42,10 @@ from incubyte_vaccination_data_pipeline_spark import catalog  # noqa: E402
 from incubyte_vaccination_data_pipeline_spark.session import get_spark  # noqa: E402
 
 #: queries timed by the harness: the full catalog in CANONICAL
-#: name-sorted order, independent of the driver-window rotation: shared
-#: warm caches (session, scans, shared_cache frames) make per-query
-#: numbers order-sensitive, so a fixed order is what makes per-query
-#: deltas between records attributable to code changes
+#: name-sorted order, independent of registration order: shared warm
+#: caches (session, scans, shared_cache frames) make per-query numbers
+#: order-sensitive, so a fixed order is what makes per-query deltas
+#: between records attributable to code changes
 HEADLINE = sorted(catalog.QUERIES)
 
 #: timed passes after the cold pass; odd, so the median is one run
@@ -106,14 +106,15 @@ def _stats(runs: list[float]) -> tuple[float, float]:
     return r[len(r) // 2], r[-1] - r[0]
 
 
-def _cpu_jiffies() -> tuple[int, int]:
-    """(busy, total) jiffies of all CPUs since boot; busy counts steal."""
+def _cpu_jiffies() -> tuple[int, int, int, int]:
+    """(busy, total, steal, irq + softirq) jiffies of all CPUs since
+    boot; busy counts steal and irq + softirq."""
     with open("/proc/stat") as f:
         user, nice, system, idle, iowait, irq, softirq, steal = (
             int(x) for x in f.readline().split()[1:9]
         )
     busy = user + nice + system + irq + softirq + steal
-    return busy, busy + idle + iowait
+    return busy, busy + idle + iowait, steal, irq + softirq
 
 
 def _ignores_sigchld(pid: int) -> bool:
@@ -157,11 +158,14 @@ def _tree(pid: int) -> dict[tuple[int, int], tuple[int, tuple | None, bool]]:
 
 
 class Reading(NamedTuple):
-    """Monotonic time, and busy, total and own-tree CPU jiffies."""
+    """Monotonic time, and busy, total, steal, irq + softirq and
+    own-tree CPU jiffies."""
 
     t: float
     busy: int
     total: int
+    steal: int
+    irq: int
     own: int
 
 
@@ -173,8 +177,19 @@ def _foreign_share(a: Reading, b: Reading) -> float:
     return max(0.0, foreign / d_total) if d_total > 0 else 0.0
 
 
+def _share(a: Reading, b: Reading, field: str) -> float:
+    """Share of all CPUs' time between readings ``a`` and ``b`` spent in
+    ``field`` (``steal`` or ``irq``). The kernel charges steal to no
+    process, nor irq time when it accounts IRQ time separately, so both
+    sit inside the foreign share; they tell a busy host or interrupt
+    work from other processes on the box."""
+    d_total = b.total - a.total
+    return (getattr(b, field) - getattr(a, field)) / d_total if d_total > 0 else 0.0
+
+
 class CpuWindows:
-    """The foreign CPU share of a run, window by window. Unlike the load
+    """The foreign CPU share of a run, window by window, each window
+    with its steal and irq + softirq shares beside it. Unlike the load
     average, it leaves out the bench's own work (which alone would put a
     4-CPU box over a loadavg bound of cpus/8) and it covers the whole
     run, not only its start. With no /proc there are no windows.
@@ -215,6 +230,8 @@ class CpuWindows:
             "t": [round(self._open.t - self._start.t, 1),
                   round(now.t - self._start.t, 1)],
             "foreign": round(_foreign_share(self._open, now), 4),
+            "steal": round(_share(self._open, now, "steal"), 4),
+            "irq": round(_share(self._open, now, "irq"), 4),
         })
         self._open = now
 

@@ -28,9 +28,10 @@ Every query registers itself with ``@query(name, oracle)`` (see
 - ``corpus_stats``   — corpus statistics, packing, curation funnel.
 - ``training_ext``   — dataset splits, contamination, training prep.
 
-Registration order is domain import order. The external driver's
-least-recently-verified rotation is applied by ``__spark_entry__``,
-not here (see ``verify_rotation.py``).
+Registration order is domain import order, and ``__spark_entry__``
+hands the catalog over in that order. Plan fingerprints
+(``fingerprints.py``) are maintenance tooling and are not imported
+here.
 
 Cross-engine determinism conventions (see ``vax.py`` docstring):
 lowercase aliases, decimal-exact money aggregation, pinned dates,

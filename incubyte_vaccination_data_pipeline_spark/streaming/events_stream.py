@@ -465,6 +465,14 @@ UPSERT_KEY_BUCKETS = 16
 UPSERT_MAX_BUCKETS = 1_000_000
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop ``FileSystem`` (the
+    one a parquet read or write of it uses), so any Hadoop path works."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf).exists(jpath)
+
+
 def run_foreach_batch_upsert(
     df: DataFrame,
     target_path: str,
@@ -491,6 +499,10 @@ def run_foreach_batch_upsert(
     query's life and every state partition costs a state-store
     instance; production sizes this to the cluster instead.
 
+    A batch creates the target when it does not exist; a target that
+    exists but does not read as parquet fails the batch instead of
+    being overwritten.
+
     Constraint: ``n_buckets <= UPSERT_MAX_BUCKETS``.  The touched-
     bucket collect is bounded BY CONSTRUCTION (``__kh`` is
     ``pmod(hash(keys), n_buckets)``, never a raw data column), so the
@@ -511,17 +523,15 @@ def run_foreach_batch_upsert(
                 "__kh", F.pmod(F.hash(*key_cols), F.lit(n_buckets))
             )
         )
-        try:
-            existing = spark.read.option("basePath", target_path).parquet(
-                target_path
-            )
-        except Exception:  # first batch creates the partitioned target
-            # co-locate each bucket into one task -> ~1 file per
-            # partition dir instead of shuffle_partitions files each
+        if not _path_exists(spark, target_path):
+            # the first batch creates the partitioned target; co-locate
+            # each bucket into one task -> ~1 file per partition dir
+            # instead of shuffle_partitions files each
             batch_df.repartition(n_buckets, "__kh").write.mode(
                 "overwrite"
             ).partitionBy("__kh").parquet(target_path)
             return
+        existing = spark.read.option("basePath", target_path).parquet(target_path)
         touched = [
             r["__kh"] for r in batch_df.select("__kh").distinct().collect()
         ]

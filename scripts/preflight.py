@@ -6,8 +6,8 @@ Runs (in order, stopping on first failure unless --keep-going):
 1. fresh-process driver contract — a PLAIN SparkSession (driver
    shape) imports __spark_entry__, runs entry(), and checks
    queries()/oracle_sql() key parity;
-2. committed-state checks — rotation state, fingerprints, inventory
-   (pytest test_rotation.py + test_fingerprints.py);
+2. committed-state checks — registry, inventory, fingerprints
+   (pytest test_registry.py + test_fingerprints.py);
 3. plain-session DuckDB oracle sweep at the driver's compare SF
    (sf0.01) — the exact driver environment;
 4. bench at sf0.1 — prints the total; BENCH_local.json is replaced
@@ -59,8 +59,8 @@ def main() -> int:
     steps: list[tuple[str, list[str], dict]] = [
         ("driver contract (fresh plain process)", [sys.executable, "-c", ENTRY_CHECK], {}),
         (
-            "rotation + fingerprints",
-            [sys.executable, "-m", "pytest", "tests/test_rotation.py",
+            "registry + fingerprints",
+            [sys.executable, "-m", "pytest", "tests/test_registry.py",
              "tests/test_fingerprints.py", "-q"],
             {},
         ),

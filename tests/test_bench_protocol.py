@@ -4,12 +4,14 @@ bench's own process tree), not from the load at the start."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
 import time
 
 import bench
+from incubyte_vaccination_data_pipeline_spark import catalog
 
 #: CPU-seconds each busy process below burns
 _SPIN_SEC = 1.0
@@ -160,6 +162,38 @@ def test_own_tree_keeps_workers_reaped_without_wait(tmp_path):
         parent.wait(timeout=30)
 
 
+def test_window_records_steal_and_irq_shares():
+    """Each window records, beside the foreign share, the steal and
+    irq + softirq shares of all CPUs' time from the same /proc/stat
+    reads; the verdict still reads only the foreign share, and the
+    compact line still leaves the window list out."""
+    cpu = bench.CpuWindows()
+    cpu.sample(close=True)
+    assert set(cpu.windows[-1]) == {"t", "foreign", "steal", "irq"}
+    assert all(0.0 <= cpu.windows[-1][k] <= 1.0 for k in ("steal", "irq"))
+
+    # busy +300 of total +1000 jiffies, own +100, steal +50, irq +20
+    a = bench.Reading(t=0.0, busy=100, total=1000, steal=10, irq=30, own=40)
+    b = bench.Reading(t=12.0, busy=400, total=2000, steal=60, irq=50, own=140)
+    readings = iter([a, b])
+    cpu = bench.CpuWindows.__new__(bench.CpuWindows)
+    cpu.windows, cpu.read = [], lambda: next(readings)
+    cpu._open = cpu._start = cpu.read()
+    cpu.sample()
+    assert cpu.windows == [
+        {"t": [0.0, 12.0], "foreign": 0.2, "steal": 0.05, "irq": 0.02}
+    ]
+
+    windows = [dict(w, steal=0.9, irq=0.9) for w in _windows(0.1, 0.125)]
+    verdict = bench.comparability(windows, cpus=4)
+    assert verdict["comparable"] is True and verdict["windows"] == windows
+    timings = {name: 1.0 for name in catalog.QUERIES}
+    payload = {"queries": timings, "comparability": verdict, "sf": 0.1}
+    line = json.dumps(bench.compact_payload(payload, timings))
+    assert "windows" not in json.loads(line)["comparability"]
+    assert len(line) < bench.DRIVER_TAIL_CHARS - 100
+
+
 def test_compact_pointer_tracks_promotion():
     """The compact payload names the file that actually holds this
     run's full timing set: a promoted (comparable, canonical-SF) run
@@ -182,3 +216,45 @@ def test_compact_pointer_tracks_promotion():
         )["queries_full"]
         == "BENCH_last_run_99.json"
     )
+
+
+def test_bench_compact_line_fits_driver_tail():
+    """The driver records only the last 2000 chars of bench stdout;
+    the final line bench prints must parse from within that window,
+    even with every real catalog query name in the timing map."""
+    import json as _json
+
+    import bench
+
+    timings = {name: 123.4567 for name in catalog.QUERIES}
+    # worst case: non-comparable, with the longest reason the verdict
+    # writes (every window over, the worst one last, five-digit counts
+    # and offsets)
+    windows = [
+        {"t": [99999.9, 99999.9], "foreign": 0.9998} for _ in range(9999)
+    ] + [{"t": [99999.9, 99999.9], "foreign": 0.9999}]
+    payload = {
+        "metric": "total_headline_query_sec",
+        "value": 12345.6789,
+        "unit": "sec",
+        "build_sec": 12345.6789,
+        "exec_sec": 12345.6789,
+        "passes_sec": [12345.6789] * bench.RUNS,
+        "queries": timings,
+        "queries_spread": timings,
+        "queries_build": timings,
+        "queries_exec": timings,
+        "queries_cold": timings,
+        "comparability": bench.comparability(windows, cpus=9999),
+        "sf": 0.1,
+    }
+    line = _json.dumps(
+        bench.compact_payload(
+            payload, timings, promoted=False,
+            run_file="BENCH_last_run_9999999999999.json",
+        )
+    )
+    assert len(line) < bench.DRIVER_TAIL_CHARS - 100, (
+        f"compact bench line too long for the driver tail: {len(line)}"
+    )
+    assert _json.loads(line)["n_queries"] == len(catalog.QUERIES)

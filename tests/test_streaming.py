@@ -636,6 +636,42 @@ def test_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     assert final == {k1: 5.0, k2: 2.0}
 
 
+def test_upsert_creates_absent_target_and_raises_on_unreadable(spark, tmp_path):
+    """The first batch checks the target through its Hadoop FileSystem:
+    an absent target (parent dir absent too) takes the create path, and
+    a target that exists but holds no readable parquet fails the query
+    and is left as it was, not overwritten."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from incubyte_vaccination_data_pipeline_spark.streaming.events_stream import (
+        run_foreach_batch_upsert,
+    )
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, 1.0), (2, 2.0)], "user_id bigint, total double"
+    ).coalesce(1).write.parquet(src)
+
+    def stream():
+        return spark.readStream.schema("user_id bigint, total double").parquet(src)
+
+    target = str(tmp_path / "absent" / "target")
+    run_foreach_batch_upsert(stream(), target, key_cols=["user_id"], n_buckets=4)
+    final = {r["user_id"]: r["total"] for r in spark.read.parquet(target).collect()}
+    assert final == {1: 1.0, 2: 2.0}
+
+    garbage = tmp_path / "garbage"
+    garbage.mkdir()
+    (garbage / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(StreamingQueryException):
+        run_foreach_batch_upsert(
+            stream(), str(garbage), key_cols=["user_id"], n_buckets=4
+        )
+    assert [p.name for p in garbage.iterdir()] == ["part-0.parquet"]
+    assert (garbage / "part-0.parquet").read_bytes() == b"not parquet"
+
+
 def test_upsert_bucket_count_guard(spark):
     """The touched-bucket collect is bounded by n_buckets, so
     n_buckets itself must stay metadata-scale: a caller passing a key
