@@ -40,7 +40,6 @@ explicit tie-breakers.
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import (  # noqa: F401
     AS_OF,
-    DEPRECATED,
     ORACLES,
     QUERIES,
     query,

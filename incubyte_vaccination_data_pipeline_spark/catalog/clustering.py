@@ -37,6 +37,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
+from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
+    durable_checkpoint,
+)
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
 _K = 8
@@ -149,7 +152,7 @@ def kmeans_embeddings_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the quantized long-form frame feeds 2 assignments + 2 updates;
     # persist the ~n*64-row intermediate so the unrolled iterations
     # don't re-scan and re-explode the source each time
-    qcomp = qcomp.localCheckpoint(eager=False)
+    qcomp = durable_checkpoint(qcomp, eager=False)
 
     cent0 = qcomp.filter(F.col("vec_id") < _K).select(
         F.col("vec_id").alias("cluster"), "pos", F.col("q").alias("c")
@@ -280,16 +283,19 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
         F.floor(F.col("x").cast("double") * _SCALE).cast("bigint").alias("q"),
     )
     wpos = Window.partitionBy("pos")
-    centered = qcomp.select(
-        "vec_id",
-        "pos",
-        (
-            F.col("q")
-            - F.floor(
-                F.sum("q").over(wpos).cast("double") / F.count(F.lit(1)).over(wpos)
-            ).cast("bigint")
-        ).alias("cq"),
-    ).localCheckpoint(eager=False)
+    centered = durable_checkpoint(
+        qcomp.select(
+            "vec_id",
+            "pos",
+            (
+                F.col("q")
+                - F.floor(
+                    F.sum("q").over(wpos).cast("double") / F.count(F.lit(1)).over(wpos)
+                ).cast("bigint")
+            ).alias("cq"),
+        ),
+        eager=False,
+    )
 
     def half_down(v: DataFrame) -> DataFrame:
         """w = fdiv(Σ_pos cq·v, 2^18) per vector (v is ≤64 rows)."""

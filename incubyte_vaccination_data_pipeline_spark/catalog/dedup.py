@@ -18,10 +18,7 @@ from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
     durable_checkpoint,
 )
 
-from incubyte_vaccination_data_pipeline_spark.catalog.registry import (
-    DEPRECATED,
-    query,
-)
+from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
 from incubyte_vaccination_data_pipeline_spark.catalog.similarity import (
     HIER_ASSIGN_M,
     NEAR_DUP_THRESHOLD,
@@ -191,7 +188,7 @@ def shared_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round, so the returned frame is already a materialized
     in-memory RDD with a Project-over-LogicalRDD plan — caching the
     SAME frame object leaves every downstream analyzed plan (and so
-    every driver fingerprint) byte-identical to the uncached build."""
+    every plan fingerprint) byte-identical to the uncached build."""
     from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
         duplicate_clusters,
     )
@@ -201,34 +198,6 @@ def shared_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "duplicate_clusters",
         lambda: duplicate_clusters(shared_minhash_pairs(spark, sf_dir)),
-    )
-
-
-def _shared_ngram_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document char-3-gram sets with (lang, 20-char length-bucket)
-    block keys, built once per (app, corpus): the explode ->
-    collect_set aggregate is ``dedup_ngram_jaccard``'s dominant
-    per-call cost and depends only on the corpus (the Jaccard
-    threshold and the blocked join run per call). Same checkpointed
-    LogicalRDD shape as the per-call build."""
-    # block_cols pinned EXPLICITLY (with len_bucket precomputed exactly
-    # as the operator default used to): the operator's defaulted
-    # blocking is now prefix-refined for scale (operators/dedup.py
-    # _resolve_block_cols), while this catalog query keeps the original
-    # 2-column blocking as its driver-verified oracle contract — the
-    # analyzed plan (and so the query fingerprint) is unchanged.
-    return shared(
-        spark,
-        sf_dir,
-        "ngram_grams",
-        lambda: ngram_gram_sets(
-            augmented_documents(spark, sf_dir).withColumn(
-                "len_bucket", (F.col("n_chars") / 20).cast("int")
-            ),
-            block_cols=["lang", "len_bucket"],
-            n=3,
-            len_bucket_width=20,
-        ),
     )
 
 
@@ -243,7 +212,7 @@ def _shared_simhash32(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-checkpointing per call) is the round-8-measured 1.24s -> 0.6s
     warm win at sf0.1 (ROUND_NOTES §8.9) with the identical
     LogicalRDD plan shape — the banding/join plan downstream stays
-    visible to the plan guard and the driver fingerprint is
+    visible to the plan guard and the plan fingerprint is
     unchanged."""
     return shared(
         spark,
@@ -267,74 +236,9 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_minhash_pairs(spark, sf_dir)
 
 
-_HEX = "0123456789abcdef"
-_TOKVAL_SQL = (
-    f"(strpos('{_HEX}', substr(md5(t), 1, 1)) - 1) * 4096"
-    f" + (strpos('{_HEX}', substr(md5(t), 2, 1)) - 1) * 256"
-    f" + (strpos('{_HEX}', substr(md5(t), 3, 1)) - 1) * 16"
-    f" + (strpos('{_HEX}', substr(md5(t), 4, 1)) - 1)"
-)
-
-
-_SIMHASH_CTES = f"""aug AS ({AUG_SQL}),
-    stok AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS words FROM aug
-    ),
-    svotes AS (
-        SELECT doc_id,
-               list_transform(range(0, 16),
-                   j -> list_reduce(
-                       list_prepend(CAST(0 AS BIGINT),
-                           list_transform(words,
-                               t -> CASE WHEN (({_TOKVAL_SQL}) >> j) % 2 = 1
-                                    THEN CAST(1 AS BIGINT)
-                                    ELSE CAST(-1 AS BIGINT) END)),
-                       (a, b) -> a + b)) AS v
-        FROM stok
-    ),
-    fp AS (
-        SELECT doc_id,
-               list_reduce(
-                   list_prepend(CAST(0 AS BIGINT),
-                       list_transform(v, x -> CASE WHEN x > 0 THEN CAST(1 AS BIGINT)
-                                              ELSE CAST(0 AS BIGINT) END)),
-                   (a, b) -> a * 2 + b) AS simhash
-        FROM svotes
-    )"""
-
-
-@query(
-    "dedup_simhash",
-    oracle=f"""
-    WITH {_SIMHASH_CTES}
-    SELECT doc_id, simhash FROM fp
-    """,
-)
-def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash fingerprints (identical texts collide; near-dups
-    land within small Hamming distance). Width pinned explicitly: the
-    operator's default is corpus-derived (derived_simhash_bits), this
-    query's oracle contract is the fixed small-SF width."""
-    return simhash_fingerprints(augmented_documents(spark, sf_dir), bits=16)
-
-
-# 32-bit SimHash mirror for the Hamming-pair query (the 16-bit
-# fingerprint caps band blocking at 16 buckets/band — quadratic
-# candidate growth with corpus size; 32-bit/8-bit bands gives 256).
-# Same one-md5-per-token decode as Spark (md5_half_decode_sql reused
-# with strpos) and an aggregation-form vote sum — bit-identical.
-def _simhash_decode_sql(digits: int) -> str:
-    """DuckDB decode of the first ``digits`` md5 hex chars into one
-    BIGINT — the ``digits``-parametric generalization of
-    ``md5_half_decode_sql`` (byte-identical to it at digits=8)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substring(m, {1 + k}, 1)) - 1)"
-        f" * cast({16 ** (digits - 1 - k)} as bigint)"
-        for k in range(digits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
+# SimHash mirror: the same one-md5-per-token decode as Spark
+# (md5_half_decode_sql with strpos) and an aggregation-form vote sum —
+# bit-identical at every width.
 def _simhash_votes_sql(bits: int) -> str:
     return ",\n               ".join(
         f"SUM(CASE WHEN (v >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS s{j}"
@@ -354,12 +258,9 @@ def simhash_oracle_ctes(bits: int, suffix: str) -> str:
     """The full DuckDB fingerprint pipeline (tokenize -> md5 -> decode
     -> per-bit votes -> pack) at any width, CTE names suffixed so two
     widths can coexist in one statement namespace. ONE generator
-    serves every width (32-bit and 48-bit here) so the
-    decode/vote/pack arithmetic can never diverge between them —
-    at bits=32, suffix="32" the output is byte-identical to the
-    pre-round-10 hand-written _SIMHASH32_CTES (oracle text feeds the
-    driver fingerprint, so this refactor is certified no-op by
-    tests/test_fingerprints.py)."""
+    serves every width (16, 32 and 48 bits here) so the
+    decode/vote/pack arithmetic can never diverge between them."""
+    dec = md5_half_decode_sql("m", 1, "strpos", digits=bits // 4)
     return f"""aug AS ({AUG_SQL}),
     stok{suffix} AS (
         SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM aug
@@ -368,7 +269,7 @@ def simhash_oracle_ctes(bits: int, suffix: str) -> str:
         SELECT doc_id, md5(t) AS m FROM stok{suffix}
     ),
     sv{suffix} AS (
-        SELECT doc_id, {_simhash_decode_sql(bits // 4)} AS v FROM shm{suffix}
+        SELECT doc_id, {dec} AS v FROM shm{suffix}
     ),
     svot{suffix} AS (
         SELECT doc_id, {_simhash_votes_sql(bits)}
@@ -377,6 +278,21 @@ def simhash_oracle_ctes(bits: int, suffix: str) -> str:
     fp{suffix} AS (
         SELECT doc_id, {_simhash_pack_sql(bits)} AS simhash FROM svot{suffix}
     )"""
+
+
+@query(
+    "dedup_simhash",
+    oracle=f"""
+    WITH {simhash_oracle_ctes(16, "")}
+    SELECT doc_id, simhash FROM fp
+    """,
+)
+def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """16-bit SimHash fingerprints (identical texts collide; near-dups
+    land within small Hamming distance). Width pinned explicitly: the
+    operator's default is corpus-derived (derived_simhash_bits), this
+    query's oracle contract is the fixed small-SF width."""
+    return simhash_fingerprints(augmented_documents(spark, sf_dir), bits=16)
 
 
 _SIMHASH32_CTES = simhash_oracle_ctes(32, "32")
@@ -416,68 +332,6 @@ def dedup_simhash_hamming_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_pairs(
         _shared_simhash32(spark, sf_dir), max_hamming=3, bits=32, bands=4
     )
-
-
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH aug AS ({AUG_SQL}),
-    grams AS (
-        SELECT doc_id AS doc, lang,
-               CAST(n_chars // 20 AS INT) AS len_bucket,
-               list_distinct(list_transform(
-                   range(1, greatest(length(lower(text)) - 2, 0) + 1),
-                   i -> substr(lower(text), i, 3))) AS grams
-        FROM aug
-    ),
-    pairs AS (
-        SELECT a.doc AS doc_a, b.doc AS doc_b, a.grams AS ga, b.grams AS gb
-        FROM grams a
-        JOIN grams b ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-                    AND a.doc < b.doc
-        WHERE len(a.grams) > 0 AND len(b.grams) > 0
-    )
-    SELECT doc_a, doc_b,
-           round(CAST(len(list_intersect(ga, gb)) AS DOUBLE)
-                 / (len(ga) + len(gb)
-                    - len(list_intersect(ga, gb))), 6)
-               AS jaccard
-    FROM pairs
-    WHERE round(CAST(len(list_intersect(ga, gb)) AS DOUBLE)
-                / (len(ga) + len(gb)
-                   - len(list_intersect(ga, gb))), 6) >= 0.5
-    """,
-)
-def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEPRECATED — use ``dedup_ngram_jaccard_prefix``: this query pins
-    the HISTORICAL (lang, 20-char-length-bucket) blocking as its
-    driver-verified oracle contract, and that 2-column block key is
-    quadratic in corpus size (the 10x disjoint-content stress reads
-    29.5x cold / 84.9x warm, SCALE.md) — metadata blocks grow with the
-    corpus, content-prefix blocks don't. The operator DEFAULT
-    (``operators/dedup.ngram_jaccard_pairs`` with ``block_cols``
-    unset) already uses the scale-safe (lang, len_bucket,
-    content-prefix) key; ``dedup_ngram_jaccard_prefix`` is the catalog
-    query that certifies it (2.43x cold / 2.24x warm at 10x). Kept,
-    contract frozen, for driver-certificate continuity and as the
-    measured counter-example of metadata-only blocking.
-
-    Exact char-3-gram Jaccard: the precision-style verify pass
-    (MinHash+LSH is the recall-style discovery pass; a near-dup whose
-    length crosses a bucket boundary is deliberately out of scope).
-    The per-doc gram-set frame builds once per corpus
-    (:func:`_shared_ngram_grams`); the blocked verify join runs per call."""
-    return ngram_jaccard_pairs(
-        augmented_documents(spark, sf_dir),
-        block_cols=["lang", "len_bucket"],
-        n=3,
-        min_jaccard=0.5,
-        len_bucket_width=20,
-        gram_sets=_shared_ngram_grams(spark, sf_dir),
-    )
-
-
-DEPRECATED["dedup_ngram_jaccard"] = "dedup_ngram_jaccard_prefix"
 
 
 @query(
@@ -848,22 +702,20 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``lower(ltrim(text))`` content-prefix key's cardinality grows WITH
 # the corpus, so block populations are bounded by boilerplate-sharing,
 # not corpus size (SCALE.md). The oracle is the exact DuckDB
-# restatement of the refined blocking: same grams CTE as
-# ``dedup_ngram_jaccard`` plus the prefix key in the block-join
-# predicate.
+# restatement of the refined blocking: the prefix key joins the
+# (lang, length-bucket) block-join predicate.
 
 
 def _shared_prefix_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(app, corpus) char-3-gram sets carrying the REFINED
-    (lang, len_bucket, text_prefix) block keys — same rows as
-    :func:`_shared_ngram_grams`, one extra key column; shared
-    separately because the two queries pin different block
-    contracts."""
+    """Per-(app, corpus) char-3-gram sets carrying the
+    (lang, len_bucket, text_prefix) block keys: the explode ->
+    collect_set aggregate is the query's dominant per-call cost and
+    depends only on the corpus (the Jaccard threshold and the blocked
+    join run per call)."""
     return shared(
         spark,
         sf_dir,
         "prefix_grams",
-        # block_cols defaulted -> (lang, len_bucket, text_prefix)
         lambda: ngram_gram_sets(
             augmented_documents(spark, sf_dir), n=3, len_bucket_width=20
         ),
@@ -903,10 +755,11 @@ _NGRAM_PREFIX_ORACLE = f"""
 
 @query("dedup_ngram_jaccard_prefix", _NGRAM_PREFIX_ORACLE)
 def dedup_ngram_jaccard_prefix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact char-3-gram Jaccard over the operator's defaulted
+    """Exact char-3-gram Jaccard over the operator's
     (lang, 20-char-length-bucket, 12-char-content-prefix) blocks — the
-    corpus-scale-safe verify pass. Same exact per-pair Jaccard as
-    ``dedup_ngram_jaccard``; the additional prefix key scopes the
+    corpus-scale-safe verify pass. MinHash+LSH is the recall-style
+    discovery pass, and a near-dup whose length crosses a bucket
+    boundary is deliberately out of scope. The prefix key scopes the
     operator to near-dups whose first ``DEFAULT_PREFIX_LEN`` lowered,
     left-trimmed chars agree (edits inside the prefix belong to the
     MinHash+LSH discovery pass), which is what keeps block populations

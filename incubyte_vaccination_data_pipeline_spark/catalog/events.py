@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
+from incubyte_vaccination_data_pipeline_spark.catalog.relational import _bucket_sql
 from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
@@ -907,29 +908,9 @@ def stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg, "ivdp_stream_hopping")
 
 
-def _cms_bucket_sql(key: str, half: int) -> str:
-    """DuckDB positional decode of an md5 half -> [0, 64) bucket (the
-    ``agg_heavy_hitters_cms`` recipe, restated here over the events key)."""
-    from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
-        md5_half_decode_sql,
-    )
-
-    start = 1 if half == 0 else 9
-    return (
-        f"({md5_half_decode_sql(f'md5(cast({key} as string))', start, 'strpos')}"
-        f" % 64)"
-    )
-
-
-_SHH_B0 = None  # filled right below (helper needs to exist first)
-_SHH_B1 = None
-
-
-def _shh_buckets() -> tuple[str, str]:
-    return _cms_bucket_sql("user_id", 0), _cms_bucket_sql("user_id", 1)
-
-
-_SHH_B0, _SHH_B1 = _shh_buckets()
+#: the ``agg_heavy_hitters_cms`` bucket decode over the events key
+_SHH_B0 = _bucket_sql("user_id", 0, "strpos")
+_SHH_B1 = _bucket_sql("user_id", 1, "strpos")
 
 
 @query(

@@ -115,7 +115,7 @@ def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (no exchange reuse across self-join sides). The frame is compact
     # (|users| x |active days| rows), same policy as the dedup
     # signature checkpoints.
-    daily = daily.localCheckpoint(eager=False)
+    daily = durable_checkpoint(daily, eager=False)
 
     spine = (
         daily.groupBy("user_id")
@@ -904,7 +904,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
     )
-    v = v.localCheckpoint(eager=False)  # feeds median rank, dev, and output
+    v = durable_checkpoint(v, eager=False)  # feeds median rank, dev, and output
 
     def rank_median(df, col, out):
         w = Window.partitionBy("event_type").orderBy(col, "event_id")
@@ -921,7 +921,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = v.join(F.broadcast(m), "event_type").withColumn(
         "adev", F.abs(F.col("cents") - F.col("med_cents"))
     )
-    dev = dev.localCheckpoint(eager=False)  # feeds MAD rank and the filter
+    dev = durable_checkpoint(dev, eager=False)  # feeds MAD rank and the filter
     mad = rank_median(dev, "adev", "mad_cents")
     return (
         dev.join(F.broadcast(mad), "event_type")
@@ -1248,9 +1248,12 @@ def events_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     day; the DuckDB oracle restates the same coverage with a range
     join."""
     events = read_table(spark, sf_dir, "events")
-    active = events.select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).distinct().localCheckpoint(eager=False)
+    active = durable_checkpoint(
+        events.select(
+            "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        ).distinct(),
+        eager=False,
+    )
     days = active.select("day").distinct()
     covered = active.select(
         "user_id",

@@ -21,6 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
+from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
+    durable_checkpoint,
+)
 from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
@@ -86,13 +89,16 @@ def _graph_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
             )
             .distinct()
         )
-        edges = base.unionByName(
-            base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).localCheckpoint(eager=False)
-        deg = (
+        edges = durable_checkpoint(
+            base.unionByName(
+                base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            ),
+            eager=False,
+        )
+        deg = durable_checkpoint(
             edges.groupBy(F.col("src").alias("node"))
-            .agg(F.count(F.lit(1)).alias("out_deg"))
-            .localCheckpoint(eager=False)
+            .agg(F.count(F.lit(1)).alias("out_deg")),
+            eager=False,
         )
         return edges, deg
 
@@ -113,14 +119,14 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         li = read_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
-        return (
+        return durable_checkpoint(
             cooccurrence_pairs(li, "l_orderkey", "l_partkey")
             .select(F.col("lo").alias("pa"), F.col("hi").alias("pb"))
             .groupBy("pa", "pb")
             .agg(F.count(F.lit(1)).alias("__sup"))
             .filter(F.col("__sup") >= TRIANGLE_MIN_SUPPORT)
-            .select("pa", "pb")
-            .localCheckpoint(eager=False)
+            .select("pa", "pb"),
+            eager=False,
         )
 
     return shared(spark, sf_dir, "copurchase_pairs", build)
@@ -142,9 +148,12 @@ def _copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "copurchase_cc_labels",
-        lambda: connected_components(
-            _copurchase_pairs(spark, sf_dir), src="pa", dst="pb", max_rounds=12
-        ).localCheckpoint(eager=False),
+        lambda: durable_checkpoint(
+            connected_components(
+                _copurchase_pairs(spark, sf_dir), src="pa", dst="pb", max_rounds=12
+            ),
+            eager=False,
+        ),
     )
 
 
@@ -199,28 +208,24 @@ def graph_pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFr
 #: keeps ~4k signal edges)
 TRIANGLE_MIN_SUPPORT = 2
 
-#: the ONE SQL restatement of ``_copurchase_pairs`` in (lo, hi) alias
-#: form — shared by the per-node triangle and k-core-peel oracles so
-#: the support semantics live in one place (the pa/pb-aliased copies
-#: in this module's older oracles are fingerprint-frozen and must not
-#: be re-pointed; byte-identity of every consumer is test-pinned)
-PAIRS_LOHI_CTE = f"""pairs AS (
-        SELECT a.l_partkey AS lo, b.l_partkey AS hi
+
+def pairs_cte(lo: str = "lo", hi: str = "hi") -> str:
+    """The ONE SQL restatement of ``_copurchase_pairs``: the ``pairs``
+    CTE with its endpoints aliased ``lo``/``hi`` — shared by every
+    co-purchase graph oracle so the support semantics live in one
+    place."""
+    return f"""pairs AS (
+        SELECT a.l_partkey AS {lo}, b.l_partkey AS {hi}
         FROM lineitem a JOIN lineitem b
           ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY lo, hi HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
+        GROUP BY {lo}, {hi} HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
     )"""
 
 
 @query(
     "graph_triangle_count",
     oracle=f"""
-    WITH pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        WHERE a.l_partkey < b.l_partkey
-        GROUP BY pa, pb HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-    ),
+    WITH {pairs_cte("pa", "pb")},
     deg AS (
         SELECT node, COUNT(*) AS d
         FROM (SELECT pa AS node FROM pairs
@@ -283,15 +288,15 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     lt = (F.col("da.d") < F.col("db.d")) | (
         (F.col("da.d") == F.col("db.d")) & (F.col("pa") < F.col("pb"))
     )
-    oriented = (
+    oriented = durable_checkpoint(
         pairs.join(da, F.col("pa") == F.col("da.node"))
         .join(db, F.col("pb") == F.col("db.node"))
         .select(
             F.when(lt, F.col("pa")).otherwise(F.col("pb")).alias("src"),
             F.when(lt, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
             F.when(lt, F.col("db.d")).otherwise(F.col("da.d")).alias("dd"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     e1 = oriented.alias("e1")
     e2 = oriented.alias("e2")
@@ -312,12 +317,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_connected_components",
     oracle=f"""
-    WITH RECURSIVE pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        WHERE a.l_partkey < b.l_partkey
-        GROUP BY pa, pb HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-    ),
+    WITH RECURSIVE {pairs_cte("pa", "pb")},
     edges AS (
         SELECT pa AS src, pb AS dst FROM pairs
         UNION ALL SELECT pb, pa FROM pairs
@@ -390,12 +390,7 @@ _LINK_HUB_CAP = 256
 @query(
     "graph_link_prediction",
     oracle=f"""
-    WITH pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        WHERE a.l_partkey < b.l_partkey
-        GROUP BY pa, pb HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-    ),
+    WITH {pairs_cte("pa", "pb")},
     sym AS (
         SELECT pa AS src, pb AS dst FROM pairs
         UNION ALL SELECT pb, pa FROM pairs
@@ -514,12 +509,7 @@ LPA_ROUNDS = 2
 
 
 _LPA_ORACLE = f"""
-    WITH pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        WHERE a.l_partkey < b.l_partkey
-        GROUP BY pa, pb HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-    ),
+    WITH {pairs_cte("pa", "pb")},
     edges AS (
         SELECT pa AS src, pb AS dst FROM pairs
         UNION ALL SELECT pb AS src, pa AS dst FROM pairs
@@ -599,7 +589,7 @@ def graph_label_propagation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _triangle_oracle() -> str:
     return f"""
-    WITH {PAIRS_LOHI_CTE},
+    WITH {pairs_cte()},
     deg AS (
         SELECT node, COUNT(*) AS d FROM (
             SELECT lo AS node FROM pairs
@@ -680,7 +670,7 @@ def _kcore_oracle() -> str:
 
     k = KCORE_K
     return f"""
-    WITH {PAIRS_LOHI_CTE},
+    WITH {pairs_cte()},
     d0 AS (
         SELECT node, COUNT(*) AS degree FROM (
             SELECT lo AS node FROM pairs UNION ALL SELECT hi FROM pairs)

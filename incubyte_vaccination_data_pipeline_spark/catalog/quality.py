@@ -21,6 +21,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
+from incubyte_vaccination_data_pipeline_spark.operators.sampling import (
+    split_bucket_expr,
+    split_bucket_sql,
+)
+from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
+    durable_checkpoint,
+)
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
 #: deterministic snapshot mutation rates (modulus chosen so each
@@ -349,17 +356,6 @@ def quality_expectations_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DP_HEX = "0123456789abcdef"
-#: md5-derived 16-bit bucket of the group label under the dp-v1 salt —
-#: Spark's conv(hex, 16, 10) restated positionally for DuckDB (the
-#: split_train_val_test strpos recipe).
-_DP_BUCKET_SQL = (
-    "((strpos('{hex}', substring(md5('dp-v1' || o_orderpriority), 1, 1)) - 1) * 4096"
-    " + (strpos('{hex}', substring(md5('dp-v1' || o_orderpriority), 2, 1)) - 1) * 256"
-    " + (strpos('{hex}', substring(md5('dp-v1' || o_orderpriority), 3, 1)) - 1) * 16"
-    " + (strpos('{hex}', substring(md5('dp-v1' || o_orderpriority), 4, 1)) - 1))"
-).format(hex=_DP_HEX)
-
 #: Laplace scale b = sensitivity / epsilon = 1 / 0.5
 _DP_EPSILON = 0.5
 _DP_SCALE = 1.0 / _DP_EPSILON
@@ -370,7 +366,7 @@ _DP_SCALE = 1.0 / _DP_EPSILON
     oracle=f"""
     WITH g AS (
         SELECT o_orderpriority, COUNT(*) AS n_true,
-               ({_DP_BUCKET_SQL} + 0.5) / 65536.0 AS u
+               ({split_bucket_sql("o_orderpriority", "dp-v1")} + 0.5) / 65536.0 AS u
         FROM orders GROUP BY o_orderpriority
     )
     SELECT o_orderpriority, n_true,
@@ -403,9 +399,7 @@ def quality_dp_noisy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     g = orders.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_true"))
     u = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("dp-v1"), F.col("o_orderpriority"))), 1, 4), 16, 10)
-        .cast("double")
-        + F.lit(0.5)
+        split_bucket_expr("o_orderpriority", "dp-v1").cast("double") + F.lit(0.5)
     ) / F.lit(65536.0)
     noise = (
         F.lit(-_DP_SCALE)
@@ -465,7 +459,7 @@ def quality_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_obs"))
     )
     # 9-row frame feeds both the grand total and the output projection
-    g = g.localCheckpoint(eager=False)
+    g = durable_checkpoint(g, eager=False)
     t = g.agg(F.sum("n_obs").cast("bigint").alias("n"))
     p = "log10(1.0D + 1.0D / digit)"
     dev = f"(cast(n_obs as double) - cast(n as double) * {p})"

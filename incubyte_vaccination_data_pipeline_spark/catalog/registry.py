@@ -15,11 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-#: queries kept for driver-certificate continuity whose pinned contract
-#: is NOT the shape to copy at scale, mapped to their replacement. The
-#: query still runs and value-checks; new code should use the value.
-DEPRECATED: dict[str, str] = {}
-
 AS_OF = "2002-01-01"  # pinned "today" (order dates end 2001-08)
 
 

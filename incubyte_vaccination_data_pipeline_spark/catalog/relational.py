@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import AS_OF, query
 from incubyte_vaccination_data_pipeline_spark.operators.dedup import md5_half_decode_sql
+from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
+    durable_checkpoint,
+)
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
 _DEC = "decimal(18,2)"
@@ -1044,9 +1047,10 @@ def agg_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with no true_n column builds the 128 cells map-side from raw
     # rows and never groups by key at all; the bound column is what
     # forces the key aggregate here.)
-    truth = halves(
-        li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("true_n"))
-    ).localCheckpoint(eager=False)
+    truth = durable_checkpoint(
+        halves(li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("true_n"))),
+        eager=False,
+    )
     c0 = truth.groupBy("b0").agg(F.sum("true_n").alias("n0"))
     c1 = truth.groupBy("b1").agg(F.sum("true_n").alias("n1"))
     est = (

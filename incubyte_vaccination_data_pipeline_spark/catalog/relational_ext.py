@@ -23,6 +23,10 @@ from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
 )
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
+from incubyte_vaccination_data_pipeline_spark.operators.sampling import (
+    split_bucket_expr,
+    split_bucket_sql,
+)
 from incubyte_vaccination_data_pipeline_spark.shared_cache import shared
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
@@ -1605,7 +1609,7 @@ def _shared_kmv_frames(spark: SparkSession, sf_dir: str):
     (Spark self-joins duplicate the subtree: without the checkpoint
     the hashed->distinct->window pipeline ran twice per execution,
     measured 2x at sf0.1); keying the SAME checkpointed frames per
-    corpus keeps every downstream analyzed plan (and the driver
+    corpus keeps every downstream analyzed plan (and the plan
     fingerprint) byte-identical while dropping the per-call rebuild.
     Size: distinct (seg, customer) pairs — compact at any corpus
     scale."""
@@ -1755,7 +1759,8 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("h") < F.col("theta"))
         .select("seg", "h")
     )
-    merged = (
+    # <=2k rows; feeds kth + both counts
+    merged = durable_checkpoint(
         retained.groupBy("h")
         .agg(
             F.max(F.when(F.col("seg") == 1996, 1).otherwise(0)).alias("in_a"),
@@ -1763,8 +1768,8 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "mr", F.row_number().over(Window.partitionBy(F.lit(1)).orderBy("h"))
-        )
-        .localCheckpoint(eager=False)  # <=2k rows; feeds kth + both counts
+        ),
+        eager=False,
     )
     mtop = merged.agg(
         F.count(F.lit(1)).alias("n_m"),
@@ -1843,15 +1848,7 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _WRES_N = 100
-_WRES_HEX = "0123456789abcdef"
-#: 16-bit md5 bucket of the salted order key (split_train_val_test
-#: strpos recipe), restated positionally for DuckDB
-_WRES_BUCKET_SQL = (
-    "((strpos('{hex}', substring(md5('wres-v1' || CAST(o_orderkey AS VARCHAR)), 1, 1)) - 1) * 4096"
-    " + (strpos('{hex}', substring(md5('wres-v1' || CAST(o_orderkey AS VARCHAR)), 2, 1)) - 1) * 256"
-    " + (strpos('{hex}', substring(md5('wres-v1' || CAST(o_orderkey AS VARCHAR)), 3, 1)) - 1) * 16"
-    " + (strpos('{hex}', substring(md5('wres-v1' || CAST(o_orderkey AS VARCHAR)), 4, 1)) - 1))"
-).format(hex=_WRES_HEX)
+_WRES_BUCKET = split_bucket_sql("CAST(o_orderkey AS VARCHAR)", "wres-v1")
 
 
 @query(
@@ -1860,7 +1857,7 @@ _WRES_BUCKET_SQL = (
     WITH keyed AS (
         SELECT o_orderkey,
                CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-               CAST(floor(ln(({_WRES_BUCKET_SQL} + 0.5) / 65536.0)
+               CAST(floor(ln(({_WRES_BUCKET} + 0.5) / 65536.0)
                           / CAST(ROUND(o_totalprice * 100) AS BIGINT)
                           * 1152921504606846976.0) AS BIGINT) AS qkey
         FROM orders
@@ -1891,16 +1888,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     production multi-epoch sampler varies the salt per draw."""
     orders = read_table(spark, sf_dir, "orders")
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("wres-v1"), F.col("o_orderkey").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
+        split_bucket_expr("o_orderkey", "wres-v1").cast("double") + F.lit(0.5)
     ) / F.lit(65536.0)
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
     keyed = orders.select(
@@ -1923,7 +1911,7 @@ def _shared_basket_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames), it was already localCheckpointed per call because three
     branches consume it, and the distinct is the query's dominant
     per-call shuffle. Same checkpointed lineage -> analyzed plan and
-    driver fingerprint byte-identical (verified)."""
+    plan fingerprint byte-identical (verified)."""
 
     def build():
         return durable_checkpoint(
@@ -2104,7 +2092,7 @@ def orders_survival_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = orders.groupBy("o_custkey").agg(
         F.min(mi).alias("f"), F.max(mi).alias("l")
     )
-    c = c.localCheckpoint(eager=False)  # feeds gmax + lifetimes
+    c = durable_checkpoint(c, eager=False)  # feeds gmax + lifetimes
     g = c.agg(F.max("l").alias("gmax"))
     life = c.crossJoin(F.broadcast(g)).select(
         (F.col("l") - F.col("f")).cast("bigint").alias("k"),

@@ -8,6 +8,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incubyte_vaccination_data_pipeline_spark.catalog.registry import query
+from incubyte_vaccination_data_pipeline_spark.operators.sampling import (
+    split_bucket_expr,
+    split_bucket_sql,
+)
 from incubyte_vaccination_data_pipeline_spark.operators.text import (
     FINGERPRINT_MOD,
     FINGERPRINT_PREFIX,
@@ -132,23 +136,13 @@ _QUALITY_SQL = f"""round(0.4 * least(length(text) / 400.0, 1.0)
                                        - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
                                       * 1.0 / length(text) * 10.0, 1.0)), 6)"""
 
-#: first 4 hex chars of md5('qsample-v1' || doc_id) as an int in
-#: [0, 65536) — the strpos positional arithmetic mirrors Spark's
-#: conv(hex, 16, 10) (same idiom as the split/sample family)
-_QSAMPLE_BUCKET_SQL = (
-    "((strpos('0123456789abcdef', substring(md5('qsample-v1' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096"
-    " + (strpos('0123456789abcdef', substring(md5('qsample-v1' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256"
-    " + (strpos('0123456789abcdef', substring(md5('qsample-v1' || CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16"
-    " + (strpos('0123456789abcdef', substring(md5('qsample-v1' || CAST(doc_id AS VARCHAR)), 4, 1)) - 1))"
-)
-
 
 @query(
     "sample_quality_weighted",
     oracle=f"""
     WITH scored AS (
         SELECT doc_id,
-               {_QSAMPLE_BUCKET_SQL} AS accept_bucket,
+               {split_bucket_sql("CAST(doc_id AS VARCHAR)", "qsample-v1")} AS accept_bucket,
                {_QUALITY_SQL} AS quality
         FROM documents
     )
@@ -169,10 +163,6 @@ def sample_quality_weighted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no sample(), no RNG state), so at 100 TB the sampler is
     free.  The oracle restates bucket and score exactly and re-applies
     the same inequality — a full value check over the kept rows."""
-    from incubyte_vaccination_data_pipeline_spark.operators.sampling import (
-        split_bucket_expr,
-    )
-
     docs = read_table(spark, sf_dir, "documents")
     bucket = split_bucket_expr("doc_id", salt="qsample-v1")
     return (

@@ -311,7 +311,7 @@ def text_bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wc feeds both the iteration-1 count (top merge) and the marked
     # re-expansion; checkpoint the compact vocabulary frame so the two
     # branches share one scan + aggregate (self-join subtree policy).
-    wc = wc.localCheckpoint(eager=False)
+    wc = durable_checkpoint(wc, eager=False)
     p1 = (
         wc.select(
             F.explode(F.expr("sequence(1, length(w) - 1)")).alias("i"), "w", "n"
@@ -515,7 +515,9 @@ def text_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "slice(ws, 1, greatest(10, cast(floor(size(ws) * 2.0 / 5) as int)))"
         ).alias("sws"),
     )
-    sgrams = _containment_grams(snips, "sid", "sws").localCheckpoint(eager=False)
+    sgrams = durable_checkpoint(
+        _containment_grams(snips, "sid", "sws"), eager=False
+    )
     ranked = sgrams.join(df_counts, "gram", "left").select(
         "sid",
         "gram",
@@ -619,15 +621,18 @@ def text_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("ws")
     ).filter(F.size("ws") >= 2)
-    occ = toks.select(
-        "doc_id",
-        F.explode(F.expr("sequence(1, size(ws) - 1)")).alias("i"),
-        "ws",
-    ).select(
-        "doc_id",
-        F.expr("ws[i - 1]").alias("w1"),
-        F.expr("ws[i]").alias("w2"),
-    ).localCheckpoint(eager=False)
+    occ = durable_checkpoint(
+        toks.select(
+            "doc_id",
+            F.explode(F.expr("sequence(1, size(ws) - 1)")).alias("i"),
+            "ws",
+        ).select(
+            "doc_id",
+            F.expr("ws[i - 1]").alias("w1"),
+            F.expr("ws[i]").alias("w2"),
+        ),
+        eager=False,
+    )
 
     c12 = occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
     c1 = occ.groupBy("w1").agg(F.count(F.lit(1)).alias("n1"))

@@ -14,23 +14,15 @@ from incubyte_vaccination_data_pipeline_spark.operators.contamination import (
     exact_contamination,
     ngram_contamination,
 )
-from incubyte_vaccination_data_pipeline_spark.operators.sampling import with_split
+from incubyte_vaccination_data_pipeline_spark.operators.sampling import (
+    split_bucket_sql,
+    with_split,
+)
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import read_table
 
-# DuckDB restatement of operators/sampling.split_bucket_expr: first 4
-# md5 hex chars of (salt || key) as an int in [0, 65536). Spark's
-# conv(hex, 16, 10) == positional strpos arithmetic (same trick as the
-# dedup family's md5_half_decode_sql).
-_HEX = "0123456789abcdef"
-_BUCKET_SQL = (
-    "((strpos('{hex}', substring(md5('split-v1' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096"
-    " + (strpos('{hex}', substring(md5('split-v1' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256"
-    " + (strpos('{hex}', substring(md5('split-v1' || CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16"
-    " + (strpos('{hex}', substring(md5('split-v1' || CAST(doc_id AS VARCHAR)), 4, 1)) - 1))"
-).format(hex=_HEX)
-
 SPLIT_COUNTS_ORACLE = f"""
-    WITH b AS (SELECT doc_id, {_BUCKET_SQL} AS bucket FROM documents),
+    WITH b AS (SELECT doc_id, {split_bucket_sql("CAST(doc_id AS VARCHAR)")} AS bucket
+               FROM documents),
     s AS (
         SELECT doc_id,
                CASE WHEN bucket < 58982 THEN 'train'
@@ -64,7 +56,8 @@ def split_train_val_test_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CONTAMINATION_ORACLE = f"""
-    WITH b AS (SELECT doc_id, text, {_BUCKET_SQL} AS bucket FROM documents),
+    WITH b AS (SELECT doc_id, text, {split_bucket_sql("CAST(doc_id AS VARCHAR)")} AS bucket
+               FROM documents),
     tr AS (SELECT doc_id, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
            FROM b WHERE bucket < 58982),
     te AS (SELECT doc_id, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h

@@ -84,66 +84,25 @@ MINHASH_COEFFS = [
 ]
 
 
-def md5_half_decode_sql(md5_col: str, start: int, instr_fn: str = "instr") -> str:
-    """SQL expression decoding 8 hex digits of ``md5_col`` starting at
-    1-based ``start`` into a bigint via positional lookup — the only
-    engine difference is the position function name (Spark ``instr``,
-    DuckDB ``strpos``), so the oracle reuses this builder verbatim.
-    Power-of-16 literals carry an explicit BIGINT cast: the first term
-    is 15 * 16^7 > 2^31, which would overflow 32-bit int arithmetic
-    (DuckDB errors; Spark ANSI mode errors too)."""
+def md5_half_decode_sql(
+    md5_col: str, start: int, instr_fn: str = "instr", digits: int = 8
+) -> str:
+    """SQL expression decoding ``digits`` hex digits of ``md5_col``
+    starting at 1-based ``start`` into a bigint via positional lookup —
+    the one hex-to-integer decoder of the package. The only engine
+    difference is the position function name (Spark ``instr``, DuckDB
+    ``strpos``), so every oracle reuses this builder verbatim. The
+    default 8 digits is one 32-bit md5 half (MinHash, CMS); SimHash
+    decodes ``bits // 4`` digits and the salted samplers 4.
+    Power-of-16 literals carry an explicit BIGINT cast: at 8 digits the
+    first term is 15 * 16^7 > 2^31, which would overflow 32-bit int
+    arithmetic (DuckDB errors; Spark ANSI mode errors too)."""
     terms = [
         f"({instr_fn}('{HEX_DIGITS}', substring({md5_col}, {start + k}, 1)) - 1)"
-        f" * cast({16 ** (7 - k)} as bigint)"
-        for k in range(8)
+        f" * cast({16 ** (digits - 1 - k)} as bigint)"
+        for k in range(digits)
     ]
     return "(" + " + ".join(terms) + ")"
-
-
-def word_shingles(text_col: str, k: int = 3) -> Column:
-    """Array of k-word shingles of the lower-cased, space-split text."""
-    return F.expr(
-        f"""
-        transform(
-            sequence(1, greatest(size(split(lower({text_col}), ' ')) - {k - 1}, 0)),
-            i -> array_join(slice(split(lower({text_col}), ' '), i, {k}), ' '))
-        """
-    )
-
-
-def char_ngrams(text_col: str, n: int = 3) -> Column:
-    """Distinct character n-grams of the lower-cased text."""
-    return F.expr(
-        f"""
-        array_distinct(transform(
-            sequence(1, greatest(length(lower({text_col})) - {n - 1}, 0)),
-            i -> substring(lower({text_col}), i, {n})))
-        """
-    )
-
-
-def minhash_signature(shingles_col: str, n_hashes: int = 12) -> Column:
-    """MinHash signature (array-expression form, for small in-row
-    shingle arrays): per position i, min over shingles of
-    ``(A_i*v1 + B_i*v2 + C_i) mod p`` where (v1, v2) are the decoded
-    md5 halves. Bit-identical to the distributed
-    ``minhash_signatures`` form, which is the path real queries take
-    (array lambdas are interpreted, not codegen'd). NULL-free only
-    when the shingle array is non-empty — filter first."""
-    d1 = md5_half_decode_sql("m", 1)
-    d2 = md5_half_decode_sql("m", 9)
-    halves = (
-        f"transform(transform({shingles_col}, s -> md5(s)),"
-        f" m -> struct(cast({d1} as bigint) as v1, cast({d2} as bigint) as v2))"
-    )
-    mins = [
-        F.expr(
-            f"array_min(transform({halves},"
-            f" x -> ({a} * x.v1 + {b} * x.v2 + {c}) % {MINHASH_PRIME}))"
-        )
-        for a, b, c in MINHASH_COEFFS[:n_hashes]
-    ]
-    return F.array(*mins)
 
 
 def lsh_band_keys(sig_col: str, bands: int, rows_per_band: int) -> Column:
@@ -170,38 +129,6 @@ def signature_agreement(sig_a: str, sig_b: str, n_hashes: int) -> Column:
         f"""
         cast(size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y),
                          v -> v)) as double) / {n_hashes}
-        """
-    )
-
-
-def simhash16(tokens_col: str) -> Column:
-    """16-bit SimHash over a token array.
-
-    Each token votes +-1 per bit of the first 4 hex digits of its md5;
-    the fingerprint sets bit j iff the vote sum is positive.
-    """
-    # token -> 16-bit int from 4 hex digits (positional decode)
-    tok_val = (
-        "(instr('{h}', substring(md5(t), 1, 1)) - 1) * 4096"
-        " + (instr('{h}', substring(md5(t), 2, 1)) - 1) * 256"
-        " + (instr('{h}', substring(md5(t), 3, 1)) - 1) * 16"
-        " + (instr('{h}', substring(md5(t), 4, 1)) - 1)"
-    ).format(h=HEX_DIGITS)
-    return F.expr(
-        f"""
-        aggregate(
-            transform(sequence(0, 15),
-                      j -> aggregate({tokens_col}, 0L,
-                                     (acc, t) -> acc + CASE WHEN ({tok_val}) div
-                                         CASE j WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4
-                                                WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32
-                                                WHEN 6 THEN 64 WHEN 7 THEN 128 WHEN 8 THEN 256
-                                                WHEN 9 THEN 512 WHEN 10 THEN 1024 WHEN 11 THEN 2048
-                                                WHEN 12 THEN 4096 WHEN 13 THEN 8192
-                                                WHEN 14 THEN 16384 ELSE 32768 END % 2 = 1
-                                         THEN 1L ELSE -1L END)),
-            0L,
-            (acc, v) -> acc * 2L + CASE WHEN v > 0 THEN 1L ELSE 0L END)
         """
     )
 
@@ -283,8 +210,7 @@ def simhash_fingerprints(
     Each token's md5 is decoded ONCE into a ``bits``-bit value (the
     array-lambda form recomputed md5 per bit — 16x), the per-bit +-1
     votes are codegen'd columns, and a map-side combinable groupBy
-    sums votes per doc before packing the fingerprint. At ``bits=16``
-    the arithmetic is bit-identical to ``simhash16``; wider
+    sums votes per doc before packing the fingerprint. Wider
     fingerprints (32 here, 64+ in production) are what make
     Hamming-band blocking scale — band-bucket count is 2^(bits/bands),
     so a 16-bit fingerprint caps at 16 buckets/band (quadratic bucket
@@ -319,11 +245,7 @@ def _simhash_decode_col(digits: int) -> Column:
     dominated *driver-side plan-build* time — ~1.4 s per
     ``simhash_fingerprints`` call at bits=32 — while executors ran the
     query in 0.7 s)."""
-    dec = " + ".join(
-        f"(instr('{HEX_DIGITS}', substring(m, {p + 1}, 1)) - 1)"
-        f" * cast({16 ** (digits - 1 - p)} as bigint)"
-        for p in range(digits)
-    )
+    dec = md5_half_decode_sql("m", 1, digits=digits)
     return F.expr(f"cast({dec} as bigint)").alias("v")
 
 
@@ -594,26 +516,20 @@ def incremental_minhash_matches(
 
 
 #: chars of the lowered, left-trimmed text prefix used as the
-#: content-refined third block key when ``block_cols`` is defaulted
+#: content-refined third block key
 DEFAULT_PREFIX_LEN = 12
 
+#: the n-gram verify join's block key (see :func:`_with_block_keys`)
+BLOCK_KEYS = ["lang", "len_bucket", "text_prefix"]
 
-def _resolve_block_cols(
-    df: DataFrame,
-    block_cols: list[str] | None,
-    len_bucket_width: int,
-    text_col: str = "text",
-) -> tuple[DataFrame, list[str], bool]:
-    """Returns (df, block_cols, defaulted). ``defaulted`` distinguishes
-    "caller omitted block_cols" (we synthesize the block columns) from
-    "caller explicitly passed a list" (their own columns are used
-    verbatim) — comparing against the default VALUE would silently
-    rewrite an explicit list (ADVICE r9).
 
-    The DEFAULT block key is (lang, len_bucket, text_prefix): language
-    + ``len_bucket_width``-char length bucket + the first
-    ``DEFAULT_PREFIX_LEN`` chars of ``lower(ltrim(text))``. The
-    content prefix is what keeps the verify join sub-quadratic at
+def _with_block_keys(
+    df: DataFrame, len_bucket_width: int, text_col: str = "text"
+) -> DataFrame:
+    """``df`` with the :data:`BLOCK_KEYS` columns the n-gram verify
+    join blocks on: language + ``len_bucket_width``-char length bucket
+    + the first ``DEFAULT_PREFIX_LEN`` chars of ``lower(ltrim(text))``.
+    The content prefix is what keeps the verify join sub-quadratic at
     scale: within a fixed (lang, length-bucket) block the population
     grows linearly with the corpus and the pair join quadratically
     (round-9 stress measured 28x cold at 10x data); the prefix key's
@@ -624,29 +540,19 @@ def _resolve_block_cols(
     blocks and are out of scope for this precision/verify operator —
     recall-oriented discovery (any-position edits) belongs to
     MinHash+LSH. ``ltrim`` + ``lower`` absorb the most common benign
-    prefix perturbations (leading whitespace, case). Callers wanting
-    the historical 2-column blocking pass
-    ``block_cols=["lang", "len_bucket"]`` with ``len_bucket``
-    precomputed (the catalog's ``dedup_ngram_jaccard`` pins this for
-    oracle-contract stability; ``dedup_ngram_jaccard_prefix``
-    exercises this default)."""
-    defaulted = block_cols is None
-    if defaulted:
-        block_cols = ["lang", "len_bucket", "text_prefix"]
-        df = df.withColumn(
-            "len_bucket", (F.col("n_chars") / len_bucket_width).cast("int")
-        ).withColumn(
-            "text_prefix",
-            F.substring(F.ltrim(F.lower(F.col(text_col))), 1, DEFAULT_PREFIX_LEN),
-        )
-    return df, block_cols, defaulted
+    prefix perturbations (leading whitespace, case)."""
+    return df.withColumn(
+        "len_bucket", (F.col("n_chars") / len_bucket_width).cast("int")
+    ).withColumn(
+        "text_prefix",
+        F.substring(F.ltrim(F.lower(F.col(text_col))), 1, DEFAULT_PREFIX_LEN),
+    )
 
 
 def ngram_gram_sets(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    block_cols: list[str] | None = None,
     n: int = 3,
     len_bucket_width: int = 100,
 ) -> DataFrame:
@@ -662,25 +568,23 @@ def ngram_gram_sets(
     both sides of the downstream self-join reference it (Spark
     self-joins duplicate the subtree: without it the source is scanned
     twice and the explode -> collect_set aggregate runs twice)."""
-    df, block_cols, _ = _resolve_block_cols(
-        df, block_cols, len_bucket_width, text_col=text_col
-    )
+    df = _with_block_keys(df, len_bucket_width, text_col=text_col)
     lowered = fanout_repartition(
         df.select(
             F.col(id_col).alias("doc"),
-            *block_cols,
+            *BLOCK_KEYS,
             F.lower(F.col(text_col)).alias("lt"),
         ).filter(F.length("lt") >= n),
         "doc",
     )
     gram_rows = lowered.select(
         "doc",
-        *block_cols,
+        *BLOCK_KEYS,
         F.explode(F.expr(f"sequence(1, length(lt) - {n - 1})")).alias("pos"),
         "lt",
-    ).select("doc", *block_cols, F.expr(f"substring(lt, pos, {n})").alias("gram"))
+    ).select("doc", *BLOCK_KEYS, F.expr(f"substring(lt, pos, {n})").alias("gram"))
     return durable_checkpoint(
-        gram_rows.groupBy("doc", *block_cols).agg(
+        gram_rows.groupBy("doc", *BLOCK_KEYS).agg(
             F.collect_set("gram").alias("grams")
         )
     )
@@ -690,7 +594,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    block_cols: list[str] | None = None,
     n: int = 3,
     min_jaccard: float = 0.3,
     len_bucket_width: int = 100,
@@ -698,21 +601,18 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact character-n-gram Jaccard over blocked candidate pairs.
 
-    Blocking (default: language + length bucket + content prefix,
-    see :func:`_resolve_block_cols`) keeps the pair join sub-quadratic
+    Blocking (language + length bucket + content prefix, see
+    :func:`_with_block_keys`) keeps the pair join sub-quadratic
     at corpus scale; the set intersection runs per-pair as an array
     expression. Narrower ``len_bucket_width`` cuts candidate pairs
     quadratically at the cost of missing near-dups whose lengths
-    straddle a bucket boundary, and the default content-prefix key
+    straddle a bucket boundary, and the content-prefix key
     additionally scopes out near-dups edited within their first
     ``DEFAULT_PREFIX_LEN`` chars (recall-oriented discovery belongs to
     MinHash+LSH; this is the precision/verify-style operator).
     ``gram_sets`` short-circuits the gram build with a precomputed
     :func:`ngram_gram_sets` frame (per-corpus cache path).
     Returns (doc_a, doc_b, jaccard)."""
-    _, block_cols, defaulted = _resolve_block_cols(
-        df, block_cols, len_bucket_width, text_col=text_col
-    )
     grams = (
         gram_sets
         if gram_sets is not None
@@ -720,16 +620,15 @@ def ngram_jaccard_pairs(
             df,
             text_col=text_col,
             id_col=id_col,
-            block_cols=None if defaulted else block_cols,
             n=n,
             len_bucket_width=len_bucket_width,
         )
     )
     a = grams.select(
-        *block_cols, F.col("doc").alias("doc_a"), F.col("grams").alias("ga")
+        *BLOCK_KEYS, F.col("doc").alias("doc_a"), F.col("grams").alias("ga")
     )
     b = grams.select(
-        *block_cols, F.col("doc").alias("doc_b"), F.col("grams").alias("gb")
+        *BLOCK_KEYS, F.col("doc").alias("doc_b"), F.col("grams").alias("gb")
     )
     # size-ratio prefilter: J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so
     # pairs whose set sizes are too far apart can never clear the
@@ -744,7 +643,7 @@ def ngram_jaccard_pairs(
     # predicate (which would re-run the intersection per comparison —
     # measured 1.7x on the whole query at sf0.1).
     p1 = (
-        a.join(b, on=block_cols)
+        a.join(b, on=BLOCK_KEYS)
         .filter((F.col("doc_a") < F.col("doc_b")) & size_ok)
         .select(
             "doc_a",

@@ -20,6 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
+    durable_checkpoint,
+)
+
 
 def triangle_counts(
     edges: DataFrame, u_col: str = "lo", v_col: str = "hi"
@@ -48,14 +52,14 @@ def triangle_counts(
     # per self-join branch, multiplying the most expensive upstream
     # aggregation for any caller whose edge frame isn't already
     # materialized
-    pairs = (
+    pairs = durable_checkpoint(
         edges.select(
             F.least(F.col(u_col), F.col(v_col)).alias("lo"),
             F.greatest(F.col(u_col), F.col(v_col)).alias("hi"),
         )
         .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     deg = (
         pairs.select(F.col("lo").alias("node"))
@@ -66,14 +70,14 @@ def triangle_counts(
     up = (F.col("dl") < F.col("dh")) | (
         (F.col("dl") == F.col("dh")) & (F.col("lo") < F.col("hi"))
     )
-    oriented = (
+    oriented = durable_checkpoint(
         pairs.join(deg.select(F.col("node").alias("lo"), F.col("d").alias("dl")), "lo")
         .join(deg.select(F.col("node").alias("hi"), F.col("d").alias("dh")), "hi")
         .select(
             F.when(up, F.col("lo")).otherwise(F.col("hi")).alias("src"),
             F.when(up, F.col("hi")).otherwise(F.col("lo")).alias("dst"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     e1 = oriented.select("src", F.col("dst").alias("b"))
     e2 = oriented.select("src", F.col("dst").alias("c"))
@@ -130,10 +134,6 @@ def kcore(
     (O(log n) typical); a 100 TB co-occurrence graph runs the
     fixpoint path with the checkpoint dir set.
     """
-    from incubyte_vaccination_data_pipeline_spark.plans.checkpoints import (
-        durable_checkpoint,
-    )
-
     cur = (
         edges.select(
             F.least(F.col(u_col), F.col(v_col)).alias("lo"),

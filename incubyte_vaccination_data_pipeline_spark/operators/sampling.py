@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from incubyte_vaccination_data_pipeline_spark.operators.dedup import md5_half_decode_sql
+
 BUCKETS = 65536  # 16 bits of md5 -> plenty of resolution for 3 splits
 
 #: conventional 90/5/5; order matters (cumulative boundaries)
@@ -35,6 +37,14 @@ def split_bucket_expr(key_col: str, salt: str = "split-v1") -> Column:
     """
     hex4 = F.substring(F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), 1, 4)
     return F.conv(hex4, 16, 10).cast("int")
+
+
+def split_bucket_sql(key_sql: str, salt: str = "split-v1") -> str:
+    """DuckDB restatement of :func:`split_bucket_expr` for the oracles:
+    the same 4 md5 hex digits of ``salt || key_sql``, decoded by the
+    one positional decoder. ``key_sql`` must already be a string
+    expression (``CAST(doc_id AS VARCHAR)``)."""
+    return md5_half_decode_sql(f"md5('{salt}' || {key_sql})", 1, "strpos", digits=4)
 
 
 def split_boundaries(fractions: dict[str, float]) -> list[tuple[str, int]]:

@@ -159,7 +159,7 @@ def _plane(j: int, dims: int) -> list[float]:
     out = []
     for d in range(dims):
         h = hashlib.md5(f"{j}|{d}".encode()).hexdigest()
-        out.append(1.0 if "0123456789abcdef".index(h[0]) % 2 == 0 else -1.0)
+        out.append(1.0 if int(h[0], 16) % 2 == 0 else -1.0)
     return out
 
 

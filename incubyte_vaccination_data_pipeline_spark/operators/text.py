@@ -110,11 +110,6 @@ def normalized_text(text_col: str) -> Column:
     return F.trim(c)
 
 
-def content_fingerprint(text_col: str) -> Column:
-    """md5 of the normalized text (whole-document fingerprint)."""
-    return F.md5(normalized_text(text_col))
-
-
 def fingerprint_frame(df, text_col: str = "text", id_col: str = "doc_id"):
     """(doc_id, content_md5, rolling_hash) per document.
 

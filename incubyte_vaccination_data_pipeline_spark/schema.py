@@ -122,11 +122,3 @@ WAREHOUSE_SCHEMA = T.StructType(
         T.StructField("SOURCE_FILE", T.StringType(), True),
     ]
 )
-
-
-def synonym_groups() -> dict[str, list[str]]:
-    """canonical name -> ordered list of source columns mapping to it."""
-    groups: dict[str, list[str]] = {}
-    for src, dst in COLUMN_MAP.items():
-        groups.setdefault(dst, []).append(src)
-    return groups

@@ -8,11 +8,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from incubyte_vaccination_data_pipeline_spark.catalog import (  # noqa: E402
-    DEPRECATED,
-    ORACLES,
-    QUERIES,
-)
+from incubyte_vaccination_data_pipeline_spark.catalog import ORACLES, QUERIES  # noqa: E402
 
 
 def first_sentence(doc: str | None) -> str:
@@ -41,13 +37,8 @@ def main() -> None:
         lines.append(f"## {mod} ({len(by_module[mod])})")
         lines.append("")
         for name in sorted(by_module[mod]):
-            tag = (
-                f" *(deprecated — use `{DEPRECATED[name]}`)*"
-                if name in DEPRECATED
-                else ""
-            )
             lines.append(
-                f"- **{name}**{tag} — {first_sentence(QUERIES[name].__doc__)}"
+                f"- **{name}** — {first_sentence(QUERIES[name].__doc__)}"
             )
         lines.append("")
 

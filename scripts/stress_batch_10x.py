@@ -26,15 +26,11 @@ Two sections:
    parameters are corpus-size-free).  Prints cold (includes each
    per-corpus shared-index build) and warm wall time at 1x and Nx.
    The honest expectation is ~linear cold and ~linear-or-better warm
-   for every query except ``dedup_ngram_jaccard`` — the query that
-   PINS the historical 2-column (lang, length-bucket) blocking, whose
-   blocked self-join grows quadratically within blocks (at Nx corpus
-   with the same language mix its candidate set grows ~N^2/blocks).
-   ``dedup_ngram_jaccard_prefix`` is the round-10 answer: the
-   operator's DEFAULT blocking adds a 12-char content-prefix key whose
-   cardinality grows with the corpus, so the same exact verify join
-   stays ~linear — the two rows side by side are the point of this
-   section.
+   for every query: ``dedup_ngram_jaccard_prefix`` blocks its exact
+   verify join on a 12-char content-prefix key (beside language and
+   length bucket) whose cardinality grows with the corpus, so block
+   populations stay bounded where a (lang, length-bucket) key alone
+   grows quadratically within blocks.
 2. **ANN via the operators with corpus-tracking parameters**: the
    catalog pins IVF_N_CENTROIDS=16 as a small-SF choice; the OPERATOR
    default is now corpus-derived (``derived_ivf_cells`` = sqrt(N),
@@ -69,7 +65,6 @@ DEDUP_QUERIES = [
     "dedup_keep_best",
     "dedup_cleaned_corpus",
     "dedup_simhash_hamming",
-    "dedup_ngram_jaccard",
     "dedup_ngram_jaccard_prefix",
     "text_containment_dedup",
     "dedup_incremental_batch",
@@ -737,16 +732,15 @@ def main() -> None:
     ap.add_argument(
         "--keep-pinned",
         action="store_true",
-        help="keep the pinned small-SF configs (dedup_ngram_jaccard, "
-        "dedup_simhash_hamming) in the table at factor > 10 despite "
-        "their documented saturation",
+        help="keep the pinned small-SF config (dedup_simhash_hamming) "
+        "in the table at factor > 10 despite its documented saturation",
     )
     ap.add_argument(
         "--skip",
         default="",
-        help="comma-separated query names to exclude (e.g. the documented-"
-        "quadratic dedup_ngram_jaccard at factors past 10, where its "
-        "within-block candidate set alone would dominate the run)",
+        help="comma-separated query names to exclude (e.g. the 32-bit "
+        "dedup_simhash_hamming at factors past 10, where its saturated "
+        "band buckets alone would dominate the run)",
     )
     ap.add_argument(
         "--sections",
@@ -761,16 +755,15 @@ def main() -> None:
     sections = {x for x in args.sections.split(",") if x}
     skip = {q for q in args.skip.split(",") if q}
     if args.factor > 10 and not args.keep_pinned:
-        # past 10x the two queries whose small-SF pins are the
-        # DOCUMENTED saturation cases would dominate the run (r9: the
-        # 2-col ngram blocking; r10: 32-bit simhash at 184s/63x) — the
-        # operator-default variants cover both paths, so auto-skip the
-        # pins unless --keep-pinned
-        for q in ("dedup_ngram_jaccard", "dedup_simhash_hamming"):
-            if q not in skip:
-                skip.add(q)
-                print(f"(auto-skip at factor>{10}: {q} — pinned small-SF "
-                      "config, documented saturation; --keep-pinned to keep)")
+        # past 10x the query whose small-SF pin is the DOCUMENTED
+        # saturation case would dominate the run (32-bit simhash at
+        # 184s/63x) — the operator-default width covers the path, so
+        # auto-skip the pin unless --keep-pinned
+        q = "dedup_simhash_hamming"
+        if q not in skip:
+            skip.add(q)
+            print(f"(auto-skip at factor>{10}: {q} — pinned small-SF "
+                  "config, documented saturation; --keep-pinned to keep)")
     if skip:
         DEDUP_QUERIES[:] = [q for q in DEDUP_QUERIES if q not in skip]
         print(f"(skipping: {sorted(skip)})")

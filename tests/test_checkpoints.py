@@ -82,3 +82,51 @@ def test_reliable_path_in_fresh_session(sf_dir, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "RELIABLE-OK" in proc.stdout
+
+
+_CATALOG_RELIABLE_SCRIPT = """
+import os, sys
+from pyspark.sql import SparkSession
+
+sys.path.insert(0, {repo!r})
+from incubyte_vaccination_data_pipeline_spark import catalog
+from incubyte_vaccination_data_pipeline_spark.shared_cache import release_shared_state
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.sql.session.timeZone", "UTC")
+         .config("spark.ui.enabled", "false").getOrCreate())
+sf_dir, ckdir = {sf_dir!r}, {ckdir!r}
+names = ["graph_triangle_count", "events_anomaly_mad"]
+
+def rows(name):
+    return sorted(map(tuple, catalog.QUERIES[name](spark, sf_dir).collect()))
+
+local = {{n: rows(n) for n in names}}
+release_shared_state(sf_dir)
+spark.sparkContext.setCheckpointDir(ckdir)
+for n in names:
+    assert rows(n) == local[n], n + " diverged on the reliable path"
+assert any(fs for _, _, fs in os.walk(ckdir)), "no reliable checkpoint files"
+print("CATALOG-RELIABLE-OK", {{n: len(r) for n, r in local.items()}})
+"""
+
+
+def test_catalog_lazy_checkpoints_take_reliable_path(sf_dir, tmp_path):
+    """Queries whose lazy lineage cuts go through ``durable_checkpoint``
+    (the co-purchase edge list and oriented edges of
+    ``graph_triangle_count``, the value and deviation frames of
+    ``events_anomaly_mad``) write reliable checkpoint files when the
+    session has a checkpoint dir and return the rows of the local
+    path."""
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = _CATALOG_RELIABLE_SCRIPT.format(
+        repo=repo, sf_dir=sf_dir, ckdir=str(tmp_path / "ck")
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=600
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "CATALOG-RELIABLE-OK" in proc.stdout

@@ -65,7 +65,7 @@ def test_minhash_band_join_is_equi_join(spark, sf_dir):
 
 
 def test_ngram_block_join_is_equi_join(spark, sf_dir):
-    plan = _plan(QUERIES["dedup_ngram_jaccard"](spark, sf_dir))
+    plan = _plan(QUERIES["dedup_ngram_jaccard_prefix"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -326,7 +326,7 @@ def test_ngram_fence_intersection_evaluated_once(spark, sf_dir):
     internals, so a Spark upgrade that re-inlines must fail HERE, not
     silently cost 1.7x: the physical plan must evaluate
     array_intersect exactly once."""
-    plan = _plan(QUERIES["dedup_ngram_jaccard"](spark, sf_dir))
+    plan = _plan(QUERIES["dedup_ngram_jaccard_prefix"](spark, sf_dir))
     n = plan.count("array_intersect")
     assert n == 1, f"array_intersect appears {n}x in physical plan (fence broken)"
 

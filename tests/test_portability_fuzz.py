@@ -28,7 +28,7 @@ FUZZED_QUERIES = [
     "dedup_minhash_lsh",
     "dedup_simhash",
     "dedup_simhash_hamming",
-    "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_prefix",
     "text_normalized_exact_dedup",
     "dedup_exact",
     "text_repetition_ratios",
@@ -127,3 +127,57 @@ def test_hash_arithmetic_matches_oracle_on_hostile_corpus(spark, tmp_path, seed)
             f"first diff: "
             f"{next(((a, b) for a, b in zip(st, dt) if a != b), '<no pairwise diff; row counts differ>') if st and dt else (st[:1], dt[:1])}"
         )
+
+
+#: (1-based start, hex digits) windows the catalog decodes: the 16-bit
+#: salted samplers, both MinHash/CMS halves, the 48-bit SimHash and the
+#: widest decode that still fits a bigint
+_DECODE_WINDOWS = [(1, 4), (1, 8), (9, 8), (1, 12), (1, 15)]
+
+
+def test_md5_hex_decoder_matches_python_in_both_engines(spark):
+    """The one positional md5-hex decoder evaluates to
+    ``int(hexdigest[start-1:start-1+digits], 16)`` in Spark (``instr``,
+    through ``F.expr``) and in DuckDB (``strpos``) alike."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from incubyte_vaccination_data_pipeline_spark.operators.dedup import (
+        md5_half_decode_sql,
+    )
+
+    rng = random.Random(20261018)
+    texts = list(EDGE_TEXTS) + ["\t", "0", "ffffffff", "Z" * 64]
+    while len(texts) < 220:
+        n = rng.randint(1, 40)
+        texts.append("".join(rng.choices(string.printable, k=n)))
+    cols = [f"d{s}_{n}" for s, n in _DECODE_WINDOWS]
+    want = []
+    for i, t in enumerate(texts):
+        h = hashlib.md5(t.encode()).hexdigest()
+        want.append((i, *(int(h[s - 1:s - 1 + n], 16) for s, n in _DECODE_WINDOWS)))
+
+    sdf = spark.createDataFrame(list(enumerate(texts)), "i int, s string").select(
+        "i", F.md5("s").alias("m")
+    )
+    got_spark = sdf.select(
+        "i",
+        *(
+            F.expr(md5_half_decode_sql("m", s, digits=n)).alias(c)
+            for (s, n), c in zip(_DECODE_WINDOWS, cols)
+        ),
+    ).collect()
+    assert sorted(tuple(r) for r in got_spark) == want
+
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(texts)), "s": texts}))
+    decodes = ", ".join(
+        f"{md5_half_decode_sql('m', s, 'strpos', digits=n)} AS {c}"
+        for (s, n), c in zip(_DECODE_WINDOWS, cols)
+    )
+    got_duck = con.execute(
+        f"SELECT i, {decodes} FROM (SELECT i, md5(s) AS m FROM t) ORDER BY i"
+    ).fetchall()
+    con.close()
+    assert [tuple(r) for r in got_duck] == want

@@ -1,7 +1,6 @@
 """The catalog registry: every query has an oracle, the generated
-inventory names the live registry, deprecations point at live
-replacements, and the driver contract hands both over in registry
-order."""
+inventory names the live registry, and the driver contract hands both
+over in registry order."""
 
 from __future__ import annotations
 
@@ -40,15 +39,3 @@ def test_query_inventory_in_sync():
         "QUERIES.md stale — run python scripts/gen_query_inventory.py"
     )
 
-
-def test_deprecated_queries_point_at_live_replacements():
-    """Every DEPRECATED entry maps a live query to a live replacement,
-    and the deprecated query's own docstring says so — the catalog must
-    never steer a reader at a shape its own stress graded quadratic
-    without the pointer in both the registry and the prose."""
-    assert catalog.DEPRECATED, "the legacy ngram-jaccard pin is deprecated"
-    for old, new in catalog.DEPRECATED.items():
-        assert old in catalog.QUERIES and new in catalog.QUERIES
-        assert old != new
-        doc = catalog.QUERIES[old].__doc__ or ""
-        assert "DEPRECATED" in doc and new in doc

@@ -224,14 +224,11 @@ def test_cluster_and_gram_caches_return_same_frame(spark, sf_dir):
     g1, df1 = _shared_doc_grams(spark, sf_dir)
     g2, df2 = _shared_doc_grams(spark, sf_dir)
     assert g1 is g2 and df1 is df2
-    from incubyte_vaccination_data_pipeline_spark.catalog.dedup import _shared_ngram_grams
     from incubyte_vaccination_data_pipeline_spark.catalog.relational_ext import (
         _shared_basket_frame,
         _shared_kmv_frames,
     )
 
-    n1 = _shared_ngram_grams(spark, sf_dir)
-    assert _shared_ngram_grams(spark, sf_dir) is n1
     b1 = _shared_basket_frame(spark, sf_dir)
     assert _shared_basket_frame(spark, sf_dir) is b1
     k1 = _shared_kmv_frames(spark, sf_dir)
@@ -248,9 +245,7 @@ def test_cluster_and_gram_caches_return_same_frame(spark, sf_dir):
 
     w1 = _shared_simhash48(spark, sf_dir)
     assert _shared_simhash48(spark, sf_dir) is w1
-    # the refined gram frame carries the prefix block key the pinned
-    # 2-column frame does not — the two caches must stay distinct
-    assert "text_prefix" in p1.columns and "text_prefix" not in n1.columns
+    assert "text_prefix" in p1.columns
     # the sweep drops every entry (they all key sf_dir as an element)
     dropped = sc.release_shared_state(sf_dir)
     assert dropped >= 8

@@ -60,7 +60,7 @@ def test_simhash_exact_copies_collide(spark, sf_dir):
 
 
 def test_ngram_jaccard_scores_planted_pairs_high(spark, sf_dir):
-    pairs = QUERIES["dedup_ngram_jaccard"](spark, sf_dir).collect()
+    pairs = QUERIES["dedup_ngram_jaccard_prefix"](spark, sf_dir).collect()
     by_pair = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs}
     planted = [(a, b) for (a, b) in by_pair if b >= 2000000 and a == b - 2000000]
     assert planted
@@ -68,49 +68,42 @@ def test_ngram_jaccard_scores_planted_pairs_high(spark, sf_dir):
     assert min(by_pair[p] for p in planted) > 0.6
 
 
+def _char3_jaccard(x: str, y: str) -> float:
+    gx = {x.lower()[i:i + 3] for i in range(len(x) - 2)}
+    gy = {y.lower()[i:i + 3] for i in range(len(y) - 2)}
+    return round(len(gx & gy) / len(gx | gy), 6)
+
+
 def test_ngram_jaccard_prefix_keeps_planted_recall(spark, sf_dir):
-    """The prefix-refined default blocks (scale path) must not lose the
-    planted tail-append near-dups: the 15-char tail never touches the
-    12-char content prefix, so every pair the pinned 2-column blocking
-    finds above threshold survives the refinement."""
-    pinned = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in QUERIES["dedup_ngram_jaccard"](spark, sf_dir).collect()
+    """The prefix-refined blocks (scale path) must not lose the planted
+    tail-append near-dups: the 15-char tail never touches the 12-char
+    content prefix, so every planted pair that shares a 20-char length
+    bucket and clears the 0.5 threshold is found, and every pair found
+    carries the char-3-gram Jaccard computed here in Python."""
+    from incubyte_vaccination_data_pipeline_spark.catalog.dedup import NEAR_DUP_TAIL
+
+    aug = {
+        r["doc_id"]: (r["text"], r["n_chars"])
+        for r in augmented_documents(spark, sf_dir)
+        .select("doc_id", "text", "n_chars")
+        .collect()
     }
     refined = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in QUERIES["dedup_ngram_jaccard_prefix"](spark, sf_dir).collect()
     }
-    planted = [(a, b) for (a, b) in pinned if b >= 2000000 and a == b - 2000000]
+    planted = {}
+    for d, (text, n_chars) in aug.items():
+        if d >= 1000000 or d % 7:
+            continue
+        j = _char3_jaccard(text, text + NEAR_DUP_TAIL)
+        if j >= 0.5 and n_chars // 20 == (n_chars + 15) // 20:
+            planted[(d, d + 2000000)] = j
     assert planted
-    for p in planted:
-        assert refined.get(p) == pinned[p]
-    # the refinement only ever REMOVES pairs (identical jaccard values
-    # on the survivors) — it never invents one
-    assert set(refined) <= set(pinned)
-    for p, j in refined.items():
-        assert j == pinned[p]
-
-
-def test_ngram_jaccard_explicit_block_cols_used_verbatim(spark):
-    """An explicitly passed block_cols=["lang", "len_bucket"] must use
-    the caller's own columns — not be silently rewritten to the
-    n_chars-derived default (ADVICE r9). The input here has a
-    caller-computed len_bucket and NO n_chars column, so the old
-    value-compare rewrite would raise AnalysisException."""
-    from incubyte_vaccination_data_pipeline_spark.operators.dedup import ngram_jaccard_pairs
-
-    rows = [
-        (1, "en", 0, "the quick brown fox jumps over the lazy dog"),
-        (2, "en", 0, "the quick brown fox jumps over the lazy dogs"),
-        (3, "en", 1, "completely different text that should not pair"),
-        (4, "de", 0, "der schnelle braune fuchs springt"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "lang", "len_bucket", "text"])
-    out = ngram_jaccard_pairs(
-        df, block_cols=["lang", "len_bucket"], min_jaccard=0.3
-    ).collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in out} == {(1, 2)}
+    for p, j in planted.items():
+        assert refined.get(p) == pytest.approx(j, abs=1e-6), p
+    for (a, b), j in refined.items():
+        assert j == pytest.approx(_char3_jaccard(aug[a][0], aug[b][0]), abs=1e-6)
 
 
 def _ann_inputs(spark, sf_dir):
