@@ -8,6 +8,19 @@ to 100 TB. Like the reference's parser it yields a date or a reason per
 row; the clean rows and the dead letter are two filters over that one
 parse (``operators/validate.validate_types``).
 
+The parse is a pure function of one string, so the ETL path runs it
+once per distinct string (:func:`with_parsed_dates`) and joins the
+result back, the dictionary move of column stores: the ETL corpus has
+about 5k distinct strings in 600k date cells. Parsing per row in a
+projection over a union of per-file scans is also pushed into every
+union branch by the optimizer (``PushProjectionThroughUnion``): one
+compiled copy of the cascade per file per date column. A filter on the
+error column should still read a persisted copy of the result: over
+the per-row parse the filter would carry the error renderer into the
+scan predicate (see :func:`with_parsed_date`), and over the joined
+parse the persisted frame is what lets both sinks share one read of
+the source.
+
 Reference semantics implemented faithfully:
 
 - empty/blank input -> error "Empty date string" (date_parser.py:27-28).
@@ -41,7 +54,7 @@ Documented divergences (SURVEY.md §2.12, §7.3):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: strptime cascade (date_parser.py:85-100), java.time spellings.
@@ -63,6 +76,9 @@ _PD_TEMPS = [
     "_pd_m", "_pd_dd", "_pd_yraw", "_pd_y", "_pd_cd", "_pd_maxd",
     "_pd_cerr", "_pd_casc",
 ] + [f"_pd_c{i}" for i in range(len(CASCADE_FORMATS))]
+
+#: the distinct-string lookup's columns (with_parsed_dates)
+_KEY, _DATE, _ERR = "_pd_key", "_pd_date", "_pd_err"
 
 
 def _parse_prefix(df, src_col: str):
@@ -230,3 +246,42 @@ def with_parsed_date(
         }
     )
     return out.drop(*_PD_TEMPS)
+
+
+def with_parsed_dates(
+    df: DataFrame,
+    src_cols: list[str],
+    date_prefix: str,
+    err_prefix: str,
+) -> DataFrame:
+    """Append ``date_prefix + c`` / ``err_prefix + c`` for every ``c``
+    in ``src_cols``, the same values :func:`with_parsed_date` gives,
+    parsing each distinct string once instead of once per row.
+
+    The distinct values of all the columns (cast to string, the
+    parser's own first step) are taken in one pass, parsed once, and
+    joined back per column with a broadcast left join on
+    ``eqNullSafe``, so a NULL cell still meets the parse of NULL
+    ("Empty date string"). Every join reads the same lookup, so the
+    planner reuses one shuffle and one broadcast for all of them.
+
+    The lookup holds one row per distinct string, not per row: small
+    for calendar dates, but it grows with the number of unique garbage
+    strings in the source.
+    """
+    if not src_cols:
+        return df
+    strings = df.select(
+        F.explode(F.array(*[F.col(c).cast("string") for c in src_cols])).alias(_KEY)
+    ).distinct()
+    lookup = with_parsed_date(strings, _KEY, _DATE, _ERR)
+    out = df
+    for c in src_cols:
+        side = lookup.select(
+            F.col(_KEY).alias(f"{_KEY}_{c}"),
+            F.col(_DATE).alias(date_prefix + c),
+            F.col(_ERR).alias(err_prefix + c),
+        )
+        on = F.col(c).cast("string").eqNullSafe(F.col(f"{_KEY}_{c}"))
+        out = out.join(F.broadcast(side), on, "left").drop(f"{_KEY}_{c}")
+    return out

@@ -13,10 +13,15 @@ Parity targets (reference ``src/validators/data_validator.py``):
   (``data_validator.py:282``, ``snowflake_connector.py:203,273``).
 
 Spark-first re-expression: instead of the reference's mask-and-concat,
-validation is one lazy expression tree producing parsed DATE columns
-plus an error column per date field; the quarantine and the clean path
-are two projections of that one persisted parse (each row is read and
-parsed once; no Python in the loop).
+validation is one lazy plan producing parsed DATE columns plus an
+error column per date field. Each distinct date string is parsed once
+(``functions/dates.with_parsed_dates``: a few thousand strings, not
+one parse per cell per file) and joined back to the rows; no Python in
+the loop. The quarantine and the clean path are two projections of
+that one persisted frame, and the dead-letter filter on the error
+column reads it too: the two sinks then share one read of the source
+and one join, where an unpersisted filter would re-read the CSVs and
+redo the distinct pass for each sink.
 
 Documented divergence: the reference's ``astype(str)`` turns missing
 names into the literal string ``"nan"``, which then *passes* the
@@ -32,7 +37,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from incubyte_vaccination_data_pipeline_spark.functions.dates import with_parsed_date
+from incubyte_vaccination_data_pipeline_spark.functions.dates import with_parsed_dates
 from incubyte_vaccination_data_pipeline_spark.schema import (
     MANDATORY_COLUMNS,
     MANDATORY_DATE_COLUMNS,
@@ -51,10 +56,11 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     where unparseable). ``dead_letter`` holds the original rows that
     failed a *mandatory* date parse, with ``Validation_Error`` (reason
     text) and ``Invalid_Field`` (column name) appended, one record per
-    (row, failing field). Both are projections of one parse of every
-    date column, persisted (lazily, ``MEMORY_AND_DISK``) so the source
-    is read and parsed once for the two outputs. The dead letter
-    carries that frame in ``_ivdp_persisted_bases``; free it with
+    (row, failing field). Both are projections of one frame holding
+    the parse of every date column (each distinct string parsed once),
+    persisted (lazily, ``MEMORY_AND_DISK``) so the source is read and
+    joined once for the two outputs. The dead letter carries that frame
+    in ``_ivdp_persisted_bases``; free it with
     ``shared_cache.release(dead_letter)`` once both outputs are
     written.
     """
@@ -63,14 +69,14 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         if c in typed.columns:
             typed = typed.withColumn(c, F.col(c).cast("string"))
 
-    # one parse per date column, as chained projections (codegen-sized
-    # steps — see functions/dates.py with_parsed_date). Both outputs
-    # read the persisted frame; reading it is also what keeps the error
-    # renderer out of the scan predicate under the dead-letter filter
+    # one parse per distinct date string, joined back per column (see
+    # functions/dates.py with_parsed_dates). Both outputs read the
+    # persisted frame, so the source is read and joined once for the
+    # two sinks
     date_cols = [c for c in MANDATORY_DATE_COLUMNS + OPTIONAL_DATE_COLUMNS if c in typed.columns]
-    for c in date_cols:
-        typed = with_parsed_date(typed, c, f"__date_{c}", f"__err_{c}")
-    parsed = typed.persist(StorageLevel.MEMORY_AND_DISK)
+    parsed = with_parsed_dates(typed, date_cols, "__date_", "__err_").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     # dead letter: original (pre-parse) column values preserved, like
     # the reference's copy of the still-string frame

@@ -16,19 +16,26 @@ Parity targets in the reference (intshivam/incubyte-vaccination-data-pipeline):
 
 Scale note: files are read individually because each carries its own
 dialect header; per-file plans union lazily via ``unionByName`` so
-Catalyst still sees one DAG. For a 100 TB ingest you would group files
-by dialect and glob each group into a single multi-file scan — the
-projection logic here is per-dialect, not per-file, so it transfers
-unchanged.
+Catalyst still sees one DAG. Each file's header row and first data row
+are read in Python (:func:`read_head`), so building the ingest runs no
+Spark job: the scan gets an explicit all-string schema named as Spark's
+header inference would name it, and the pipe-frame check reads the
+Python-parsed first row. That costs one local file open per file, not a
+header-inference job and a ``limit(1)`` probe each. For a 100 TB ingest
+you would group files by dialect and glob each group into a single
+multi-file scan — the projection logic here is per-dialect, not
+per-file, so it transfers unchanged.
 """
 
 from __future__ import annotations
 
+import csv
 import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from incubyte_vaccination_data_pipeline_spark.schema import (
     COLUMN_MAP,
@@ -40,31 +47,64 @@ from incubyte_vaccination_data_pipeline_spark.schema import (
 logger = logging.getLogger(__name__)
 
 
-def read_dialect_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Read one source CSV: header row, everything as strings (no
-    inference — the validators own typing, matching the reference's
-    object-dtype reads)."""
-    return spark.read.option("header", True).option("inferSchema", False).csv(path)
+#: what Java's ``String.trim`` strips: every char up to U+0020
+_JAVA_WS = "".join(map(chr, range(0x21)))
 
 
-def strip_pipe_frames(df: DataFrame) -> DataFrame:
+def read_head(path: str) -> list[list[str]]:
+    """The header row and first data row of a CSV file, parsed as
+    Spark's line-by-line CSV reader parses them: the first two lines
+    that are not blank after a Java-style trim (Spark skips those),
+    comma-separated, ``"``-quoted, ``\\``-escaped, UTF-8 with a byte
+    order mark dropped. Fewer rows for a short file, none for an empty
+    one. One known difference: a doubled quote inside a quoted cell
+    (``"a""b"``) reads as one quote here, while Spark keeps such a cell
+    raw, quotes included; no dialect header has one."""
+    rows: list[list[str]] = []
+    with open(path, encoding="utf-8-sig", errors="replace", newline="") as f:
+        for line in f:
+            if line.strip(_JAVA_WS):
+                rows.append(next(csv.reader([line.rstrip("\r\n")], escapechar="\\")))
+                if len(rows) == 2:
+                    break
+    return rows
+
+
+def safe_header(cells: list[str], case_sensitive: bool = False) -> list[str]:
+    """Column names for a header row, as Spark's
+    ``CSVUtils.makeSafeHeader`` makes them: a blank cell becomes
+    ``_c<i>``, and every cell of a duplicated name (case-insensitively
+    unless ``case_sensitive``) gets its index ``i`` as a suffix."""
+    keys = [c if case_sensitive else c.lower() for c in cells]
+    seen = {k for k in keys if keys.count(k) > 1}
+    return [
+        f"_c{i}" if c == "" else f"{c}{i}" if k in seen else c
+        for i, (c, k) in enumerate(zip(cells, keys))
+    ]
+
+
+def read_dialect_csv(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:
+    """Read one source CSV with its header row skipped and every one of
+    ``columns`` a string (no inference — the validators own typing,
+    matching the reference's object-dtype reads). Building the frame
+    runs no Spark job."""
+    schema = StructType([StructField(c, StringType()) for c in columns])
+    return spark.read.schema(schema).option("header", True).csv(path)
+
+
+def strip_pipe_frames(df: DataFrame, first_row: list[str] | None) -> DataFrame:
     """Drop ``|``-framed records when the file embeds a pipe header.
 
     Mirrors ``data_validator.py:227-230``: detection looks at the first
-    data row only (a bounded single-row action, not a data-path
-    collect); the header record is compared to the expected layout and
-    mismatches only warn; all rows whose *first* column starts with
-    ``|`` are then filtered out distributively.
+    data row only (``first_row``, its cells past the header dropped;
+    None for a file without data rows); the header record is compared
+    to the expected layout and mismatches only warn; all rows whose
+    *first* column starts with ``|`` are then filtered out
+    distributively.
     """
-    first = df.limit(1).collect()
-    if not first:
+    header = next((v for v in first_row or () if v.startswith("|H|")), None)
+    if header is None:
         return df
-    row = first[0]
-    cells = [v for v in row if isinstance(v, str)]
-    header_cells = [v for v in cells if v.startswith("|H|")]
-    if not header_cells:
-        return df
-    header = header_cells[0]
     if header != EXPECTED_PIPE_HEADER:
         logger.warning(
             "Header does not match expected format. Expected: %s Received: %s",
@@ -125,16 +165,22 @@ def load_source_data(
 ) -> DataFrame:
     """S1+S3+P1-P3 composed over every ``*.csv`` in ``data_dir``,
     unioned by name with missing columns null-filled
-    (``pd.concat`` parity, ``main.py:59-60``)."""
+    (``pd.concat`` parity, ``main.py:59-60``). Headers and pipe frames
+    are read in Python (:func:`read_head`): building the frame runs no
+    Spark job."""
     files = sorted(
         f for f in os.listdir(data_dir) if f.lower().endswith(".csv")
     )
     if not files:
         raise FileNotFoundError(f"no CSV files under {data_dir}")
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
     frames = []
     for fname in files:
-        df = read_dialect_csv(spark, os.path.join(data_dir, fname))
-        df = strip_pipe_frames(df)
+        path = os.path.join(data_dir, fname)
+        head = read_head(path)
+        columns = safe_header(head[0], case_sensitive) if head else []
+        df = read_dialect_csv(spark, path, columns)
+        df = strip_pipe_frames(df, head[1][: len(columns)] if len(head) > 1 else None)
         df = synonym_projection(df, filename=fname, strict=strict)
         df = df.withColumn("Source_File", F.lit(fname))
         frames.append(df)

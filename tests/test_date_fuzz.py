@@ -7,7 +7,8 @@ soup — only meets the DuckDB restatement through the fixture matrix.
 This suite renders seeded-random corpora of hostile date strings and
 compares the Spark parser (`with_parsed_date`, and the dead letter
 `validate_types` derives from it) against the SAME `_COMPACT_PARSE_SQL`
-restatement the catalog oracle uses, value-for-value.
+restatement the catalog oracle uses, value-for-value; and the
+distinct-string parse (`with_parsed_dates`) against the per-row one.
 """
 
 from __future__ import annotations
@@ -20,7 +21,10 @@ import pandas as pd
 import pytest
 
 from incubyte_vaccination_data_pipeline_spark.catalog.vax import _COMPACT_PARSE_SQL
-from incubyte_vaccination_data_pipeline_spark.functions.dates import with_parsed_date
+from incubyte_vaccination_data_pipeline_spark.functions.dates import (
+    with_parsed_date,
+    with_parsed_dates,
+)
 from incubyte_vaccination_data_pipeline_spark.operators.validate import validate_types
 from incubyte_vaccination_data_pipeline_spark.shared_cache import release
 
@@ -141,3 +145,34 @@ def test_dead_letter_frame_matches_error_rows(spark, tmp_path):
     want = {int(r["id"]): r["error"] for _, r in duck.iterrows()}
     assert spark_dl == want
     con.close()
+
+
+@pytest.mark.parametrize("seed", [11, 23])
+def test_distinct_parse_matches_per_row_parse(spark, seed):
+    """``with_parsed_dates`` gives every row of every column the same
+    (date, error) as ``with_parsed_date`` on that column, NULL, empty,
+    whitespace-only and padded strings included, and keeps every row."""
+    # the corpus holds None, "", " ", "   " and "  6152022  "; add
+    # padded strings for the cascade branch too
+    raws = list(_corpus(seed)["raw"]) + [" 1/5/22", "2022 ", "\t3/12/1998"]
+    assert {None, "", " ", "   ", "  6152022  "} <= set(raws)
+    # a second column: the same strings in another order, so one row
+    # meets two different lookup entries
+    other = raws[7:] + raws[:7]
+    sdf = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(zip(raws, other))],
+        "id int, a string, b string",
+    )
+    got = with_parsed_dates(sdf, ["a", "b"], "d_", "e_").collect()
+    assert sorted(r["id"] for r in got) == list(range(len(raws)))
+    for col in ("a", "b"):
+        want = {
+            r["id"]: (r["d"], r["e"])
+            for r in with_parsed_date(sdf, col, "d", "e").select("id", "d", "e").collect()
+        }
+        for r in got:
+            assert (r[f"d_{col}"], r[f"e_{col}"]) == want[r["id"]], (
+                f"{col} id={r['id']} raw={r[col]!r}"
+            )
+    empty = [r for r in got if r["a"] is None or not r["a"].strip()]
+    assert empty and all(r["e_a"] == "Empty date string" for r in empty)

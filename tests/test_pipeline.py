@@ -18,7 +18,11 @@ from incubyte_vaccination_data_pipeline_spark.operators.views import (
     register_country_views,
 )
 from incubyte_vaccination_data_pipeline_spark.pipeline import run_pipeline
-from incubyte_vaccination_data_pipeline_spark.sources.csv_ingest import load_source_data
+from incubyte_vaccination_data_pipeline_spark.sources.csv_ingest import (
+    load_source_data,
+    read_head,
+    safe_header,
+)
 
 IND_CSV = """ID,Name,DOB,VaccinationType,VaccinationDate,Free or Paid
 1,Vikas,12/01/1998,XYZ,01/01/2022,F
@@ -115,6 +119,63 @@ def test_pipe_frame_strip(spark, tmp_path):
     assert df.count() == 1
     assert set(df.columns) == {"Country", "Source_File"}
     assert df.collect()[0]["Country"] == "PIP"
+
+
+#: header shapes whose Spark-inferred names the Python header read must
+#: reproduce (file name -> content)
+HEADER_CASES = {
+    "blank.csv": "ID,,Name, ,\n1,2,x,3,4\n",
+    "dups.csv": "Name,name,NAME,ID,id,DOB\n1,2,3,4,5,6\n",
+    "quoted.csv": 'ID,"Name, Full",DOB\n1,"a,b",12/01/1998\n',
+    "bom.csv": "\ufeffID,Name,DOB\n1,x,12/01/1998\n",
+    "blanklines.csv": "\n  \nID,Name\r\n\r\n1,x\r\n",
+    "empty.csv": "",
+}
+
+
+@pytest.mark.parametrize("fname", sorted(HEADER_CASES))
+def test_python_header_matches_spark_header(spark, tmp_path, fname):
+    """The Python-read header names equal Spark's header inference:
+    blank cells, case-insensitive duplicates, a quoted comma, a UTF-8
+    byte order mark, blank lines and an empty file."""
+    path = tmp_path / fname
+    path.write_text(HEADER_CASES[fname], encoding="utf-8")
+    head = read_head(str(path))
+    names = safe_header(head[0]) if head else []
+    assert names == spark.read.option("header", True).csv(str(path)).columns
+
+
+def test_bom_and_empty_files_load_as_spark_reads_them(spark, tmp_path):
+    """A byte order mark does not reach the first column name (``ID``
+    still maps to ``Customer_Id``), and an empty file adds no row and
+    no column beyond the ones every file gets."""
+    (tmp_path / "IND bom.csv").write_text(HEADER_CASES["bom.csv"], encoding="utf-8")
+    bom = load_source_data(spark, str(tmp_path))
+    assert bom.columns == ["Customer_Id", "Customer_Name", "DOB", "Country", "Source_File"]
+    assert [tuple(r) for r in bom.collect()] == [
+        ("1", "x", "12/01/1998", "IND", "IND bom.csv")
+    ]
+    empty_dir = tmp_path / "empty"
+    empty_dir.mkdir()
+    (empty_dir / "USA empty.csv").write_text("")
+    empty = load_source_data(spark, str(empty_dir))
+    assert empty.columns == ["Country", "Source_File"]
+    assert empty.count() == 0
+
+
+def test_load_source_data_runs_no_spark_job(spark, data_dir, tmp_path):
+    """Building the ingest frame reads headers and pipe frames in
+    Python: no header-inference job, no ``limit(1)`` probe."""
+    (tmp_path / "PIP file.csv").write_text(PIP_CSV)
+    sc = spark.sparkContext
+    group = "ingest-build-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        load_source_data(spark, data_dir)
+        load_source_data(spark, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_full_pipeline_and_views(spark, data_dir, tmp_path):

@@ -395,6 +395,40 @@ def test_validate_types_parses_once(spark, tmp_path):
         release(dead)
 
 
+def test_validate_types_parses_each_distinct_string_once(spark, tmp_path):
+    """The persisted frame's optimized plan holds ONE copy of the date
+    cascade: every ``gettimestamp`` (``try_to_date``) sits in the
+    distinct-string lookup, whose per-column copies are the same
+    subplan up to expression ids. Pushing a per-row parse through the
+    union of per-file scans gave one distinct copy per file per date
+    column (5 on this fixture)."""
+    from incubyte_vaccination_data_pipeline_spark.functions.dates import CASCADE_FORMATS
+    from incubyte_vaccination_data_pipeline_spark.operators.validate import validate_types
+    from incubyte_vaccination_data_pipeline_spark.shared_cache import release
+    from incubyte_vaccination_data_pipeline_spark.sources.csv_ingest import load_source_data
+    from tests.test_pipeline import AUS_CSV, IND_CSV, USA_CSV
+
+    (tmp_path / "IND (1) 1(in).csv").write_text(IND_CSV)
+    (tmp_path / "USA (1) 1(in).csv").write_text(USA_CSV)
+    (tmp_path / "AUS (1) 1(Sheet1).csv").write_text(AUS_CSV)
+    _, dead = validate_types(load_source_data(spark, str(tmp_path)))
+    try:
+        (parsed,) = dead._ivdp_persisted_bases
+        # the plan as optimized before the cache substitutes it
+        plan = spark._jsparkSession.sessionState().optimizer().execute(
+            parsed._jdf.queryExecution().analyzed()
+        )
+        copies = {}
+        for node in _walk(plan):
+            n = node.expressions().toString().count("gettimestamp(")
+            if n:
+                copies[node.semanticHash()] = n
+        # the compact branch's one try_to_date plus one per cascade format
+        assert sum(copies.values()) == 1 + len(CASCADE_FORMATS), copies
+    finally:
+        release(dead)
+
+
 def test_simhash_hamming_band_join_is_equi_join(spark, sf_dir):
     plan = _plan(QUERIES["dedup_simhash_hamming"](spark, sf_dir))
     assert "CartesianProduct" not in plan
