@@ -12,11 +12,7 @@ at most one of them. Each run is timed as ``build`` (the
 ``fn(spark, sf_dir)`` wall: Python construction and py4j round-trips)
 plus ``exec`` (the noop write: Catalyst and execution); the record
 keeps each query's median wall, wall spread, median build and median
-exec, and each timed pass's total. ``queries_compile_ms`` is each
-query's median codegen compile time over the timed runs (Spark's
-cumulative ``CodeGenerator.compileTime``, read before and after each
-run): how much of a repeat run, a pass after the last one, recompiles
-generated code.
+exec, and each timed pass's total.
 
 A run is comparable when no window of the run saw other work take more
 than LOAD_BOUND_CPU_FRAC of the machine's CPU time (see
@@ -91,7 +87,7 @@ def compact_payload(
         k: v
         for k, v in payload.items()
         if k not in ("queries_cold", "queries_spread", "queries_build",
-                     "queries_exec", "queries_compile_ms")
+                     "queries_exec")
     }
     compact["comparability"] = {
         k: v for k, v in payload["comparability"].items() if k != "windows"
@@ -108,18 +104,6 @@ def _stats(runs: list[float]) -> tuple[float, float]:
     """(median, spread) of one query's runs; a median for odd RUNS."""
     r = sorted(runs)
     return r[len(r) // 2], r[-1] - r[0]
-
-
-def compile_ms(spark) -> float:
-    """Spark's cumulative codegen compile time in this JVM, in ms."""
-    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
-    return codegen.CodeGenerator.compileTime() / 1e6
-
-
-def compile_medians(readings: dict[str, list[float]]) -> dict[str, float]:
-    """Each query's median compile ms over its timed runs; the first
-    reading of each query is its cold pass and is left out."""
-    return {n: round(_stats(r[1:])[0], 1) for n, r in readings.items()}
 
 
 def _cpu_jiffies() -> tuple[int, int, int, int]:
@@ -304,18 +288,13 @@ def main(argv: list[str]) -> None:
 
     spark = get_spark(app_name="ivdp-bench")
 
-    compiles: dict[str, list[float]] = {}
-
     def time_query(name: str) -> tuple[float, float]:
-        c0 = compile_ms(spark)
         t0 = time.perf_counter()
         df = catalog.QUERIES[name](spark, sf_dir)
         t1 = time.perf_counter()
         # the noop sink forces full materialization without a collect
         df.write.format("noop").mode("overwrite").save()
-        t2 = time.perf_counter()
-        compiles.setdefault(name, []).append(compile_ms(spark) - c0)
-        return t1 - t0, t2 - t1
+        return t1 - t0, time.perf_counter() - t1
 
     load = CpuWindows()
     cold, runs = run_passes(names, time_query, load.sample)
@@ -350,7 +329,6 @@ def main(argv: list[str]) -> None:
         },
         "queries_build": build,
         "queries_exec": exec_,
-        "queries_compile_ms": compile_medians(compiles),
         "queries_cold": {n: round(v, 4) for n, v in cold.items()},
         "comparability": comparability(load.windows, os.cpu_count() or 1),
         "sf": sf,

@@ -260,14 +260,17 @@ def with_parsed_dates(
 
     The distinct values of all the columns (cast to string, the
     parser's own first step) are taken in one pass, parsed once, and
-    joined back per column with a broadcast left join on
-    ``eqNullSafe``, so a NULL cell still meets the parse of NULL
-    ("Empty date string"). Every join reads the same lookup, so the
-    planner reuses one shuffle and one broadcast for all of them.
+    joined back per column with a left join on ``eqNullSafe``, so a
+    NULL cell still meets the parse of NULL ("Empty date string").
+    Every join reads the same lookup, so the planner reuses one shuffle
+    and one broadcast for all of them.
 
     The lookup holds one row per distinct string, not per row: small
     for calendar dates, but it grows with the number of unique garbage
-    strings in the source.
+    strings in the source. So the join carries no broadcast hint: the
+    planner broadcasts the lookup when it fits
+    ``autoBroadcastJoinThreshold`` (by its estimate, or under AQE by
+    the measured size of the distinct stage) and shuffles it otherwise.
     """
     if not src_cols:
         return df
@@ -283,5 +286,5 @@ def with_parsed_dates(
             F.col(_ERR).alias(err_prefix + c),
         )
         on = F.col(c).cast("string").eqNullSafe(F.col(f"{_KEY}_{c}"))
-        out = out.join(F.broadcast(side), on, "left").drop(f"{_KEY}_{c}")
+        out = out.join(side, on, "left").drop(f"{_KEY}_{c}")
     return out

@@ -64,14 +64,13 @@ def get_spark(
         # §1.2 "per-task work" applied to the driver): disabling it cut
         # catalog-wide query-build time ~2x with identical plans and
         # results. Cost: error messages lose the Python call-site line
-        # (the JVM stack trace and error class are unchanged).
-        # SPARK_GRAFT_DF_DEBUG=1 turns it back on for debugging a query
-        # interactively; it takes effect when the session is created
-        # (getOrCreate keeps an existing session's configs).
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_DF_DEBUG") == "1" else "false",
-        )
+        # (the JVM stack trace and error class are unchanged). To debug
+        # a query interactively, start the session with
+        # get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+        # "true"}); extra_conf is applied after this line, and only when
+        # the session is created (getOrCreate keeps an existing
+        # session's configs).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

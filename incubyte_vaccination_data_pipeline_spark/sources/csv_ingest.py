@@ -29,9 +29,9 @@ per-file, so it transfers unchanged.
 
 from __future__ import annotations
 
-import csv
 import logging
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,20 +51,35 @@ logger = logging.getLogger(__name__)
 _JAVA_WS = "".join(map(chr, range(0x21)))
 
 
-def read_head(path: str) -> list[list[str]]:
-    """The header row and first data row of a CSV file, parsed as
-    Spark's line-by-line CSV reader parses them: the first two lines
-    that are not blank after a Java-style trim (Spark skips those),
-    comma-separated, ``"``-quoted, ``\\``-escaped, UTF-8 with a byte
-    order mark dropped. Fewer rows for a short file, none for an empty
-    one. One known difference: a doubled quote inside a quoted cell
-    (``"a""b"``) reads as one quote here, while Spark keeps such a cell
-    raw, quotes included; no dialect header has one."""
+def record_parser(spark: SparkSession) -> Callable[[str], list[str]]:
+    """Spark's own CSV record parser (univocity, set up from the
+    options :func:`read_dialect_csv` reads with), applied to one line
+    at a time on the driver: no Spark job. Its quote and escape rules
+    are Spark's, malformed quoting included (a ``\\`` outside quotes
+    is a plain character; ``"a""b"`` stays raw); Python's ``csv``
+    module has no setting for them. A blank cell reads as ``""``."""
+    jvm = spark._jvm
+    options = jvm.org.apache.spark.sql.catalyst.csv.CSVOptions(
+        jvm.PythonUtils.toScalaMap({"header": "true"}),
+        False,
+        spark.conf.get("spark.sql.session.timeZone"),
+    )
+    parser = jvm.com.univocity.parsers.csv.CsvParser(options.asParserSettings())
+    return lambda line: [c or "" for c in parser.parseLine(line)]
+
+
+def read_head(path: str, parse: Callable[[str], list[str]]) -> list[list[str]]:
+    """The header row and first data row of a CSV file, as Spark's
+    line-by-line CSV reader takes them: the first two lines that are
+    not blank after a Java-style trim (Spark skips those), UTF-8 with a
+    byte order mark dropped, each split by ``parse``
+    (:func:`record_parser`). Fewer rows for a short file, none for an
+    empty one."""
     rows: list[list[str]] = []
     with open(path, encoding="utf-8-sig", errors="replace", newline="") as f:
         for line in f:
             if line.strip(_JAVA_WS):
-                rows.append(next(csv.reader([line.rstrip("\r\n")], escapechar="\\")))
+                rows.append(parse(line.rstrip("\r\n")))
                 if len(rows) == 2:
                     break
     return rows
@@ -174,10 +189,11 @@ def load_source_data(
     if not files:
         raise FileNotFoundError(f"no CSV files under {data_dir}")
     case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    parse = record_parser(spark)
     frames = []
     for fname in files:
         path = os.path.join(data_dir, fname)
-        head = read_head(path)
+        head = read_head(path, parse)
         columns = safe_header(head[0], case_sensitive) if head else []
         df = read_dialect_csv(spark, path, columns)
         df = strip_pipe_frames(df, head[1][: len(columns)] if len(head) > 1 else None)

@@ -258,28 +258,3 @@ def test_bench_compact_line_fits_driver_tail():
         f"compact bench line too long for the driver tail: {len(line)}"
     )
     assert _json.loads(line)["n_queries"] == len(catalog.QUERIES)
-
-
-def test_compile_ms_per_query_kept_out_of_compact_line(spark):
-    """``compile_ms`` reads Spark's cumulative codegen compile time,
-    which grows when a query compiles new generated code;
-    ``queries_compile_ms`` is each query's median over its timed runs
-    (its cold reading left out), and the compact line leaves it out."""
-    before = bench.compile_ms(spark)
-    k = time.time_ns() % 1_000_003  # a constant no earlier query compiled
-    spark.range(10).selectExpr(f"id * {k} + 7 AS x").where("x % 3 = 1").collect()
-    assert bench.compile_ms(spark) > before
-
-    readings = {"q1": [900.0, 5.0, 1.0, 3.0], "q2": [40.0, 0.0, 0.0, 0.0]}
-    assert bench.compile_medians(readings) == {"q1": 3.0, "q2": 0.0}
-
-    timings = {name: 123.4567 for name in catalog.QUERIES}
-    payload = {
-        "queries": timings,
-        "queries_compile_ms": {name: 12345.6 for name in catalog.QUERIES},
-        "comparability": bench.comparability(_windows(0.0), cpus=4),
-        "sf": 0.1,
-    }
-    line = json.dumps(bench.compact_payload(payload, timings))
-    assert "queries_compile_ms" not in json.loads(line)
-    assert len(line) < bench.DRIVER_TAIL_CHARS - 100

@@ -176,3 +176,28 @@ def test_distinct_parse_matches_per_row_parse(spark, seed):
             )
     empty = [r for r in got if r["a"] is None or not r["a"].strip()]
     assert empty and all(r["e_a"] == "Empty date string" for r in empty)
+
+
+def test_distinct_parse_shuffles_lookup_above_broadcast_threshold(spark):
+    """A lookup larger than the broadcast threshold (a column of unique
+    garbage strings) is joined back by a shuffle join, not forced into
+    a broadcast, and every row still gets the per-row parse."""
+    raws = list(_corpus(11)["raw"]) + [f"junk-{i:05d}" for i in range(300)]
+    sdf = spark.createDataFrame(list(enumerate(raws)), "id int, a string")
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "1024")
+    try:
+        out = with_parsed_dates(sdf, ["a"], "d_", "e_")
+        got = {r["id"]: (r["d_a"], r["e_a"]) for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan, plan
+    want = {
+        r["id"]: (r["d"], r["e"])
+        for r in with_parsed_date(sdf, "a", "d", "e").select("id", "d", "e").collect()
+    }
+    assert got == want

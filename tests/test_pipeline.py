@@ -21,6 +21,7 @@ from incubyte_vaccination_data_pipeline_spark.pipeline import run_pipeline
 from incubyte_vaccination_data_pipeline_spark.sources.csv_ingest import (
     load_source_data,
     read_head,
+    record_parser,
     safe_header,
 )
 
@@ -130,6 +131,10 @@ HEADER_CASES = {
     "bom.csv": "\ufeffID,Name,DOB\n1,x,12/01/1998\n",
     "blanklines.csv": "\n  \nID,Name\r\n\r\n1,x\r\n",
     "empty.csv": "",
+    # a backslash escapes only inside quotes
+    "backslash.csv": 'a\\b,x\\,y,"q\\"r",DOB\n1,2,3,4,5\n',
+    # malformed quoting: Spark keeps or trims these cells its own way
+    "badquotes.csv": '"a""b","c"d,"e"""," f" ,"\n1,2,3,4,5\n',
 }
 
 
@@ -137,10 +142,11 @@ HEADER_CASES = {
 def test_python_header_matches_spark_header(spark, tmp_path, fname):
     """The Python-read header names equal Spark's header inference:
     blank cells, case-insensitive duplicates, a quoted comma, a UTF-8
-    byte order mark, blank lines and an empty file."""
+    byte order mark, blank lines, an empty file, backslashes in and
+    out of quotes, and malformed quoting."""
     path = tmp_path / fname
     path.write_text(HEADER_CASES[fname], encoding="utf-8")
-    head = read_head(str(path))
+    head = read_head(str(path), record_parser(spark))
     names = safe_header(head[0]) if head else []
     assert names == spark.read.option("header", True).csv(str(path)).columns
 
